@@ -448,12 +448,15 @@ object CdcQueries {
   private val stagedWaveDirs =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[java.nio.file.Path]]()
   private def stageWaves(key: String, s: SparkSession)(
-      waves: => Seq[org.apache.spark.sql.Dataset[graft.streaming.FeedLine]]): Seq[java.nio.file.Path] = {
-    val ws = waves
-    stageTagged(key, ws.size)(ws.zipWithIndex
-      .map { case (w, i) => w.withColumn("wave", lit(i)) }
-      .reduce(_ unionByName _))
-  }
+      waves: => Seq[org.apache.spark.sql.Dataset[graft.streaming.FeedLine]]): Seq[java.nio.file.Path] =
+    // a cached key must not force `waves`: building the wave plans is
+    // the work the cache exists to skip
+    Option(stagedWaveDirs.get(key)).getOrElse {
+      val ws = waves
+      stageTagged(key, ws.size)(ws.zipWithIndex
+        .map { case (w, i) => w.withColumn("wave", lit(i)) }
+        .reduce(_ unionByName _))
+    }
 
   /** Single-pass variant of [[stageWaves]] for waves that are FILTERS of
     * one feed: the union-of-filters shape re-renders the whole feed once

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.hadoop.mapreduce.Job
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DecimalType, StructType}
@@ -15,6 +17,9 @@ import org.apache.spark.sql.types.{DecimalType, StructType}
   * override prefix that an exclude-regex list can veto per table;
   * schema-change (ddl) records route to the schema-change topic
   * (override or `<prefix>`).
+  *
+  * Both parquet sinks write through [[EnvelopeParquetFormat]], which
+  * plain-encodes the envelope's unique columns.
   */
 object Sink {
 
@@ -45,7 +50,8 @@ object Sink {
     * gives per-topic reads for free). */
   def writeByTopic(records: DataFrame, cfg: TopicConfig, outDir: String): Unit =
     records.withColumn("topic", topicColumn(cfg))
-      .write.mode("overwrite").partitionBy("topic").parquet(outDir)
+      .write.mode("overwrite").partitionBy("topic")
+      .format(classOf[EnvelopeParquetFormat].getName).save(outDir)
 
   /** Streaming: same fan-out through Spark's NATIVE file sink, which is
     * genuinely exactly-once — committed files are recorded in the
@@ -62,7 +68,7 @@ object Sink {
       checkpoint: String): StreamingQuery =
     records.withColumn("topic", topicColumn(cfg))
       .writeStream
-      .format("parquet")
+      .format(classOf[EnvelopeParquetFormat].getName)
       .option("checkpointLocation", checkpoint)
       .option("path", outDir)
       .partitionBy("topic")
@@ -175,4 +181,36 @@ object Sink {
     * is the same operator with a prefix cut. */
   def materialize(records0: DataFrame, table: String, schema: StructType): DataFrame =
     Temporal.latestImage(records0, table, schema, cut = None)
+}
+
+/** Parquet for the change-record envelope: dictionary encoding is off for
+  * the columns that are unique per record (`before`, `after`, `key`) or
+  * per transaction (`vgtid`, `restart_vgtid`, `tx_id`, `rank`). Their
+  * dictionaries never pay: the writer hashes and compares every value
+  * into a page dictionary, finds that it does not compress, and falls
+  * back to plain encoding. On a backlog drain that hashing was about a
+  * quarter of the task CPU. The low-cardinality columns (`shard`,
+  * `keyspace`, `table`, `op`, `epoch`) keep their dictionaries.
+  *
+  * Set per job in [[prepareWrite]], because the streaming file sink
+  * builds its Hadoop conf from the session and ignores writer options;
+  * the job conf is a per-write copy, so the session conf is untouched.
+  * Rows, `_spark_metadata` and read-back are those of plain parquet. */
+class EnvelopeParquetFormat extends ParquetFileFormat {
+  override def prepareWrite(
+      sparkSession: SparkSession,
+      job: Job,
+      options: Map[String, String],
+      dataSchema: StructType): OutputWriterFactory = {
+    EnvelopeParquetFormat.PlainColumns.foreach { c =>
+      job.getConfiguration.setBoolean(s"parquet.enable.dictionary#$c", false)
+    }
+    super.prepareWrite(sparkSession, job, options, dataSchema)
+  }
+}
+
+object EnvelopeParquetFormat {
+  /** The unique envelope columns, as the `vitess-cdc` source names them. */
+  val PlainColumns: Seq[String] =
+    Seq("before", "after", "key", "vgtid", "restart_vgtid", "tx_id", "rank")
 }

@@ -33,7 +33,7 @@ final class SchemaRegistry(
     // repeated identical FIELD events (the server resends one per copy
     // response batch) must return the EXISTING meta: every fresh
     // TableMeta instance would add an identity-keyed row to the reader's
-    // key-index cache — an unbounded leak over a long copy phase
+    // table-plan cache — an unbounded leak over a long copy phase
     tables.get(ref) match {
       case Some(prev) if prev == meta => prev
       case _ => tables += ref -> meta; meta
@@ -174,13 +174,15 @@ final class RecordBuilder(
         val ref = TableRef(tx.shard, keyspace, table)
         val meta = registry.get(ref).getOrElse(
           throw new IllegalStateException(s"ROW for unknown table $ref (no FIELD seen)"))
+        val plan = planFor(meta)
+        val qualified = ref.qualified
         r.changes.foreach { change =>
           // E3 Skip mode drops the record on conversion failure; other
           // modes are handled per-column inside decodeValues
           val decoded =
             try {
-              val beforeVals = change.before.map(decodeValues(meta, _))
-              val afterVals = change.after.map(decodeValues(meta, _))
+              val beforeVals = change.before.map(decodeValues(plan, _))
+              val afterVals = change.after.map(decodeValues(plan, _))
               Some((beforeVals, afterVals))
             } catch {
               case e: ConversionFailure if convertFailureMode == ConvertFailureMode.Skip =>
@@ -188,16 +190,16 @@ final class RecordBuilder(
             }
           decoded.foreach { case (beforeVals, afterVals) =>
             totalOrder += 1
-            val collectionOrder = perTableOrder.getOrElse(ref.qualified, 0L) + 1
-            perTableOrder += ref.qualified -> collectionOrder
+            val collectionOrder = perTableOrder.getOrElse(qualified, 0L) + 1
+            perTableOrder += qualified -> collectionOrder
             // the key extracts from the side already decoded — a row is
             // never decoded twice, and both JSONs stream straight out of
             // a generator with no intermediate tree
             out += ChangeRecord(
               tx.shard, keyspace, table, change.op,
-              beforeVals.map(rowJson(meta, _)),
-              afterVals.map(rowJson(meta, _)),
-              keyFromValues(meta, afterVals.orElse(beforeVals).get),
+              beforeVals.map(rowJson(plan, _)),
+              afterVals.map(rowJson(plan, _)),
+              keyFromValues(plan, afterVals.orElse(beforeVals).get),
               tsMs, vgtidJson, restartJson, tx.txId, epoch, rank, totalOrder, collectionOrder)
           }
         }
@@ -230,6 +232,33 @@ final class RecordBuilder(
     out.result()
   }
 
+  /** Per-schema work done once per [[TableMeta]] instance instead of per
+    * cell: the column array, which columns the serializers omit, and the
+    * key-column indices. Identity-keyed — the LWW registry swaps the
+    * TableMeta object on evolution, so a FIELD change gets a new plan. */
+  private final class TablePlan(meta: TableMeta) {
+    val ref: TableRef = meta.ref
+    val columns: Array[ColumnMeta] = meta.columns.toArray
+    // unknown-typed fields are omitted unless include.unknown.datatypes
+    // is set (reference default: resolver drops the field rather than
+    // emitting an implementation-defined binary form) — EXCEPT primary
+    // key columns: the key JSON reads from the decoded values, and
+    // omitting a PK column would collapse every row of the table to one
+    // key (silent loss through materialize); an opaque-binary key stays
+    // distinct
+    val dropped: Array[Boolean] = columns.map { col =>
+      (col.graftType == GraftType.Unknown && !typeModes.includeUnknown && !col.primaryKey) ||
+        columnRules.isExcluded(ref.keyspace, ref.table, col.name)
+    }
+    val keyIdx: Array[Int] = meta.keyColumns.map(k => columns.indexWhere(_.name == k)).toArray
+  }
+
+  private val planCache = new java.util.IdentityHashMap[TableMeta, TablePlan]()
+  private def planFor(meta: TableMeta): TablePlan =
+    planCache.computeIfAbsent(meta, m => new TablePlan(m))
+
+  private val transformsStrings = !columnRules.isEmpty
+
   /** Decode one packed row against the table schema into JSON-writable
     * values, one slot per schema column: a boxed number / Boolean /
     * String, Scala null for SQL NULL, or the [[RecordBuilder.Dropped]]
@@ -239,25 +268,18 @@ final class RecordBuilder(
     * flat array (instead of a Jackson tree) lets the after JSON and the
     * key JSON both stream straight out of a generator — the envelope
     * build is the decode hot path's biggest cost. */
-  private def decodeValues(meta: TableMeta, row: PackedRow): Array[AnyRef] = {
+  private def decodeValues(plan: TablePlan, row: PackedRow): Array[AnyRef] = {
     val raw = row.slice
-    require(raw.size == meta.columns.size,
-      s"row has ${raw.size} columns, schema ${meta.ref} has ${meta.columns.size}")
-    val out = new Array[AnyRef](raw.size)
+    val cols = plan.columns
+    require(raw.size == cols.length,
+      s"row has ${raw.size} columns, schema ${plan.ref} has ${cols.length}")
+    val out = new Array[AnyRef](cols.length)
+    val it = raw.iterator
     var idx = 0
-    meta.columns.zip(raw).foreach { case (col, bytes) =>
-      // unknown-typed fields are omitted unless include.unknown.datatypes
-      // is set (reference default: resolver drops the field rather than
-      // emitting an implementation-defined binary form) — EXCEPT primary
-      // key columns: the key JSON reads from this output, and omitting a
-      // PK column would collapse every row of the table to one key
-      // (silent loss through materialize); an opaque-binary key stays
-      // distinct
-      val dropUnknown =
-        col.graftType == GraftType.Unknown && !typeModes.includeUnknown &&
-          !col.primaryKey
-      if (dropUnknown ||
-        columnRules.isExcluded(meta.ref.keyspace, meta.ref.table, col.name)) {
+    while (idx < cols.length) {
+      val col = cols(idx)
+      val bytes = it.next()
+      if (plan.dropped(idx)) {
         out(idx) = RecordBuilder.Dropped
       } else {
       val decoded =
@@ -268,7 +290,7 @@ final class RecordBuilder(
           case scala.util.control.NonFatal(e) => convertFailureMode match {
             case ConvertFailureMode.Fail =>
               throw new ConversionFailure(
-                s"cannot convert column ${col.name} of ${meta.ref}: ${e.getMessage}", e)
+                s"cannot convert column ${col.name} of ${plan.ref}: ${e.getMessage}", e)
             case ConvertFailureMode.Warn => None // null the column, continue
             case ConvertFailureMode.Skip =>
               throw new ConversionFailure(s"skip record: column ${col.name}", e)
@@ -286,7 +308,9 @@ final class RecordBuilder(
         case None => null // SQL NULL
         case Some(v) => v match {
           case s: String =>
-            columnRules.transformString(meta.ref.keyspace, meta.ref.table, col.name, s)
+            if (transformsStrings)
+              columnRules.transformString(plan.ref.keyspace, plan.ref.table, col.name, s)
+            else s
           case b: Array[Byte] => Base64.getEncoder.encodeToString(b)
           case bd: BigDecimal => bd.bigDecimal
           case s: Short      => java.lang.Short.valueOf(s)
@@ -323,59 +347,70 @@ final class RecordBuilder(
     case other => g.writeStringField(name, other.toString)
   }
 
-  /** after/before JSON: every non-dropped column, schema order. */
-  private def rowJson(meta: TableMeta, values: Array[AnyRef]): String = {
-    val sw = new java.io.StringWriter(values.length * 16)
-    val g = mapper.getFactory.createGenerator(sw)
-    g.writeStartObject()
-    var i = 0
-    val cols = meta.columns
-    while (i < values.length) {
-      if (values(i).asInstanceOf[AnyRef] ne RecordBuilder.Dropped)
-        writeField(g, cols(i).name, values(i))
-      i += 1
-    }
-    g.writeEndObject()
-    g.close()
-    sw.toString
+  // One generator over one unsynchronized buffer serves every row and key
+  // JSON of this (single-threaded) builder. Each object is written as a
+  // root value; with no root separator, flushing after writeEndObject
+  // leaves exactly that object in the buffer.
+  private val buf = new RecordBuilder.StringBuilderWriter
+  private val gen = {
+    val g = mapper.getFactory.createGenerator(buf)
+    g.setRootValueSeparator(null)
+    g
   }
 
-  // key-column indices memoized per schema instance (LWW registry swaps
-  // the TableMeta object on evolution, so identity keying is exact)
-  private val keyIdxCache =
-    new java.util.IdentityHashMap[TableMeta, Array[Int]]()
-  private def keyIndices(meta: TableMeta): Array[Int] = {
-    val cached = keyIdxCache.get(meta)
-    if (cached != null) cached
-    else {
-      val idx = meta.keyColumns.map(k => meta.columns.indexWhere(_.name == k)).toArray
-      keyIdxCache.put(meta, idx)
-      idx
+  private def takeJson(): String = {
+    gen.flush()
+    buf.take()
+  }
+
+  /** after/before JSON: every non-dropped column, schema order. */
+  private def rowJson(plan: TablePlan, values: Array[AnyRef]): String = {
+    val cols = plan.columns
+    gen.writeStartObject()
+    var i = 0
+    while (i < values.length) {
+      if (values(i).asInstanceOf[AnyRef] ne RecordBuilder.Dropped)
+        writeField(gen, cols(i).name, values(i))
+      i += 1
     }
+    gen.writeEndObject()
+    takeJson()
   }
 
   /** Key JSON from the ALREADY-decoded values (PK columns are never
     * dropped by the unknown-type rule; a rule-excluded key column
     * serializes as null, as it always has). */
-  private def keyFromValues(meta: TableMeta, values: Array[AnyRef]): Option[String] = {
-    val idx = keyIndices(meta)
+  private def keyFromValues(plan: TablePlan, values: Array[AnyRef]): Option[String] = {
+    val idx = plan.keyIdx
     if (idx.isEmpty) return None
-    val sw = new java.io.StringWriter(32)
-    val g = mapper.getFactory.createGenerator(sw)
-    g.writeStartObject()
-    idx.foreach { i =>
+    gen.writeStartObject()
+    var k = 0
+    while (k < idx.length) {
+      val i = idx(k)
       val v = values(i)
       if (v.asInstanceOf[AnyRef] eq RecordBuilder.Dropped)
-        g.writeNullField(meta.columns(i).name)
-      else writeField(g, meta.columns(i).name, v)
+        gen.writeNullField(plan.columns(i).name)
+      else writeField(gen, plan.columns(i).name, v)
+      k += 1
     }
-    g.writeEndObject()
-    g.close()
-    Some(sw.toString)
+    gen.writeEndObject()
+    Some(takeJson())
   }
 }
 
 object RecordBuilder {
   /** Column-omitted sentinel inside a decoded values array. */
   private[streaming] object Dropped
+
+  /** A `Writer` over a plain `StringBuilder`: no locking (unlike
+    * `StringWriter`'s `StringBuffer`), and [[take]] empties it for reuse. */
+  private final class StringBuilderWriter extends java.io.Writer {
+    private val sb = new java.lang.StringBuilder(256)
+    override def write(c: Int): Unit = sb.append(c.toChar)
+    override def write(cbuf: Array[Char], off: Int, len: Int): Unit = sb.append(cbuf, off, len)
+    override def write(str: String, off: Int, len: Int): Unit = sb.append(str, off, off + len)
+    override def flush(): Unit = ()
+    override def close(): Unit = ()
+    def take(): String = { val s = sb.toString; sb.setLength(0); s }
+  }
 }

@@ -711,8 +711,10 @@ class GrpcTransportSpec extends AnyFunSuite with BeforeAndAfterAll {
     val transport = VStreamGrpcTransport(staging.toString,
       GrpcConfig("inprocess:vt-noshard", "ks", Seq("s0", "s1")))
     try {
-      transport.listShards()
+      // the in-process server can fail the worker before listShards's own
+      // ensureRunning check, so the error may surface from either call
       val err = intercept[IllegalStateException] {
+        transport.listShards()
         transport.awaitStreamCompleted(10000)
       }
       assert(messages(err).exists(_.contains("without shard attribution")))
