@@ -1,7 +1,8 @@
 package graft
 
-/** Benchmark main: times each SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line for the driver. Results are fully materialized via
+/** Benchmark main: times each SparkEntry query on SPARK_GRAFT_SF_DIR,
+  * writes the full JSON line (per-query timings) to bench_last.json and
+  * prints a summary JSON line last on stdout. Results are fully materialized via
   * the `noop` DSv2 sink (executes the whole plan, writes nothing) so a
   * timing can't silently skip column evaluation the way `count()` can.
   * A failed query is reported in `"errors"` — never as a fake timing.
@@ -190,14 +191,10 @@ object Bench {
       }
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$sp,"runs":$runs,"errors":$es,"n_failed":${errors.size}$basketJson,"sf":${jstr(sfDir)}}"""
-    println(json)
-    // The driver captures stdout with a bounded tail that truncates the
-    // FRONT of this (long) line — its parse has returned null since round
-    // 7, leaving PERF without per-query data. Persist the full line on
-    // EVERY run (bench_last.json, cwd-relative — the repo root under sbt)
-    // so the driver and the next round always have the complete map; the
-    // curated multi-run record (bench_full.json) keeps its stricter
-    // contract below. A failed write must not fail the bench, but say so.
+    // The full line (every per-query timing) goes to bench_last.json on
+    // EVERY run (cwd-relative — the repo root under sbt), and to
+    // bench_full.json on a record run. A failed write must not fail the
+    // bench, but say so.
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_last.json"), json + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] bench_last.json not written: $e") }
     if (isRecordRun) {
@@ -207,6 +204,12 @@ object Bench {
       System.err.println("[bench] not a record run (need full sweep + runs>=2 " +
         "+ sf0.1 + zero failed gates) — bench_full.json left untouched")
     }
+    // Last stdout line: a summary of at most 200 chars, since a stdout
+    // tail that keeps the end of a long line truncates its front. `sf` is
+    // the scale-factor directory's name; the full path is in the file.
+    println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","runs":$runs,""" +
+      s""""n_failed":${errors.size},"sf":${jstr(new java.io.File(sfDir).getName.take(40))},""" +
+      s""""queries_file":"bench_last.json"}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

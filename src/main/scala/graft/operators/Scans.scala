@@ -12,8 +12,11 @@ import org.apache.spark.sql.DataFrame
   * The round-robin repartition is applied ONLY when the frame's planned
   * parallelism cannot fill the cluster — at production scale a corpus
   * scan has thousands of splits, the branch never fires, and no extra
-  * corpus-wide shuffle is ever added. The check is plan-time only
-  * (RDD lineage inspection, no job runs).
+  * corpus-wide shuffle is ever added. The check reads
+  * `df.rdd.getNumPartitions`, which runs no job only on an exchange-free
+  * plan: with AQE on, a frame whose plan holds an exchange runs its
+  * upstream stages as jobs to answer it. Callers must pass exchange-free
+  * frames (projected scans or unions of them), as every call site does.
   */
 object Scans {
 

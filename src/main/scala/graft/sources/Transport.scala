@@ -37,11 +37,9 @@ trait VStreamTransport extends Serializable {
 
   /** Current high-water position of one shard's stream, if the
     * transport can observe it cheaply (file size for the file feed) —
-    * the admission barrier uses it to know when the background tailer
-    * has caught up to "data durable when the trigger fired". Push-style
-    * transports (gRPC: the server streams, there is no pollable size)
-    * return -1 and the barrier is skipped: whatever has arrived is what
-    * the trigger admits. */
+    * the source's `lagBytes` metric compares it with the consumed
+    * offset. Push-style transports (no pollable size) return -1 and the
+    * metric reports -1. */
   def size(locator: String): Long = -1L
 
   /** Release any live resources (channels, consumer threads). The file

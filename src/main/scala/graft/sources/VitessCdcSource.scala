@@ -16,6 +16,8 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 /** `vitess-cdc` Structured Streaming source (SURVEY §2.1 S1/S4/S8/S9).
@@ -262,9 +264,8 @@ private[sources] final class FeedSlice(file: String, from: Long, to: Long = Long
     * advance `position`, so byte positions recorded in offsets always
     * point at a line start. The partial bytes stay buffered: a later
     * `readLine` on the same slice resumes mid-line once the appender
-    * finishes (this is what lets the background tailer hold ONE channel
-    * open across EOFs instead of re-opening per poll), and a slice
-    * closed at EOF leaves the half-line for the next trigger's slice. */
+    * finishes, and a slice closed at EOF leaves the half-line for the
+    * next trigger's slice. */
   def readLine(): String =
     if (consumed >= to) null
     else {
@@ -596,21 +597,10 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     if (xs.size <= splitMaxPerShard) xs
     else (1 to splitMaxPerShard).map(j => xs(j * xs.size / splitMaxPerShard - 1))
 
-  // Metadata-only admission (see latestOffset): background per-shard
-  // tailers own the feed scan unless bounded-batch mode caps it anyway.
-  // The pool bounds driver threads regardless of shard count
-  // (`tail.threads`, default min(#cores, 16)).
-  private val useTailers =
-    maxTxsPerTrigger == Long.MaxValue && maxBytesPerTrigger == Long.MaxValue
-  private val tailers = scala.collection.mutable.Map.empty[String, ShardTailer]
-  private val tailPollMs =
-    Option(options.get("tail.poll.ms")).map(_.toLong).getOrElse(2L)
-  private val tailCatchupTimeoutMs =
-    Option(options.get("tail.catchup.timeout.ms")).map(_.toLong).getOrElse(30000L)
-  private val tailThreads =
-    Option(options.get("tail.threads")).map(_.toInt).getOrElse(
-      math.min(Runtime.getRuntime.availableProcessors(), 16))
-  private lazy val tailerPool = new TailerPool(tailThreads, tailPollMs)
+  // Transactions admitted since stream start, summed over the offsets
+  // latestOffset returned (the `admittedTransactions` metric); written
+  // only on the trigger thread
+  @volatile private var admittedTotal = 0L
 
   /** Surface the configured caps through the public admission-control
     * API (the engine hands this back to `latestOffset`; the fold reads
@@ -634,39 +624,35 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     epochs.get(shard).getOrElse(
       if (inheritEpoch) ShardLineage.inheritedEpoch(shard, epochs) else 0L)
 
-  /** Admission control (S8). Two paths, one fold:
+  /** Admission control (S8): one fold per shard per trigger.
     *
-    * Default (unbounded admission): METADATA-ONLY on the trigger thread.
-    * Per-shard background [[ShardTailer]] threads own the feed scan —
-    * each continuously folds new wire lines into a transaction-safe
-    * [[ShardCursor]] — and `latestOffset` just snapshots the published
-    * cursors: O(#shards) work regardless of new-byte volume. The scan
-    * itself runs off the trigger path, parallel across shards (the old
-    * inline fold was sequential on one thread), and never re-reads a
-    * byte. A bounded catch-up barrier (`tail.catchup.timeout.ms`) makes
-    * the trigger observe data durable when it fired, keeping
-    * `processAllAvailable` and per-batch record structure deterministic
-    * for settled feeds; a torn trailing transaction simply waits for the
-    * trigger after its COMMIT lands.
+    * Every shard's [[TxBoundaryFold]] is seeded from the trigger's start
+    * offset and reads that shard's new bytes. Shards fold in parallel on
+    * the JVM's global pool (the stream owns no threads); their cursors,
+    * split cursors and epochs merge in shard order. A fold stops at the
+    * first transaction boundary past `max.txs.per.trigger` or
+    * `max.bytes.per.trigger`; with neither set it reads to EOF, so
+    * `allAvailable` admits everything available. Per-trigger work is
+    * O(new bytes), or O(cap) with a cap, never O(feed). A torn trailing transaction
+    * holds its shard's cursor back until the trigger after its COMMIT
+    * lands.
     *
-    * With `max.txs.per.trigger` and/or `max.bytes.per.trigger`, the
-    * fold runs synchronously on the trigger thread and stops at the
-    * first transaction boundary past either cap — per-trigger work is
-    * O(cap) by construction (bounded-batch mode bounds its own
-    * admission scan; the tailer path is the 100×-scale one).
-    *
-    * Shared fold semantics (both paths, [[TxBoundaryFold]]): exactly-once
-    * holds because the byte position and the folded epochs live in the
-    * same atomic offset JSON — bytes before `feed_positions[shard]` are
-    * already reflected in `transaction_epoch`. A shard with no recorded
-    * position (first trigger, explicit-`vgtid` offset, reshard child)
-    * folds the whole file from the initial baseline — idempotent under
-    * the readers' rank-window filter, so legacy restarts can't
-    * double-count a host change. A generation change vs the offset's
-    * stored generation bumps every epoch once (A5). The cursor only
-    * advances at out-of-transaction line boundaries so a batch window
-    * never splits a transaction; FIELD (schema) lines are checkpointed
-    * per (shard, table) so seeked readers decode without history. */
+    * Exactly-once holds because the byte position and the folded epochs
+    * live in the same atomic offset JSON — bytes before
+    * `feed_positions[shard]` are already reflected in
+    * `transaction_epoch`. A shard with no recorded position (first
+    * trigger, explicit-`vgtid` offset, reshard child) folds the whole
+    * file from the initial baseline — idempotent under the readers'
+    * rank-window filter, so legacy restarts can't double-count a host
+    * change. A generation change vs the offset's stored generation bumps
+    * every epoch once (A5). Seeds read only the START offset's epochs,
+    * never a sibling shard folded in the same trigger: the readers seed
+    * from the same map (planInputPartitions), so a reshard child whose
+    * parent changes epoch in this trigger carries one epoch in both. The
+    * cursor only advances at out-of-transaction line boundaries so a
+    * batch window never splits a transaction; FIELD (schema) lines are
+    * checkpointed per (shard, table) so seeked readers decode without
+    * history. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[VgtidOffset]
     // An explicit shard list narrowed against an existing checkpoint would
@@ -693,24 +679,10 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     }
     lazy val init = initialOffset().asInstanceOf[VgtidOffset]
     lazy val bumpedInit = EpochProvider.applyGeneration(init.epochs, from.generation, generation)
-    var epochs = EpochProvider.applyGeneration(from.epochs, from.generation, generation)
-    val positionsOut = Map.newBuilder[String, Long]
-    val schemasOut = Map.newBuilder[String, Map[String, String]]
-    val hbMsOut = Map.newBuilder[String, Long]
-    val splitsOut = Map.newBuilder[String, Seq[ShardCursor]]
-    val files = shardFiles
-    if (useTailers) {
-      // retire tailers for shards that left the topology (reshard parents
-      // whose feeds were removed): their state is already in `from`
-      val current = files.map(_._1).toSet
-      tailers.keys.filterNot(current).toSeq.foreach { sh =>
-        tailers.remove(sh).foreach(_.shutdown())
-      }
-    }
-    /** Seed cursor for a shard the fold has no byte position for — the
-      * same branching for both paths. Positions compare by (rank,
-      * copy-phase lastpk progress) so copy batches advance the offset
-      * even while the GTID stays fixed; epoch fallbacks inherit from the
+    val startEpochs = EpochProvider.applyGeneration(from.epochs, from.generation, generation)
+    /** Seed cursor for one shard. Positions compare by (rank, copy-phase
+      * lastpk progress) so copy batches advance the offset even while the
+      * GTID stays fixed; epoch fallbacks inherit from the
       * generation-BUMPED map so a reshard child appearing across a
       * generation-change restart seeds from its parents' post-bump
       * epochs (the same map the readers see). */
@@ -722,9 +694,9 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
           .getOrElse(ShardGtid(keyspace, shard, Vgtid.EmptyGtid))
       }
       val epoch = seekFrom match {
-        case Some(_) => epochs.get(shard).getOrElse(seedEpoch(shard, epochs))
+        case Some(_) => seedEpoch(shard, startEpochs)
         case None if from.epochs.get(shard).isDefined => bumpedInit.get(shard).getOrElse(0L)
-        case None => seedEpoch(shard, epochs) // reshard child (A4)
+        case None => seedEpoch(shard, startEpochs) // reshard child (A4)
       }
       ShardCursor(
         seekFrom.getOrElse(0L), sg, epoch,
@@ -732,59 +704,62 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
         from.hbMs.getOrElse(shard, Long.MinValue),
         admitted = 0L)
     }
-    val gtids = files.map { case (shard, file) =>
+    /** Fold one shard's new bytes from `seed` up to the first transaction
+      * boundary past either cap (EOF when none is set): the last safe
+      * cursor and the split cursors below it. */
+    def foldShard(
+        shard: String, file: String, startSg: ShardGtid,
+        seed: ShardCursor): (ShardCursor, Seq[ShardCursor]) = {
+      val fold = new TxBoundaryFold(
+        shard, keyspace, seed, startSg, heartbeatIntervalMs, splitPartitionBytes)
+      // a feed deleted between listing and reading (retired reshard
+      // parent) admits nothing this trigger instead of failing it
+      val slice =
+        try Some(transport.open(file, seed.pos, Long.MaxValue))
+        catch { case _: java.nio.file.NoSuchFileException => None }
+      slice.foreach { sl =>
+        try {
+          var line = sl.readLine()
+          var stop = false
+          while (line != null && !stop) {
+            fold.onLine(line, sl.position)
+            // a cursor AT the slice position means the fold just
+            // published a safe boundary on this line
+            stop = fold.safe.pos == sl.position &&
+              (fold.safe.admitted >= maxTxsPerTrigger ||
+                fold.safe.pos - seed.pos >= maxBytesPerTrigger)
+            if (!stop) line = sl.readLine()
+          }
+        } finally sl.close()
+      }
+      // admitted is fold-internal progress, meaningless to readers —
+      // zero it so offset JSON round-trips compare equal
+      val splits = thinSplits(fold.drainSplits().filter(_.pos < fold.safe.pos))
+        .map(_.copy(admitted = 0L))
+      (fold.safe, splits)
+    }
+    val shards = shardFiles.map { case (shard, file) =>
       val startSg = from.vgtid.shardGtid(shard)
         .getOrElse(ShardGtid(keyspace, shard, Vgtid.EmptyGtid))
-      val cursor =
-        if (useTailers) {
-          val t = tailers.getOrElseUpdate(shard, {
-            val tailer = new ShardTailer(
-              transport, file, shard, keyspace, seedCursor(shard, startSg),
-              startSg, heartbeatIntervalMs, splitPartitionBytes)
-            tailerPool.register(tailer)
-            tailer
-          })
-          // a feed deleted between listing and sizing (retired reshard
-          // parent) admits nothing this trigger instead of failing it
-          val highWater = try transport.size(file) catch { case _: Exception => 0L }
-          t.awaitCaughtUp(highWater, tailCatchupTimeoutMs, () => tailerPool.nudgeAll())
-          val snap = t.snapshot
-          // admitted is fold-internal progress, meaningless to readers —
-          // zero it so offset JSON round-trips compare equal
-          val shardSplits = thinSplits(t.drainSplits(snap.pos)).map(_.copy(admitted = 0L))
-          if (shardSplits.nonEmpty) splitsOut += shard -> shardSplits
-          snap
-        } else {
-          // bounded-batch mode: synchronous fold, stops at the first tx
-          // boundary past either cap — work is O(cap), not O(new bytes)
-          val seed = seedCursor(shard, startSg)
-          val fold = new TxBoundaryFold(
-            shard, keyspace, seed, startSg, heartbeatIntervalMs, splitPartitionBytes)
-          val slice = transport.open(file, seed.pos, Long.MaxValue)
-          try {
-            var line = slice.readLine()
-            var stop = false
-            while (line != null && !stop) {
-              VitessCdcStream.triggerScanLines.incrementAndGet()
-              fold.onLine(line, slice.position)
-              // a cursor AT the slice position means the fold just
-              // published a safe boundary on this line
-              if (fold.safe.pos == slice.position &&
-                  (fold.safe.admitted >= maxTxsPerTrigger ||
-                   fold.safe.pos - seed.pos >= maxBytesPerTrigger))
-                stop = true
-              if (!stop) line = slice.readLine()
-            }
-          } finally slice.close()
-          val shardSplits = thinSplits(fold.drainSplits().filter(_.pos < fold.safe.pos))
-            .map(_.copy(admitted = 0L))
-          if (shardSplits.nonEmpty) splitsOut += shard -> shardSplits
-          fold.safe
-        }
+      (shard, file, startSg, seedCursor(shard, startSg))
+    }
+    val folded = {
+      import scala.concurrent.ExecutionContext.Implicits.global
+      Await.result(Future.traverse(shards) { case (shard, file, startSg, seed) =>
+        Future(foldShard(shard, file, startSg, seed))
+      }, Duration.Inf)
+    }
+    var epochs = startEpochs
+    val positionsOut = Map.newBuilder[String, Long]
+    val schemasOut = Map.newBuilder[String, Map[String, String]]
+    val hbMsOut = Map.newBuilder[String, Long]
+    val splitsOut = Map.newBuilder[String, Seq[ShardCursor]]
+    val gtids = shards.zip(folded).map { case ((shard, _, startSg, _), (cursor, splits)) =>
       epochs = epochs.put(shard, cursor.epoch)
       positionsOut += shard -> cursor.pos
       if (cursor.schemas.nonEmpty) schemasOut += shard -> cursor.schemas
       if (heartbeatIntervalMs > 0 && cursor.hbMs != Long.MinValue) hbMsOut += shard -> cursor.hbMs
+      if (splits.nonEmpty) splitsOut += shard -> splits
       // never regress behind the committed start position
       if (CopyProgress.compare(cursor.sg, startSg) < 0) startSg else cursor.sg
     }
@@ -799,7 +774,10 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     // every split-carrying batch.
     if (built.splits.isEmpty && from.splits.nonEmpty &&
       built.copy(splits = from.splits).json() == from.json()) from
-    else built
+    else {
+      admittedTotal += folded.map(_._1.admitted).sum
+      built
+    }
   }
 
   override def latestOffset(): Offset =
@@ -893,7 +871,7 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     *    transport's high-water positions vs the consumed offset (the
     *    queue-depth analogue; -1 when the transport can't report sizes)
     *  - `admittedTransactions` — cumulative transactions admitted since
-    *    stream start (tailer mode; the committed-transactions counter)
+    *    stream start (the committed-transactions counter)
     */
   override def metrics(latestConsumedOffset: java.util.Optional[Offset]): util.Map[String, String] = {
     val m = new util.HashMap[String, String]()
@@ -915,27 +893,13 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
       else lag += math.max(0L, size - positions.getOrElse(sh, 0L))
     }
     m.put("lagBytes", if (sized) lag.toString else "-1")
-    if (useTailers)
-      m.put("admittedTransactions", tailers.values.map(_.snapshot.admitted).sum.toString)
+    m.put("admittedTransactions", admittedTotal.toString)
     m
   }
 
   override def deserializeOffset(json: String): Offset = VgtidOffset.fromJson(json)
   override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = {
-    tailers.values.foreach(_.shutdown())
-    tailers.clear()
-    if (useTailers) tailerPool.shutdown()
-    transport.close()
-  }
-}
-
-object VitessCdcStream {
-  /** Test instrumentation: wire lines scanned ON the trigger thread by
-    * `latestOffset` (the synchronous capped path only — the default
-    * tailer path must keep this at zero; specs pin that bound). */
-  val triggerScanLines = new java.util.concurrent.atomic.AtomicLong()
-
+  override def stop(): Unit = transport.close()
 }
 
 final case class VitessCdcPartition(

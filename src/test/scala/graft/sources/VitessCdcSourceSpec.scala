@@ -847,6 +847,37 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("40-60", 2L)))
   }
 
+  test("reshard: a child admitted with its parent's epoch change keeps one epoch (A4)") {
+    val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcfeed14b"))
+    val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcckpt14b"))
+    val out = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcreshardout2"))
+    writeFeed(feedDir, "-80", insertTx("-80", 1, 1, "a"))
+    def run(): Unit = {
+      val q = spark.readStream.format("vitess-cdc")
+        .option("path", feedDir.toString)
+        .option("inherit.epoch", "true")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out.toString)
+        .option("checkpointLocation", ckpt.toString).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    run()
+    // one trigger admits the parent's host change AND the new child: the
+    // child seeds from the start offset's parent epoch (0), as its reader
+    // does, not from the parent's epoch folded in the same trigger
+    writeFeed(feedDir, "-80", insertTx("-80", 2, 2, "b", host = "failover"), append = true)
+    writeFeed(feedDir, "40-60", insertTx("40-60", 1, 10, "c"))
+    run()
+    writeFeed(feedDir, "40-60", insertTx("40-60", 2, 11, "d"), append = true)
+    run()
+    val epochs = spark.read.parquet(out.toString)
+      .where("op = 'c' AND shard = '40-60'")
+      .selectExpr("CAST(get_json_object(after, '$.id') AS LONG) AS id", "epoch")
+      .orderBy("id").collect().map(_.getLong(1)).toSeq
+    assert(epochs == Seq(1L, 1L)) // no jump without a host change
+  }
+
   test("stop.on.reshard fails the query when a new shard appears; restart resumes it (S3)") {
     val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcfeed23"))
     val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcckpt23"))
@@ -1134,30 +1165,6 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ids == (1L to 52L)) // and still exactly-once
   }
 
-  test("default admission is metadata-only: zero feed lines scanned on the trigger thread") {
-    val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcfeed23"))
-    val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcckpt23"))
-    writeFeed(feedDir, "s0", (1L to 20L).flatMap(i => insertTx("s0", i, i, s"v$i")))
-    writeFeed(feedDir, "s1", (1L to 20L).flatMap(i => insertTx("s1", i, 100 + i, s"w$i")))
-    val before = VitessCdcStream.triggerScanLines.get()
-    val q = spark.readStream.format("vitess-cdc")
-      .option("path", feedDir.toString).load()
-      .writeStream.format("memory").queryName("cdc_meta_only")
-      .option("checkpointLocation", ckpt.toString).start()
-    try {
-      q.processAllAvailable()
-      // growth while the query is LIVE: the background tailers (not the
-      // trigger thread) absorb the new bytes before the next cut
-      writeFeed(feedDir, "s0", (21L to 25L).flatMap(i => insertTx("s0", i, i, s"v$i")), append = true)
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(VitessCdcStream.triggerScanLines.get() == before,
-      "unbounded admission must not scan feed lines on the trigger thread")
-    val ids = spark.sql("SELECT CAST(get_json_object(after, '$.id') AS LONG) FROM cdc_meta_only")
-      .collect().map(_.getLong(0)).toSeq.sorted
-    assert(ids == ((1L to 25L) ++ (101L to 120L))) // exactly-once, both shards
-  }
-
   test("source metrics ride StreamingQueryProgress: shards, lag, admitted txs") {
     val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcfeed25"))
     val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcckpt25"))
@@ -1174,42 +1181,29 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(metrics.get("shards") == "2")
     assert(metrics.get("lagBytes") == "0") // fully consumed
     assert(metrics.get("admittedTransactions") == "11")
+    // capped admission counts the same transactions over several triggers
+    val cappedCkpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcckpt25b"))
+    val capped = spark.readStream.format("vitess-cdc")
+      .option("path", feedDir.toString)
+      .option("max.txs.per.trigger", "2").load()
+      .writeStream.format("memory").queryName("cdc_metrics_capped")
+      .option("checkpointLocation", cappedCkpt.toString).start()
+    val cappedMetrics = try {
+      capped.processAllAvailable()
+      capped.lastProgress.sources.head.metrics
+    } finally capped.stop()
+    assert(cappedMetrics.get("admittedTransactions") == "11")
   }
 
-  test("tailer pool bounds driver threads below shard count, exactly-once intact") {
+  test("24 shards fold in parallel in one trigger, exactly-once intact") {
     val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcfeed26"))
     val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcckpt26"))
     val nShards = 24
     (0 until nShards).foreach { i =>
       writeFeed(feedDir, f"s$i%02d", (1L to 3L).flatMap(k => insertTx(f"s$i%02d", k, i * 100L + k, s"v$k")))
     }
-    // thread bound, checked directly on a pool (per-pool thread names —
-    // a JVM-global count would race with concurrently-running suites)
-    val transport = FileFeedTransport(feedDir.toString, excludeEmptyShards = true)
-    val pool = new TailerPool(maxThreads = 3, pollMs = 2)
-    try {
-      val tailers = transport.listShards().map { case (sh, loc) =>
-        val t = new ShardTailer(
-          transport, loc, sh, "ks",
-          ShardCursor(0L, graft.core.ShardGtid("ks", sh, ""), 0L, Map.empty, Long.MinValue, 0L),
-          graft.core.ShardGtid("ks", sh, ""), heartbeatIntervalMs = 0L)
-        pool.register(t)
-        (t, loc)
-      }
-      tailers.foreach { case (t, loc) =>
-        t.awaitCaughtUp(transport.size(loc), 10000, () => pool.nudgeAll())
-      }
-      assert(pool.workerCount <= 3, s"24 shards must multiplex over <= 3 pool threads")
-      val arr = new Array[Thread](Thread.activeCount() + 32)
-      Thread.enumerate(arr)
-      val own = arr.count(t => t != null && t.isAlive &&
-        t.getName.startsWith(s"vitess-cdc-tailer-${pool.poolId}-"))
-      assert(own <= 3, s"saw $own threads for pool ${pool.poolId}")
-    } finally pool.shutdown()
-    // end-to-end over the same feed: exactly-once with a capped pool
     val q = spark.readStream.format("vitess-cdc")
       .option("path", feedDir.toString)
-      .option("tail.threads", "3")
       .load()
       .writeStream.format("memory").queryName("cdc_pool")
       .option("checkpointLocation", ckpt.toString).start()
@@ -1223,7 +1217,6 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcfeed24"))
     val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcckpt24"))
     writeFeed(feedDir, "s0", (1L to 6L).flatMap(i => insertTx("s0", i, i, s"v$i")))
-    val before = VitessCdcStream.triggerScanLines.get()
     val q = spark.readStream.format("vitess-cdc")
       .option("path", feedDir.toString)
       .option("max.txs.per.trigger", "2")
@@ -1231,7 +1224,6 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .writeStream.format("memory").queryName("cdc_capped_scan")
       .option("checkpointLocation", ckpt.toString).start()
     try q.processAllAvailable() finally q.stop()
-    assert(VitessCdcStream.triggerScanLines.get() > before) // the bounded synchronous path
     val ids = spark.sql("SELECT CAST(get_json_object(after, '$.id') AS LONG) FROM cdc_capped_scan")
       .collect().map(_.getLong(0)).toSeq.sorted
     assert(ids == (1L to 6L))
