@@ -440,13 +440,8 @@ object CdcFeed extends Serializable {
     * to the single-partition window's, so feed bytes don't change. */
   private def globalSeq(df: DataFrame, orderCol: String, base: Long): DataFrame = {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(parts, col(orderCol))
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // unpersist in a finally: under the harness's long-lived shared
-    // session, ONE failed generation (a task failure in either eager
-    // pass) would otherwise pin the cached feed for the session lifetime
-    try {
+    Materialize.cached(df.repartitionByRange(parts, col(orderCol))
+        .withColumn("__pid", spark_partition_id())) { ranged =>
       val counts: Map[Int, Long] = ranged.groupBy(col("__pid")).count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       val offsets = counts.keys.toSeq.sorted
@@ -459,9 +454,9 @@ object CdcFeed extends Serializable {
         .withColumn("tx", col("__off") + row_number().over(w).cast("long") + base)
         .drop("__pid", "__off")
         // cut the cached-exchange lineage so the cache can be released
-        // without a recompute hazard (selectUnderTokenBudget's discipline)
+        // without a recompute hazard
         .localCheckpoint()
-    } finally ranged.unpersist()
+    }
   }
 
   /** VStream-copy feed (S5/F3 gate fixture), single shard `s0` — the

@@ -19,32 +19,9 @@ object CdcQueries {
 
   /** The default orders change log, computed once per scale dir and
     * persisted — several gates query the same log, exactly like a real
-    * deployment materializes one change log for many consumers.
-    *
-    * One entry per dir, validated against the CURRENT session on every
-    * lookup (the sharedPairs/LSH-cache hardening): a dir-only cache
-    * would hand a later session in the same JVM plans bound to a
-    * stopped SparkContext, and replacing an entry unpersists the old
-    * blocks when the context is still live (SparkSession.newSession
-    * shares one context — leaking them lasts the process lifetime). */
-  private def cachedLog(
-      cache: java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)],
-      s: SparkSession, d: String)(build: => DataFrame): DataFrame =
-    cache.synchronized {
-      val cached = cache.get(d)
-      if (cached != null && (cached._1 eq s) && !s.sparkContext.isStopped) cached._2
-      else {
-        val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (cached != null && !cached._1.sparkContext.isStopped)
-          try cached._2.unpersist(blocking = false) catch { case _: Throwable => () }
-        cache.put(d, (s, df))
-        df
-      }
-    }
-  private val sharedRecords =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
+    * deployment materializes one change log for many consumers. */
   private def ordersChangeLog(s: SparkSession, d: String): DataFrame =
-    cachedLog(sharedRecords, s, d)(
+    Materialize.shared(s, s"cdc.changeLog:$d")(
       CdcPipeline.changeRecords(s, ordersFeed(s, d)).toDF())
 
   /** The default orders FEED (the raw wire lines), memoized like the
@@ -52,11 +29,9 @@ object CdcQueries {
     * pass that FIVE consumers otherwise re-run from scratch per
     * invocation (the change log, the boundary gate, the wire-decode
     * gate, the feed-file staging, and the restart waves). */
-  private val sharedOrdersFeed =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
   private def ordersFeed(s: SparkSession, d: String): org.apache.spark.sql.Dataset[graft.streaming.FeedLine] = {
     import s.implicits._
-    cachedLog(sharedOrdersFeed, s, d)(CdcFeed.orders(s, d).toDF())
+    Materialize.shared(s, s"cdc.ordersFeed:$d")(CdcFeed.orders(s, d).toDF())
       .as[graft.streaming.FeedLine]
   }
 
@@ -348,7 +323,7 @@ object CdcQueries {
   private def writeFeedFiles(
       s: SparkSession,
       feed: org.apache.spark.sql.Dataset[graft.streaming.FeedLine],
-      feedDir: java.nio.file.Path): Unit = timed(s"writeFeed:$feedDir") {
+      feedDir: java.nio.file.Path): Unit = {
     val tmp = feedDir.resolve("_tmp")
     feed
       .repartition(CdcFeed.DefaultShards, col("shard"))
@@ -387,24 +362,12 @@ object CdcQueries {
     }
   }
 
-  /** Opt-in harness profiling (-Dgraft.profile): prints per-step wall
-    * time for the checkpointed gates so bench hygiene work measures
-    * instead of guessing. Zero cost when unset. */
-  private def timed[T](label: String)(f: => T): T =
-    if (!sys.props.contains("graft.profile")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PROFILE-STEP $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   private def runStreamOnce(
       s: SparkSession,
       feedDir: java.nio.file.Path,
       outDir: java.nio.file.Path,
       ckpt: java.nio.file.Path,
-      options: Map[String, String] = Map.empty): Unit = timed(s"stream:$feedDir") {
+      options: Map[String, String] = Map.empty): Unit = {
     val q = s.readStream.format("vitess-cdc")
       .option("path", feedDir.toString)
       .options(options)
@@ -429,14 +392,12 @@ object CdcQueries {
   /** The plain orders feed is consumed read-only by several gates (each
     * keeps its own checkpoint + sink); materialize it once per scale dir
     * like ordersChangeLog — the write job is pure harness cost. */
-  private val sharedFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
   private def ordersFeedDir(s: SparkSession, d: String): java.nio.file.Path =
-    sharedFeedDirs.computeIfAbsent(s"orders:$d", _ => {
+    Materialize.once(s"cdc.ordersFeedDir:$d") {
       val dir = graft.TempDirs.reclaimOnExit(java.nio.file.Files.createTempDirectory("graft_feed_orders"))
       writeFeedFiles(s, ordersFeed(s, d), dir)
       dir
-    })
+    }
 
   /** Staged-wave cache for the 2-run restart gates: each invocation
     * streams the SAME deterministic feed waves, so the Spark
@@ -445,15 +406,13 @@ object CdcQueries {
     * and byte-copy it into the caller's fresh feed dir after that.
     * Restart semantics are untouched — every invocation still gets its
     * own feedDir/checkpoint/sink and two real checkpointed runs. */
-  private val stagedWaveDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[java.nio.file.Path]]()
   private def stageWaves(key: String, s: SparkSession)(
       waves: => Seq[org.apache.spark.sql.Dataset[graft.streaming.FeedLine]]): Seq[java.nio.file.Path] =
-    // a cached key must not force `waves`: building the wave plans is
-    // the work the cache exists to skip
-    Option(stagedWaveDirs.get(key)).getOrElse {
+    // a staged key must not force `waves`: building the wave plans is
+    // the work the memo exists to skip
+    stageTagged(key) {
       val ws = waves
-      stageTagged(key, ws.size)(ws.zipWithIndex
+      (ws.size, ws.zipWithIndex
         .map { case (w, i) => w.withColumn("wave", lit(i)) }
         .reduce(_ unionByName _))
     }
@@ -466,17 +425,19 @@ object CdcQueries {
   private def stageWavesBy(key: String, nWaves: Int)(
       feed: => org.apache.spark.sql.Dataset[graft.streaming.FeedLine],
       waveOf: org.apache.spark.sql.Column): Seq[java.nio.file.Path] =
-    stageTagged(key, nWaves)(feed.withColumn("wave", waveOf))
+    stageTagged(key)((nWaves, feed.withColumn("wave", waveOf)))
 
-  private def stageTagged(key: String, nWaves: Int)(
-      taggedFeed: => DataFrame): Seq[java.nio.file.Path] =
-    stagedWaveDirs.computeIfAbsent(key, _ => timed(s"stage:$key") {
+  /** Stage a wave-tagged feed (wave count, feed) once per key; the
+    * process-lifetime memo never forces `taggedFeed` on a hit. */
+  private def stageTagged(key: String)(
+      taggedFeed: => (Int, DataFrame)): Seq[java.nio.file.Path] =
+    Materialize.once(s"cdc.waves:$key") {
       // ALL waves ride ONE sort+write job (partitioned by wave, then
       // shard) — the first invocation pays a single staging job instead
       // of one per wave
       import java.nio.file.Files
       import scala.jdk.CollectionConverters._
-      val tagged = taggedFeed
+      val (nWaves, tagged) = taggedFeed
       val tmp = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("graft_stage_tmp"))
       val made = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
       try {
@@ -504,7 +465,7 @@ object CdcQueries {
         (tmp +: made.toSeq).foreach(graft.TempDirs.deleteRecursively)
         throw e
       }
-    })
+    }
   /** Run a gate's copy/stream section, then release its per-invocation
     * dirs SUCCESS OR FAILURE: a red gate under a Verify loop or a
     * multi-run bench must not accumulate corpus-sized feed copies and
@@ -875,29 +836,26 @@ object CdcQueries {
     * (mysql.user) stay excluded in both modes. */
   val qCdcHeartbeatTables: Q = (s, d) => {
     import graft.core.TableFilter
-    // persisted: BOTH mode runs below replay the same generated feed —
+    // cached: BOTH mode runs below replay the same generated feed —
     // without the cache each run() pays full feed generation again
-    val feed = CdcFeed.twoTables(s, d, withHeartbeatTable = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def run(mode: String, streamHeartbeats: Boolean) =
-      CdcPipeline.changeRecords(
-          s, feed,
-          tableFilter = TableFilter.acceptAll.copy(excludeHeartbeatTables = !streamHeartbeats))
-        .toDF()
-        .filter(col("op") === "c")
-        .groupBy(col("table").as("tbl"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("mode", lit(mode))
-    try run("default", streamHeartbeats = false)
-      .unionByName(run("with_heartbeats", streamHeartbeats = true))
-      .select(col("mode"), col("tbl"), col("n"))
-      .orderBy(col("mode"), col("tbl"))
-      // materialize, then release the per-invocation feed cache — the
-      // result is ~5 rows, the cached feed is the whole generated
-      // corpus, and it must be released on the FAILURE path too or a
-      // red run pins it for the session lifetime
-      .localCheckpoint()
-    finally feed.unpersist()
+    Materialize.cached(CdcFeed.twoTables(s, d, withHeartbeatTable = true)) { feed =>
+      def run(mode: String, streamHeartbeats: Boolean) =
+        CdcPipeline.changeRecords(
+            s, feed,
+            tableFilter = TableFilter.acceptAll.copy(excludeHeartbeatTables = !streamHeartbeats))
+          .toDF()
+          .filter(col("op") === "c")
+          .groupBy(col("table").as("tbl"))
+          .agg(count(lit(1)).as("n"))
+          .withColumn("mode", lit(mode))
+      run("default", streamHeartbeats = false)
+        .unionByName(run("with_heartbeats", streamHeartbeats = true))
+        .select(col("mode"), col("tbl"), col("n"))
+        .orderBy(col("mode"), col("tbl"))
+        // the result is ~5 rows; the cached feed is the whole generated
+        // corpus, released when this block ends
+        .localCheckpoint()
+    }
   }
 
   val qCdcHeartbeatTablesSql: String =
@@ -956,10 +914,8 @@ object CdcQueries {
   /** The multi-version orders change log, computed once per scale dir —
     * the materialize, time-travel, and SCD2 gates all consume the same
     * log, like three readers of one landed CDC table. */
-  private val sharedVersioned =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
   private def ordersVersionedLog(s: SparkSession, d: String): DataFrame =
-    cachedLog(sharedVersioned, s, d)(
+    Materialize.shared(s, s"cdc.versionedLog:$d")(
       CdcPipeline.changeRecords(s, CdcFeed.ordersVersioned(s, d)).toDF())
 
   /** S7 + SURVEY §2.9: CDC→table upsert — latest state per key ordered by

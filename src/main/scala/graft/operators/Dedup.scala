@@ -166,52 +166,55 @@ object Dedup {
     // most expensive stage of this operator (profiled at sf0.1: ~4.4 s
     // of a 12 s query, and it ran twice) — caching it halves the index
     // build and leaves everything downstream reading columnar cache
-    val sh = Scans.widenIfNarrow(df.select(
+    val rawIndex = Scans.widenIfNarrow(df.select(
         col(idCol).cast("long").as("id"), col(textCol).as("__txt")))
       .select(col("id"),
         explode(array_distinct(shingles(col("__txt"), n))).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // persisted: the pruned inverted index feeds the size aggregation
-    // and the pairing stage. The df filter stays a shuffle join keyed on
-    // the shingle (NOT a broadcast anti-join against the hot set): hot
-    // shingles in a zipfian corpus can number in the millions at 100 TB,
-    // while the shuffle join is skew-safe under AQE at any scale.
-    val kept = sh.join(
-      sh.groupBy(col("sh")).agg(count(lit(1)).as("sdf"))
-        .filter(col("sdf") <= maxShingleDf)
-        .select("sh"),
-      Seq("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Both index consumers are materialized eagerly (sizes is one row per
-    // doc, shared one per candidate pair — tiny next to the index), which
-    // cuts their lineage and lets the cache release HERE instead of
-    // pinning a corpus-scale relation for the session lifetime (the same
-    // persist/checkpoint/unpersist discipline as cosineNearDupPairs and
-    // connectedComponents). The final containment join below stays lazy.
-    val sizes = kept.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-      .localCheckpoint() // materializes kept — the raw index can release
-    sh.unpersist()
-    // Pairing groups each shingle's (cap-bounded, ≤ maxShingleDf) doc
-    // list once and explodes the C(k,2) ordered pairs narrowly — one
-    // shuffle of the index instead of the two a self-join needs, with
-    // identical semantics (pairs of distinct docs sharing the shingle).
-    // The collect_list is safe ONLY because the df filter above already
-    // dropped hot shingles; collecting before capping would rebuild the
-    // hot-key hazard the cap exists to bound.
-    val ids = col("ids")
-    val pairsOfIds = flatten(
-      transform(sequence(lit(0), size(ids) - 2), i =>
-        transform(
-          slice(ids, i + 2, size(ids)),
-          b => struct(element_at(ids, i + 1).as("id_a"), b.as("id_b")))))
-    val shared = kept.groupBy(col("sh"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .filter(size(ids) > 1)
-      .select(explode(pairsOfIds).as("p"))
-      .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-      .localCheckpoint()
-    kept.unpersist()
+    val (sizes, shared) = Materialize.cached(rawIndex) { sh =>
+      // cached: the pruned inverted index feeds the size aggregation
+      // and the pairing stage. The df filter stays a shuffle join keyed on
+      // the shingle (NOT a broadcast anti-join against the hot set): hot
+      // shingles in a zipfian corpus can number in the millions at 100 TB,
+      // while the shuffle join is skew-safe under AQE at any scale.
+      val prunedIndex = sh.join(
+        sh.groupBy(col("sh")).agg(count(lit(1)).as("sdf"))
+          .filter(col("sdf") <= maxShingleDf)
+          .select("sh"),
+        Seq("sh"))
+      // Both index consumers are materialized eagerly (sizes is one row
+      // per doc, shared one per candidate pair — tiny next to the index),
+      // which cuts their lineage and lets each cache release as soon as
+      // its last consumer is done. The final containment join below
+      // stays lazy.
+      Materialize.cached(prunedIndex) { kept =>
+        val sizes = kept.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+          .localCheckpoint() // materializes kept
+        // the raw index is done: release it before the pairing stage
+        // (the enclosing block still releases it on the failure path)
+        sh.unpersist()
+        // Pairing groups each shingle's (cap-bounded, ≤ maxShingleDf)
+        // doc list once and explodes the C(k,2) ordered pairs narrowly —
+        // one shuffle of the index instead of the two a self-join needs,
+        // with identical semantics (pairs of distinct docs sharing the
+        // shingle). The collect_list is safe ONLY because the df filter
+        // above already dropped hot shingles; collecting before capping
+        // would rebuild the hot-key hazard the cap exists to bound.
+        val ids = col("ids")
+        val pairsOfIds = flatten(
+          transform(sequence(lit(0), size(ids) - 2), i =>
+            transform(
+              slice(ids, i + 2, size(ids)),
+              b => struct(element_at(ids, i + 1).as("id_a"), b.as("id_b")))))
+        val shared = kept.groupBy(col("sh"))
+          .agg(sort_array(collect_list(col("id"))).as("ids"))
+          .filter(size(ids) > 1)
+          .select(explode(pairsOfIds).as("p"))
+          .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+          .agg(count(lit(1)).as("inter"))
+          .localCheckpoint()
+        (sizes, shared)
+      }
+    }
     shared
       .join(sizes.select(col("id").as("id_a"), col("sz").as("sz_a")), Seq("id_a"))
       .join(sizes.select(col("id").as("id_b"), col("sz").as("sz_b")), Seq("id_b"))
@@ -767,43 +770,44 @@ object Dedup {
       .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
       .unionByName(pairs.select(col("id_b").cast("long").as("src"), col("id_a").cast("long").as("dst")))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // initial label: min(self, direct neighbors)
-    var labels = edges
-      .groupBy(col("src").as("id"))
-      .agg(min(col("dst")).as("mn"))
-      .select(col("id"), least(col("id"), col("mn")).as("label"))
-      .localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // hop 1: min over direct neighbors' labels (round-start label rides
-      // along as `old` so convergence is a cheap scan of the checkpointed
-      // result, not an extra join job per round)
-      val prop = edges
-        .join(labels.withColumnRenamed("id", "src"), Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("label")).as("nlabel"))
-      val hopped = labels
-        .join(prop, Seq("id"), "left")
-        .select(col("id"), col("label").as("old"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-      // hop 2: pointer jumping — adopt the label of the current label,
-      // halving the remaining chain depth every round
-      val next = hopped.as("a")
-        .join(
-          hopped.select(col("id").as("lid"), col("label").as("llabel")),
-          col("a.label") === col("lid"), "left")
-        .select(
-          col("a.id").as("id"),
-          least(col("a.label"), coalesce(col("llabel"), col("a.label"))).as("label"),
-          col("a.old").as("old"))
+    val (labels, iter, converged) = Materialize.cached(edges) { edges =>
+      // initial label: min(self, direct neighbors)
+      var labels = edges
+        .groupBy(col("src").as("id"))
+        .agg(min(col("dst")).as("mn"))
+        .select(col("id"), least(col("id"), col("mn")).as("label"))
         .localCheckpoint()
-      converged = next.filter(col("label") =!= col("old")).isEmpty
-      labels = next.select(col("id"), col("label"))
-      iter += 1
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIter) {
+        // hop 1: min over direct neighbors' labels (round-start label rides
+        // along as `old` so convergence is a cheap scan of the checkpointed
+        // result, not an extra join job per round)
+        val prop = edges
+          .join(labels.withColumnRenamed("id", "src"), Seq("src"))
+          .groupBy(col("dst").as("id"))
+          .agg(min(col("label")).as("nlabel"))
+        val hopped = labels
+          .join(prop, Seq("id"), "left")
+          .select(col("id"), col("label").as("old"),
+            least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
+        // hop 2: pointer jumping — adopt the label of the current label,
+        // halving the remaining chain depth every round
+        val next = hopped.as("a")
+          .join(
+            hopped.select(col("id").as("lid"), col("label").as("llabel")),
+            col("a.label") === col("lid"), "left")
+          .select(
+            col("a.id").as("id"),
+            least(col("a.label"), coalesce(col("llabel"), col("a.label"))).as("label"),
+            col("a.old").as("old"))
+          .localCheckpoint()
+        converged = next.filter(col("label") =!= col("old")).isEmpty
+        labels = next.select(col("id"), col("label"))
+        iter += 1
+      }
+      (labels, iter, converged)
     }
-    edges.unpersist()
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxIter rounds")

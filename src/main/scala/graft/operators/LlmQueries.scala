@@ -103,17 +103,14 @@ object LlmQueries {
       |)""".stripMargin
 
   // ---------------------------------------------- staged-input memo
-  /** Staged-input cache for the file-stream gates: every invocation
+  /** Staged-input memo for the file-stream gates: every invocation
     * streams the SAME deterministic parquet layout, so stage it once per
     * (gate, sfDir) and reuse across bench re-runs — the measured work
     * stays the real streaming run; only the input re-lay is memoized
     * (the same contract as CdcQueries.stageWaves). Dirs live for the
     * process lifetime. */
-  private val stagedParquetDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
   private def stageOnce(key: String)(write: java.nio.file.Path => Unit): java.nio.file.Path =
-    stagedParquetDirs.computeIfAbsent(key, _ => {
+    Materialize.once(s"llm.staged:$key") {
       // registered BEFORE the write so even a crash mid-stage reclaims
       // at exit; a failed staging write is released immediately (the
       // retry would otherwise stage a second full copy next to it)
@@ -125,7 +122,7 @@ object LlmQueries {
         throw e
       }
       dir
-    })
+    }
 
   /** Pin a memory-sink streaming result onto the DRIVER and drop the
     * sink's temp view. The collect-before-cleanup matters: a
@@ -244,50 +241,29 @@ object LlmQueries {
     * never an all-pairs join — equals the TRUE pair set (the documents
     * table also contains natural near-dups), which the oracle recomputes
     * with exact all-pairs Jaccard in SQL. */
-  /** The injected-union corpus and its verified near-dup pairs, shared by
-    * the pair and survivor gates (one LSH run, two consumers). */
-  private val sharedPairs =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame, DataFrame)]()
-  /** One entry per dir, validated against the CURRENT session on every
-    * lookup: DataFrames are bound to their SparkSession, and a dir-only
-    * cache would hand a later session (test suites stop and recreate
-    * them in one JVM) plans referencing a stopped SparkContext — while a
-    * session-keyed map would pin every stopped session in memory for the
-    * process lifetime. Replacing the entry lets the old session's frames
-    * be collected. Bench-attribution caveat: whichever consumer gate
-    * runs FIRST (alphabetically dedup_cluster_reps) absorbs the one
-    * shared LSH run's wall time; the other three time a cache read —
-    * per-gate medians shift, the suite total stays honest. */
-  private def unionWithPairs(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    // coarse lock: gate-granularity calls, and without it two consumers
-    // racing a cold cache would BOTH run the LSH and persist, with the
-    // losing put orphaning cached blocks nobody can unpersist
-    sharedPairs.synchronized {
-      val cached = sharedPairs.get(d)
-      if (cached != null && (cached._1 eq s) && !s.sparkContext.isStopped)
-        (cached._2, cached._3)
-      else {
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val nearDups = docs.filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 200000).as("doc_id"), concat(col("text"), lit(" zzzz")).as("text"))
-        val union = docs.unionByName(nearDups)
-        val pairs = Dedup.minhashNearDupPairs(
-          union, "text", "doc_id", threshold = 0.8, numHashes = 64, bands = 16)
-        pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // a replaced stale entry may share a still-live SparkContext with
-        // the new session (SparkSession.newSession): drop its cached
-        // blocks instead of leaking them until context stop
-        if (cached != null && !cached._1.sparkContext.isStopped)
-          try cached._3.unpersist(blocking = false) catch { case _: Throwable => () }
-        sharedPairs.put(d, (s, union, pairs))
-        (union, pairs)
-      }
-    }
-
-  val qDedupMinhash: Q = (s, d) => {
-    val (_, pairs) = unionWithPairs(s, d)
-    pairs.select(col("id_a"), col("id_b")).orderBy(col("id_a"), col("id_b"))
+  /** The documents plus injected near-duplicates: a plan, rebuilt on
+    * each call (its only cost is the scan's schema read). */
+  private def injectedUnion(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+    val nearDups = docs.filter(col("doc_id") % 7 === 0)
+      .select((col("doc_id") + 200000).as("doc_id"), concat(col("text"), lit(" zzzz")).as("text"))
+    docs.unionByName(nearDups)
   }
+
+  /** The verified near-dup pairs of `union` (an [[injectedUnion]]),
+    * memoized per session and shared by the pair, survivor and cluster
+    * gates (one LSH run, several consumers); a hit never evaluates
+    * `union`. Bench-attribution caveat: whichever consumer gate runs
+    * FIRST (alphabetically dedup_cluster_reps) absorbs the one shared LSH
+    * run's wall time; the others time a cache read — per-gate medians
+    * shift, the suite total stays honest. */
+  private def minhashPairs(s: SparkSession, d: String)(union: => DataFrame): DataFrame =
+    Materialize.shared(s, s"llm.minhashPairs:$d")(Dedup.minhashNearDupPairs(
+      union, "text", "doc_id", threshold = 0.8, numHashes = 64, bands = 16))
+
+  val qDedupMinhash: Q = (s, d) =>
+    minhashPairs(s, d)(injectedUnion(s, d))
+      .select(col("id_a"), col("id_b")).orderBy(col("id_a"), col("id_b"))
 
   val qDedupMinhashSql: String =
     """WITH all_docs AS (
@@ -312,8 +288,8 @@ object LlmQueries {
     * larger twin. The oracle derives survivors from the exact all-pairs
     * Jaccard ground truth computed in SQL. */
   val qDedupMinhashSurvivors: Q = (s, d) => {
-    val (union, pairs) = unionWithPairs(s, d)
-    val drop = pairs.select(col("id_b").as("doc_id")).distinct()
+    val union = injectedUnion(s, d)
+    val drop = minhashPairs(s, d)(union).select(col("id_b").as("doc_id")).distinct()
     union.join(drop, Seq("doc_id"), "left_anti")
       .agg(count(lit(1)).as("n_kept"), sum(col("doc_id")).as("sum_kept"))
   }
@@ -1789,10 +1765,10 @@ object LlmQueries {
     * singletons pass through. The oracle recomputes the transitive
     * closure AND the quality argmax independently. */
   val qDedupClusterReps: Q = (s, d) => {
-    val (union, pairs) = unionWithPairs(s, d)
+    val union = injectedUnion(s, d)
     val scored = union.withColumn("quality", TextOps.qualityScore(col("text")))
       .select("doc_id", "quality")
-    Dedup.clusterDedupBy(scored, pairs, "doc_id", "quality")
+    Dedup.clusterDedupBy(scored, minhashPairs(s, d)(union), "doc_id", "quality")
       .orderBy(col("doc_id"))
   }
 
@@ -1925,8 +1901,7 @@ object LlmQueries {
     * recursive CTE — an independent algorithm (BFS closure vs label
     * propagation) agreeing on every (doc, cluster) assignment. */
   val qDedupClusters: Q = (s, d) => {
-    val (_, pairs) = unionWithPairs(s, d)
-    Dedup.connectedComponents(pairs)
+    Dedup.connectedComponents(minhashPairs(s, d)(injectedUnion(s, d)))
       .select(col("id").as("doc_id"), col("cluster_id"))
       .orderBy(col("doc_id"))
   }
@@ -3548,15 +3523,13 @@ object LlmQueries {
         syntheticUrl.as("url"))
     // the capped corpus (scan → blocklist anti-join → cap window) feeds
     // TWO consumers — the classifier pass and the source/domain
-    // re-attachment — so persist it once instead of running the
+    // re-attachment — so cache it once instead of running the
     // dominant sub-plan twice; the ~20-row result is pinned on the
     // driver below so the cache can be released before the caller
-    // consumes the frame, on the failure path too
-    val capped = Domains.capPerDomain(
+    // consumes the frame
+    Materialize.cached(Domains.capPerDomain(
         Domains.filterBlockedDomains(docs, "url", blocked),
-        "url", Seq(col("n_chars").desc, col("doc_id").asc), n = 4)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+        "url", Seq(col("n_chars").desc, col("doc_id").asc), n = 4)) { capped =>
       val scored = TextOps.hashedBowScore(capped, "text", "doc_id",
           classifierWeights, intercept = 0.05)
         .join(capped.select(col("doc_id"), col("source"), col("domain")),
@@ -3573,7 +3546,7 @@ object LlmQueries {
         .orderBy(col("source"))
       val rows = res.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-    } finally capped.unpersist(false)
+    }
   }
 
   val qPipelineDomainsSql: String =
@@ -3653,35 +3626,32 @@ object LlmQueries {
       filt, "doc_id", "source", col("n_tok"), alpha = 0.5, SampleSeed)
     // the curated+sampled corpus feeds FOUR downstream consumers (index
     // build, ingest decisions, the kept-join, the budget walk) across
-    // many index-state jobs — persist it once instead of re-running the
+    // many index-state jobs — cache it once instead of re-running the
     // quality regexes, the rate aggregation and the md5 sample per job
     // (the same cache a real pipeline would hold at this point)
-    val withVec = samp.join(allEmb, col("doc_id") === col("vec_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try withScratchIndex("graft_gate_pipesem_") { dir =>
-      val corpus = withVec.filter(col("doc_id") < 250)
-      val fresh = withVec.filter(col("doc_id") >= 250)
-      AnnIndex.build(corpus.select(col("vec_id"), col("embedding")), dir, nCentroids = 32)
-      val keptNew = AnnIndex.ingestSemDedupBatch(
-          fresh.select(col("vec_id"), col("embedding")), dir,
-          threshold = 0.95, batchId = Some(1L))
-        .filter(col("kept")).select(col("vec_id").as("doc_id"))
-      val kept = corpus.select("doc_id", "source", "quality", "n_tok")
-        .unionByName(fresh.select("doc_id", "source", "quality", "n_tok")
-          .join(keptNew, Seq("doc_id")))
-      Sampling.selectUnderTokenBudgetPerGroup(kept, "source",
-          Seq(col("quality").desc, col("doc_id").asc), "n_tok",
-          budgets = Map("src0" -> 1200L), defaultBudget = 1500L)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_kept"),
-          sum(col("n_tok")).as("tok_kept"),
-          sum(col("doc_id")).as("sum_kept"))
-    }.orderBy(col("source"))
-    // withScratchIndex pinned the result rows on the driver, so the
-    // cache can go before the caller consumes the frame — and it MUST go
-    // on the failure path too, or every red run of a long session pins
-    // another copy of the curated corpus until SparkContext stop
-    finally withVec.unpersist(false)
+    // withScratchIndex pins the result rows on the driver, so the cache
+    // can go before the caller consumes the frame
+    Materialize.cached(samp.join(allEmb, col("doc_id") === col("vec_id"))) { withVec =>
+      withScratchIndex("graft_gate_pipesem_") { dir =>
+        val corpus = withVec.filter(col("doc_id") < 250)
+        val fresh = withVec.filter(col("doc_id") >= 250)
+        AnnIndex.build(corpus.select(col("vec_id"), col("embedding")), dir, nCentroids = 32)
+        val keptNew = AnnIndex.ingestSemDedupBatch(
+            fresh.select(col("vec_id"), col("embedding")), dir,
+            threshold = 0.95, batchId = Some(1L))
+          .filter(col("kept")).select(col("vec_id").as("doc_id"))
+        val kept = corpus.select("doc_id", "source", "quality", "n_tok")
+          .unionByName(fresh.select("doc_id", "source", "quality", "n_tok")
+            .join(keptNew, Seq("doc_id")))
+        Sampling.selectUnderTokenBudgetPerGroup(kept, "source",
+            Seq(col("quality").desc, col("doc_id").asc), "n_tok",
+            budgets = Map("src0" -> 1200L), defaultBudget = 1500L)
+          .groupBy(col("source"))
+          .agg(count(lit(1)).as("n_kept"),
+            sum(col("n_tok")).as("tok_kept"),
+            sum(col("doc_id")).as("sum_kept"))
+      }.orderBy(col("source"))
+    }
   }
 
   val qPipelineSemanticSql: String = {

@@ -324,35 +324,33 @@ object Sampling {
     val parts =
       if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(parts, orderCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val totals: Map[Int, Long] = ranged
-      .groupBy(col("__pid"))
-      // coalesce: a partition whose every token count is null sums to
-      // SQL NULL and getLong would NPE the driver
-      .agg(coalesce(sum(col(tokenCol).cast("long")), lit(0L)).as("t"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getLong(1))
-      .toMap
-    val offsets = totals.keys.toSeq.sorted.map { pid =>
-      (pid, totals.filter(_._1 < pid).values.sum)
+    Materialize.cached(df.repartitionByRange(parts, orderCols: _*)
+        .withColumn("__pid", spark_partition_id())) { ranged =>
+      val totals: Map[Int, Long] = ranged
+        .groupBy(col("__pid"))
+        // coalesce: a partition whose every token count is null sums to
+        // SQL NULL and getLong would NPE the driver
+        .agg(coalesce(sum(col(tokenCol).cast("long")), lit(0L)).as("t"))
+        .collect()
+        .map(r => r.getInt(0) -> r.getLong(1))
+        .toMap
+      val offsets = totals.keys.toSeq.sorted.map { pid =>
+        (pid, totals.filter(_._1 < pid).values.sum)
+      }
+      import spark.implicits._
+      val offsetDim = offsets.toDF("__pid", "__offset")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("__pid")).orderBy(orderCols: _*)
+      ranged
+        .join(broadcast(offsetDim), Seq("__pid"))
+        .withColumn("cum_tok",
+          col("__offset") + sum(col(tokenCol).cast("long")).over(w))
+        .filter(col("cum_tok") <= budget)
+        .drop("__pid", "__offset")
+        // the kept prefix is final — cut the cached-exchange lineage so the
+        // cache can be released without a recompute hazard downstream
+        .localCheckpoint()
     }
-    import spark.implicits._
-    val offsetDim = offsets.toDF("__pid", "__offset")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__pid")).orderBy(orderCols: _*)
-    val out = ranged
-      .join(broadcast(offsetDim), Seq("__pid"))
-      .withColumn("cum_tok",
-        col("__offset") + sum(col(tokenCol).cast("long")).over(w))
-      .filter(col("cum_tok") <= budget)
-      .drop("__pid", "__offset")
-      // the kept prefix is final — cut the cached-exchange lineage so the
-      // cache can be released without a recompute hazard downstream
-      .localCheckpoint()
-    ranged.unpersist()
-    out
   }
 
   // ----------------------------------- bottom-k uniform sample sketch

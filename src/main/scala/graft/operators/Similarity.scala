@@ -843,43 +843,43 @@ object Similarity {
   def cosineNearDupPairs(df: DataFrame, threshold: Double, bits: Int = 0,
       hotBucketThreshold: Int = 64,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // persisted: evaluated by the adaptive-bits count, the bucketing pass,
-    // and both per-side vector join-backs — four scans of the corpus
-    // otherwise re-derive the upstream lineage each time
+    // cached: evaluated by the adaptive-bits count and the bucketing
+    // pass — each scan of the corpus otherwise re-derives the upstream
+    // lineage
     val src = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val useBits =
-      if (bits > 0) bits
-      else {
-        val n = src.count()
-        val target = math.max(1L, n / hotBucketThreshold)
-        math.min(24, math.max(8, 64 - java.lang.Long.numberOfLeadingZeros(target)))
-      }
-    val bucketed = src
-      .withColumn("bucket", hyperplaneSignatureScalar(useBits)(col("vec")))
-      .select(col("bucket"), col("id"))
-    val w = Window.partitionBy(col("bucket"))
-    val sized = bucketed
-      .withColumn("bucket_n", count(lit(1)).over(w))
-      .withColumn("bucket_min", min(col("id")).over(w))
-    val small = sized.filter(col("bucket_n") <= hotBucketThreshold)
-    val a = small.select(col("bucket"), col("id").as("id_a"))
-    val b = small.select(col("bucket"), col("id").as("id_b"))
-    val smallPairs = a.join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-    val hotPairs = sized
-      .filter(col("bucket_n") > hotBucketThreshold && col("id") =!= col("bucket_min"))
-      .select(col("bucket_min").as("id_a"), col("id").as("id_b"))
-    // eager checkpoint of the CANDIDATE pair ids (tiny next to the
-    // corpus): it cuts the signature/bucket lineage so the corpus cache
-    // can be released, while the cosine scoring below stays lazy — its
-    // plan remains inspectable (checkpointing the scored result instead
-    // left graft.Explain a bare ExistingRDD scan and executed the whole
-    // job at construction). The join-backs re-derive `src` from the raw
-    // input — one narrow scan each, no signature recompute.
-    val pairs = smallPairs.unionByName(hotPairs).distinct().localCheckpoint()
-    src.unpersist()
+    val pairs = Materialize.cached(src) { src =>
+      val useBits =
+        if (bits > 0) bits
+        else {
+          val n = src.count()
+          val target = math.max(1L, n / hotBucketThreshold)
+          math.min(24, math.max(8, 64 - java.lang.Long.numberOfLeadingZeros(target)))
+        }
+      val bucketed = src
+        .withColumn("bucket", hyperplaneSignatureScalar(useBits)(col("vec")))
+        .select(col("bucket"), col("id"))
+      val w = Window.partitionBy(col("bucket"))
+      val sized = bucketed
+        .withColumn("bucket_n", count(lit(1)).over(w))
+        .withColumn("bucket_min", min(col("id")).over(w))
+      val small = sized.filter(col("bucket_n") <= hotBucketThreshold)
+      val a = small.select(col("bucket"), col("id").as("id_a"))
+      val b = small.select(col("bucket"), col("id").as("id_b"))
+      val smallPairs = a.join(b, Seq("bucket"))
+        .filter(col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"))
+      val hotPairs = sized
+        .filter(col("bucket_n") > hotBucketThreshold && col("id") =!= col("bucket_min"))
+        .select(col("bucket_min").as("id_a"), col("id").as("id_b"))
+      // eager checkpoint of the CANDIDATE pair ids (tiny next to the
+      // corpus): it cuts the signature/bucket lineage so the corpus cache
+      // can be released, while the cosine scoring below stays lazy — its
+      // plan remains inspectable (checkpointing the scored result instead
+      // left graft.Explain a bare ExistingRDD scan and executed the whole
+      // job at construction). The join-backs re-derive `src` from the raw
+      // input — one narrow scan each, no signature recompute.
+      smallPairs.unionByName(hotPairs).distinct().localCheckpoint()
+    }
     pairs
       .join(src.select(col("id").as("id_a"), col("vec").as("vec_a")), Seq("id_a"))
       .join(src.select(col("id").as("id_b"), col("vec").as("vec_b")), Seq("id_b"))
@@ -1015,37 +1015,35 @@ object Similarity {
     val centroids: Array[(Long, Array[Double])] =
       coarseCentroids(corpus, nCentroids, trainIters, idCol, vecCol, trainRows)
     val assignUdf = udf { (v: Seq[Float]) => nearestCentroid(centroids, v) }
-    // persisted across the window/pairing passes and the two vector
-    // join-backs, then RELEASED: the dropped-id set (tiny) is eagerly
+    // cached across the window/pairing passes and the two vector
+    // join-backs, then released: the dropped-id set (tiny) is eagerly
     // checkpointed so nothing downstream re-derives the cache, and the
     // final output recomputes the assignment as one narrow pass over the
-    // raw corpus (same persist → checkpoint → unpersist discipline as
-    // cosineNearDupPairs — no session-lifetime cache leak)
-    val assigned = corpus
-      .select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
-      .withColumn("cid", assignUdf(col("vec")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val w = Window.partitionBy(col("cid"))
-    val sized = assigned
-      .select(col("cid"), col("vec_id").as("id"))
-      .withColumn("cell_n", count(lit(1)).over(w))
-      .withColumn("cell_min", min(col("id")).over(w))
-    val small = sized.filter(col("cell_n") <= hotCellThreshold)
-    val candPairs = small.select(col("cid"), col("id").as("id_a"))
-      .join(small.select(col("cid"), col("id").as("id_b")), Seq("cid"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .unionByName(sized
-        .filter(col("cell_n") > hotCellThreshold && col("id") =!= col("cell_min"))
-        .select(col("cell_min").as("id_a"), col("id").as("id_b")))
-    val dropped = candPairs
-      .join(assigned.select(col("vec_id").as("id_a"), col("vec").as("vec_a")), Seq("id_a"))
-      .join(assigned.select(col("vec_id").as("id_b"), col("vec").as("vec_b")), Seq("id_b"))
-      .filter(round(cosine(col("vec_a"), col("vec_b")), 6) >= threshold)
-      .select(col("id_b").as("vec_id"))
-      .distinct()
-      .localCheckpoint()
-    assigned.unpersist()
+    // raw corpus
+    val dropped = Materialize.cached(corpus
+        .select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
+        .withColumn("cid", assignUdf(col("vec")))) { assigned =>
+      val w = Window.partitionBy(col("cid"))
+      val sized = assigned
+        .select(col("cid"), col("vec_id").as("id"))
+        .withColumn("cell_n", count(lit(1)).over(w))
+        .withColumn("cell_min", min(col("id")).over(w))
+      val small = sized.filter(col("cell_n") <= hotCellThreshold)
+      val candPairs = small.select(col("cid"), col("id").as("id_a"))
+        .join(small.select(col("cid"), col("id").as("id_b")), Seq("cid"))
+        .filter(col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"))
+        .unionByName(sized
+          .filter(col("cell_n") > hotCellThreshold && col("id") =!= col("cell_min"))
+          .select(col("cell_min").as("id_a"), col("id").as("id_b")))
+      candPairs
+        .join(assigned.select(col("vec_id").as("id_a"), col("vec").as("vec_a")), Seq("id_a"))
+        .join(assigned.select(col("vec_id").as("id_b"), col("vec").as("vec_b")), Seq("id_b"))
+        .filter(round(cosine(col("vec_a"), col("vec_b")), 6) >= threshold)
+        .select(col("id_b").as("vec_id"))
+        .distinct()
+        .localCheckpoint()
+    }
     corpus
       .select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
       .withColumn("cid", assignUdf(col("vec")))

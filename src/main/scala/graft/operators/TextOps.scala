@@ -219,11 +219,9 @@ object TextOps {
       idCol: String,
       k: Int = 8,
       fpp: Double = 0.01): DataFrame = {
-    val benchGrams = bench
-      .select(explode(kgrams(col(textCol), k)).as("gram"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.cached(bench
+        .select(explode(kgrams(col(textCol), k)).as("gram"))
+        .distinct()) { benchGrams =>
       // expectedNumItems: one count job over the (cached) distinct grams —
       // the filter is sized to the true cardinality, never guessed
       val n = math.max(1L, benchGrams.count())
@@ -238,9 +236,10 @@ object TextOps {
         .join(benchGrams, Seq("gram"), "left_semi")
         .select(col(idCol))
         .distinct()
-        // materialized before unpersist: the caller gets a stable result
+        // materialized before the cache is released: the caller gets a
+        // stable result
         .localCheckpoint()
-    } finally { benchGrams.unpersist(); () }
+    }
   }
 
   // ------------------------------------------------------------ chunking

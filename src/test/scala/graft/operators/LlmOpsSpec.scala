@@ -1985,4 +1985,96 @@ class LlmOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(math.abs(lhs - rhs) < 1e-9)
     }
   }
+
+  // ------------------------------------------------ Materialize release
+  /** Run `call` on a cache-free session, expect it to throw, and expect
+    * the cache registry to be empty afterwards: a failing job inside a
+    * cached section must not pin its cache for the session lifetime. */
+  private def assertReleasedOnFailure(call: => Any, expect: String = "boom"): Unit = {
+    spark.catalog.clearCache()
+    val e = intercept[Exception] { call }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.toString).mkString("\n")
+    assert(chain.contains(expect), chain)
+    assert(spark.sharedState.cacheManager.isEmpty, "a cache entry was left behind")
+  }
+
+  private def failAt(id: Long, ok: org.apache.spark.sql.Column) =
+    when(col("id") === id, raise_error(lit("boom"))).otherwise(ok)
+
+  test("failure path releases the cache: selectUnderTokenBudget") {
+    val df = spark.range(0, 40).withColumn("n_tok", failAt(17, lit(1L)))
+    assertReleasedOnFailure(Sampling.selectUnderTokenBudget(df, Seq(col("id")), "n_tok", budget = 10))
+  }
+
+  test("failure path releases the cache: cosineNearDupPairs") {
+    val df = spark.range(0, 40).select(col("id").as("vec_id"),
+      failAt(17, array(lit(1.0f), (col("id") % 3).cast("float"))).as("embedding"))
+    assertReleasedOnFailure(Similarity.cosineNearDupPairs(df, threshold = 0.9, bits = 8))
+  }
+
+  test("failure path releases the cache: semDedup") {
+    // the quantizer trains on the first two ids; a later row whose vector
+    // is shorter than the centroids fails its assignment inside the
+    // cached section
+    val corpus = spark.range(0, 40).select(col("id").as("vec_id"),
+      when(col("id") === 17, array(lit(1.0f)))
+        .otherwise(array(lit(1.0f), col("id").cast("float"))).as("embedding"))
+    assertReleasedOnFailure(Similarity.semDedup(corpus, nCentroids = 2),
+      expect = "IndexOutOfBoundsException")
+  }
+
+  test("failure path releases both caches: containmentPairs") {
+    val df = spark.range(0, 40).select(col("id"),
+      failAt(17, concat(lit("a b c d e "), col("id").cast("string"))).as("text"))
+    assertReleasedOnFailure(Dedup.containmentPairs(df, "text", "id"))
+  }
+
+  test("failure path releases the cache: connectedComponents") {
+    val pairs = spark.range(0, 40).select(failAt(17, col("id")).as("id_a"),
+      (col("id") + 1).as("id_b"))
+    assertReleasedOnFailure(Dedup.ccWithRounds(pairs))
+  }
+
+  // --------------------------------------------------- Materialize memos
+  test("shared: a hit skips build; a new session rebuilds and frees the stale blocks") {
+    spark.catalog.clearCache()
+    val key = "spec.shared.session"
+    var builds = 0
+    def build(s: SparkSession) = { builds += 1; s.range(0, 100).toDF("n") }
+    val first = Materialize.shared(spark, key)(build(spark))
+    assert(first.count() == 100) // materializes the cached blocks
+    val staleRdds = spark.sparkContext.getPersistentRDDs.keySet
+    assert(staleRdds.nonEmpty)
+    assert(Materialize.shared(spark, key)(build(spark)) eq first)
+    assert(builds == 1, "a hit must not evaluate build")
+    val other = spark.newSession()
+    val second = Materialize.shared(other, key)(build(other))
+    assert(builds == 2 && !(second eq first))
+    assert(spark.sparkContext.getPersistentRDDs.keySet.intersect(staleRdds).isEmpty,
+      "the replaced entry's blocks must be released")
+    assert(second.count() == 100)
+    spark.catalog.clearCache()
+  }
+
+  test("shared and once: a failed build or make leaves no entry") {
+    spark.catalog.clearCache()
+    intercept[IllegalStateException] {
+      Materialize.shared(spark, "spec.shared.fail")(throw new IllegalStateException("boom"))
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
+    var builds = 0
+    Materialize.shared(spark, "spec.shared.fail") { builds += 1; spark.range(3).toDF() }
+    assert(builds == 1, "a failed build must not leave an entry behind")
+    spark.catalog.clearCache()
+
+    intercept[IllegalStateException] {
+      Materialize.once[String]("spec.once.fail")(throw new IllegalStateException("boom"))
+    }
+    var makes = 0
+    def make() = { makes += 1; s"made-$makes" }
+    assert(Materialize.once("spec.once.fail")(make()) == "made-1")
+    assert(Materialize.once("spec.once.fail")(make()) == "made-1")
+    assert(makes == 1, "a failed make must store nothing, and a hit must not evaluate make")
+  }
 }
