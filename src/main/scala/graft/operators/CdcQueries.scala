@@ -372,16 +372,6 @@ object CdcQueries {
       .option("path", feedDir.toString)
       .options(options)
       .load()
-      // Sink file sizing (guide §6): the source plans one input partition
-      // per shard SEGMENT — under a small `split.partition.bytes` that is
-      // hundreds of 64 KB slices, and the parquet sink writes one file per
-      // partition. coalesce packs the segment readers into at most
-      // one task per core (narrow — each reader still seeds and decodes
-      // its own slice exactly as planned), so the sink writes core-count
-      // files instead of segment-count and the read-back scan lists
-      // core-count files. A feed with fewer segments than cores is
-      // untouched (coalesce never raises the partition count).
-      .coalesce(s.sparkContext.defaultParallelism)
       .writeStream.format("parquet")
       .option("path", outDir.toString)
       .option("checkpointLocation", ckpt.toString)
@@ -563,12 +553,11 @@ object CdcQueries {
       val feed = ordersFeed(s, d)
       Seq(feed.filter(col("seq") < cut), feed.filter(col("seq") >= cut))
     }
-    val split = Map("split.partition.bytes" -> "4194304")
     releasing(feedDir, ckpt) {
       copyWave(waves(0), feedDir)
-      runStreamOnce(s, feedDir, outDir, ckpt, split) // run 1, then stop ("kill")
+      runStreamOnce(s, feedDir, outDir, ckpt) // run 1, then stop ("kill")
       copyWave(waves(1), feedDir)
-      runStreamOnce(s, feedDir, outDir, ckpt, split) // resume from checkpoint
+      runStreamOnce(s, feedDir, outDir, ckpt) // resume from checkpoint
     }
     s.read.parquet(outDir.toString)
       .groupBy(col("shard"))
@@ -579,10 +568,11 @@ object CdcQueries {
   }
 
   // ------------------------------------------- intra-shard splitting
-  /** S9 at scale under the oracle: the same orders feed streamed with
-    * `split.partition.bytes` small enough that every shard's window is
-    * fanned into many transaction-safe segments (one reader task each —
-    * per-shard parallelism no longer ceilinged at 1). The aggregate must
+  /** S9 at scale under the oracle: each shard of the orders feed streamed
+    * as its own query (own checkpoint and sink directory — a shared file
+    * sink's `_spark_metadata` log would skip the later queries' batch 0),
+    * so on two or more cores the lone shard's window is fanned into
+    * transaction-safe segments (one reader task each). The aggregate must
     * hash-match the oracle computed from the table directly, so any
     * segment-seed error (position, GTID window, epoch, schema
     * checkpoint) — a lost, doubled, or misdecoded transaction — fails
@@ -590,12 +580,15 @@ object CdcQueries {
   val qCdcSplitPartitions: Q = (s, d) => {
     import java.nio.file.Files
     val feedDir = ordersFeedDir(s, d)
-    val outDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("graft_split_out"))
-    val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("graft_split_ckpt"))
-    releasing(ckpt) {
-      runStreamOnce(s, feedDir, outDir, ckpt, Map("split.partition.bytes" -> "65536"))
+    val outDirs = (0 until CdcFeed.DefaultShards).map { shard =>
+      val outDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("graft_split_out"))
+      val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("graft_split_ckpt"))
+      releasing(ckpt) {
+        runStreamOnce(s, feedDir, outDir, ckpt, Map("shard" -> shard.toString))
+      }
+      outDir.toString
     }
-    s.read.parquet(outDir.toString)
+    s.read.parquet(outDirs: _*)
       .groupBy(col("shard"))
       .agg(
         count(lit(1)).as("n"),
@@ -624,9 +617,7 @@ object CdcQueries {
     val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("graft_feed_rs"))
     val outDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("graft_rs_out"))
     val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("graft_rs_ckpt"))
-    // fan each shard's ~25 MB window across decode tasks (the at-scale
-    // reader config; cdc_split_partitions pins hash-identity under it)
-    val opts = Map("inherit.epoch" -> "true", "split.partition.bytes" -> "4194304")
+    val opts = Map("inherit.epoch" -> "true")
     val waves = stageWaves(s"rs:$d", s) {
       Seq(
         CdcFeed.orders(s, d, nShards = 2, hostFlip = true, shardNames = Seq("-80", "80-")),
@@ -681,12 +672,11 @@ object CdcQueries {
     val waves = stageWavesBy(s"gen:$d", 2)(
       CdcFeed.ordersVersioned(s, d),
       when(col("seq") < waveBoundary, 0).otherwise(1))
-    val split = Map("split.partition.bytes" -> "4194304")
     releasing(feedDir, ckpt) {
       copyWave(waves(0), feedDir)
-      runStreamOnce(s, feedDir, outDir, ckpt, split)
+      runStreamOnce(s, feedDir, outDir, ckpt)
       copyWave(waves(1), feedDir)
-      runStreamOnce(s, feedDir, outDir, ckpt, split + ("generation" -> "2"))
+      runStreamOnce(s, feedDir, outDir, ckpt, Map("generation" -> "2"))
     }
     s.read.parquet(outDir.toString)
       .groupBy(col("op"), col("epoch").cast(LongType).as("epoch"))
@@ -722,8 +712,7 @@ object CdcQueries {
     val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("graft_cp_ckpt"))
     releasing(feedDir, ckpt) {
       copyWave(stageWaves(s"cp:$d", s)(Seq(CdcFeed.copyPhase(s, d))).head, feedDir)
-      runStreamOnce(s, feedDir, outDir, ckpt,
-        Map("snapshot.tables" -> "ks\\.orders", "split.partition.bytes" -> "4194304"))
+      runStreamOnce(s, feedDir, outDir, ckpt, Map("snapshot.tables" -> "ks\\.orders"))
     }
     s.read.parquet(outDir.toString)
       .filter(col("op") === "c")
@@ -769,8 +758,7 @@ object CdcQueries {
     val (feed, handover) = CdcFeed.backfillWaves(s, d)
     releasing(feedDir, ckpt) {
       copyWave(stageWaves(s"bf:$d", s)(Seq(feed)).head, feedDir)
-      runStreamOnce(s, feedDir, outDir, ckpt,
-        Map("vgtid" -> handover.json, "split.partition.bytes" -> "4194304"))
+      runStreamOnce(s, feedDir, outDir, ckpt, Map("vgtid" -> handover.json))
     }
     val snapshot = CdcBackfill.snapshotRecords(
         graft.Tables.orders(s, d), "ks", "orders", Seq("o_orderkey"),

@@ -9,17 +9,15 @@ package graft.sources
   * append-only per-shard JSONL feeds); a live gRPC VTGate transport
   * (reference connection/VitessReplicationConnection.java:107-343 —
   * async VStream with channel keepalive/max-message tuning :374-385)
-  * drops in by implementing these two methods:
+  * drops in by implementing these three methods:
   *
   *  - `listShards` enumerates the shard topology (the gRPC analogue is
   *    the SHOW VITESS_SHARDS round-trip, VitessMetadata.java:201-216);
-  *  - `open` yields one shard's events from a transport-defined
-  *    position. The file feed uses byte offsets into the feed file; a
-  *    gRPC stream would resume server-side from the VGTID already
-  *    carried in the engine's offset (its `from`/`to` then bound a
-  *    monotone event counter, or are ignored — positions are OPAQUE to
-  *    the engine, which only ever round-trips them through the offset
-  *    JSON and never does arithmetic on them beyond equality/ordering).
+  *  - `open` yields one shard's events from a position, and `size`
+  *    reports its high-water position. Positions are resumable,
+  *    line-aligned and in `size`'s units (byte offsets for a staged
+  *    feed, an event counter for a server-side resume): the engine
+  *    subtracts them for the byte caps, `lagBytes` and split sizes.
   *
   * The contract is line-oriented (each event rendered in the VEventJson
   * wire form) so the driver's prefix prefilter keeps working without
@@ -35,12 +33,10 @@ trait VStreamTransport extends Serializable {
   /** Open one shard's event stream at `from`, stopping before `to`. */
   def open(locator: String, from: Long, to: Long): VStreamSlice
 
-  /** Current high-water position of one shard's stream, if the
-    * transport can observe it cheaply (file size for the file feed) —
-    * the source's `lagBytes` metric compares it with the consumed
-    * offset. Push-style transports (no pollable size) return -1 and the
-    * metric reports -1. */
-  def size(locator: String): Long = -1L
+  /** Current high-water position of one shard's stream, in the units of
+    * `open`'s positions (file size for the file feed). Trigger planning
+    * measures each shard's new work as `size - position`. */
+  def size(locator: String): Long
 
   /** Release any live resources (channels, consumer threads). The file
     * feed holds none; the gRPC transport closes its channel + staging

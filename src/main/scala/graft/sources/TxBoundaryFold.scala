@@ -41,7 +41,7 @@ private[sources] final class TxBoundaryFold(
     seed: ShardCursor,
     startSg: ShardGtid,
     heartbeatIntervalMs: Long,
-    splitBytes: Long = Long.MaxValue) {
+    splitBytes: Long) {
   private var inTx = false
   private var txAdmitted = false
   private var lastSg = seed.sg
@@ -56,18 +56,14 @@ private[sources] final class TxBoundaryFold(
   /** Last transaction-safe cursor (== seed until the first safe line). */
   def safe: ShardCursor = safeCursor
 
-  /** Intra-shard split cursors accrued since the last drain: one full
-    * [[ShardCursor]] roughly every `splitBytes` of folded bytes, always
-    * at a transaction-safe boundary — everything a partition reader
-    * needs to start mid-shard (position, GTID, epoch, schema
-    * checkpoint, heartbeat baseline), the exact contract a batch
-    * boundary already has. Dropping a split cursor is always safe
-    * (fewer, larger partitions), so consumers may filter freely. */
-  def drainSplits(): Vector[ShardCursor] = {
-    val out = splitAcc
-    splitAcc = Vector.empty
-    out
-  }
+  /** Intra-shard split cursors: one full [[ShardCursor]] roughly every
+    * `splitBytes` of folded bytes, always at a transaction-safe boundary
+    * — everything a partition reader needs to start mid-shard (position,
+    * GTID, epoch, schema checkpoint, heartbeat baseline), the exact
+    * contract a batch boundary already has. Dropping a split cursor is
+    * always safe (fewer, larger partitions), so consumers may filter
+    * freely. */
+  def splits: Vector[ShardCursor] = splitAcc
 
   /** Fold one wire line; `posAfter` is the byte position just after it. */
   def onLine(line: String, posAfter: Long): Unit = {

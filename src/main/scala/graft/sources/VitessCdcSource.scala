@@ -4,8 +4,9 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import graft.core._
 import graft.streaming._
 import java.nio.charset.StandardCharsets
-import java.nio.file.Paths
+import java.nio.file.{NoSuchFileException, Paths}
 import java.util
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -36,7 +37,8 @@ import scala.jdk.CollectionConverters._
   *   (VitessReplicationConnection.defaultVgtid:437-480).
   * - Partitioning (S9): one InputPartition per shard — Spark schedules
   *   shards across executors, the elastic equivalent of the reference's
-  *   shard→task round-robin (VitessConnector.java:126-133).
+  *   shard→task round-robin (VitessConnector.java:126-133); a hot shard
+  *   is cut further (see `latestOffset`).
   * - Resume semantics (O1/O2): a batch covers transactions with rank in
   *   (startRank, endRank] per shard; since records of tx N carry tx N-1's
   *   position as restart offset, replay from a record's offset re-reads
@@ -47,7 +49,9 @@ import scala.jdk.CollectionConverters._
   * pruned by exclude.empty.shards, unknown shards fail fast),
   * `tables.include` / `tables.exclude` (comma-separated regexes, S3
   * server-side filter analogue), `boundaries` (emit begin/end records),
-  * `generation` (connector generation; a change bumps all epochs, A5).
+  * `generation` (connector generation; a change bumps all epochs, A5),
+  * `max.txs.per.trigger` / `max.bytes.per.trigger` (positive per-shard
+  * admission caps). The split size is derived, not an option.
   */
 class VitessCdcProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "vitess-cdc"
@@ -131,11 +135,10 @@ final case class VgtidOffset(
     // per-reader baseline would reset every micro-batch and never fire
     // under bounded triggers
     hbMs: Map[String, Long] = Map.empty,
-    // intra-shard split cursors for THIS batch's window (only with
-    // `split.partition.bytes` set): transaction-safe mid-shard seeds the
-    // planner fans one shard's byte range out to — per-shard read
-    // parallelism stops being ceilinged at one task per batch. Carried
-    // in the offset so a recovered batch replans the identical segments.
+    // intra-shard split cursors for THIS batch's window (see
+    // latestOffset's split size): transaction-safe mid-shard seeds the
+    // planner fans one shard's byte range out to. Carried in the offset
+    // so a recovered batch replans the identical segments.
     splits: Map[String, Seq[ShardCursor]] = Map.empty)
     extends Offset {
   override def json(): String = {
@@ -561,6 +564,7 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
   // micro-batch admits per shard.
   private val maxTxsPerTrigger: Long =
     Option(options.get("max.txs.per.trigger")).map(_.toLong).getOrElse(Long.MaxValue)
+  require(maxTxsPerTrigger > 0L, s"max.txs.per.trigger must be positive, got $maxTxsPerTrigger")
 
   // Byte-based twin of the tx cap: the tx cap alone cannot bound batch
   // MEMORY (one trigger can admit `cap` arbitrarily fat transactions), so
@@ -572,30 +576,8 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
   // max(cap, largest-single-tx).
   private val maxBytesPerTrigger: Long =
     Option(options.get("max.bytes.per.trigger")).map(_.toLong).getOrElse(Long.MaxValue)
-
-  // Intra-shard read parallelism: with `split.partition.bytes` set, the
-  // offset fold records a full transaction-safe cursor (position, GTID,
-  // epoch, schema checkpoint, heartbeat baseline) about every that-many
-  // bytes, the offset carries them, and planInputPartitions fans one
-  // shard's batch window into one partition per segment — a fat shard is
-  // no longer ceilinged at one reader task per batch. Mid-shard seeds
-  // have exactly the contract batch boundaries already have, so
-  // correctness machinery is unchanged; default off (one partition per
-  // shard, the reference's shape).
-  private val splitPartitionBytes: Long =
-    Option(options.get("split.partition.bytes")).map(_.toLong).getOrElse(Long.MaxValue)
-
-  // Floor on split granularity: one allAvailable batch over a huge
-  // backlog could otherwise accrue unbounded cursors — each carried in
-  // the checkpointed offset JSON (with its schema checkpoint) and each
-  // becoming a task. Cap per shard per batch and THIN evenly (dropping
-  // split cursors is always safe — segments just get larger).
-  private val splitMaxPerShard: Int =
-    Option(options.get("split.partitions.max.per.shard")).map(_.toInt).getOrElse(128)
-
-  private def thinSplits(xs: Seq[ShardCursor]): Seq[ShardCursor] =
-    if (xs.size <= splitMaxPerShard) xs
-    else (1 to splitMaxPerShard).map(j => xs(j * xs.size / splitMaxPerShard - 1))
+  require(maxBytesPerTrigger > 0L,
+    s"max.bytes.per.trigger must be positive, got $maxBytesPerTrigger")
 
   // Transactions admitted since stream start, summed over the offsets
   // latestOffset returned (the `admittedTransactions` metric); written
@@ -627,15 +609,22 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
   /** Admission control (S8): one fold per shard per trigger.
     *
     * Every shard's [[TxBoundaryFold]] is seeded from the trigger's start
-    * offset and reads that shard's new bytes. Shards fold in parallel on
-    * the JVM's global pool (the stream owns no threads); their cursors,
-    * split cursors and epochs merge in shard order. A fold stops at the
-    * first transaction boundary past `max.txs.per.trigger` or
-    * `max.bytes.per.trigger`; with neither set it reads to EOF, so
-    * `allAvailable` admits everything available. Per-trigger work is
-    * O(new bytes), or O(cap) with a cap, never O(feed). A torn trailing transaction
-    * holds its shard's cursor back until the trigger after its COMMIT
-    * lands.
+    * offset and reads that shard's new bytes, up to the size measured at
+    * the start of the trigger. Shards fold in parallel on the JVM's
+    * global pool (the stream owns no threads); their cursors, split
+    * cursors and epochs merge in shard order. A fold stops at the first
+    * transaction boundary past `max.txs.per.trigger` or
+    * `max.bytes.per.trigger`; with neither set it reads to the measured
+    * size, so `allAvailable` admits everything available. Per-trigger
+    * work is O(new bytes), or O(cap) with a cap, never O(feed). A torn
+    * trailing transaction holds its shard's cursor back until the
+    * trigger after its COMMIT lands.
+    *
+    * Split size (S9): ceil(new bytes / `defaultParallelism`), summing
+    * each shard's `size - position` capped at `max.bytes.per.trigger` —
+    * Spark's `FilePartition.maxSplitBytes` rule without its floor or
+    * ceiling. Kept split cursors lie within their shard's new bytes, a
+    * split size apart, so a trigger records at most `defaultParallelism`.
     *
     * Exactly-once holds because the byte position and the folded epochs
     * live in the same atomic offset JSON — bytes before
@@ -705,18 +694,17 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
         admitted = 0L)
     }
     /** Fold one shard's new bytes from `seed` up to the first transaction
-      * boundary past either cap (EOF when none is set): the last safe
-      * cursor and the split cursors below it. */
+      * boundary past either cap (the measured `size` when none is set):
+      * the last safe cursor and the split cursors below it. */
     def foldShard(
-        shard: String, file: String, startSg: ShardGtid,
-        seed: ShardCursor): (ShardCursor, Seq[ShardCursor]) = {
+        shard: String, file: String, startSg: ShardGtid, seed: ShardCursor,
+        size: Option[Long], splitBytes: Long): (ShardCursor, Seq[ShardCursor]) = {
       val fold = new TxBoundaryFold(
-        shard, keyspace, seed, startSg, heartbeatIntervalMs, splitPartitionBytes)
-      // a feed deleted between listing and reading (retired reshard
-      // parent) admits nothing this trigger instead of failing it
-      val slice =
-        try Some(transport.open(file, seed.pos, Long.MaxValue))
-        catch { case _: java.nio.file.NoSuchFileException => None }
+        shard, keyspace, seed, startSg, heartbeatIntervalMs, splitBytes)
+      val slice = size.flatMap { to =>
+        try Some(transport.open(file, seed.pos, to))
+        catch { case _: NoSuchFileException => None }
+      }
       slice.foreach { sl =>
         try {
           var line = sl.readLine()
@@ -734,19 +722,28 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
       }
       // admitted is fold-internal progress, meaningless to readers —
       // zero it so offset JSON round-trips compare equal
-      val splits = thinSplits(fold.drainSplits().filter(_.pos < fold.safe.pos))
+      val splits = fold.splits.filter(_.pos < fold.safe.pos)
         .map(_.copy(admitted = 0L))
       (fold.safe, splits)
     }
     val shards = shardFiles.map { case (shard, file) =>
       val startSg = from.vgtid.shardGtid(shard)
         .getOrElse(ShardGtid(keyspace, shard, Vgtid.EmptyGtid))
-      (shard, file, startSg, seedCursor(shard, startSg))
+      // a feed deleted between listing and sizing or reading (retired
+      // reshard parent) admits nothing this trigger instead of failing it
+      val size =
+        try Some(transport.size(file)) catch { case _: NoSuchFileException => None }
+      (shard, file, startSg, seedCursor(shard, startSg), size)
     }
+    val newBytes = shards.map { case (_, _, _, seed, size) =>
+      size.fold(0L)(to => math.min(math.max(0L, to - seed.pos), maxBytesPerTrigger))
+    }.sum
+    val cores = SparkSession.active.sparkContext.defaultParallelism
+    val splitBytes = if (newBytes == 0L) Long.MaxValue else (newBytes + cores - 1) / cores
     val folded = {
       import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.traverse(shards) { case (shard, file, startSg, seed) =>
-        Future(foldShard(shard, file, startSg, seed))
+      Await.result(Future.traverse(shards) { case (shard, file, startSg, seed, size) =>
+        Future(foldShard(shard, file, startSg, seed, size, splitBytes))
       }, Duration.Inf)
     }
     var epochs = startEpochs
@@ -754,7 +751,7 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     val schemasOut = Map.newBuilder[String, Map[String, String]]
     val hbMsOut = Map.newBuilder[String, Long]
     val splitsOut = Map.newBuilder[String, Seq[ShardCursor]]
-    val gtids = shards.zip(folded).map { case ((shard, _, startSg, _), (cursor, splits)) =>
+    val gtids = shards.zip(folded).map { case ((shard, _, startSg, _, _), (cursor, splits)) =>
       epochs = epochs.put(shard, cursor.epoch)
       positionsOut += shard -> cursor.pos
       if (cursor.schemas.nonEmpty) schemasOut += shard -> cursor.schemas
@@ -763,6 +760,8 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
       // never regress behind the committed start position
       if (CopyProgress.compare(cursor.sg, startSg) < 0) startSg else cursor.sg
     }
+    assert(splitsOut.result().values.map(_.size).sum <= cores,
+      s"split cursors must not outnumber the $cores cores")
     val built = VgtidOffset(
       Vgtid(gtids), epochs, generation,
       positionsOut.result(), schemasOut.result(), hbMsOut.result(),
@@ -806,7 +805,7 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
       else {
         // Intra-shard fan-out: the end offset may carry split cursors —
         // transaction-safe mid-shard seeds recorded by the fold (see
-        // `split.partition.bytes`). Each segment's reader seeds exactly
+        // latestOffset's split size). Each segment's reader seeds exactly
         // like a batch boundary (position, GTID, epoch, schema
         // checkpoint, heartbeat baseline all from its cursor), so the
         // single-partition case is just the zero-splits instance.
@@ -832,9 +831,10 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
             shard, keyspace, file,
             Vgtid(Seq(seed.sg)).json, Vgtid(Seq(segEndSg)).json,
             seed.epoch, emitBoundaries, tableFilter,
-            // per-batch (not per-segment) liveness: only the first
-            // segment emits the batch heartbeat for its shard
-            heartbeatPerBatch && i == 0,
+            // per-batch (not per-segment) liveness: only the last
+            // segment, which ends at the batch's end offset, emits the
+            // batch heartbeat for its shard
+            heartbeatPerBatch && isLast,
             inheritEpoch, effectiveSnapshotTables,
             typeModes, heartbeatIntervalMs,
             seed.hbMs,

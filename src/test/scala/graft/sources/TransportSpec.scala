@@ -17,8 +17,8 @@ class TransportSpec extends AnyFunSuite {
 
   /** Minimal alternate transport: events live in memory, positions are
     * LINE INDICES — deliberately a different position scheme from the
-    * file feed's byte offsets, since the engine must treat positions as
-    * opaque resume tokens. */
+    * file feed's byte offsets, since the engine may assume only that
+    * positions resume, align to lines and share `size`'s units. */
   private final class InMemoryTransport(feeds: Map[String, Seq[String]])
       extends VStreamTransport {
     override def listShards(): Seq[(String, String)] =
@@ -33,6 +33,7 @@ class TransportSpec extends AnyFunSuite {
         override def position: Long = idx
         override def close(): Unit = ()
       }
+    override def size(locator: String): Long = feeds(locator).size.toLong
   }
 
   private val t1Fields = Seq(

@@ -78,42 +78,43 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
     Files.writeString(feedDir.resolve("s0.jsonl"), all.mkString("", "\n", "\n"))
-    def run(sink: String, extra: Map[String, String]): Seq[Long] = {
-      val b0 = spark.readStream.format("vitess-cdc")
-        .option("path", feedDir.toString)
-        .option("shard", "s0")
-        .option("vgtid", Vgtid(Seq(ShardGtid("ks", "s0", "MySQL56/feed:1-40"))).json)
-      val q = extra.foldLeft(b0) { case (b, (k, v)) => b.option(k, v) }.load()
-        .writeStream.format("memory").queryName(sink)
-        .option("checkpointLocation", graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdccoldskipckpt")).toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      spark.sql(
-        s"SELECT CAST(get_json_object(after, '$$.id') AS LONG) FROM $sink " +
-          "WHERE op = 'c' ORDER BY 1").collect().map(_.getLong(0)).toSeq
-    }
-    assert(run("cdc_cold_skip", Map.empty) == (41L to 50L))
-    // with intra-shard splitting on, split cursors recorded in the
-    // history region have GTIDs behind the requested start — the planner
-    // must drop them, or a mid-history segment would re-admit (and here,
-    // DECODE THE CORRUPTED) history rows
-    assert(run("cdc_cold_skip_split", Map("split.partition.bytes" -> "1500")) == (41L to 50L))
+    val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdccoldskipckpt"))
+    val q = spark.readStream.format("vitess-cdc")
+      .option("path", feedDir.toString)
+      .option("shard", "s0")
+      .option("vgtid", Vgtid(Seq(ShardGtid("ks", "s0", "MySQL56/feed:1-40"))).json)
+      .load()
+      .writeStream.format("memory").queryName("cdc_cold_skip")
+      .option("checkpointLocation", ckpt.toString)
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val ids = spark.sql(
+      "SELECT CAST(get_json_object(after, '$.id') AS LONG) FROM cdc_cold_skip " +
+        "WHERE op = 'c' ORDER BY 1").collect().map(_.getLong(0)).toSeq
+    assert(ids == (41L to 50L))
+    // the whole file is the cold start's new bytes, so the derived split
+    // size cuts it mid-history: that cursor's GTID is behind the
+    // requested start and the planner must drop it, or a mid-history
+    // segment would re-admit (and here, DECODE THE CORRUPTED) history rows
+    val offsetJson = Files.readString(ckpt.resolve("offsets").resolve("0"))
+    assert(offsetJson.contains("\"feed_splits\""), "expected a split cursor in the history region")
   }
 
-  test("split.partition.bytes fans one shard's window into tx-safe segments") {
+  test("the derived split size fans one shard's window into tx-safe segments") {
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcsplitplan"))
     writeFeed(feedDir, "s0", (1L to 30L).flatMap(i => insertTx("s0", i, i, s"v$i")))
     val opts = new java.util.HashMap[String, String]()
     opts.put("path", feedDir.toString)
-    opts.put("split.partition.bytes", "2000")
     val stream = new VitessCdcStream(new CaseInsensitiveStringMap(opts))
     try {
       val start = stream.initialOffset()
       val end = stream.latestOffset(start, ReadLimit.allAvailable()).asInstanceOf[VgtidOffset]
       val cuts = end.splits.getOrElse("s0", Nil)
-      assert(cuts.nonEmpty, "the fold must record split cursors on a multi-KB window")
+      // no option set: one shard holds all new bytes, so on local[2] the
+      // bytes-per-core split size cuts its window once
+      assert(cuts.size == 1, s"expected one split cursor on 2 cores, got ${cuts.size}")
       // every cut is a transaction-safe boundary: the line AT the cut
       // position begins a BEGIN (or is feed end)
       val bytes = Files.readAllBytes(feedDir.resolve("s0.jsonl"))
@@ -127,7 +128,7 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       // planner: one partition per segment, tiling the window exactly
       val parts = stream.planInputPartitions(start, end)
         .map(_.asInstanceOf[VitessCdcPartition]).sortBy(_.startByte)
-      assert(parts.length == cuts.size + 1)
+      assert(parts.length == 2)
       assert(parts.head.startByte == 0L)
       parts.sliding(2).foreach {
         case Array(a, b) => assert(a.endByte == b.startByte, "segments must tile")
@@ -141,22 +142,34 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     } finally stream.stop()
 
-    // the per-shard cap bounds cursors (offset size and task count) by
-    // thinning evenly — the window still tiles, just coarser
-    val optsCapped = new java.util.HashMap[String, String]()
-    optsCapped.put("path", feedDir.toString)
-    optsCapped.put("split.partition.bytes", "500")
-    optsCapped.put("split.partitions.max.per.shard", "3")
-    val capped = new VitessCdcStream(new CaseInsensitiveStringMap(optsCapped))
-    try {
-      val start = capped.initialOffset()
-      val end = capped.latestOffset(start, ReadLimit.allAvailable()).asInstanceOf[VgtidOffset]
-      val cuts = end.splits.getOrElse("s0", Nil)
-      assert(cuts.size == 3, s"cap must thin to 3, got ${cuts.size}")
-      assert(cuts.map(_.pos) == cuts.map(_.pos).sorted)
-      val parts = capped.planInputPartitions(start, end)
-      assert(parts.length == 4)
-    } finally capped.stop()
+    // a trigger's split cursors never outnumber the cores, however the
+    // bytes spread over shards or a byte cap stops the folds early
+    val cores = spark.sparkContext.defaultParallelism
+    val skewDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcsplitbound"))
+    Seq("s0" -> 40L, "s1" -> 9L, "s2" -> 3L, "s3" -> 1L).foreach { case (sh, n) =>
+      writeFeed(skewDir, sh, (1L to n).flatMap(i => insertTx(sh, i, i, s"$sh-$i")))
+    }
+    Seq(Map.empty[String, String], Map("max.bytes.per.trigger" -> "3000")).foreach { extra =>
+      val o = new java.util.HashMap[String, String]()
+      o.put("path", skewDir.toString)
+      extra.foreach { case (k, v) => o.put(k, v) }
+      val bounded = new VitessCdcStream(new CaseInsensitiveStringMap(o))
+      try {
+        var off = bounded.initialOffset()
+        var triggers = 0
+        var done = false
+        while (!done) {
+          val next = bounded.latestOffset(off, bounded.getDefaultReadLimit)
+            .asInstanceOf[VgtidOffset]
+          val cuts = next.splits.values.map(_.size).sum
+          assert(cuts <= cores, s"$extra trigger $triggers recorded $cuts split cursors")
+          done = next.json() == off.json()
+          off = next
+          triggers += 1
+        }
+        assert(triggers > 1)
+      } finally bounded.stop()
+    }
   }
 
   test("no spurious empty batch after a split-carrying batch") {
@@ -169,7 +182,6 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     writeFeed(feedDir, "s0", (1L to 20L).flatMap(i => insertTx("s0", i, i, s"v$i")))
     val opts = new java.util.HashMap[String, String]()
     opts.put("path", feedDir.toString)
-    opts.put("split.partition.bytes", "1500")
     val stream = new VitessCdcStream(new CaseInsensitiveStringMap(opts))
     try {
       val start = stream.initialOffset()
@@ -184,9 +196,11 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("intra-shard split partitions produce identical output: epochs, evolved schema") {
     // txs 1-10 on host A (2 columns); the schema evolves to 3 columns
     // inside tx 11 and the GTID host flips (epoch 0 → 1) for txs 11-20.
-    // A tiny split target forces many mid-shard segments; their seeds
-    // must carry the right GTID, epoch, and schema checkpoint or the
-    // output diverges from the unsplit run.
+    // With no option the derived split size cuts the window mid-shard;
+    // the segment's seed must carry the right GTID, epoch, and schema
+    // checkpoint or the output diverges from the unsplit run
+    // (`max.txs.per.trigger=1` admits one transaction per trigger, so
+    // no window has a transaction boundary inside it to cut at).
     val f3 = t1Fields :+ FieldDef("extra", "VARCHAR", "varchar(32)", 32, 0, 0L)
     def tx3(shard: String, seq: Long, id: Long, v: String, x: String): Seq[VEvent] = Seq(
       BeginEvent(shard, "ks"),
@@ -215,8 +229,8 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         .collect().toSeq
       (rows, ckpt)
     }
-    val (plain, _) = run("cdc_split_off", Map.empty)
-    val (split, splitCkpt) = run("cdc_split_on", Map("split.partition.bytes" -> "1500"))
+    val (plain, _) = run("cdc_split_off", Map("max.txs.per.trigger" -> "1"))
+    val (split, splitCkpt) = run("cdc_split_on", Map.empty)
     assert(split == plain, "split run must be row-identical to the unsplit run")
     assert(plain.size == 20)
     assert(plain.take(10).forall(_.getLong(2) == 0L)) // host A epoch
@@ -225,6 +239,62 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and the split run REALLY split: its committed offset carries cuts
     val offsetJson = Files.readString(splitCkpt.resolve("offsets").resolve("0"))
     assert(offsetJson.contains("\"feed_splits\""), "expected feed_splits in the offset log")
+  }
+
+  test("a hot shard splits by the derived rule and a cold one does not, rows unchanged") {
+    // s0 holds 30 of 35 equal-sized transactions (over 3/4 of the bytes):
+    // on local[2] the bytes-per-core split size is half the trigger, so
+    // the hot shard's window is cut and the cold shard's is not
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcsplitskew"))
+    writeFeed(feedDir, "s0", (1L to 30L).flatMap(i => insertTx("s0", i, i, s"h$i")))
+    writeFeed(feedDir, "s1", (1L to 5L).flatMap(i => insertTx("s1", i, 100 + i, s"c$i")))
+    val hot = Files.size(feedDir.resolve("s0.jsonl"))
+    assert(4 * hot >= 3 * (hot + Files.size(feedDir.resolve("s1.jsonl"))))
+    val opts = new java.util.HashMap[String, String]()
+    opts.put("path", feedDir.toString)
+    val stream = new VitessCdcStream(new CaseInsensitiveStringMap(opts))
+    try {
+      val start = stream.initialOffset()
+      val end = stream.latestOffset(start, ReadLimit.allAvailable())
+      val perShard = stream.planInputPartitions(start, end)
+        .map(_.asInstanceOf[VitessCdcPartition].shard).groupBy(identity).map {
+          case (sh, ps) => sh -> ps.length
+        }
+      assert(perShard("s0") >= 2, s"hot shard must split: $perShard")
+      assert(perShard("s1") == 1, s"cold shard must not split: $perShard")
+    } finally stream.stop()
+    def run(sink: String, extra: Map[String, String]): Seq[Row] = {
+      val b0 = spark.readStream.format("vitess-cdc").option("path", feedDir.toString)
+      val q = extra.foldLeft(b0) { case (b, (k, v)) => b.option(k, v) }.load()
+        .writeStream.format("memory").queryName(sink)
+        .option("checkpointLocation",
+          graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcsplitskewckpt")).toString)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      spark.sql(
+        s"SELECT CAST(get_json_object(after, '$$.id') AS LONG) AS id, after, epoch, " +
+          s"vgtid, restart_vgtid, rank, total_order FROM $sink WHERE op = 'c' ORDER BY id")
+        .collect().toSeq
+    }
+    val derived = run("cdc_skew_derived", Map.empty)
+    assert(derived.size == 35)
+    assert(derived == run("cdc_skew_one_tx", Map("max.txs.per.trigger" -> "1")),
+      "split run must be row-identical to the one-transaction-per-trigger run")
+  }
+
+  test("admission caps must be positive") {
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdccapvalid"))
+    writeFeed(feedDir, "s0", insertTx("s0", 1L, 1L, "v1"))
+    for (key <- Seq("max.txs.per.trigger", "max.bytes.per.trigger"); v <- Seq("0", "-1")) {
+      val opts = new java.util.HashMap[String, String]()
+      opts.put("path", feedDir.toString)
+      opts.put(key, v)
+      val e = intercept[IllegalArgumentException](new VitessCdcStream(new CaseInsensitiveStringMap(opts)))
+      assert(e.getMessage.contains(key), e.getMessage)
+    }
   }
 
   test("offset json round-trips the reference offset-map shape") {
