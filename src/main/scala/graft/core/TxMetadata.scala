@@ -15,8 +15,17 @@ import scala.jdk.CollectionConverters._
   * VitessEpochProvider.java:45-81, ShardLineage.java:26-44,
   * ShardEpochMap.java:38-49.
   */
-final case class Gtid(version: String, hosts: Set[String], sequenceValues: Seq[String]) {
+final case class Gtid(version: String, hostSeqs: Seq[(String, String)]) {
+  def hosts: Set[String] = hostSeqs.map(_._1).toSet
+  def sequenceValues: Seq[String] = hostSeqs.map(_._2)
   def isHostSetSupersetOf(other: Gtid): Boolean = other.hosts.subsetOf(hosts)
+
+  /** This set lies inside `other`'s: each of its hosts is in `other`, at a
+    * sequence no higher — it was executed before `other`. */
+  def containedIn(other: Gtid): Boolean = {
+    val seqs = other.hostSeqs.toMap
+    hostSeqs.forall { case (h, s) => seqs.get(h).exists(o => BigDecimal(s) <= BigDecimal(o)) }
+  }
 }
 
 object Gtid {
@@ -43,7 +52,7 @@ object Gtid {
         (segs.init.mkString("-"), segs.last)
       }
     }
-    Gtid(version, hostSeqs.map(_._1).toSet, hostSeqs.map(_._2))
+    Gtid(version, hostSeqs)
   }
 }
 
@@ -129,7 +138,7 @@ object ShardLineage {
   * Standard→overridden transition is a protocol violation.
   */
 object EpochProvider {
-  private def isOverridden(gtid: String): Boolean =
+  private[core] def isOverridden(gtid: String): Boolean =
     gtid == Vgtid.CurrentGtid || gtid == Vgtid.EmptyGtid
 
   def epochForGtid(previousEpoch: Long, previousGtid: String, gtid: String): Long =
@@ -144,63 +153,64 @@ object EpochProvider {
         else previousEpoch + 1
     }
 
-  /** Per-transaction epoch-map transition: for every shard in the new
-    * VGTID, compute its epoch from the previous VGTID + epoch map; shards
-    * absent from the previous VGTID are reshard children (inherit when
-    * enabled, else 0). Returns the full new map. */
-  def transition(
-      previous: ShardEpochMap,
-      previousVgtid: Vgtid,
-      vgtid: Vgtid,
-      inheritEpoch: Boolean): ShardEpochMap = {
-    val entries = vgtid.shardGtids.map { sg =>
-      previousVgtid.shardGtid(sg.shard) match {
-        case Some(prevSg) =>
-          val prevEpoch = previous.get(sg.shard).getOrElse(
-            throw new IllegalStateException(
-              s"Previous epoch cannot be null for shard ${sg.shard} present in previous vgtid"))
-          sg.shard -> epochForGtid(prevEpoch, prevSg.gtid, sg.gtid)
-        case None =>
-          sg.shard -> (if (inheritEpoch) ShardLineage.inheritedEpoch(sg.shard, previous) else 0L)
-      }
-    }
-    ShardEpochMap(TreeMap.from(entries))
-  }
-
   /** Generation bump: any generation change (upgrade or rollback)
     * increments every shard's epoch once. */
   def applyGeneration(epochs: ShardEpochMap, lastGeneration: Long, configGeneration: Long): ShardEpochMap =
     if (configGeneration != lastGeneration) epochs.incrementAll else epochs
 }
 
-/** Per-transaction ordered-tx context: carries epoch map + previous vgtid
-  * between transactions (reference: VitessOrderedTransactionContext.java).
-  * `begin` is the only transition; immutable so it drops straight into
-  * flatMapGroupsWithState. */
-final case class OrderedTxContext(
-    epochs: ShardEpochMap,
-    previousVgtid: Option[Vgtid],
-    inheritEpoch: Boolean) {
+/** One shard's per-transaction state — its position, epoch and
+  * interval-heartbeat baseline — and the three rules that move it. The
+  * driver's offset fold, the partition reader and the batch pipeline all
+  * step this one value over the same feed, so a batch or split cut (which
+  * carries exactly this state) cannot change rows or epochs (reference:
+  * VitessOrderedTransactionContext.java).
+  *
+  *  - Epoch rule: [[EpochProvider.epochForGtid]] applies on every change
+  *    of the shard's GTID, in feed order — bare VGTIDs and empty
+  *    transactions included. Leaving an overridden (`current`/empty)
+  *    start position keeps the epoch.
+  *  - Order rule: a position is after another by (epoch, [[CopyProgress]]).
+  *    Rank (A2) is monotone only within one epoch: a failover to a
+  *    lower-ranked GTID set is still later, in a higher epoch.
+  *  - Heartbeat rule: the baseline moves on an admitted COMMIT that is the
+  *    first one or at least the interval past it (H1).
+  */
+final case class ShardTxStep(sg: ShardGtid, epoch: Long, hbMs: Long = ShardTxStep.NoBaseline) {
 
-  /** On BEGIN: compute this transaction's epoch + rank for its shard. On
-    * the first transaction, every shard in the incoming vgtid is seeded
-    * at epoch 0 — the reference's defaultShardEpochMap covers the whole
-    * discovered shard set (VitessEpochProvider.initialize:98-103). */
-  def begin(shard: String, vgtid: Vgtid, gtid: String): (OrderedTxContext, Long, BigDecimal) = {
-    val newEpochs = previousVgtid match {
-      case Some(prev) => EpochProvider.transition(epochs, prev, vgtid, inheritEpoch)
-      case None =>
-        vgtid.shardGtids.foldLeft(epochs) { (acc, sg) =>
-          if (acc.get(sg.shard).isEmpty) acc.put(sg.shard, 0L) else acc
-        }
+  /** Epoch rule: this shard's VGTID moved to `next`. A GTID set that
+    * loses hosts yet lies inside this one was executed before it — the
+    * history an explicit start position is read over, not a failover — so
+    * it moves neither the position nor the epoch. */
+  def onPosition(next: ShardGtid): ShardTxStep =
+    if (next.gtid == sg.gtid || EpochProvider.isOverridden(sg.gtid)) ShardTxStep(next, epoch, hbMs)
+    else {
+      val e = EpochProvider.epochForGtid(epoch, sg.gtid, next.gtid)
+      if (e != epoch && Gtid.parse(next.gtid).containedIn(Gtid.parse(sg.gtid))) this
+      else ShardTxStep(next, e, hbMs)
     }
-    val epoch = newEpochs.get(shard).getOrElse(
-      throw new IllegalStateException(s"no epoch for shard $shard after transition"))
-    (copy(epochs = newEpochs, previousVgtid = Some(vgtid)), epoch, Rank.of(gtid))
-  }
+
+  /** Order rule: this position is strictly later than `other`'s. */
+  def after(other: ShardTxStep): Boolean =
+    epoch > other.epoch || (epoch == other.epoch && CopyProgress.compare(sg, other.sg) > 0)
+
+  /** Heartbeat rule: an admitted COMMIT at `tsMs`. */
+  def onCommit(tsMs: Long, intervalMs: Long): ShardTxStep =
+    if (intervalMs > 0 && (hbMs == ShardTxStep.NoBaseline || tsMs - hbMs >= intervalMs))
+      copy(hbMs = tsMs)
+    else this
 }
 
+object ShardTxStep {
+  val NoBaseline: Long = Long.MinValue
+
+  /** A shard before its first transaction: empty GTID, epoch 0. */
+  def fresh(shard: String): ShardTxStep = ShardTxStep(ShardGtid("", shard, Vgtid.EmptyGtid), 0L)
+}
+
+/** The old per-shard context's entry point, kept because the benchmark's
+  * `RecordBuilder` layer pass (perfbench/Layers.scala) still calls it: a
+  * fresh [[ShardTxStep]] for the one shard it names. */
 object OrderedTxContext {
-  def initial(shards: Seq[String], inheritEpoch: Boolean = false): OrderedTxContext =
-    OrderedTxContext(ShardEpochMap.init(shards), None, inheritEpoch)
+  def initial(shards: Seq[String]): ShardTxStep = ShardTxStep.fresh(shards.head)
 }

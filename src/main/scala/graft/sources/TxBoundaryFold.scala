@@ -8,28 +8,27 @@ import graft.streaming._
   * transaction (so a batch window cut here cannot split a tx).
   *
   *  - `pos` — feed byte position at the safe point
-  *  - `sg` — shard GTID (incl. copy-phase lastpk) at the safe point
-  *  - `epoch` — folded transaction epoch (A3/A4/A5)
+  *  - `step` — the shard's [[ShardTxStep]] there: GTID (incl. copy-phase
+  *    lastpk), transaction epoch (A3/A4/A5) and interval-heartbeat
+  *    baseline (commit-time ms)
   *  - `schemas` — latest FIELD wire line per table (schema checkpoint)
-  *  - `hbMs` — interval-heartbeat baseline (commit-time ms)
   *  - `admitted` — transactions admitted beyond the fold's start GTID
   *    (cumulative since the fold was seeded)
   */
 private[sources] final case class ShardCursor(
     pos: Long,
-    sg: ShardGtid,
-    epoch: Long,
+    step: ShardTxStep,
     schemas: Map[String, String],
-    hbMs: Long,
     admitted: Long)
 
 /** The transaction-boundary fold over one shard's wire lines: tracks
-  * BEGIN/COMMIT nesting, folds VGTID position + epoch transitions,
-  * checkpoints FIELD (schema) lines, and mirrors the reader's
-  * interval-heartbeat baseline rule — publishing a [[ShardCursor]] only
-  * at out-of-transaction line boundaries, so any published cursor is a
-  * safe batch cut. Single-threaded use: `latestOffset` runs one fold
-  * per shard per trigger.
+  * BEGIN/COMMIT nesting, steps the shard's [[ShardTxStep]] over every
+  * VGTID line and every admitted COMMIT (the rules the partition reader
+  * applies to the same lines), and checkpoints FIELD (schema) lines —
+  * publishing a [[ShardCursor]] only at out-of-transaction line
+  * boundaries, so any published cursor is a safe batch cut.
+  * Single-threaded use: `latestOffset` runs one fold per shard per
+  * trigger.
   *
   * Prefix dispatch (only VGTID/FIELD/COMMIT lines are JSON-parsed)
   * keeps the fold cheap — most lines in a row-heavy stream are ROW
@@ -39,15 +38,13 @@ private[sources] final class TxBoundaryFold(
     shard: String,
     keyspace: String,
     seed: ShardCursor,
-    startSg: ShardGtid,
+    start: ShardTxStep,
     heartbeatIntervalMs: Long,
     splitBytes: Long) {
   private var inTx = false
-  private var txAdmitted = false
-  private var lastSg = seed.sg
-  private var epoch = seed.epoch
+  private var txHasPos = false
+  private var step = seed.step
   private var tableSchemas = seed.schemas
-  private var hbMs = seed.hbMs
   private var admitted = seed.admitted
   private var safeCursor = seed
   private var lastSplitPos = seed.pos
@@ -67,18 +64,15 @@ private[sources] final class TxBoundaryFold(
 
   /** Fold one wire line; `posAfter` is the byte position just after it. */
   def onLine(line: String, posAfter: Long): Unit = {
-    if (line.startsWith(FeedSlice.BeginPrefix)) { inTx = true; txAdmitted = false }
+    if (line.startsWith(FeedSlice.BeginPrefix)) { inTx = true; txHasPos = false }
     else if (line.startsWith(FeedSlice.CommitPrefix)) {
       inTx = false
-      if (heartbeatIntervalMs > 0 && txAdmitted) {
+      if (heartbeatIntervalMs > 0 && txHasPos && step.after(start)) {
         VEventJson.read(line) match {
-          case c: CommitEvent =>
-            val tsMs = c.timestampSec * 1000L
-            if (hbMs == Long.MinValue || tsMs - hbMs >= heartbeatIntervalMs) hbMs = tsMs
+          case c: CommitEvent => step = step.onCommit(c.timestampSec * 1000L, heartbeatIntervalMs)
           case _ =>
         }
       }
-      txAdmitted = false
     } else if (line.startsWith(FeedSlice.FieldPrefix)) {
       VEventJson.read(line) match {
         case f: FieldEvent => tableSchemas += (f.table -> line)
@@ -88,20 +82,16 @@ private[sources] final class TxBoundaryFold(
       VEventJson.read(line) match {
         case VgtidEvent(_, v) =>
           v.shardGtid(shard).foreach { sg =>
-            if (sg != lastSg) {
-              if (CopyProgress.compare(sg, startSg) > 0) { admitted += 1; txAdmitted = true }
-              if (sg.gtid != lastSg.gtid) {
-                if (lastSg.gtid != Vgtid.EmptyGtid && lastSg.gtid != Vgtid.CurrentGtid)
-                  epoch = EpochProvider.epochForGtid(epoch, lastSg.gtid, sg.gtid)
-              }
-              lastSg = sg.copy(keyspace = keyspace, shard = shard)
-            }
+            val from = step.sg
+            step = step.onPosition(sg.copy(keyspace = keyspace, shard = shard))
+            if (inTx) txHasPos = true
+            if (step.sg != from && step.after(start)) admitted += 1
           }
         case _ =>
       }
     }
     if (!inTx) {
-      safeCursor = ShardCursor(posAfter, lastSg, epoch, tableSchemas, hbMs, admitted)
+      safeCursor = ShardCursor(posAfter, step, tableSchemas, admitted)
       if (safeCursor.pos - lastSplitPos >= splitBytes) {
         splitAcc :+= safeCursor
         lastSplitPos = safeCursor.pos

@@ -35,14 +35,14 @@ import scala.jdk.CollectionConverters._
   * - Initial position (S4): the `vgtid` option, else empty GTIDs for all
   *   discovered shards (the copy-phase trigger position)
   *   (VitessReplicationConnection.defaultVgtid:437-480).
-  * - Partitioning (S9): one InputPartition per shard — Spark schedules
-  *   shards across executors, the elastic equivalent of the reference's
-  *   shard→task round-robin (VitessConnector.java:126-133); a hot shard
-  *   is cut further (see `latestOffset`).
-  * - Resume semantics (O1/O2): a batch covers transactions with rank in
-  *   (startRank, endRank] per shard; since records of tx N carry tx N-1's
-  *   position as restart offset, replay from a record's offset re-reads
-  *   its whole transaction — inclusive, no loss.
+  * - Partitioning (S9): one InputPartition per segment of a shard's
+  *   window (cut at the derived split size, see `latestOffset`) — the
+  *   elastic equivalent of the reference's shard→task round-robin
+  *   (VitessConnector.java:126-133).
+  * - Resume semantics (O1/O2): a batch covers transactions with position
+  *   in (start, end] per shard by (epoch, rank) ([[ShardTxStep]]); since
+  *   records of tx N carry tx N-1's position as restart offset, replay
+  *   from a record's offset re-reads its whole transaction, no loss.
   *
   * Options: `path` (feed dir), `vgtid` (initial VGTID JSON), `keyspace`,
   * `shard` (explicit comma-separated shard list; authoritative — not
@@ -122,7 +122,7 @@ class VitessCdcTable(options: CaseInsensitiveStringMap) extends Table with Suppo
   *    schema registry (the analogue of Debezium's schema history).
   *
   * Both are optional: an offset without them falls back to the
-  * whole-file scan with the rank-window filter (which remains the
+  * whole-file scan with the position filter (which remains the
   * correctness backstop in all modes). */
 final case class VgtidOffset(
     vgtid: Vgtid,
@@ -173,9 +173,9 @@ final case class VgtidOffset(
             val n = arr.addObject()
             n.put("pos", c.pos)
             n.set[com.fasterxml.jackson.databind.JsonNode](
-              "gtid", m.readTree(Vgtid(Seq(c.sg)).json))
-            n.put("epoch", c.epoch)
-            if (c.hbMs != Long.MinValue) n.put("hb", c.hbMs)
+              "gtid", m.readTree(Vgtid(Seq(c.step.sg)).json))
+            n.put("epoch", c.step.epoch)
+            if (c.step.hbMs != ShardTxStep.NoBaseline) n.put("hb", c.step.hbMs)
             if (c.schemas.nonEmpty) {
               val t = n.putObject("schemas")
               c.schemas.toSeq.sortBy(_._1).foreach { case (tbl, line) => t.put(tbl, line) }
@@ -217,12 +217,13 @@ object VgtidOffset {
           e.getKey -> e.getValue.elements().asScala.map { c =>
             ShardCursor(
               c.get("pos").asLong(),
-              Vgtid.of(m.writeValueAsString(c.get("gtid"))).shardGtids.head,
-              c.get("epoch").asLong(),
+              ShardTxStep(
+                Vgtid.of(m.writeValueAsString(c.get("gtid"))).shardGtids.head,
+                c.get("epoch").asLong(),
+                Option(c.get("hb")).map(_.asLong()).getOrElse(ShardTxStep.NoBaseline)),
               Option(c.get("schemas")).map(_.fields().asScala
                 .map(t => t.getKey -> t.getValue.asText()).toMap)
                 .getOrElse(Map.empty[String, String]),
-              Option(c.get("hb")).map(_.asLong()).getOrElse(Long.MinValue),
               admitted = 0L)
           }.toSeq
         }.toMap
@@ -610,7 +611,8 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     *
     * Every shard's [[TxBoundaryFold]] is seeded from the trigger's start
     * offset and reads that shard's new bytes, up to the size measured at
-    * the start of the trigger. Shards fold in parallel on the JVM's
+    * the start of the trigger, stepping the shard's [[ShardTxStep]] by
+    * the rules the readers apply to the same lines. Shards fold in parallel on the JVM's
     * global pool (the stream owns no threads); their cursors, split
     * cursors and epochs merge in shard order. A fold stops at the first
     * transaction boundary past `max.txs.per.trigger` or
@@ -632,7 +634,7 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     * `transaction_epoch`. A shard with no recorded position (first
     * trigger, explicit-`vgtid` offset, reshard child) folds the whole
     * file from the initial baseline — idempotent under the readers'
-    * rank-window filter, so legacy restarts can't double-count a host
+    * position filter, so legacy restarts can't double-count a host
     * change. A generation change vs the offset's stored generation bumps
     * every epoch once (A5). Seeds read only the START offset's epochs,
     * never a sibling shard folded in the same trigger: the readers seed
@@ -669,9 +671,9 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     lazy val init = initialOffset().asInstanceOf[VgtidOffset]
     lazy val bumpedInit = EpochProvider.applyGeneration(init.epochs, from.generation, generation)
     val startEpochs = EpochProvider.applyGeneration(from.epochs, from.generation, generation)
-    /** Seed cursor for one shard. Positions compare by (rank, copy-phase
-      * lastpk progress) so copy batches advance the offset even while the
-      * GTID stays fixed; epoch fallbacks inherit from the
+    /** Seed cursor for one shard. Positions compare by (epoch, rank,
+      * copy-phase lastpk progress) so copy batches advance the offset even
+      * while the GTID stays fixed; epoch fallbacks inherit from the
       * generation-BUMPED map so a reshard child appearing across a
       * generation-change restart seeds from its parents' post-bump
       * epochs (the same map the readers see). */
@@ -688,19 +690,19 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
         case None => seedEpoch(shard, startEpochs) // reshard child (A4)
       }
       ShardCursor(
-        seekFrom.getOrElse(0L), sg, epoch,
+        seekFrom.getOrElse(0L),
+        ShardTxStep(sg, epoch, from.hbMs.getOrElse(shard, ShardTxStep.NoBaseline)),
         from.schemas.getOrElse(shard, Map.empty[String, String]),
-        from.hbMs.getOrElse(shard, Long.MinValue),
         admitted = 0L)
     }
     /** Fold one shard's new bytes from `seed` up to the first transaction
       * boundary past either cap (the measured `size` when none is set):
       * the last safe cursor and the split cursors below it. */
     def foldShard(
-        shard: String, file: String, startSg: ShardGtid, seed: ShardCursor,
+        shard: String, file: String, start: ShardTxStep, seed: ShardCursor,
         size: Option[Long], splitBytes: Long): (ShardCursor, Seq[ShardCursor]) = {
       val fold = new TxBoundaryFold(
-        shard, keyspace, seed, startSg, heartbeatIntervalMs, splitBytes)
+        shard, keyspace, seed, start, heartbeatIntervalMs, splitBytes)
       val slice = size.flatMap { to =>
         try Some(transport.open(file, seed.pos, to))
         catch { case _: NoSuchFileException => None }
@@ -733,7 +735,8 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
       // reshard parent) admits nothing this trigger instead of failing it
       val size =
         try Some(transport.size(file)) catch { case _: NoSuchFileException => None }
-      (shard, file, startSg, seedCursor(shard, startSg), size)
+      (shard, file, ShardTxStep(startSg, seedEpoch(shard, startEpochs)),
+        seedCursor(shard, startSg), size)
     }
     val newBytes = shards.map { case (_, _, _, seed, size) =>
       size.fold(0L)(to => math.min(math.max(0L, to - seed.pos), maxBytesPerTrigger))
@@ -742,8 +745,8 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     val splitBytes = if (newBytes == 0L) Long.MaxValue else (newBytes + cores - 1) / cores
     val folded = {
       import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.traverse(shards) { case (shard, file, startSg, seed, size) =>
-        Future(foldShard(shard, file, startSg, seed, size, splitBytes))
+      Await.result(Future.traverse(shards) { case (shard, file, start, seed, size) =>
+        Future(foldShard(shard, file, start, seed, size, splitBytes))
       }, Duration.Inf)
     }
     var epochs = startEpochs
@@ -751,14 +754,15 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     val schemasOut = Map.newBuilder[String, Map[String, String]]
     val hbMsOut = Map.newBuilder[String, Long]
     val splitsOut = Map.newBuilder[String, Seq[ShardCursor]]
-    val gtids = shards.zip(folded).map { case ((shard, _, startSg, _, _), (cursor, splits)) =>
-      epochs = epochs.put(shard, cursor.epoch)
+    val gtids = shards.zip(folded).map { case ((shard, _, start, _, _), (cursor, splits)) =>
+      epochs = epochs.put(shard, cursor.step.epoch)
       positionsOut += shard -> cursor.pos
       if (cursor.schemas.nonEmpty) schemasOut += shard -> cursor.schemas
-      if (heartbeatIntervalMs > 0 && cursor.hbMs != Long.MinValue) hbMsOut += shard -> cursor.hbMs
+      if (heartbeatIntervalMs > 0 && cursor.step.hbMs != ShardTxStep.NoBaseline)
+        hbMsOut += shard -> cursor.step.hbMs
       if (splits.nonEmpty) splitsOut += shard -> splits
       // never regress behind the committed start position
-      if (CopyProgress.compare(cursor.sg, startSg) < 0) startSg else cursor.sg
+      if (cursor.step.after(start)) cursor.step.sg else start.sg
     }
     assert(splitsOut.result().values.map(_.size).sum <= cores,
       s"split cursors must not outnumber the $cores cores")
@@ -809,35 +813,32 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
         // like a batch boundary (position, GTID, epoch, schema
         // checkpoint, heartbeat baseline all from its cursor), so the
         // single-partition case is just the zero-splits instance.
+        val start = ShardTxStep(startSg, seedEpoch(shard, startEpochs),
+          s.hbMs.getOrElse(shard, ShardTxStep.NoBaseline))
         val cuts = e.splits.getOrElse(shard, Nil)
           .filter(c => c.pos > startByte && c.pos < endByte)
           // a cursor recorded in the PRE-START history region (explicit-
-          // vgtid cold start over a feed that still holds history) has a
-          // GTID behind the batch start; seeding a segment from it would
+          // vgtid cold start over a feed that still holds history) is not
+          // after the batch start; seeding a segment from it would
           // re-admit history the position filter is there to skip — drop
           // it (dropping a split is always safe)
-          .filter(c => CopyProgress.compare(c.sg, startSg) > 0)
+          .filter(_.step.after(start))
           .sortBy(_.pos)
-        val batchStart = ShardCursor(
-          startByte, startSg, seedEpoch(shard, startEpochs),
-          s.schemas.getOrElse(shard, Map.empty),
-          s.hbMs.getOrElse(shard, Long.MinValue), 0L)
+        val batchStart = ShardCursor(startByte, start, s.schemas.getOrElse(shard, Map.empty), 0L)
+        val batchEnd = ShardTxStep(endSg, e.epochs.get(shard).getOrElse(start.epoch))
         val seeds = batchStart +: cuts
         seeds.zipWithIndex.map { case (seed, i) =>
           val isLast = i == seeds.length - 1
-          val segEndSg = if (isLast) endSg else cuts(i).sg
+          val segEnd = if (isLast) batchEnd else cuts(i).step
           val segEndByte = if (isLast) endByte else cuts(i).pos
           VitessCdcPartition(
-            shard, keyspace, file,
-            Vgtid(Seq(seed.sg)).json, Vgtid(Seq(segEndSg)).json,
-            seed.epoch, emitBoundaries, tableFilter,
+            shard, keyspace, file, seed.step, segEnd, emitBoundaries, tableFilter,
             // per-batch (not per-segment) liveness: only the last
             // segment, which ends at the batch's end offset, emits the
             // batch heartbeat for its shard
             heartbeatPerBatch && isLast,
-            inheritEpoch, effectiveSnapshotTables,
+            effectiveSnapshotTables,
             typeModes, heartbeatIntervalMs,
-            seed.hbMs,
             includeSchemaChanges,
             seed.pos, segEndByte,
             // schema checkpoint as of the SEGMENT start (in-segment
@@ -906,17 +907,14 @@ final case class VitessCdcPartition(
     shard: String,
     keyspace: String,
     file: String, // transport locator (feed-file path for the file feed)
-    startPosJson: String, // single-shard vgtid JSON incl. copy lastpk
-    endPosJson: String,
-    startEpoch: Long,
+    start: ShardTxStep, // position incl. copy lastpk, epoch, heartbeat baseline
+    end: ShardTxStep, // position and epoch the window ends at
     emitBoundaries: Boolean,
     tableFilter: TableFilter,
     heartbeatPerBatch: Boolean = false,
-    inheritEpoch: Boolean = false,
     snapshotTables: Option[TableFilter] = None,
     typeModes: ValueConversion.TypeModes = ValueConversion.TypeModes.default,
     heartbeatIntervalMs: Long = 0L, // 0 = NOOP heartbeat
-    startHbMs: Long = Long.MinValue, // checkpointed interval-heartbeat baseline
     includeSchemaChanges: Boolean = true,
     startByte: Long = 0L, // batch byte window [startByte, endByte)
     endByte: Long = Long.MaxValue,
@@ -924,36 +922,56 @@ final case class VitessCdcPartition(
     extends InputPartition
 
 /** Executor-side reader: seeks to the batch's byte window
-  * [startByte, endByte) of the shard feed, assembles transactions, keeps
-  * those with GTID rank in (startRank, endRank] — the rank-window filter
+  * [startByte, endByte) of the shard feed, assembles transactions and
+  * steps the shard's [[ShardTxStep]] over every line exactly as the
+  * driver's fold did, so each transaction takes the epoch the offsets
+  * record. It keeps the transactions whose position is after the window
+  * start and not after its end by (epoch, rank) — the position filter
   * stays on as the correctness backstop even though the byte window
   * already bounds the slice — and decodes them against the schema
   * checkpoint carried by the partition (FIELD lines seen before the
-  * window). Rank (A2) is monotone per shard under a stable host set,
-  * which holds for MySQL56 GTIDs from one primary — the same property
-  * the reference's ordered-transaction metadata relies on. A legacy
-  * partition without byte positions (endByte == Long.MaxValue with
-  * startByte == 0) degrades to the original whole-file replay. */
+  * window). A legacy partition without byte positions (endByte ==
+  * Long.MaxValue with startByte == 0) degrades to the original
+  * whole-file replay. */
 class VitessCdcPartitionReader(
     p: VitessCdcPartition,
     transport: VStreamTransport) extends PartitionReader[InternalRow] {
-
-  private val startSg = Vgtid.of(p.startPosJson).shardGtid(p.shard)
-    .getOrElse(ShardGtid(p.keyspace, p.shard, Vgtid.EmptyGtid))
-  private val endSg = Vgtid.of(p.endPosJson).shardGtid(p.shard)
-    .getOrElse(ShardGtid(p.keyspace, p.shard, Vgtid.EmptyGtid))
 
   // E1: transient I/O on stream open is retried with backoff; everything
   // else surfaces to Spark's task retry + restart-from-checkpoint
   private val slice =
     Retry.withRetries(maxAttempts = 3)(transport.open(p.file, p.startByte, p.endByte))
 
+  private val freshGtid = p.start.sg.gtid == Vgtid.EmptyGtid || p.start.sg.gtid == Vgtid.CurrentGtid
+  private val fresh = freshGtid && p.start.sg.tablePKs.isEmpty
+
+  private val rb = {
+    val registry = new SchemaRegistry(p.typeModes)
+    // replay the checkpointed schema lines (a real VStream re-sends FIELD
+    // events on reconnect; the file feed can't, so the offset carries them)
+    p.schemaLines.foreach { line =>
+      VEventJson.read(line) match {
+        case f: FieldEvent => registry.update(p.shard, f)
+        case _ =>
+      }
+    }
+    new RecordBuilder(
+      registry, p.start, p.emitBoundaries,
+      initialVgtid = if (fresh) None else Some(Vgtid(Seq(p.start.sg))),
+      tableFilter = p.tableFilter,
+      snapshotTableFilter = p.snapshotTables, typeModes = p.typeModes)
+  }
+
+  /** The shard's per-transaction state as of the last line read. */
+  private[sources] def step: ShardTxStep = rb.step
+
   /** See the call site: line-level skip of transactions wholly before
-    * `startSg`. Buffers at most one transaction's lines (the same bound
+    * the start. Buffers at most one transaction's lines (the same bound
     * the feeder's tx buffer has); parses ONLY VGTID-prefixed lines while
-    * skipping. Conservative by construction: standalone lines (DDL /
-    * heartbeat / broadcast VGTID between transactions) and transactions
-    * carrying no VGTID forward to the real decoder untouched. */
+    * skipping, and steps each one. Conservative by construction:
+    * standalone lines (DDL / heartbeat / broadcast VGTID between
+    * transactions) and transactions carrying no VGTID forward to the
+    * real decoder untouched. */
   private def skipColdHistory(lines: Iterator[String]): Iterator[String] =
     new Iterator[String] {
       private val out = scala.collection.mutable.Queue[String]()
@@ -978,7 +996,8 @@ class VitessCdcPartitionReader(
                 case VgtidEvent(_, v) =>
                   v.shardGtid(p.shard).foreach { pos =>
                     txSawVgtid = true
-                    if (CopyProgress.compare(pos, startSg) > 0) txPasses = true
+                    rb.step = rb.step.onPosition(pos)
+                    if (rb.step.after(p.start)) txPasses = true
                   }
                 case _ =>
               }
@@ -998,17 +1017,6 @@ class VitessCdcPartitionReader(
     }
 
   private val rows: Iterator[InternalRow] = {
-    val registry = new SchemaRegistry(p.typeModes)
-    // replay the checkpointed schema lines (a real VStream re-sends FIELD
-    // events on reconnect; the file feed can't, so the offset carries them)
-    p.schemaLines.foreach { line =>
-      VEventJson.read(line) match {
-        case f: FieldEvent => registry.update(p.shard, f)
-        case _ =>
-      }
-    }
-    val fresh = (startSg.gtid == Vgtid.EmptyGtid || startSg.gtid == Vgtid.CurrentGtid) &&
-      startSg.tablePKs.isEmpty
     // Cold-start resume at an explicit VGTID over a feed that still holds
     // the history BEFORE that position (no checkpointed byte progress →
     // startByte 0): drop pre-position transactions at the LINE level — a
@@ -1022,93 +1030,74 @@ class VitessCdcPartitionReader(
     // transaction — per-shard positions are monotone).
     val lineIter =
       if (p.startByte == 0L && !fresh) skipColdHistory(slice.lines) else slice.lines
-    val events = lineIter.map(VEventJson.read)
-    val startVgtid = if (fresh) None else Some(Vgtid(Seq(startSg)))
-    // Seeding previousVgtid with the batch-start position makes a host-set
-    // change at a batch boundary bump the epoch exactly like the driver's
-    // latestOffset fold — record epochs and offset epochs stay consistent.
-    val ctx = OrderedTxContext(
-      ShardEpochMap.empty.put(p.shard, p.startEpoch),
-      previousVgtid = startVgtid,
-      inheritEpoch = p.inheritEpoch)
-    val rb = new RecordBuilder(
-      registry, ctx, p.emitBoundaries,
-      initialVgtid = startVgtid, tableFilter = p.tableFilter,
-      snapshotTableFilter = p.snapshotTables, typeModes = p.typeModes)
-    val batchRecords = TransactionAssembler.assemble(events)
-      .filter { tx =>
-        tx.vgtid.flatMap(_.shardGtid(p.shard)) match {
-          case Some(pos) =>
-            // inclusive-resume at transaction granularity: each copy tx
-            // carries its lastpk watermark, so mid-copy restarts skip
-            // exactly the transactions already delivered
-            CopyProgress.compare(pos, startSg) > 0 && CopyProgress.compare(pos, endSg) <= 0
-          case None =>
-            // DDL/heartbeat flushes with no position: a bounded byte
-            // window contains each such line exactly once across the
-            // stream's lifetime — but only when the window START is
-            // trustworthy: a mid-stream resume from a legacy checkpoint
-            // (real GTID, no recorded byte position → startByte 0) would
-            // re-scan from byte 0 and re-deliver old DDLs, so it falls
-            // back to the legacy progress guard instead
-            val freshStart =
-              startSg.gtid == Vgtid.EmptyGtid || startSg.gtid == Vgtid.CurrentGtid
-            if (p.endByte == Long.MaxValue) CopyProgress.compare(endSg, startSg) > 0
-            else p.startByte > 0 || freshStart ||
-              CopyProgress.compare(endSg, startSg) > 0
+    // every VGTID steps the shard, so when the assembler yields a
+    // transaction the step stands at that transaction's position
+    val events = rb.positions(lineIter.map(VEventJson.read))
+    val records = TransactionAssembler.assemble(events).flatMap { tx =>
+      val pos = tx.vgtid.flatMap(_.shardGtid(p.shard))
+      val inWindow =
+        if (pos.isDefined) {
+          // inclusive-resume at transaction granularity: each copy tx
+          // carries its lastpk watermark, so mid-copy restarts skip
+          // exactly the transactions already delivered. A transaction is
+          // after the start when its own position is; a DDL/heartbeat
+          // flush carries the position before it, so it is after the
+          // start when that position is not before it
+          val owned = tx.events.exists(_.isInstanceOf[VgtidEvent])
+          (if (owned) rb.step.after(p.start) else !p.start.after(rb.step)) && !rb.step.after(p.end)
+        } else {
+          // DDL/heartbeat flushes with no position: a bounded byte
+          // window contains each such line exactly once across the
+          // stream's lifetime — but only when the window START is
+          // trustworthy: a mid-stream resume from a legacy checkpoint
+          // (real GTID, no recorded byte position → startByte 0) would
+          // re-scan from byte 0 and re-deliver old DDLs, so it falls
+          // back to the legacy progress guard instead
+          if (p.endByte == Long.MaxValue) p.end.after(p.start)
+          else p.startByte > 0 || freshGtid || p.end.after(p.start)
         }
-      }
-    // H1 interval heartbeats: one heartbeat record per admitted
-    // transaction whose commit time is at least `heartbeatIntervalMs`
-    // past the previous baseline (reference VitessHeartbeatImpl.java:
-    // 47-77; 0 = NOOP). The baseline is seeded from the CHECKPOINT
-    // (p.startHbMs) and the driver's offset fold applies the identical
-    // per-commit rule, so the cadence survives batch boundaries — a
-    // per-reader baseline would reset every micro-batch and never fire
-    // under bounded triggers. Event-time driven: deterministic under
-    // replay. Emission is per-tx (not per-record), so fully-filtered
-    // stretches still heartbeat — exactly when consumers need liveness.
-    val withIntervalHeartbeats =
-      if (p.heartbeatIntervalMs <= 0L)
-        batchRecords.flatMap(rb.onTransaction)
-          // include.schema.changes=false: DDL records stay off the stream
-          .filter(rec => p.includeSchemaChanges || rec.op != "ddl")
+      if (!inWindow) Nil
       else {
-        var lastHbMs = p.startHbMs
-        var lastEpoch = p.startEpoch
-        batchRecords.flatMap { tx =>
-          val recs = rb.onTransaction(tx)
-            .filter(rec => p.includeSchemaChanges || rec.op != "ddl")
-            .toVector
-          recs.lastOption.foreach(r => lastEpoch = r.epoch)
-          val isCommitTx = tx.events.lastOption.exists(_.isInstanceOf[CommitEvent])
-          if (!isCommitTx) recs
+        // include.schema.changes=false: DDL records stay off the stream
+        val recs = rb.onTransaction(tx).filter(rec => p.includeSchemaChanges || rec.op != "ddl")
+        // H1 interval heartbeats: one heartbeat record per admitted
+        // transaction whose commit time is at least `heartbeatIntervalMs`
+        // past the previous baseline (reference VitessHeartbeatImpl.java:
+        // 47-77; 0 = NOOP). The baseline is seeded from the CHECKPOINT
+        // and the driver's offset fold applies the identical rule, so the
+        // cadence survives batch boundaries. Event-time driven:
+        // deterministic under replay. Emission is per-tx (not
+        // per-record), so fully-filtered stretches still heartbeat —
+        // exactly when consumers need liveness.
+        if (pos.isEmpty || !tx.events.lastOption.exists(_.isInstanceOf[CommitEvent])) recs
+        else {
+          val tsMs = tx.commitTsSec * 1000L
+          val baseline = rb.step.hbMs
+          rb.step = rb.step.onCommit(tsMs, p.heartbeatIntervalMs)
+          // the first admitted commit only seeds the baseline
+          if (rb.step.hbMs == baseline || baseline == ShardTxStep.NoBaseline) recs
           else {
-            val tsMs = tx.commitTsSec * 1000L
-            if (lastHbMs == Long.MinValue) { lastHbMs = tsMs; recs }
-            else if (tsMs - lastHbMs >= p.heartbeatIntervalMs) {
-              lastHbMs = tsMs
-              val last = recs.lastOption
-              val vj = last.map(_.vgtid).orElse(tx.vgtid.map(_.json)).getOrElse("[]")
-              val rj = last.map(_.restartVgtid).orElse(tx.vgtid.map(_.json)).getOrElse("[]")
-              recs :+ ChangeRecord(
-                p.shard, p.keyspace, "", "heartbeat", None, None, None,
-                tsMs, vj, rj, None, last.map(_.epoch).getOrElse(lastEpoch), None, 0L, 0L)
-            } else recs
+            val last = recs.lastOption
+            val vj = last.map(_.vgtid).orElse(tx.vgtid.map(_.json)).getOrElse("[]")
+            val rj = last.map(_.restartVgtid).orElse(tx.vgtid.map(_.json)).getOrElse("[]")
+            recs :+ ChangeRecord(
+              p.shard, p.keyspace, "", "heartbeat", None, None, None,
+              tsMs, vj, rj, None, rb.step.epoch, None, 0L, 0L)
           }
         }
       }
+    }
     // H1: one liveness record per shard per batch carrying the end offset
     // (reference VitessHeartbeatImpl.java:47-77 — emitted alongside data;
     // skipped while no offset exists yet, i.e. a fresh empty start)
     val heartbeat =
-      if (p.heartbeatPerBatch && endSg.gtid != Vgtid.EmptyGtid)
+      if (p.heartbeatPerBatch && p.end.sg.gtid != Vgtid.EmptyGtid)
         Iterator.single(ChangeRecord(
           p.shard, p.keyspace, "", "heartbeat", None, None, None,
-          0L, Vgtid(Seq(endSg)).json, Vgtid(Seq(endSg)).json,
-          None, p.startEpoch, None, 0L, 0L))
+          0L, Vgtid(Seq(p.end.sg)).json, Vgtid(Seq(p.end.sg)).json,
+          None, p.start.epoch, None, 0L, 0L))
       else Iterator.empty
-    (withIntervalHeartbeats ++ heartbeat).map(VitessCdc.toInternalRow)
+    (records ++ heartbeat).map(VitessCdc.toInternalRow)
   }
 
   private var current: InternalRow = _

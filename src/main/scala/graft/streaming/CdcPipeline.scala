@@ -16,10 +16,11 @@ final case class FeedLine(shard: String, seq: Long, line: String)
   * executors and `sortWithinPartitions(shard, seq)` restores each shard's
   * binlog order with one shuffle. Each shard's run is then processed
   * sequentially by the same pure state machines the streaming source
-  * uses (TransactionAssembler + RecordBuilder) — per-shard sequential
-  * processing is inherent to CDC (binlog total order per shard), so this
-  * is the maximum available parallelism, exactly like the reference's
-  * shard→task round-robin (VitessConnector.java:126-133) but elastic.
+  * uses (TransactionAssembler, ShardTxStep, RecordBuilder) — per-shard
+  * sequential processing is inherent to CDC (binlog total order per
+  * shard), so this is the maximum available parallelism, exactly like
+  * the reference's shard→task round-robin (VitessConnector.java:126-133)
+  * but elastic.
   * Nothing is collected to the driver; decode happens inside
   * mapPartitions on executors.
   */
@@ -62,11 +63,11 @@ object CdcPipeline {
         def next(): VEvent = VEventJson.read(buf.next().line)
       }
       val rb = new RecordBuilder(
-        new SchemaRegistry(typeModes), OrderedTxContext.initial(Seq(shard)), emitBoundaries,
+        new SchemaRegistry(typeModes), ShardTxStep.fresh(shard), emitBoundaries,
         tableFilter = tableFilter, columnRules = columnRules,
         convertFailureMode = convertFailureMode, typeModes = typeModes)
       // ++ is lazy: the recursive call runs only after this run is drained
-      TransactionAssembler.assemble(run).flatMap(rb.onTransaction) ++
+      TransactionAssembler.assemble(rb.positions(run)).flatMap(rb.onTransaction) ++
         processPartition(buf, emitBoundaries, tableFilter, columnRules, convertFailureMode, typeModes)
     }
 }

@@ -86,15 +86,16 @@ final case class ChangeRecord(
     collectionOrder: Long) // per-table event order within tx, 1-based
 
 /** Turns assembled transactions into envelope records: decodes packed
-  * rows via the registry schema, computes per-transaction epoch + rank,
-  * rotates the restart offset, and emits optional BEGIN/END boundary
-  * records (reference: VitessChangeRecordEmitter.java:56-132,
+  * rows via the registry schema, stamps each transaction with its shard
+  * step's epoch and its GTID's rank, rotates the restart offset, and
+  * emits optional BEGIN/END boundary records (reference:
+  * VitessChangeRecordEmitter.java:56-132,
   * VitessOrderedTransactionStructMaker.java:39-50, SourceInfo.java:105-130).
-  * One instance per shard reader; `ctx` carries epoch state across
-  * transactions. */
+  * One instance per shard reader; `step` carries the shard's
+  * [[ShardTxStep]] across transactions. */
 final class RecordBuilder(
     registry: SchemaRegistry,
-    var ctx: OrderedTxContext,
+    var step: ShardTxStep,
     emitTransactionBoundaries: Boolean = false,
     initialVgtid: Option[Vgtid] = None,
     tableFilter: TableFilter = TableFilter.acceptAll,
@@ -127,6 +128,16 @@ final class RecordBuilder(
   private def currentJson: String = currentVgtid.map(_.json).getOrElse("[]")
   private def restartJson: String = restartVgtidOpt.map(_.json).getOrElse("[]")
 
+  /** Steps [[step]] over every VGTID of this shard in `events`, in feed
+    * order, and passes the events through. Bare VGTIDs between
+    * transactions never reach [[onTransaction]], yet they move the epoch
+    * exactly as they move the driver's offset fold. */
+  def positions(events: Iterator[VEvent]): Iterator[VEvent] = events.map {
+    case e @ VgtidEvent(_, v) =>
+      v.shardGtid(step.sg.shard).foreach(sg => step = step.onPosition(sg)); e
+    case e => e
+  }
+
   def onTransaction(tx: VTransaction): Seq[ChangeRecord] = {
     val out = Vector.newBuilder[ChangeRecord]
     val tsMs = tx.commitTsSec * 1000L
@@ -145,13 +156,10 @@ final class RecordBuilder(
     rotate(tx.vgtid)
     val vgtidJson = currentJson
 
-    val (epoch, rank) = (tx.vgtid, tx.txId) match {
-      case (Some(v), Some(gtid)) if isDml =>
-        val (next, e, r) = ctx.begin(tx.shard, v, gtid)
-        ctx = next
-        (e, Some(r.toString))
-      case _ => (ctx.epochs.get(tx.shard).getOrElse(0L), None)
-    }
+    // a no-op when `positions` already stepped this transaction's VGTID
+    tx.vgtid.flatMap(_.shardGtid(tx.shard)).foreach(sg => step = step.onPosition(sg))
+    val epoch = step.epoch
+    val rank = if (isDml) tx.txId.map(Rank.of(_).toString) else None
 
     if (emitTransactionBoundaries && isDml)
       out += ChangeRecord(tx.shard, tx.keyspace, "", "begin", None, None, None,

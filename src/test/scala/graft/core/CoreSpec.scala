@@ -225,17 +225,28 @@ class TxMetadataSpec extends AnyFunSuite {
     assert(EpochProvider.applyGeneration(m, 2, 2).get("0").contains(4L))
   }
 
-  test("ordered tx context: begin computes epoch + rank and advances") {
-    val v1 = Vgtid(Seq(ShardGtid("ks", "0", "MySQL56/a:1-10")))
-    val v2 = Vgtid(Seq(ShardGtid("ks", "0", "MySQL56/a:1-12")))
-    val v3 = Vgtid(Seq(ShardGtid("ks", "0", "MySQL56/b:3")))
-    val c0 = OrderedTxContext.initial(Seq("0"))
-    val (c1, e1, r1) = c0.begin("0", v1, "MySQL56/a:1-10")
-    assert(e1 == 0 && r1 == BigDecimal(10))
-    val (c2, e2, r2) = c1.begin("0", v2, "MySQL56/a:1-12")
-    assert(e2 == 0 && r2 == BigDecimal(12))
-    val (_, e3, r3) = c2.begin("0", v3, "MySQL56/b:3")
-    assert(e3 == 1 && r3 == BigDecimal(3)) // host set changed → new epoch
+  test("shard tx step: a position steps the epoch and orders by (epoch, rank)") {
+    def at(gtid: String) = ShardGtid("ks", "0", gtid)
+    val s0 = ShardTxStep.fresh("0")
+    val s1 = s0.onPosition(at("MySQL56/a:1-10"))
+    assert(s1.epoch == 0 && Rank.of(s1.sg.gtid) == BigDecimal(10)) // leaving empty keeps the epoch
+    val s2 = s1.onPosition(at("MySQL56/a:1-12"))
+    assert(s2.epoch == 0 && s2.after(s1) && !s1.after(s2))
+    val s3 = s2.onPosition(at("MySQL56/b:3"))
+    assert(s3.epoch == 1 && Rank.of(s3.sg.gtid) == BigDecimal(3)) // host set changed → new epoch
+    assert(s3.after(s2), "a lower rank in a later epoch is still later")
+    val x = ShardTxStep(at("MySQL56/a:1-2,b:1-2"), 0)
+    assert(x.onPosition(at("MySQL56/b:1-1")) == x, "a GTID set inside the position is history")
+    assert(s3.onPosition(s3.sg) == s3, "an unchanged position is a no-op")
+  }
+
+  test("shard tx step: the heartbeat baseline moves on the first commit and each interval") {
+    val s0 = ShardTxStep.fresh("0")
+    assert(s0.onCommit(5000L, 0L) == s0) // interval 0 = NOOP
+    val s1 = s0.onCommit(5000L, 2000L)
+    assert(s1.hbMs == 5000L) // the first commit seeds the baseline
+    assert(s1.onCommit(6000L, 2000L) == s1) // inside the interval
+    assert(s1.onCommit(7000L, 2000L).hbMs == 7000L)
   }
 }
 

@@ -52,9 +52,9 @@ class TransportSpec extends AnyFunSuite {
       startPos: Long, endPos: Long): VitessCdcPartition =
     VitessCdcPartition(
       "s0", "ks", "s0",
-      Vgtid(Seq(ShardGtid("ks", "s0", startGtid))).json,
-      Vgtid(Seq(ShardGtid("ks", "s0", endGtid))).json,
-      startEpoch = 0L, emitBoundaries = false,
+      ShardTxStep(ShardGtid("ks", "s0", startGtid), 0L),
+      ShardTxStep(ShardGtid("ks", "s0", endGtid), 0L),
+      emitBoundaries = false,
       tableFilter = TableFilter.fromConfig(None, None),
       startByte = startPos, endByte = endPos)
 

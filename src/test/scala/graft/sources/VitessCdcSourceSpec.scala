@@ -137,7 +137,7 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(parts.last.endByte == bytes.length.toLong)
       // each mid-shard segment seeds from its cursor: real GTID + schema
       parts.tail.foreach { p =>
-        assert(p.startPosJson.contains("MySQL56/feed"))
+        assert(p.start.sg.gtid.contains("MySQL56/feed"))
         assert(p.schemaLines.nonEmpty, "segment seed must carry the schema checkpoint")
       }
     } finally stream.stop()
@@ -510,6 +510,80 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .selectExpr("get_json_object(after, '$.id') AS id", "epoch")
       .orderBy("id").collect()
     assert(rows.map(_.getLong(1)).toSeq == Seq(0L, 0L, 1L))
+  }
+
+  /** (id, epoch) of every `c` record of `events` (one shard, `s0`) under
+    * each admission mode — no option (on `local[2]` the derived split
+    * size cuts the window), one transaction per trigger, one line-safe
+    * boundary per trigger — and through `CdcPipeline`. */
+  private def idsAndEpochsByMode(name: String, events: Seq[VEvent],
+      extra: Map[String, String] = Map.empty): Map[String, Seq[(Long, Long)]] = {
+    val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory(name))
+    writeFeed(feedDir, "s0", events)
+    val modes = Seq(
+      "default" -> Map.empty[String, String],
+      "max.txs.per.trigger=1" -> Map("max.txs.per.trigger" -> "1"),
+      "max.bytes.per.trigger=1" -> Map("max.bytes.per.trigger" -> "1"))
+    val streamed = modes.zipWithIndex.map { case ((mode, opts), i) =>
+      val sink = s"${name}_$i"
+      val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory(s"${name}ckpt"))
+      val b0 = spark.readStream.format("vitess-cdc").option("path", feedDir.toString)
+      val q = (opts ++ extra).foldLeft(b0) { case (b, (k, v)) => b.option(k, v) }.load()
+        .writeStream.format("memory").queryName(sink)
+        .option("checkpointLocation", ckpt.toString).start()
+      try q.processAllAvailable() finally q.stop()
+      mode -> spark.sql(
+        s"SELECT CAST(get_json_object(after, '$$.id') AS LONG), epoch FROM $sink " +
+          "WHERE op = 'c' ORDER BY 1").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
+    val lines = events.map(VEventJson.write).zipWithIndex
+      .map { case (l, i) => FeedLine("s0", i.toLong, l) }
+    val piped = CdcPipeline.processPartition(lines.iterator.buffered, false, TableFilter.acceptAll)
+      .filter(_.op == "c").map(r => (r.after.get.drop(6).takeWhile(_.isDigit).toLong, r.epoch))
+      .toSeq.sortBy(_._1)
+    (streamed :+ ("CdcPipeline" -> piped)).toMap
+  }
+
+  test("a failover to a lower-ranked GTID set keeps every row, in a new epoch (A2/A3)") {
+    // rank drops from 3 to 1 at the failover: only (epoch, rank) orders
+    // b:1-1 after a:1-3, so rank alone would drop rows at the window test
+    val events = (1L to 3L).flatMap(i => insertTx("s0", i, i, s"a$i", host = "a")) ++
+      (1L to 2L).flatMap(i => insertTx("s0", i, 10 + i, s"b$i", host = "b"))
+    idsAndEpochsByMode("cdcfailoverrank", events).foreach { case (mode, rows) =>
+      assert(rows == Seq((1L, 0L), (2L, 0L), (3L, 0L), (11L, 1L), (12L, 1L)), mode)
+    }
+  }
+
+  test("a host change in an empty transaction moves the epoch whatever the cut (A3)") {
+    // the empty transaction's VGTID drops host `a` (epoch 1); the next
+    // DML adds it back, a superset that keeps epoch 1. Every reader of
+    // the feed — unsplit, split, one tx or one line per trigger, the
+    // batch pipeline — must step the epoch on it, not only on DML
+    def v(gtid: String) = VgtidEvent("s0", Vgtid(Seq(ShardGtid("ks", "s0", gtid))))
+    def dml(gtid: String, id: Long): Seq[VEvent] =
+      insertTx("s0", 0L, id, s"v$id").map { case _: VgtidEvent => v(gtid); case e => e }
+    val events = dml("MySQL56/a:1-1", 1) ++ dml("MySQL56/a:1-2", 2) ++
+      Seq(BeginEvent("s0", "ks"), v("MySQL56/b:1-1"), CommitEvent("s0", "ks", 1700000100L)) ++
+      dml("MySQL56/a:1-3,b:1-1", 3) ++ dml("MySQL56/a:1-4,b:1-1", 4)
+    idsAndEpochsByMode("cdcemptytxhost", events).foreach { case (mode, rows) =>
+      assert(rows == Seq((1L, 0L), (2L, 0L), (3L, 1L), (4L, 1L)), mode)
+    }
+  }
+
+  test("an explicit-vgtid start over failover history re-admits none of it (A2/A3)") {
+    // history b:1-1..2 then a:1-1..2,b:1-2 (the start); stepping from the
+    // start into history drops host `a` and so bumps the epoch, yet every
+    // history GTID set lies inside the start's and must stay history
+    def v(gtid: String) = VgtidEvent("s0", Vgtid(Seq(ShardGtid("ks", "s0", gtid))))
+    def dml(gtid: String, id: Long): Seq[VEvent] =
+      insertTx("s0", 0L, id, s"v$id").map { case _: VgtidEvent => v(gtid); case e => e }
+    val events = dml("MySQL56/b:1-1", 1) ++ dml("MySQL56/b:1-2", 2) ++
+      dml("MySQL56/a:1-1,b:1-2", 3) ++ dml("MySQL56/a:1-2,b:1-2", 4) ++
+      dml("MySQL56/a:1-3,b:1-2", 5) ++ dml("MySQL56/a:1-4,b:1-2", 6)
+    val start = Vgtid(Seq(ShardGtid("ks", "s0", "MySQL56/a:1-2,b:1-2"))).json
+    val byMode = idsAndEpochsByMode("cdccoldfailover", events, Map("vgtid" -> start)) - "CdcPipeline"
+    byMode.foreach { case (mode, rows) => assert(rows.map(_._1) == Seq(5L, 6L), mode) }
+    assert(byMode.values.toSet.size == 1, s"epochs differ by mode: $byMode")
   }
 
   test("empty shard files are excluded from partition planning (F5)") {

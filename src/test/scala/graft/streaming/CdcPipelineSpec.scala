@@ -159,7 +159,7 @@ class CdcPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // measurement under a concurrently-busy machine (another Spark JVM
     // on the same cores) has flaked this suite before
     val rates = (1 to 3).map { _ =>
-      val rb = new RecordBuilder(new SchemaRegistry, OrderedTxContext.initial(Seq("0")))
+      val rb = new RecordBuilder(new SchemaRegistry, ShardTxStep.fresh("0"))
       val t0 = System.nanoTime()
       val count = TransactionAssembler.assemble(events()).flatMap(rb.onTransaction).size
       val secs = (System.nanoTime() - t0) / 1e9

@@ -156,7 +156,7 @@ class RecordBuilderSpec extends AnyFunSuite {
 
   private def build(events: Seq[VEvent], boundaries: Boolean = false): Seq[ChangeRecord] = {
     val registry = new SchemaRegistry
-    val rb = new RecordBuilder(registry, OrderedTxContext.initial(Seq("0")), boundaries)
+    val rb = new RecordBuilder(registry, ShardTxStep.fresh("0"), boundaries)
     TransactionAssembler.assemble(events.iterator).flatMap(rb.onTransaction).toVector
   }
 

@@ -120,7 +120,7 @@ object RecordBuilderOutputFixture {
     Seq(r.op, r.table, r.before.orNull, r.after.orNull, r.key.orNull).mkString("|")
 
   def build(feed: Seq[VEvent], rules: ColumnRules, modes: ValueConversion.TypeModes): Seq[ChangeRecord] = {
-    val rb = new RecordBuilder(new SchemaRegistry(modes), OrderedTxContext.initial(Seq("0")),
+    val rb = new RecordBuilder(new SchemaRegistry(modes), ShardTxStep.fresh("0"),
       columnRules = rules, typeModes = modes)
     TransactionAssembler.assemble(feed.iterator).flatMap(rb.onTransaction).toVector
   }
