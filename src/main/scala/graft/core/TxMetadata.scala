@@ -169,25 +169,30 @@ object EpochProvider {
   *  - Epoch rule: [[EpochProvider.epochForGtid]] applies on every change
   *    of the shard's GTID, in feed order — bare VGTIDs and empty
   *    transactions included. Leaving an overridden (`current`/empty)
-  *    start position keeps the epoch.
+  *    start position keeps the epoch, and so does a GTID set inside the
+  *    current one.
   *  - Order rule: a position is after another by (epoch, [[CopyProgress]]).
   *    Rank (A2) is monotone only within one epoch: a failover to a
-  *    lower-ranked GTID set is still later, in a higher epoch.
-  *  - Heartbeat rule: the baseline moves on an admitted COMMIT that is the
-  *    first one or at least the interval past it (H1).
+  *    lower-ranked GTID set is still later, in a higher epoch. Only an
+  *    explicit start position is resolved by it; batches are byte windows.
+  *  - Heartbeat rule: the baseline moves on a COMMIT of a transaction with
+  *    a position that is the first one or at least the interval past it
+  *    (H1).
   */
 final case class ShardTxStep(sg: ShardGtid, epoch: Long, hbMs: Long = ShardTxStep.NoBaseline) {
 
-  /** Epoch rule: this shard's VGTID moved to `next`. A GTID set that
-    * loses hosts yet lies inside this one was executed before it — the
-    * history an explicit start position is read over, not a failover — so
-    * it moves neither the position nor the epoch. */
+  /** Epoch rule: this shard's VGTID moved to `next`. The position is
+    * always the last one seen, so a cut that carries this step resumes
+    * with the state an uncut read has there. A GTID set that loses hosts
+    * yet lies inside this one was executed before it — a replica behind
+    * the primary, or history read from an explicit start — not a
+    * failover, so it keeps the epoch. */
   def onPosition(next: ShardGtid): ShardTxStep =
-    if (next.gtid == sg.gtid || EpochProvider.isOverridden(sg.gtid)) ShardTxStep(next, epoch, hbMs)
+    if (next.gtid == sg.gtid || EpochProvider.isOverridden(sg.gtid)) copy(sg = next)
     else {
       val e = EpochProvider.epochForGtid(epoch, sg.gtid, next.gtid)
-      if (e != epoch && Gtid.parse(next.gtid).containedIn(Gtid.parse(sg.gtid))) this
-      else ShardTxStep(next, e, hbMs)
+      if (e != epoch && Gtid.parse(next.gtid).containedIn(Gtid.parse(sg.gtid))) copy(sg = next)
+      else copy(sg = next, epoch = e)
     }
 
   /** Order rule: this position is strictly later than `other`'s. */

@@ -67,7 +67,13 @@ final case class ShardGtid(
     keyspace: String,
     shard: String,
     gtid: String,
-    tablePKs: Seq[TableLastPk] = Nil)
+    tablePKs: Seq[TableLastPk] = Nil) {
+
+  /** A real GTID or copy progress — not the `''`/`current` start of a
+    * shard that has seen no transaction. */
+  def hasPosition: Boolean =
+    (gtid != Vgtid.EmptyGtid && gtid != Vgtid.CurrentGtid) || tablePKs.nonEmpty
+}
 
 /** Copy-phase progress for one table: the schema of the PK columns and the
   * last PK row streamed, so a restart resumes the table scan mid-way. */

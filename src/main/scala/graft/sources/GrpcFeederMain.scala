@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.core.Vgtid
+import graft.core.{ShardGtid, Vgtid}
 import java.nio.file.{Files, Paths}
 
 /** Standalone per-host VStream feeder process — the third feeder
@@ -61,11 +61,12 @@ object GrpcFeederMain {
     // two config surfaces must accept identical spellings
     def csv(k: String): Seq[String] =
       get(k).map(GrpcOptions.csv).getOrElse(Nil)
+    val keyspace = get("keyspace").getOrElse(
+      throw new IllegalArgumentException("keyspace is required"))
     GrpcConfig(
       target = get("vtgate.target").getOrElse(
         throw new IllegalArgumentException("vtgate.target is required")),
-      keyspace = get("keyspace").getOrElse(
-        throw new IllegalArgumentException("keyspace is required")),
+      keyspace = keyspace,
       shards = csv("shards"),
       excludeEmptyShards = get("exclude.empty.shards").exists(_.toBoolean),
       maxStreams = get("vstream.count").map(_.toInt).getOrElse(1),
@@ -82,7 +83,8 @@ object GrpcFeederMain {
       tablesToCopy = csv("snapshot.tables"),
       excludeKeyspaceFromTableName =
         get("exclude.keyspace.from.table.name").exists(_.toBoolean),
-      initialGtid = get("initial.gtid").getOrElse(Vgtid.EmptyGtid),
+      // one start GTID for every shard: the keyspace-wide VGTID entry
+      initialVgtid = Vgtid(get("initial.gtid").toSeq.map(ShardGtid(keyspace, "", _))),
       maxBufferedTxBytes =
         get("max.buffered.tx.bytes").map(_.toLong).getOrElse(64L * 1024 * 1024),
       keepaliveMs = get("keepalive.interval.ms").map(_.toLong),

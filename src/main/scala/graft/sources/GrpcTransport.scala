@@ -93,7 +93,10 @@ final case class GrpcConfig(
     includeTables: Seq[String] = Nil,
     tablesToCopy: Seq[String] = Nil,
     excludeKeyspaceFromTableName: Boolean = false,
-    initialGtid: String = Vgtid.EmptyGtid, // "" → copy; "current" → skip history
+    /** Where each shard's VStream starts when nothing is staged for it:
+      * its entry here, else the keyspace-wide entry (shard "", as in a
+      * Vitess VGTID: "" → copy, "current" → skip history), else "". */
+    initialVgtid: Vgtid = Vgtid(Nil),
     /** Feeder placement — the reference's scale-out axis is connector
       * tasks spread across Kafka Connect worker PROCESSES on different
       * hosts (VitessConnector.java:87-156 over Connect's distributed
@@ -629,7 +632,8 @@ private[sources] final class GrpcFeeder(stagingDir: String, cfg: GrpcConfig)
                   "history over the parents' feeds; 'current' would skip " +
                   "the unstaged window). Restart the stream from the " +
                   "checkpoint so reading-side offsets re-plan the reshard.")
-            ShardGtid(cfg.keyspace, sh, cfg.initialGtid)
+            cfg.initialVgtid.shardGtid(sh).getOrElse(ShardGtid(cfg.keyspace, sh,
+              cfg.initialVgtid.shardGtid("").fold(Vgtid.EmptyGtid)(_.gtid)))
           }
       })
     }

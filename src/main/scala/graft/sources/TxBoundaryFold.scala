@@ -12,8 +12,7 @@ import graft.streaming._
   *    lastpk), transaction epoch (A3/A4/A5) and interval-heartbeat
   *    baseline (commit-time ms)
   *  - `schemas` — latest FIELD wire line per table (schema checkpoint)
-  *  - `admitted` — transactions admitted beyond the fold's start GTID
-  *    (cumulative since the fold was seeded)
+  *  - `admitted` — position changes folded since the fold was seeded
   */
 private[sources] final case class ShardCursor(
     pos: Long,
@@ -23,8 +22,9 @@ private[sources] final case class ShardCursor(
 
 /** The transaction-boundary fold over one shard's wire lines: tracks
   * BEGIN/COMMIT nesting, steps the shard's [[ShardTxStep]] over every
-  * VGTID line and every admitted COMMIT (the rules the partition reader
-  * applies to the same lines), and checkpoints FIELD (schema) lines —
+  * VGTID line and every COMMIT of a transaction with a position (the
+  * rules the partition reader applies to the same lines), and
+  * checkpoints FIELD (schema) lines —
   * publishing a [[ShardCursor]] only at out-of-transaction line
   * boundaries, so any published cursor is a safe batch cut.
   * Single-threaded use: `latestOffset` runs one fold per shard per
@@ -38,7 +38,6 @@ private[sources] final class TxBoundaryFold(
     shard: String,
     keyspace: String,
     seed: ShardCursor,
-    start: ShardTxStep,
     heartbeatIntervalMs: Long,
     splitBytes: Long) {
   private var inTx = false
@@ -67,7 +66,7 @@ private[sources] final class TxBoundaryFold(
     if (line.startsWith(FeedSlice.BeginPrefix)) { inTx = true; txHasPos = false }
     else if (line.startsWith(FeedSlice.CommitPrefix)) {
       inTx = false
-      if (heartbeatIntervalMs > 0 && txHasPos && step.after(start)) {
+      if (heartbeatIntervalMs > 0 && txHasPos) {
         VEventJson.read(line) match {
           case c: CommitEvent => step = step.onCommit(c.timestampSec * 1000L, heartbeatIntervalMs)
           case _ =>
@@ -85,7 +84,7 @@ private[sources] final class TxBoundaryFold(
             val from = step.sg
             step = step.onPosition(sg.copy(keyspace = keyspace, shard = shard))
             if (inTx) txHasPos = true
-            if (step.sg != from && step.after(start)) admitted += 1
+            if (step.sg != from) admitted += 1
           }
         case _ =>
       }

@@ -39,10 +39,13 @@ import scala.jdk.CollectionConverters._
   *   window (cut at the derived split size, see `latestOffset`) — the
   *   elastic equivalent of the reference's shard→task round-robin
   *   (VitessConnector.java:126-133).
-  * - Resume semantics (O1/O2): a batch covers transactions with position
-  *   in (start, end] per shard by (epoch, rank) ([[ShardTxStep]]); since
-  *   records of tx N carry tx N-1's position as restart offset, replay
-  *   from a record's offset re-reads its whole transaction, no loss.
+  * - Resume semantics (O1/O2): the byte window is the batch — a batch
+  *   delivers every transaction in each shard's [start, end) bytes. Only
+  *   an explicit start is resolved by position, once, on the driver: an
+  *   explicit `vgtid` starts right after the last transaction whose
+  *   position is not after it (see `resolveStarts`). Since records of tx N
+  *   carry tx N-1's position as restart offset, replay from a record's
+  *   offset re-reads its whole transaction, no loss.
   *
   * Options: `path` (feed dir), `vgtid` (initial VGTID JSON), `keyspace`,
   * `shard` (explicit comma-separated shard list; authoritative — not
@@ -121,9 +124,11 @@ class VitessCdcTable(options: CaseInsensitiveStringMap) extends Table with Suppo
   *    feed has no server to re-send them, so the offset checkpoints the
   *    schema registry (the analogue of Debezium's schema history).
   *
-  * Both are optional: an offset without them falls back to the
-  * whole-file scan with the position filter (which remains the
-  * correctness backstop in all modes). */
+  * Every offset the source hands the engine has a position for each
+  * shard of its vgtid: `initialOffset` and `deserializeOffset` resolve a
+  * shard that lacks one (an explicit `vgtid` start, or a checkpoint
+  * written without positions) once, by position, to the byte right after
+  * its history. From there the byte window is the batch. */
 final case class VgtidOffset(
     vgtid: Vgtid,
     epochs: ShardEpochMap,
@@ -430,6 +435,13 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
   private val effectiveSnapshotTables: Option[TableFilter] =
     if (snapshotMode == "never") Some(TableFilter(Seq("(?!)"), Nil))
     else snapshotTables
+  // S4 start position: the `vgtid` option (`gtid` = the reference's
+  // deprecated alias), else every shard at `startGtid` — `current` under
+  // snapshot.mode=never (no VStream copy), else empty, which a real
+  // server answers with copy
+  private val explicitStart: Option[Vgtid] = opt("vgtid", "gtid").map(Vgtid.of)
+  private val startGtid =
+    if (snapshotMode == "never") Vgtid.CurrentGtid else Vgtid.EmptyGtid
 
   /** The transport seam (SURVEY S1): all raw-stream I/O below here goes
     * through this handle. `transport=file` (default) reads an existing
@@ -493,8 +505,11 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
           // the decoder already handles bare wire table names either way
           excludeKeyspaceFromTableName =
             opt("exclude.keyspace.from.table.name").exists(_.toBoolean),
-          initialGtid =
-            if (snapshotMode == "never") Vgtid.CurrentGtid else Vgtid.EmptyGtid,
+          // each VStream starts where the query does — at its shard's
+          // entry in an explicit vgtid, else at the start GTID — so
+          // staging never holds pre-start history
+          initialVgtid = Vgtid(explicitStart.fold(Seq.empty[ShardGtid])(_.shardGtids) :+
+            ShardGtid(keyspace, "", startGtid)),
           // feeder placement (driver | executors) — see GrpcConfig; a
           // third shape, external per-host GrpcFeederMain processes,
           // pairs with transport=file reads and needs no option here
@@ -530,14 +545,14 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     }
   }
 
-  /** S4: explicit `vgtid` option, else empty GTIDs for every discovered
-    * shard (would trigger VStream copy on a real server). */
+  /** S4: explicit `vgtid` option, else `startGtid` for every discovered
+    * shard (empty would trigger VStream copy on a real server), resolved
+    * to byte positions by [[resolveStarts]]. */
   override def initialOffset(): Offset = {
     def seeded(shards: Seq[String]): ShardEpochMap =
       seedEpochMap.getOrElse(ShardEpochMap.init(shards))
-    opt("vgtid", "gtid") match { // `gtid` = the reference's deprecated alias
-      case Some(json) =>
-        val v = Vgtid.of(json)
+    resolveStarts(explicitStart match {
+      case Some(v) =>
         // reference validateVgtids: an explicit vgtid must cover exactly
         // the configured shard list when both are set
         configuredShards.foreach { names =>
@@ -549,15 +564,74 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
         VgtidOffset(v, seeded(v.shardGtids.map(_.shard)), generation)
       case None =>
         val shards = shardFiles.map(_._1)
-        // snapshot.mode=never starts at `current` (no VStream copy);
-        // `initial` starts empty, which a real server answers with copy
-        val startGtid =
-          if (snapshotMode == "never") Vgtid.CurrentGtid else Vgtid.EmptyGtid
         VgtidOffset(
           Vgtid(shards.map(sh => ShardGtid(keyspace, sh, startGtid))),
           seeded(shards),
           generation)
+    })
+  }
+
+  // resolved offsets by unresolved offset JSON: one start per stream
+  private val resolved = scala.collection.concurrent.TrieMap.empty[String, VgtidOffset]
+
+  /** Give every shard of `o`'s vgtid a byte position — the one position
+    * test that picks bytes. A shard at `''`/`current` starts at byte 0. A
+    * shard at a real GTID without a position (an explicit `vgtid` start,
+    * or a checkpoint written without positions) folds its feed from byte
+    * 0 with its [[ShardTxStep]] seeded at that GTID: history ends right
+    * after the last transaction (or bare VGTID) whose position is not
+    * after the start, before the first one that is, so a standalone DDL
+    * inside history stays history and one right after it is delivered.
+    * The offset records the byte position, step and schema checkpoint
+    * (history's FIELD lines included) there. A VStream started at a VGTID
+    * never sends earlier events; this is the same rule over a feed that
+    * holds them. A file feed that has not yet reached the start ends
+    * history at its last transaction, so transactions appended later at
+    * or before the start are delivered. Memoized per stream, so batch 0's
+    * start is one value. */
+  private def resolveStarts(o: VgtidOffset): VgtidOffset =
+    if (o.vgtid.shardGtids.forall(sg => o.positions.contains(sg.shard))) o
+    else resolved.getOrElseUpdate(o.json(), {
+      lazy val files = transport.listShards().toMap
+      val cursors = o.vgtid.shardGtids.filterNot(sg => o.positions.contains(sg.shard)).map { sg =>
+        val start = cursorAt(o, sg.shard)
+        sg.shard ->
+          (if (sg.hasPosition) files.get(sg.shard).fold(start)(historyEnd(sg.shard, _, start))
+          else start)
+      }.toMap
+      // history keeps the epoch (a set that moves it is after the start)
+      // and the heartbeat baseline, so only the GTID, bytes and schemas move
+      o.copy(
+        vgtid = Vgtid(o.vgtid.shardGtids.map(sg => cursors.get(sg.shard).fold(sg)(_.step.sg))),
+        positions = o.positions ++ cursors.map { case (sh, c) => sh -> c.pos },
+        schemas = o.schemas ++ cursors.collect { case (sh, c) if c.schemas.nonEmpty => sh -> c.schemas })
+    })
+
+  /** The cursor right after `start`'s history in `file` (see
+    * [[resolveStarts]]). */
+  private def historyEnd(shard: String, file: String, start: ShardCursor): ShardCursor = {
+    val fold = new TxBoundaryFold(shard, keyspace, start, heartbeatIntervalMs = 0L, Long.MaxValue)
+    var end = start
+    val slice =
+      try Some(transport.open(file, 0L, transport.size(file)))
+      catch { case _: NoSuchFileException => None }
+    slice.foreach { sl =>
+      try {
+        var line = sl.readLine()
+        while (line != null) {
+          fold.onLine(line, sl.position)
+          // a cursor AT the slice position: this line ends outside a tx
+          val safe = fold.safe.pos == sl.position
+          if (safe && fold.safe.step.after(start.step)) line = null
+          else {
+            if (safe && (line.startsWith(FeedSlice.CommitPrefix) ||
+                line.startsWith(FeedSlice.VgtidPrefix))) end = fold.safe
+            line = sl.readLine()
+          }
+        }
+      } finally sl.close()
     }
+    end
   }
 
   // Backpressure analogue of the reference's bounded queue
@@ -631,11 +705,10 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     * Exactly-once holds because the byte position and the folded epochs
     * live in the same atomic offset JSON — bytes before
     * `feed_positions[shard]` are already reflected in
-    * `transaction_epoch`. A shard with no recorded position (first
-    * trigger, explicit-`vgtid` offset, reshard child) folds the whole
-    * file from the initial baseline — idempotent under the readers'
-    * position filter, so legacy restarts can't double-count a host
-    * change. A generation change vs the offset's stored generation bumps
+    * `transaction_epoch`. Every shard of the start offset's vgtid has a
+    * position ([[resolveStarts]]); a shard new to it (a reshard child, or
+    * one added by widening the `shard` list) folds from byte 0 at an empty
+    * GTID. A generation change vs the offset's stored generation bumps
     * every epoch once (A5). Seeds read only the START offset's epochs,
     * never a sibling shard folded in the same trigger: the readers seed
     * from the same map (planInputPartitions), so a reshard child whose
@@ -668,41 +741,14 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
             s"start topology [${startupShards.toSeq.sorted.mkString(", ")}]; restart " +
             "the query from this checkpoint to stream the resharded topology")
     }
-    lazy val init = initialOffset().asInstanceOf[VgtidOffset]
-    lazy val bumpedInit = EpochProvider.applyGeneration(init.epochs, from.generation, generation)
     val startEpochs = EpochProvider.applyGeneration(from.epochs, from.generation, generation)
-    /** Seed cursor for one shard. Positions compare by (epoch, rank,
-      * copy-phase lastpk progress) so copy batches advance the offset even
-      * while the GTID stays fixed; epoch fallbacks inherit from the
-      * generation-BUMPED map so a reshard child appearing across a
-      * generation-change restart seeds from its parents' post-bump
-      * epochs (the same map the readers see). */
-    def seedCursor(shard: String, startSg: ShardGtid): ShardCursor = {
-      val seekFrom = from.positions.get(shard)
-      val sg = seekFrom match {
-        case Some(_) => startSg // incremental: fold continues from the offset
-        case None => init.vgtid.shardGtid(shard)
-          .getOrElse(ShardGtid(keyspace, shard, Vgtid.EmptyGtid))
-      }
-      val epoch = seekFrom match {
-        case Some(_) => seedEpoch(shard, startEpochs)
-        case None if from.epochs.get(shard).isDefined => bumpedInit.get(shard).getOrElse(0L)
-        case None => seedEpoch(shard, startEpochs) // reshard child (A4)
-      }
-      ShardCursor(
-        seekFrom.getOrElse(0L),
-        ShardTxStep(sg, epoch, from.hbMs.getOrElse(shard, ShardTxStep.NoBaseline)),
-        from.schemas.getOrElse(shard, Map.empty[String, String]),
-        admitted = 0L)
-    }
     /** Fold one shard's new bytes from `seed` up to the first transaction
       * boundary past either cap (the measured `size` when none is set):
       * the last safe cursor and the split cursors below it. */
     def foldShard(
-        shard: String, file: String, start: ShardTxStep, seed: ShardCursor,
+        shard: String, file: String, seed: ShardCursor,
         size: Option[Long], splitBytes: Long): (ShardCursor, Seq[ShardCursor]) = {
-      val fold = new TxBoundaryFold(
-        shard, keyspace, seed, start, heartbeatIntervalMs, splitBytes)
+      val fold = new TxBoundaryFold(shard, keyspace, seed, heartbeatIntervalMs, splitBytes)
       val slice = size.flatMap { to =>
         try Some(transport.open(file, seed.pos, to))
         catch { case _: NoSuchFileException => None }
@@ -729,24 +775,21 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
       (fold.safe, splits)
     }
     val shards = shardFiles.map { case (shard, file) =>
-      val startSg = from.vgtid.shardGtid(shard)
-        .getOrElse(ShardGtid(keyspace, shard, Vgtid.EmptyGtid))
       // a feed deleted between listing and sizing or reading (retired
       // reshard parent) admits nothing this trigger instead of failing it
       val size =
         try Some(transport.size(file)) catch { case _: NoSuchFileException => None }
-      (shard, file, ShardTxStep(startSg, seedEpoch(shard, startEpochs)),
-        seedCursor(shard, startSg), size)
+      (shard, file, cursorAt(from, shard), size)
     }
-    val newBytes = shards.map { case (_, _, _, seed, size) =>
+    val newBytes = shards.map { case (_, _, seed, size) =>
       size.fold(0L)(to => math.min(math.max(0L, to - seed.pos), maxBytesPerTrigger))
     }.sum
     val cores = SparkSession.active.sparkContext.defaultParallelism
     val splitBytes = if (newBytes == 0L) Long.MaxValue else (newBytes + cores - 1) / cores
     val folded = {
       import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.traverse(shards) { case (shard, file, start, seed, size) =>
-        Future(foldShard(shard, file, start, seed, size, splitBytes))
+      Await.result(Future.traverse(shards) { case (shard, file, seed, size) =>
+        Future(foldShard(shard, file, seed, size, splitBytes))
       }, Duration.Inf)
     }
     var epochs = startEpochs
@@ -754,7 +797,7 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     val schemasOut = Map.newBuilder[String, Map[String, String]]
     val hbMsOut = Map.newBuilder[String, Long]
     val splitsOut = Map.newBuilder[String, Seq[ShardCursor]]
-    val gtids = shards.zip(folded).map { case ((shard, _, start, _, _), (cursor, splits)) =>
+    val gtids = shards.zip(folded).map { case ((shard, _, seed, _), (cursor, splits)) =>
       epochs = epochs.put(shard, cursor.step.epoch)
       positionsOut += shard -> cursor.pos
       if (cursor.schemas.nonEmpty) schemasOut += shard -> cursor.schemas
@@ -762,7 +805,7 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
         hbMsOut += shard -> cursor.step.hbMs
       if (splits.nonEmpty) splitsOut += shard -> splits
       // never regress behind the committed start position
-      if (cursor.step.after(start)) cursor.step.sg else start.sg
+      if (cursor.step.after(seed.step)) cursor.step.sg else seed.step.sg
     }
     assert(splitsOut.result().values.map(_.size).sum <= cores,
       s"split cursors must not outnumber the $cores cores")
@@ -786,26 +829,33 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
   override def latestOffset(): Offset =
     latestOffset(initialOffset(), ReadLimit.allAvailable())
 
+  /** Shard `shard`'s cursor at offset `o`: its byte position (0 for a
+    * shard new to `o`), step and schema checkpoint. A5: a generation
+    * change vs `o`'s stored generation bumps every epoch once, so the
+    * fold and the readers seed from the same bumped map (mid-run offsets
+    * carry the configured generation, so this is a no-op there). */
+  private def cursorAt(o: VgtidOffset, shard: String): ShardCursor =
+    ShardCursor(
+      o.positions.getOrElse(shard, 0L),
+      ShardTxStep(
+        o.vgtid.shardGtid(shard).getOrElse(ShardGtid(keyspace, shard, Vgtid.EmptyGtid)),
+        seedEpoch(shard, EpochProvider.applyGeneration(o.epochs, o.generation, generation)),
+        o.hbMs.getOrElse(shard, ShardTxStep.NoBaseline)),
+      o.schemas.getOrElse(shard, Map.empty[String, String]),
+      admitted = 0L)
+
+  /** One partition per segment of each shard's byte window
+    * [start position, end position); a shard with no new bytes plans none
+    * (standalone DDL/schema lines advance bytes without the VGTID, so
+    * bytes, not positions, say what is new). */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[VgtidOffset]
     val e = end.asInstanceOf[VgtidOffset]
-    // A5: a generation change vs the batch-start offset bumps every epoch
-    // once — the readers must seed from the SAME bumped map the driver
-    // fold uses, or the first batch after a generation-change restart
-    // emits records with stale epochs (mid-run batches carry the
-    // configured generation in their offset, so this is a no-op there)
-    val startEpochs = EpochProvider.applyGeneration(s.epochs, s.generation, generation)
     shardFiles.flatMap { case (shard, file) =>
-      val startSg = s.vgtid.shardGtid(shard)
-        .getOrElse(ShardGtid(keyspace, shard, Vgtid.EmptyGtid))
-      val endSg = e.vgtid.shardGtid(shard)
-        .getOrElse(ShardGtid(keyspace, shard, Vgtid.EmptyGtid))
-      val startByte = s.positions.getOrElse(shard, 0L)
-      val endByte = e.positions.getOrElse(shard, Long.MaxValue)
-      // nothing new on this shard: no position progress (incl. copy
-      // progress) AND no new bytes (standalone DDL/schema lines advance
-      // bytes without advancing the VGTID)
-      if (startSg == endSg && (endByte == Long.MaxValue || startByte >= endByte)) Nil
+      val batchStart = cursorAt(s, shard)
+      val startByte = batchStart.pos
+      val endByte = e.positions.getOrElse(shard, 0L)
+      if (startByte >= endByte) Nil
       else {
         // Intra-shard fan-out: the end offset may carry split cursors —
         // transaction-safe mid-shard seeds recorded by the fold (see
@@ -813,19 +863,12 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
         // like a batch boundary (position, GTID, epoch, schema
         // checkpoint, heartbeat baseline all from its cursor), so the
         // single-partition case is just the zero-splits instance.
-        val start = ShardTxStep(startSg, seedEpoch(shard, startEpochs),
-          s.hbMs.getOrElse(shard, ShardTxStep.NoBaseline))
         val cuts = e.splits.getOrElse(shard, Nil)
           .filter(c => c.pos > startByte && c.pos < endByte)
-          // a cursor recorded in the PRE-START history region (explicit-
-          // vgtid cold start over a feed that still holds history) is not
-          // after the batch start; seeding a segment from it would
-          // re-admit history the position filter is there to skip — drop
-          // it (dropping a split is always safe)
-          .filter(_.step.after(start))
           .sortBy(_.pos)
-        val batchStart = ShardCursor(startByte, start, s.schemas.getOrElse(shard, Map.empty), 0L)
-        val batchEnd = ShardTxStep(endSg, e.epochs.get(shard).getOrElse(start.epoch))
+        val batchEnd = ShardTxStep(
+          e.vgtid.shardGtid(shard).getOrElse(ShardGtid(keyspace, shard, Vgtid.EmptyGtid)),
+          e.epochs.get(shard).getOrElse(batchStart.step.epoch))
         val seeds = batchStart +: cuts
         seeds.zipWithIndex.map { case (seed, i) =>
           val isLast = i == seeds.length - 1
@@ -898,7 +941,7 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     m
   }
 
-  override def deserializeOffset(json: String): Offset = VgtidOffset.fromJson(json)
+  override def deserializeOffset(json: String): Offset = resolveStarts(VgtidOffset.fromJson(json))
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = transport.close()
 }
@@ -922,17 +965,12 @@ final case class VitessCdcPartition(
     extends InputPartition
 
 /** Executor-side reader: seeks to the batch's byte window
-  * [startByte, endByte) of the shard feed, assembles transactions and
+  * [startByte, endByte) of the shard feed and delivers every transaction
+  * in it — the byte window is the batch. It assembles transactions and
   * steps the shard's [[ShardTxStep]] over every line exactly as the
   * driver's fold did, so each transaction takes the epoch the offsets
-  * record. It keeps the transactions whose position is after the window
-  * start and not after its end by (epoch, rank) — the position filter
-  * stays on as the correctness backstop even though the byte window
-  * already bounds the slice — and decodes them against the schema
-  * checkpoint carried by the partition (FIELD lines seen before the
-  * window). A legacy partition without byte positions (endByte ==
-  * Long.MaxValue with startByte == 0) degrades to the original
-  * whole-file replay. */
+  * record, and decodes them against the schema checkpoint carried by the
+  * partition (FIELD lines seen before the window). */
 class VitessCdcPartitionReader(
     p: VitessCdcPartition,
     transport: VStreamTransport) extends PartitionReader[InternalRow] {
@@ -941,9 +979,6 @@ class VitessCdcPartitionReader(
   // else surfaces to Spark's task retry + restart-from-checkpoint
   private val slice =
     Retry.withRetries(maxAttempts = 3)(transport.open(p.file, p.startByte, p.endByte))
-
-  private val freshGtid = p.start.sg.gtid == Vgtid.EmptyGtid || p.start.sg.gtid == Vgtid.CurrentGtid
-  private val fresh = freshGtid && p.start.sg.tablePKs.isEmpty
 
   private val rb = {
     val registry = new SchemaRegistry(p.typeModes)
@@ -957,7 +992,7 @@ class VitessCdcPartitionReader(
     }
     new RecordBuilder(
       registry, p.start, p.emitBoundaries,
-      initialVgtid = if (fresh) None else Some(Vgtid(Seq(p.start.sg))),
+      initialVgtid = Option.when(p.start.sg.hasPosition)(Vgtid(Seq(p.start.sg))),
       tableFilter = p.tableFilter,
       snapshotTableFilter = p.snapshotTables, typeModes = p.typeModes)
   }
@@ -965,125 +1000,37 @@ class VitessCdcPartitionReader(
   /** The shard's per-transaction state as of the last line read. */
   private[sources] def step: ShardTxStep = rb.step
 
-  /** See the call site: line-level skip of transactions wholly before
-    * the start. Buffers at most one transaction's lines (the same bound
-    * the feeder's tx buffer has); parses ONLY VGTID-prefixed lines while
-    * skipping, and steps each one. Conservative by construction:
-    * standalone lines (DDL / heartbeat / broadcast VGTID between
-    * transactions) and transactions carrying no VGTID forward to the
-    * real decoder untouched. */
-  private def skipColdHistory(lines: Iterator[String]): Iterator[String] =
-    new Iterator[String] {
-      private val out = scala.collection.mutable.Queue[String]()
-      private val buf = scala.collection.mutable.ArrayBuffer[String]()
-      private var passed = false
-      private var inTx = false
-      private var txPasses = false
-      private var txSawVgtid = false
-
-      private def fill(): Unit = {
-        while (out.isEmpty && lines.hasNext) {
-          val line = lines.next()
-          if (passed) out += line
-          else if (line.startsWith(FeedSlice.BeginPrefix)) {
-            inTx = true; txPasses = false; txSawVgtid = false
-            buf.clear(); buf += line
-          } else if (!inTx) out += line // standalone: window semantics intact
-          else {
-            buf += line
-            if (line.startsWith(FeedSlice.VgtidPrefix)) {
-              VEventJson.read(line) match {
-                case VgtidEvent(_, v) =>
-                  v.shardGtid(p.shard).foreach { pos =>
-                    txSawVgtid = true
-                    rb.step = rb.step.onPosition(pos)
-                    if (rb.step.after(p.start)) txPasses = true
-                  }
-                case _ =>
-              }
-            }
-            if (line.startsWith(FeedSlice.CommitPrefix)) {
-              inTx = false
-              if (txPasses) { passed = true; out ++= buf }
-              else if (!txSawVgtid) out ++= buf // no position: let the filter decide
-              buf.clear()
-            }
-          }
-        }
-      }
-
-      override def hasNext: Boolean = { fill(); out.nonEmpty }
-      override def next(): String = { fill(); out.dequeue() }
-    }
-
   private val rows: Iterator[InternalRow] = {
-    // Cold-start resume at an explicit VGTID over a feed that still holds
-    // the history BEFORE that position (no checkpointed byte progress →
-    // startByte 0): drop pre-position transactions at the LINE level — a
-    // prefix check plus one VGTID parse per transaction — instead of
-    // JSON-decoding and assembling history just to filter it. At scale
-    // this is the batch-backfill handover shape: the snapshot covers
-    // history, and the stream must not pay O(history) decode to start.
-    // The downstream position filter still applies, so the skip only has
-    // to be conservative (standalone lines and no-VGTID transactions
-    // forward unchanged; everything forwards after the first passing
-    // transaction — per-shard positions are monotone).
-    val lineIter =
-      if (p.startByte == 0L && !fresh) skipColdHistory(slice.lines) else slice.lines
     // every VGTID steps the shard, so when the assembler yields a
     // transaction the step stands at that transaction's position
-    val events = rb.positions(lineIter.map(VEventJson.read))
+    val events = rb.positions(slice.lines.map(VEventJson.read))
     val records = TransactionAssembler.assemble(events).flatMap { tx =>
       val pos = tx.vgtid.flatMap(_.shardGtid(p.shard))
-      val inWindow =
-        if (pos.isDefined) {
-          // inclusive-resume at transaction granularity: each copy tx
-          // carries its lastpk watermark, so mid-copy restarts skip
-          // exactly the transactions already delivered. A transaction is
-          // after the start when its own position is; a DDL/heartbeat
-          // flush carries the position before it, so it is after the
-          // start when that position is not before it
-          val owned = tx.events.exists(_.isInstanceOf[VgtidEvent])
-          (if (owned) rb.step.after(p.start) else !p.start.after(rb.step)) && !rb.step.after(p.end)
-        } else {
-          // DDL/heartbeat flushes with no position: a bounded byte
-          // window contains each such line exactly once across the
-          // stream's lifetime — but only when the window START is
-          // trustworthy: a mid-stream resume from a legacy checkpoint
-          // (real GTID, no recorded byte position → startByte 0) would
-          // re-scan from byte 0 and re-deliver old DDLs, so it falls
-          // back to the legacy progress guard instead
-          if (p.endByte == Long.MaxValue) p.end.after(p.start)
-          else p.startByte > 0 || freshGtid || p.end.after(p.start)
-        }
-      if (!inWindow) Nil
+      // include.schema.changes=false: DDL records stay off the stream
+      val recs = rb.onTransaction(tx).filter(rec => p.includeSchemaChanges || rec.op != "ddl")
+      // H1 interval heartbeats: one heartbeat record per committed
+      // transaction with a position whose commit time is at least
+      // `heartbeatIntervalMs` past the previous baseline (reference
+      // VitessHeartbeatImpl.java:47-77; 0 = NOOP). The baseline is seeded from the CHECKPOINT
+      // and the driver's offset fold applies the identical rule, so the
+      // cadence survives batch boundaries. Event-time driven:
+      // deterministic under replay. Emission is per-tx (not
+      // per-record), so fully-filtered stretches still heartbeat —
+      // exactly when consumers need liveness.
+      if (pos.isEmpty || !tx.events.lastOption.exists(_.isInstanceOf[CommitEvent])) recs
       else {
-        // include.schema.changes=false: DDL records stay off the stream
-        val recs = rb.onTransaction(tx).filter(rec => p.includeSchemaChanges || rec.op != "ddl")
-        // H1 interval heartbeats: one heartbeat record per admitted
-        // transaction whose commit time is at least `heartbeatIntervalMs`
-        // past the previous baseline (reference VitessHeartbeatImpl.java:
-        // 47-77; 0 = NOOP). The baseline is seeded from the CHECKPOINT
-        // and the driver's offset fold applies the identical rule, so the
-        // cadence survives batch boundaries. Event-time driven:
-        // deterministic under replay. Emission is per-tx (not
-        // per-record), so fully-filtered stretches still heartbeat —
-        // exactly when consumers need liveness.
-        if (pos.isEmpty || !tx.events.lastOption.exists(_.isInstanceOf[CommitEvent])) recs
+        val tsMs = tx.commitTsSec * 1000L
+        val baseline = rb.step.hbMs
+        rb.step = rb.step.onCommit(tsMs, p.heartbeatIntervalMs)
+        // the first commit only seeds the baseline
+        if (rb.step.hbMs == baseline || baseline == ShardTxStep.NoBaseline) recs
         else {
-          val tsMs = tx.commitTsSec * 1000L
-          val baseline = rb.step.hbMs
-          rb.step = rb.step.onCommit(tsMs, p.heartbeatIntervalMs)
-          // the first admitted commit only seeds the baseline
-          if (rb.step.hbMs == baseline || baseline == ShardTxStep.NoBaseline) recs
-          else {
-            val last = recs.lastOption
-            val vj = last.map(_.vgtid).orElse(tx.vgtid.map(_.json)).getOrElse("[]")
-            val rj = last.map(_.restartVgtid).orElse(tx.vgtid.map(_.json)).getOrElse("[]")
-            recs :+ ChangeRecord(
-              p.shard, p.keyspace, "", "heartbeat", None, None, None,
-              tsMs, vj, rj, None, rb.step.epoch, None, 0L, 0L)
-          }
+          val last = recs.lastOption
+          val vj = last.map(_.vgtid).orElse(tx.vgtid.map(_.json)).getOrElse("[]")
+          val rj = last.map(_.restartVgtid).orElse(tx.vgtid.map(_.json)).getOrElse("[]")
+          recs :+ ChangeRecord(
+            p.shard, p.keyspace, "", "heartbeat", None, None, None,
+            tsMs, vj, rj, None, rb.step.epoch, None, 0L, 0L)
         }
       }
     }

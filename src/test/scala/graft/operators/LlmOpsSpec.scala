@@ -2043,8 +2043,11 @@ class LlmOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     var builds = 0
     def build(s: SparkSession) = { builds += 1; s.range(0, 100).toDF("n") }
     val first = Materialize.shared(spark, key)(build(spark))
+    // only the RDDs this entry persists: one an earlier suite in the same
+    // JVM still holds must not count as the entry's blocks
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     assert(first.count() == 100) // materializes the cached blocks
-    val staleRdds = spark.sparkContext.getPersistentRDDs.keySet
+    val staleRdds = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(staleRdds.nonEmpty)
     assert(Materialize.shared(spark, key)(build(spark)) eq first)
     assert(builds == 1, "a hit must not evaluate build")

@@ -199,6 +199,38 @@ class GrpcTransportSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally { transport.close(); srv.close() }
   }
 
+  test("readStream with an explicit vgtid starts the VStream there, not at ''") {
+    val start = Vgtid(Seq(ShardGtid("ks", "s0", "MySQL56/feed:1-2")))
+    val srv = new MockVtgate("vt-req-start", req =>
+      // the server sends only what follows the requested position
+      if (req.vgtid == start) (3L to 4L).map(i => insertTx("s0", i, i, s"v$i")) else Nil)
+    val staging = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("grpcstagestart"))
+    val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("grpcckptstart"))
+    val q = spark.readStream.format("vitess-cdc")
+      .option("path", staging.toString)
+      .option("transport", "grpc")
+      .option("vtgate.target", "inprocess:vt-req-start")
+      .option("shard", "s0")
+      .option("keyspace", "ks")
+      .option("vgtid", start.json)
+      .load()
+      .writeStream.format("memory").queryName("grpc_req_start")
+      .option("checkpointLocation", ckpt.toString).start()
+    try {
+      val deadline = System.currentTimeMillis() + 20000
+      var n = -1L
+      while (n != 2L && System.currentTimeMillis() < deadline) {
+        q.processAllAvailable()
+        n = spark.sql("SELECT count(*) FROM grpc_req_start WHERE op = 'c'").collect()(0).getLong(0)
+        if (n != 2L) Thread.sleep(50)
+      }
+    } finally { q.stop(); srv.close() }
+    assert(srv.requests.head.vgtid == start)
+    val ids = spark.sql("SELECT CAST(get_json_object(after, '$.id') AS LONG) " +
+      "FROM grpc_req_start WHERE op = 'c' ORDER BY 1").collect().map(_.getLong(0)).toSeq
+    assert(ids == Seq(3L, 4L))
+  }
+
   test("restart resumes the server stream from the last staged vgtid, exactly once") {
     def txs(from: Long, to: Long) = (from to to).map(i => insertTx("s0", i, i, s"v$i"))
     val srv = new MockVtgate("vt-resume", req => {

@@ -10,9 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The driver's offset fold and the partition reader step one
   * [[ShardTxStep]] over the same lines. Over random single-shard feeds —
-  * host-set changes (rank drops included), bare VGTIDs, DDL flushes,
-  * empty transactions, heartbeat events and a copy phase with lastpk
-  * progress — every safe boundary the fold publishes must hold the
+  * host-set changes (rank drops included), DML at a replica's GTID set
+  * that drops a host yet lies inside the current one, bare VGTIDs, DDL
+  * flushes, empty transactions, heartbeat events and a copy phase with
+  * lastpk progress — every safe boundary the fold publishes must hold the
   * state the reader reaches over the same prefix, and a window cut at
   * that boundary must not change a record. No streaming query: the fold
   * and the reader run directly over a feed file. Seeded, so a failure
@@ -34,16 +35,22 @@ class ShardTxStepPropertySpec extends AnyFunSuite {
   private case object Heartbeat extends Item
   private case object Failover extends Item // new host set: epoch bump, rank drop
   private case object AddHost extends Item // host superset: same epoch
+  // DML from a replica missing transactions: its GTID set drops a host yet
+  // lies inside the current one, so it moves neither position nor epoch
+  private case object Replica extends Item
 
   private val item: Gen[Item] = Gen.frequency(
     8 -> Dml, 2 -> EmptyTx, 2 -> BareVgtid, 1 -> SameVgtid, 1 -> Ddl,
-    1 -> Heartbeat, 2 -> Failover, 1 -> AddHost)
+    1 -> Heartbeat, 2 -> Failover, 1 -> AddHost, 2 -> Replica)
 
   private val feedGen: Gen[(Int, Seq[(Item, Int)])] = for {
     copyTxs <- Gen.choose(0, 3)
     n <- Gen.choose(3, 20)
     items <- Gen.listOfN(n, Gen.zip(item, Gen.choose(0, 3))) // (kind, commit-time step in s)
   } yield (copyTxs, items)
+
+  // replica transactions rendered so far (the generator must reach them)
+  private var replicaTxs = 0
 
   /** Render a generated feed: GTID sets only grow within a host set, so
     * positions are monotone by (epoch, rank); a failover restarts the
@@ -75,13 +82,15 @@ class ShardTxStepPropertySpec extends AnyFunSuite {
     val copy = (1 to copyTxs).flatMap { _ =>
       Seq(BeginEvent("s0", "ks"), field, row(), vgtid(gtid, lastPk(id)), CommitEvent("s0", "ks", ts))
     } ++ (if (copyTxs > 0) Seq(CopyCompletedEvent("s0")) else Nil)
+    def dml(g: String): Seq[VEvent] = {
+      val head = if (fieldSent) Seq(BeginEvent("s0", "ks")) else Seq(BeginEvent("s0", "ks"), field)
+      fieldSent = true
+      head ++ Seq(row(), vgtid(g), CommitEvent("s0", "ks", ts))
+    }
     val stream = items.zipWithIndex.flatMap { case ((kind, dt), i) =>
       ts += dt
       kind match {
-        case Dml =>
-          val head = if (fieldSent) Seq(BeginEvent("s0", "ks")) else Seq(BeginEvent("s0", "ks"), field)
-          fieldSent = true
-          head ++ Seq(row(), vgtid(advance()), CommitEvent("s0", "ks", ts))
+        case Dml => dml(advance())
         case EmptyTx => Seq(BeginEvent("s0", "ks"), vgtid(advance()), CommitEvent("s0", "ks", ts))
         case BareVgtid => Seq(vgtid(advance()))
         case SameVgtid => if (copyTxs == 0 && i == 0) Nil else Seq(vgtid(gtid))
@@ -93,6 +102,10 @@ class ShardTxStepPropertySpec extends AnyFunSuite {
         case AddHost =>
           hosts :+= s"h$nextHost"; seqs += s"h$nextHost" -> 1L; nextHost += 1
           Nil
+        case Replica if hosts.size > 1 =>
+          replicaTxs += 1
+          dml("MySQL56/" + hosts.sorted.tail.map(h => s"$h:1-${seqs(h)}").mkString(","))
+        case Replica => Nil
       }
     }
     copy ++ stream
@@ -108,7 +121,7 @@ class ShardTxStepPropertySpec extends AnyFunSuite {
   /** Every cursor the fold publishes over the whole feed, in order. */
   private def foldCursors(file: String): Seq[ShardCursor] = {
     val seed = ShardCursor(0L, fresh, Map.empty, 0L)
-    val fold = new TxBoundaryFold("s0", "ks", seed, fresh, IntervalMs, Long.MaxValue)
+    val fold = new TxBoundaryFold("s0", "ks", seed, IntervalMs, Long.MaxValue)
     val slice = new FeedSlice(file, 0L)
     val out = Vector.newBuilder[ShardCursor]
     try {
@@ -170,6 +183,7 @@ class ShardTxStepPropertySpec extends AnyFunSuite {
     }
     // the generator reaches the cases the rules exist for
     assert(epochsSeen.max >= 3, s"epochs seen: $epochsSeen")
+    assert(replicaTxs > 20, s"only $replicaTxs replica transactions")
     assert(boundaries > 1000, s"only $boundaries boundaries checked")
   }
 }

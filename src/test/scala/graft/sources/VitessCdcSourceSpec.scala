@@ -65,11 +65,10 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("explicit-vgtid cold start skips history at the line level, not by decode") {
     // 40 history txs BEFORE the requested position, 10 after. The proof
     // that history is never JSON-decoded: every history ROW line is
-    // corrupted into invalid JSON (prefixes intact, so the driver fold —
-    // which only parses FIELD/VGTID/COMMIT lines — and the reader's
-    // line-level skip both pass over them). A reader that still decoded
-    // history to filter it would throw; the skip path must deliver the
-    // 10 post-position transactions exactly.
+    // corrupted into invalid JSON (prefixes intact, so the driver's start
+    // resolution — a fold that only parses FIELD/VGTID/COMMIT lines —
+    // passes over them). A reader that still read history would throw;
+    // the query must deliver the 10 post-position transactions exactly.
     val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdccoldskip"))
     val all = (1L to 50L).flatMap { i =>
       insertTx("s0", i, i, s"v$i").map {
@@ -79,11 +78,11 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     Files.writeString(feedDir.resolve("s0.jsonl"), all.mkString("", "\n", "\n"))
     val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdccoldskipckpt"))
-    val q = spark.readStream.format("vitess-cdc")
-      .option("path", feedDir.toString)
-      .option("shard", "s0")
-      .option("vgtid", Vgtid(Seq(ShardGtid("ks", "s0", "MySQL56/feed:1-40"))).json)
-      .load()
+    val opts = Map(
+      "path" -> feedDir.toString,
+      "shard" -> "s0",
+      "vgtid" -> Vgtid(Seq(ShardGtid("ks", "s0", "MySQL56/feed:1-40"))).json)
+    val q = spark.readStream.format("vitess-cdc").options(opts).load()
       .writeStream.format("memory").queryName("cdc_cold_skip")
       .option("checkpointLocation", ckpt.toString)
       .start()
@@ -92,12 +91,21 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       "SELECT CAST(get_json_object(after, '$.id') AS LONG) FROM cdc_cold_skip " +
         "WHERE op = 'c' ORDER BY 1").collect().map(_.getLong(0)).toSeq
     assert(ids == (41L to 50L))
-    // the whole file is the cold start's new bytes, so the derived split
-    // size cuts it mid-history: that cursor's GTID is behind the
-    // requested start and the planner must drop it, or a mid-history
-    // segment would re-admit (and here, DECODE THE CORRUPTED) history rows
-    val offsetJson = Files.readString(ckpt.resolve("offsets").resolve("0"))
-    assert(offsetJson.contains("\"feed_splits\""), "expected a split cursor in the history region")
+    // batch 0 starts past history: the start resolves to the byte right
+    // after tx 40, and every partition (split segments included) reads
+    // from there on
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val historyBytes = all.take(40 * 5).map(_.getBytes("UTF-8").length + 1L).sum
+    val stream = new VitessCdcStream(new CaseInsensitiveStringMap(opts.asJava))
+    try {
+      val start = stream.initialOffset().asInstanceOf[VgtidOffset]
+      assert(start.positions == Map("s0" -> historyBytes))
+      val end = stream.latestOffset(start, ReadLimit.allAvailable())
+      val parts = stream.planInputPartitions(start, end).map(_.asInstanceOf[VitessCdcPartition])
+      assert(parts.length > 1, "expected the derived split size to cut the window")
+      assert(parts.map(_.startByte).min == historyBytes, parts.map(_.startByte).toSeq)
+    } finally stream.stop()
   }
 
   test("the derived split size fans one shard's window into tx-safe segments") {
@@ -544,9 +552,15 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     (streamed :+ ("CdcPipeline" -> piped)).toMap
   }
 
+  private def v(gtid: String) = VgtidEvent("s0", Vgtid(Seq(ShardGtid("ks", "s0", gtid))))
+
+  /** `insertTx` of row `id` on `s0` at GTID set `gtid`. */
+  private def dml(gtid: String, id: Long): Seq[VEvent] =
+    insertTx("s0", 0L, id, s"v$id").map { case _: VgtidEvent => v(gtid); case e => e }
+
   test("a failover to a lower-ranked GTID set keeps every row, in a new epoch (A2/A3)") {
-    // rank drops from 3 to 1 at the failover: only (epoch, rank) orders
-    // b:1-1 after a:1-3, so rank alone would drop rows at the window test
+    // rank drops from 3 to 1 at the failover: the host change moves the
+    // epoch, so (epoch, rank) still orders b:1-1 after a:1-3
     val events = (1L to 3L).flatMap(i => insertTx("s0", i, i, s"a$i", host = "a")) ++
       (1L to 2L).flatMap(i => insertTx("s0", i, 10 + i, s"b$i", host = "b"))
     idsAndEpochsByMode("cdcfailoverrank", events).foreach { case (mode, rows) =>
@@ -559,9 +573,6 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // DML adds it back, a superset that keeps epoch 1. Every reader of
     // the feed — unsplit, split, one tx or one line per trigger, the
     // batch pipeline — must step the epoch on it, not only on DML
-    def v(gtid: String) = VgtidEvent("s0", Vgtid(Seq(ShardGtid("ks", "s0", gtid))))
-    def dml(gtid: String, id: Long): Seq[VEvent] =
-      insertTx("s0", 0L, id, s"v$id").map { case _: VgtidEvent => v(gtid); case e => e }
     val events = dml("MySQL56/a:1-1", 1) ++ dml("MySQL56/a:1-2", 2) ++
       Seq(BeginEvent("s0", "ks"), v("MySQL56/b:1-1"), CommitEvent("s0", "ks", 1700000100L)) ++
       dml("MySQL56/a:1-3,b:1-1", 3) ++ dml("MySQL56/a:1-4,b:1-1", 4)
@@ -574,9 +585,6 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // history b:1-1..2 then a:1-1..2,b:1-2 (the start); stepping from the
     // start into history drops host `a` and so bumps the epoch, yet every
     // history GTID set lies inside the start's and must stay history
-    def v(gtid: String) = VgtidEvent("s0", Vgtid(Seq(ShardGtid("ks", "s0", gtid))))
-    def dml(gtid: String, id: Long): Seq[VEvent] =
-      insertTx("s0", 0L, id, s"v$id").map { case _: VgtidEvent => v(gtid); case e => e }
     val events = dml("MySQL56/b:1-1", 1) ++ dml("MySQL56/b:1-2", 2) ++
       dml("MySQL56/a:1-1,b:1-2", 3) ++ dml("MySQL56/a:1-2,b:1-2", 4) ++
       dml("MySQL56/a:1-3,b:1-2", 5) ++ dml("MySQL56/a:1-4,b:1-2", 6)
@@ -584,6 +592,107 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val byMode = idsAndEpochsByMode("cdccoldfailover", events, Map("vgtid" -> start)) - "CdcPipeline"
     byMode.foreach { case (mode, rows) => assert(rows.map(_._1) == Seq(5L, 6L), mode) }
     assert(byMode.values.toSet.size == 1, s"epochs differ by mode: $byMode")
+  }
+
+  test("a failover to a replica missing transactions keeps its row whatever the cut (A2/A3)") {
+    // id 4 comes from a replica whose GTID set a:1-2 drops host b yet lies
+    // inside the current a:1-3,b:1-1, so it keeps the epoch; it is in the
+    // byte window and is delivered in every mode, as the batch pipeline
+    // delivers it
+    val events = dml("MySQL56/a:1-1", 1) ++ dml("MySQL56/a:1-2,b:1-1", 2) ++
+      dml("MySQL56/a:1-3,b:1-1", 3) ++ dml("MySQL56/a:1-2", 4) ++
+      dml("MySQL56/a:1-3,b:1-2", 5) ++ dml("MySQL56/a:1-4,b:1-2", 6)
+    val byMode = idsAndEpochsByMode("cdcreplicafailover", events)
+    byMode.foreach { case (mode, rows) => assert(rows.map(_._1) == (1L to 6L), mode) }
+    assert(byMode.values.toSet.size == 1, s"epochs differ by mode: $byMode")
+  }
+
+  /** Records ("op:id", or "ddl") of `events` on shard `s0` from an explicit
+    * start at `feed:1-2`, under the default mode and one transaction per
+    * trigger. */
+  private def startAtTx2ByMode(name: String, events: Seq[VEvent]): Map[String, Seq[String]] = {
+    val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory(name))
+    writeFeed(feedDir, "s0", events)
+    val start = Vgtid(Seq(ShardGtid("ks", "s0", "MySQL56/feed:1-2"))).json
+    val modes = Seq(
+      "default" -> Map.empty[String, String],
+      "max.txs.per.trigger=1" -> Map("max.txs.per.trigger" -> "1"))
+    modes.zipWithIndex.map { case ((mode, opts), i) =>
+        val sink = s"${name}_$i"
+        val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory(s"${name}ckpt"))
+        val q = spark.readStream.format("vitess-cdc")
+          .options(opts ++ Map("path" -> feedDir.toString, "vgtid" -> start)).load()
+          .writeStream.format("memory").queryName(sink)
+          .option("checkpointLocation", ckpt.toString).start()
+        try q.processAllAvailable() finally q.stop()
+        mode -> spark.sql(
+          s"SELECT op, get_json_object(after, '$$.id') FROM $sink").collect()
+          .map(r => if (r.getString(0) == "ddl") "ddl" else s"${r.getString(0)}:${r.getString(1)}")
+          .toSeq.sorted
+      }.toMap
+  }
+
+  private val ddl = DdlEvent("s0", "ks", "ALTER TABLE t1 COMMENT 'x'", 1700000000L)
+
+  test("an explicit start decodes with history's schema: FIELD sent once, in tx 1 (S4)") {
+    // the server sends FIELD once per table per stream, so only tx 1 of a
+    // staged feed carries it; the start's schema checkpoint must hold it
+    val events = insertTx("s0", 1, 1, "v1") ++
+      (2L to 4L).flatMap(i => insertTx("s0", i, i, s"v$i").filterNot(_.isInstanceOf[FieldEvent]))
+    startAtTx2ByMode("cdccoldfield", events).foreach { case (mode, recs) =>
+      assert(recs == Seq("c:3", "c:4"), mode)
+    }
+  }
+
+  test("an explicit start leaves a DDL inside history undelivered (S4)") {
+    val events = insertTx("s0", 1, 1, "v1") ++ Seq(ddl) ++
+      (2L to 4L).flatMap(i => insertTx("s0", i, i, s"v$i"))
+    startAtTx2ByMode("cdccoldddlin", events).foreach { case (mode, recs) =>
+      assert(recs == Seq("c:3", "c:4"), mode)
+    }
+  }
+
+  test("an explicit start delivers a DDL right after the start transaction (S4)") {
+    // history ends right after the last transaction not after the start,
+    // so a standalone line behind it belongs to the stream
+    val events = (1L to 2L).flatMap(i => insertTx("s0", i, i, s"v$i")) ++ Seq(ddl) ++
+      (3L to 4L).flatMap(i => insertTx("s0", i, i, s"v$i"))
+    startAtTx2ByMode("cdccoldddlafter", events).foreach { case (mode, recs) =>
+      assert(recs == Seq("c:3", "c:4", "ddl"), mode)
+    }
+  }
+
+  test("every offset the source hands out has a byte position for each shard of its vgtid") {
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
+    val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcoffsetpos"))
+    Seq("s0", "s1").foreach { sh =>
+      writeFeed(feedDir, sh, (1L to 4L).flatMap(i => insertTx(sh, i, i, s"v$i")))
+    }
+    def positioned(o: Offset, what: String): VgtidOffset = {
+      val v = o.asInstanceOf[VgtidOffset]
+      assert(v.vgtid.shardGtids.map(_.shard).toSet == Set("s0", "s1"), what)
+      assert(v.vgtid.shardGtids.forall(sg => v.positions.contains(sg.shard)), s"$what: ${v.json()}")
+      v
+    }
+    val explicit = Vgtid(Seq(
+      ShardGtid("ks", "s0", "MySQL56/feed:1-2"), ShardGtid("ks", "s1", Vgtid.EmptyGtid))).json
+    Seq(Map.empty[String, String], Map("vgtid" -> explicit)).foreach { extra =>
+      val stream = new VitessCdcStream(new CaseInsensitiveStringMap(
+        (extra + ("path" -> feedDir.toString)).asJava))
+      try {
+        val start = positioned(stream.initialOffset(), s"initialOffset $extra")
+        assert(stream.initialOffset().json() == start.json(), "batch 0's start is one value")
+        val end = positioned(
+          stream.latestOffset(start, ReadLimit.allAvailable()), s"latestOffset $extra")
+        positioned(stream.deserializeOffset(end.json()), s"deserializeOffset $extra")
+        // a checkpoint written without positions resolves by its vgtid
+        val legacy = positioned(
+          stream.deserializeOffset(start.copy(positions = Map.empty, schemas = Map.empty).json()),
+          s"position-less deserializeOffset $extra")
+        assert(legacy.positions == start.positions)
+      } finally stream.stop()
+    }
   }
 
   test("empty shard files are excluded from partition planning (F5)") {

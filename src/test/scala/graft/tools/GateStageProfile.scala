@@ -5,7 +5,8 @@ package graft.tools
   * of its call site) and every STAGE (wall duration, task count,
   * input/shuffle bytes and records) — the view the disabled UI would
   * give. Jobs tell you WHICH action is slow; stages tell you WHICH
-  * exchange/scan inside it.
+  * exchange/scan inside it. Runs at local[$SPARK_GRAFT_CPUS], default
+  * the available processors.
   * Usage: Test/runMain graft.tools.GateStageProfile <gate> [sfDir] [runs]
   */
 object GateStageProfile {
@@ -13,7 +14,9 @@ object GateStageProfile {
     val gate = args.headOption.getOrElse(sys.error("usage: GateStageProfile <gate> [sfDir] [runs]"))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 1
-    val spark = graft.Tables.session("gate-stage-profile", "32")
+    val cpus = sys.env.getOrElse(
+      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+    val spark = graft.Tables.session("gate-stage-profile", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     case class St(dur: Double, tasks: Int, input: Long, inRec: Long,
         sr: Long, sw: Long, swRec: Long, name: String)
