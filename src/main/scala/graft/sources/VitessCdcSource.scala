@@ -608,31 +608,51 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     })
 
   /** The cursor right after `start`'s history in `file` (see
-    * [[resolveStarts]]). */
+    * [[resolveStarts]]): the fold stops on the first transaction after
+    * `start`, and history ends at the last COMMIT or bare VGTID before it. */
   private def historyEnd(shard: String, file: String, start: ShardCursor): ShardCursor = {
-    val fold = new TxBoundaryFold(shard, keyspace, start, heartbeatIntervalMs = 0L, Long.MaxValue)
     var end = start
-    val slice =
-      try Some(transport.open(file, 0L, transport.size(file)))
+    foldShard(shard, file, start, sizeOf(file), heartbeatMs = 0L, Long.MaxValue) { (line, safe) =>
+      safe.exists(_.step.after(start.step)) || {
+        if (line.startsWith(FeedSlice.CommitPrefix) || line.startsWith(FeedSlice.VgtidPrefix))
+          safe.foreach(c => end = c)
+        false
+      }
+    }
+    end
+  }
+
+  /** Feed `file`'s bytes from `seed.pos` up to `to` (nothing when the feed
+    * is gone) through a [[TxBoundaryFold]] seeded at `seed`, stopping after
+    * the first line for which `stop(line, safe)` holds; `safe` is the
+    * fold's cursor when that line ends outside a transaction. */
+  private def foldShard(
+      shard: String, file: String, seed: ShardCursor, to: Option[Long],
+      heartbeatMs: Long, splitBytes: Long)(
+      stop: (String, Option[ShardCursor]) => Boolean): TxBoundaryFold = {
+    val fold = new TxBoundaryFold(shard, keyspace, seed, heartbeatMs, splitBytes)
+    val slice = to.flatMap { to =>
+      try Some(transport.open(file, seed.pos, to))
       catch { case _: NoSuchFileException => None }
+    }
     slice.foreach { sl =>
       try {
         var line = sl.readLine()
         while (line != null) {
           fold.onLine(line, sl.position)
           // a cursor AT the slice position: this line ends outside a tx
-          val safe = fold.safe.pos == sl.position
-          if (safe && fold.safe.step.after(start.step)) line = null
-          else {
-            if (safe && (line.startsWith(FeedSlice.CommitPrefix) ||
-                line.startsWith(FeedSlice.VgtidPrefix))) end = fold.safe
-            line = sl.readLine()
-          }
+          val safe = Option.when(fold.safe.pos == sl.position)(fold.safe)
+          line = if (stop(line, safe)) null else sl.readLine()
         }
       } finally sl.close()
     }
-    end
+    fold
   }
+
+  /** `file`'s size; None for a feed deleted between listing and sizing
+    * (a retired reshard parent). */
+  private def sizeOf(file: String): Option[Long] =
+    try Some(transport.size(file)) catch { case _: NoSuchFileException => None }
 
   // Backpressure analogue of the reference's bounded queue
   // (VitessConnectorTask.java:118-125): cap how many new transactions a
@@ -742,44 +762,10 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
             "the query from this checkpoint to stream the resharded topology")
     }
     val startEpochs = EpochProvider.applyGeneration(from.epochs, from.generation, generation)
-    /** Fold one shard's new bytes from `seed` up to the first transaction
-      * boundary past either cap (the measured `size` when none is set):
-      * the last safe cursor and the split cursors below it. */
-    def foldShard(
-        shard: String, file: String, seed: ShardCursor,
-        size: Option[Long], splitBytes: Long): (ShardCursor, Seq[ShardCursor]) = {
-      val fold = new TxBoundaryFold(shard, keyspace, seed, heartbeatIntervalMs, splitBytes)
-      val slice = size.flatMap { to =>
-        try Some(transport.open(file, seed.pos, to))
-        catch { case _: NoSuchFileException => None }
-      }
-      slice.foreach { sl =>
-        try {
-          var line = sl.readLine()
-          var stop = false
-          while (line != null && !stop) {
-            fold.onLine(line, sl.position)
-            // a cursor AT the slice position means the fold just
-            // published a safe boundary on this line
-            stop = fold.safe.pos == sl.position &&
-              (fold.safe.admitted >= maxTxsPerTrigger ||
-                fold.safe.pos - seed.pos >= maxBytesPerTrigger)
-            if (!stop) line = sl.readLine()
-          }
-        } finally sl.close()
-      }
-      // admitted is fold-internal progress, meaningless to readers —
-      // zero it so offset JSON round-trips compare equal
-      val splits = fold.splits.filter(_.pos < fold.safe.pos)
-        .map(_.copy(admitted = 0L))
-      (fold.safe, splits)
-    }
+    // a feed deleted between listing and sizing or reading (retired
+    // reshard parent) admits nothing this trigger instead of failing it
     val shards = shardFiles.map { case (shard, file) =>
-      // a feed deleted between listing and sizing or reading (retired
-      // reshard parent) admits nothing this trigger instead of failing it
-      val size =
-        try Some(transport.size(file)) catch { case _: NoSuchFileException => None }
-      (shard, file, cursorAt(from, shard), size)
+      (shard, file, cursorAt(from, shard), sizeOf(file))
     }
     val newBytes = shards.map { case (_, _, seed, size) =>
       size.fold(0L)(to => math.min(math.max(0L, to - seed.pos), maxBytesPerTrigger))
@@ -789,7 +775,17 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     val folded = {
       import scala.concurrent.ExecutionContext.Implicits.global
       Await.result(Future.traverse(shards) { case (shard, file, seed, size) =>
-        Future(foldShard(shard, file, seed, size, splitBytes))
+        Future {
+          // stop at the first transaction boundary past either cap (the
+          // measured size when none is set)
+          val fold = foldShard(shard, file, seed, size, heartbeatIntervalMs, splitBytes) {
+            (_, safe) => safe.exists(c =>
+              c.admitted >= maxTxsPerTrigger || c.pos - seed.pos >= maxBytesPerTrigger)
+          }
+          // admitted is fold-internal progress, meaningless to readers —
+          // zero it so offset JSON round-trips compare equal
+          (fold.safe, fold.splits.filter(_.pos < fold.safe.pos).map(_.copy(admitted = 0L)))
+        }
       }, Duration.Inf)
     }
     var epochs = startEpochs
@@ -797,15 +793,17 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     val schemasOut = Map.newBuilder[String, Map[String, String]]
     val hbMsOut = Map.newBuilder[String, Long]
     val splitsOut = Map.newBuilder[String, Seq[ShardCursor]]
-    val gtids = shards.zip(folded).map { case ((shard, _, seed, _), (cursor, splits)) =>
+    val gtids = shards.zip(folded).map { case ((shard, _, _, _), (cursor, splits)) =>
       epochs = epochs.put(shard, cursor.step.epoch)
       positionsOut += shard -> cursor.pos
       if (cursor.schemas.nonEmpty) schemasOut += shard -> cursor.schemas
       if (heartbeatIntervalMs > 0 && cursor.step.hbMs != ShardTxStep.NoBaseline)
         hbMsOut += shard -> cursor.step.hbMs
       if (splits.nonEmpty) splitsOut += shard -> splits
-      // never regress behind the committed start position
-      if (cursor.step.after(seed.step)) cursor.step.sg else seed.step.sg
+      // the fold's own step, as its split cursors carry: a replica's
+      // contained GTID set is recorded as-is, so a cut there seeds the
+      // next batch exactly like a split cursor at the same byte
+      cursor.step.sg
     }
     assert(splitsOut.result().values.map(_.size).sum <= cores,
       s"split cursors must not outnumber the $cores cores")

@@ -36,7 +36,7 @@ class ShardTxStepPropertySpec extends AnyFunSuite {
   private case object Failover extends Item // new host set: epoch bump, rank drop
   private case object AddHost extends Item // host superset: same epoch
   // DML from a replica missing transactions: its GTID set drops a host yet
-  // lies inside the current one, so it moves neither position nor epoch
+  // lies inside the current one, so it moves the position but keeps the epoch
   private case object Replica extends Item
 
   private val item: Gen[Item] = Gen.frequency(

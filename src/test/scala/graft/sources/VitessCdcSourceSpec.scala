@@ -607,6 +607,18 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(byMode.values.toSet.size == 1, s"epochs differ by mode: $byMode")
   }
 
+  test("a batch cut after a replica's transaction seeds the next batch from the replica's set (A3)") {
+    // id 4's a:1-2 lies inside a:1-3,b:1-1; a:1-3,c:1-1 adds host c to it
+    // (same epoch) but drops host b from a:1-3,b:1-1 (new epoch). A batch
+    // ending after id 4 must record a:1-2, as a split cursor there does
+    val events = dml("MySQL56/a:1-1", 1) ++ dml("MySQL56/a:1-2,b:1-1", 2) ++
+      dml("MySQL56/a:1-3,b:1-1", 3) ++ dml("MySQL56/a:1-2", 4) ++
+      dml("MySQL56/a:1-3,c:1-1", 5)
+    idsAndEpochsByMode("cdcreplicacut", events).foreach { case (mode, rows) =>
+      assert(rows == (1L to 5L).map(_ -> 0L), mode)
+    }
+  }
+
   /** Records ("op:id", or "ddl") of `events` on shard `s0` from an explicit
     * start at `feed:1-2`, under the default mode and one transaction per
     * trigger. */
