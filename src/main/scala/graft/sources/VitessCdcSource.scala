@@ -43,9 +43,11 @@ import scala.jdk.CollectionConverters._
   *   delivers every transaction in each shard's [start, end) bytes. Only
   *   an explicit start is resolved by position, once, on the driver: an
   *   explicit `vgtid` starts right after the last transaction whose
-  *   position is not after it (see `resolveStarts`). Since records of tx N
-  *   carry tx N-1's position as restart offset, replay from a record's
-  *   offset re-reads its whole transaction, no loss.
+  *   position is not after it (see `resolveStarts`). A record's restart
+  *   offset is its shard's position at the last transaction-safe boundary
+  *   before its transaction — what the offset records if a batch is cut
+  *   there — so replay from it re-reads the whole transaction, no loss,
+  *   wherever batches and splits were cut.
   *
   * Options: `path` (feed dir), `vgtid` (initial VGTID JSON), `keyspace`,
   * `shard` (explicit comma-separated shard list; authoritative — not
@@ -864,20 +866,13 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
         val cuts = e.splits.getOrElse(shard, Nil)
           .filter(c => c.pos > startByte && c.pos < endByte)
           .sortBy(_.pos)
-        val batchEnd = ShardTxStep(
-          e.vgtid.shardGtid(shard).getOrElse(ShardGtid(keyspace, shard, Vgtid.EmptyGtid)),
-          e.epochs.get(shard).getOrElse(batchStart.step.epoch))
-        val seeds = batchStart +: cuts
-        seeds.zipWithIndex.map { case (seed, i) =>
-          val isLast = i == seeds.length - 1
-          val segEnd = if (isLast) batchEnd else cuts(i).step
-          val segEndByte = if (isLast) endByte else cuts(i).pos
+        (batchStart +: cuts).zip(cuts.map(_.pos) :+ endByte).map { case (seed, segEndByte) =>
           VitessCdcPartition(
-            shard, keyspace, file, seed.step, segEnd, emitBoundaries, tableFilter,
+            shard, keyspace, file, seed.step, emitBoundaries, tableFilter,
             // per-batch (not per-segment) liveness: only the last
             // segment, which ends at the batch's end offset, emits the
             // batch heartbeat for its shard
-            heartbeatPerBatch && isLast,
+            heartbeatPerBatch && segEndByte == endByte,
             effectiveSnapshotTables,
             typeModes, heartbeatIntervalMs,
             includeSchemaChanges,
@@ -949,7 +944,6 @@ final case class VitessCdcPartition(
     keyspace: String,
     file: String, // transport locator (feed-file path for the file feed)
     start: ShardTxStep, // position incl. copy lastpk, epoch, heartbeat baseline
-    end: ShardTxStep, // position and epoch the window ends at
     emitBoundaries: Boolean,
     tableFilter: TableFilter,
     heartbeatPerBatch: Boolean = false,
@@ -967,7 +961,8 @@ final case class VitessCdcPartition(
   * in it — the byte window is the batch. It assembles transactions and
   * steps the shard's [[ShardTxStep]] over every line exactly as the
   * driver's fold did, so each transaction takes the epoch the offsets
-  * record, and decodes them against the schema checkpoint carried by the
+  * record and every position a record or heartbeat carries is the
+  * step's, and decodes them against the schema checkpoint carried by the
   * partition (FIELD lines seen before the window). */
 class VitessCdcPartitionReader(
     p: VitessCdcPartition,
@@ -990,7 +985,6 @@ class VitessCdcPartitionReader(
     }
     new RecordBuilder(
       registry, p.start, p.emitBoundaries,
-      initialVgtid = Option.when(p.start.sg.hasPosition)(Vgtid(Seq(p.start.sg))),
       tableFilter = p.tableFilter,
       snapshotTableFilter = p.snapshotTables, typeModes = p.typeModes)
   }
@@ -999,9 +993,7 @@ class VitessCdcPartitionReader(
   private[sources] def step: ShardTxStep = rb.step
 
   private val rows: Iterator[InternalRow] = {
-    // every VGTID steps the shard, so when the assembler yields a
-    // transaction the step stands at that transaction's position
-    val events = rb.positions(slice.lines.map(VEventJson.read))
+    val events = slice.lines.map(VEventJson.read)
     val records = TransactionAssembler.assemble(events).flatMap { tx =>
       val pos = tx.vgtid.flatMap(_.shardGtid(p.shard))
       // include.schema.changes=false: DDL records stay off the stream
@@ -1023,25 +1015,25 @@ class VitessCdcPartitionReader(
         // the first commit only seeds the baseline
         if (rb.step.hbMs == baseline || baseline == ShardTxStep.NoBaseline) recs
         else {
-          val last = recs.lastOption
-          val vj = last.map(_.vgtid).orElse(tx.vgtid.map(_.json)).getOrElse("[]")
-          val rj = last.map(_.restartVgtid).orElse(tx.vgtid.map(_.json)).getOrElse("[]")
+          // at the step after the commit, like a standalone flush
+          val at = rb.positionJson
           recs :+ ChangeRecord(
             p.shard, p.keyspace, "", "heartbeat", None, None, None,
-            tsMs, vj, rj, None, rb.step.epoch, None, 0L, 0L)
+            tsMs, at, at, None, rb.step.epoch, None, 0L, 0L)
         }
       }
     }
     // H1: one liveness record per shard per batch carrying the end offset
+    // — the step after the last segment, read once the records are drained
     // (reference VitessHeartbeatImpl.java:47-77 — emitted alongside data;
     // skipped while no offset exists yet, i.e. a fresh empty start)
-    val heartbeat =
-      if (p.heartbeatPerBatch && p.end.sg.gtid != Vgtid.EmptyGtid)
+    def heartbeat: Iterator[ChangeRecord] =
+      if (p.heartbeatPerBatch && rb.step.sg.gtid != Vgtid.EmptyGtid) {
+        val at = Vgtid(Seq(rb.step.sg)).json
         Iterator.single(ChangeRecord(
           p.shard, p.keyspace, "", "heartbeat", None, None, None,
-          0L, Vgtid(Seq(p.end.sg)).json, Vgtid(Seq(p.end.sg)).json,
-          None, p.start.epoch, None, 0L, 0L))
-      else Iterator.empty
+          0L, at, at, None, rb.step.epoch, None, 0L, 0L))
+      } else Iterator.empty
     (records ++ heartbeat).map(VitessCdc.toInternalRow)
   }
 

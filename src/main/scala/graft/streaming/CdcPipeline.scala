@@ -67,7 +67,7 @@ object CdcPipeline {
         tableFilter = tableFilter, columnRules = columnRules,
         convertFailureMode = convertFailureMode, typeModes = typeModes)
       // ++ is lazy: the recursive call runs only after this run is drained
-      TransactionAssembler.assemble(rb.positions(run)).flatMap(rb.onTransaction) ++
+      TransactionAssembler.assemble(run).flatMap(rb.onTransaction) ++
         processPartition(buf, emitBoundaries, tableFilter, columnRules, convertFailureMode, typeModes)
     }
 }

@@ -59,10 +59,12 @@ final class SchemaRegistry(
   * against the registry schema.
   *
   * `vgtid` is the record's transaction position (the reference's
-  * `source.vgtid` = currentVgtid, VitessSourceInfoStructMaker.java:36-44);
-  * `restartVgtid` is the replay offset — the previous transaction's
-  * position, so restarting from it replays this record's transaction
-  * inclusively (SourceInfo.java:119-130, VitessOffsetContext.java:92-100).
+  * `source.vgtid`, VitessSourceInfoStructMaker.java:36-44);
+  * `restartVgtid` is the replay offset — the shard's position at the last
+  * transaction-safe boundary before the record's transaction, exactly
+  * what the source's offset records if a batch is cut there, so
+  * restarting from it replays that transaction inclusively
+  * (SourceInfo.java:119-130, VitessOffsetContext.java:92-100).
   *
   * `totalOrder` counts all DML events in the transaction; `collectionOrder`
   * counts per-table within the transaction (reference
@@ -78,7 +80,7 @@ final case class ChangeRecord(
     key: Option[String], // JSON of PK (or first unique key) columns
     tsMs: Long,
     vgtid: String, // this transaction's VGTID JSON (source.vgtid)
-    restartVgtid: String, // replay offset: previous transaction's VGTID JSON
+    restartVgtid: String, // replay offset: the shard's position before the transaction
     txId: Option[String],
     epoch: Long,
     rank: Option[String], // decimal string (sum can exceed Long)
@@ -87,17 +89,24 @@ final case class ChangeRecord(
 
 /** Turns assembled transactions into envelope records: decodes packed
   * rows via the registry schema, stamps each transaction with its shard
-  * step's epoch and its GTID's rank, rotates the restart offset, and
-  * emits optional BEGIN/END boundary records (reference:
-  * VitessChangeRecordEmitter.java:56-132,
+  * step's epoch and its GTID's rank, and emits optional BEGIN/END
+  * boundary records (reference: VitessChangeRecordEmitter.java:56-132,
   * VitessOrderedTransactionStructMaker.java:39-50, SourceInfo.java:105-130).
   * One instance per shard reader; `step` carries the shard's
-  * [[ShardTxStep]] across transactions. */
+  * [[ShardTxStep]] across units and is the only position it tracks:
+  *
+  *  - a transaction's records carry as `restartVgtid` the step's position
+  *    before the transaction, and its own VGTID event's JSON as `vgtid`;
+  *    the END record carries the transaction's own position (O1/O2);
+  *  - a standalone DDL / heartbeat flush carries the step's position as
+  *    `vgtid`, `restartVgtid` and `txId`;
+  *  - every VGTID the assembler yields, bare ones included, steps it.
+  *
+  * Positions are this shard's own entry, serialized once each. */
 final class RecordBuilder(
     registry: SchemaRegistry,
     var step: ShardTxStep,
     emitTransactionBoundaries: Boolean = false,
-    initialVgtid: Option[Vgtid] = None,
     tableFilter: TableFilter = TableFilter.acceptAll,
     columnRules: ColumnRules = ColumnRules.none,
     convertFailureMode: ConvertFailureMode = ConvertFailureMode.Fail,
@@ -106,64 +115,50 @@ final class RecordBuilder(
 
   private val mapper = new ObjectMapper()
 
-  // Offset rotation state (reference SourceInfo.java:90-130). Records of
-  // transaction N carry restartVgtid = position of transaction N-1; the
-  // final boundary/commit position resets both to N.
-  private var currentVgtid: Option[Vgtid] = initialVgtid
-  private var restartVgtidOpt: Option[Vgtid] = initialVgtid
+  // the last position serialized: a transaction's restart offset is the
+  // previous one's position, so each position is written at most once
+  private var jsonAt: ShardGtid = _
+  private var jsonOfAt = "[]"
 
-  /** rotateVgtid (SourceInfo.java:119-130): only when the new position
-    * differs; a null/absent new position keeps the current one. */
-  private def rotate(newVgtid: Option[Vgtid]): Unit =
-    if (newVgtid != currentVgtid) {
-      restartVgtidOpt = currentVgtid
-      if (newVgtid.isDefined) currentVgtid = newVgtid
+  /** [[step]]'s position as this shard's VGTID JSON; `[]` before it has one. */
+  def positionJson: String = {
+    if (step.sg != jsonAt) {
+      jsonAt = step.sg
+      jsonOfAt = if (jsonAt.hasPosition) Vgtid(Seq(jsonAt)).json else "[]"
     }
-
-  /** resetVgtid (SourceInfo.java:105-109): after all of a transaction's
-    * events are produced, restart = current = that transaction's vgtid. */
-  private def reset(v: Option[Vgtid]): Unit =
-    if (v.isDefined) { restartVgtidOpt = v; currentVgtid = v }
-
-  private def currentJson: String = currentVgtid.map(_.json).getOrElse("[]")
-  private def restartJson: String = restartVgtidOpt.map(_.json).getOrElse("[]")
-
-  /** Steps [[step]] over every VGTID of this shard in `events`, in feed
-    * order, and passes the events through. Bare VGTIDs between
-    * transactions never reach [[onTransaction]], yet they move the epoch
-    * exactly as they move the driver's offset fold. */
-  def positions(events: Iterator[VEvent]): Iterator[VEvent] = events.map {
-    case e @ VgtidEvent(_, v) =>
-      v.shardGtid(step.sg.shard).foreach(sg => step = step.onPosition(sg)); e
-    case e => e
+    jsonOfAt
   }
 
   def onTransaction(tx: VTransaction): Seq[ChangeRecord] = {
     val out = Vector.newBuilder[ChangeRecord]
     val tsMs = tx.commitTsSec * 1000L
+    // the position at the last transaction-safe boundary (O1)
+    val restartJson = positionJson
 
     // Schema updates first — ROW events in the same transaction (copy
-    // phase) need them.
+    // phase) need them — and every VGTID steps the shard, in feed order.
     tx.events.foreach {
       case f: FieldEvent => { registry.update(tx.shard, f); () }
+      case VgtidEvent(_, v) => v.shardGtid(tx.shard).foreach(sg => step = step.onPosition(sg))
       case _ =>
     }
 
+    // a VGTID event that lists only this shard already holds the
+    // position's JSON: the next restart offset reuses it
+    tx.vgtid.foreach { v =>
+      if (step.sg.hasPosition && v.shardGtids == Seq(step.sg)) { jsonAt = step.sg; jsonOfAt = v.json }
+    }
+
     val isDml = tx.events.exists(_.isInstanceOf[RowEvent])
-
-    // BEGIN (or DDL/OTHER sendNow): rotate so records carry the previous
-    // transaction's position as their restart offset (O1).
-    rotate(tx.vgtid)
-    val vgtidJson = currentJson
-
-    // a no-op when `positions` already stepped this transaction's VGTID
-    tx.vgtid.flatMap(_.shardGtid(tx.shard)).foreach(sg => step = step.onPosition(sg))
+    // a flush has no VGTID of its own: it stands at the step's position
+    val vgtidJson = tx.vgtid.fold(positionJson)(_.json)
+    val txId = if (tx.vgtid.isDefined) tx.txId else Option.when(step.sg.hasPosition)(step.sg.gtid)
     val epoch = step.epoch
-    val rank = if (isDml) tx.txId.map(Rank.of(_).toString) else None
+    val rank = if (isDml) txId.map(Rank.of(_).toString) else None
 
     if (emitTransactionBoundaries && isDml)
       out += ChangeRecord(tx.shard, tx.keyspace, "", "begin", None, None, None,
-        tsMs, vgtidJson, restartJson, tx.txId, epoch, rank, 0L, 0L)
+        tsMs, vgtidJson, restartJson, txId, epoch, rank, 0L, 0L)
 
     var totalOrder = 0L
     var perTableOrder = Map.empty[String, Long]
@@ -208,7 +203,7 @@ final class RecordBuilder(
               beforeVals.map(rowJson(plan, _)),
               afterVals.map(rowJson(plan, _)),
               keyFromValues(plan, afterVals.orElse(beforeVals).get),
-              tsMs, vgtidJson, restartJson, tx.txId, epoch, rank, totalOrder, collectionOrder)
+              tsMs, vgtidJson, restartJson, txId, epoch, rank, totalOrder, collectionOrder)
           }
         }
         }
@@ -220,22 +215,19 @@ final class RecordBuilder(
         payload.put("table", ex.table)
         out += ChangeRecord(tx.shard, d.keyspace, ex.table, "ddl",
           None, Some(mapper.writeValueAsString(payload)), None,
-          tsMs, vgtidJson, restartJson, tx.txId, epoch, None, 0L, 0L)
+          tsMs, vgtidJson, restartJson, txId, epoch, None, 0L, 0L)
       case h: HeartbeatEvent =>
         out += ChangeRecord(tx.shard, "", "", "heartbeat", None, None, None,
           tsMs, vgtidJson, restartJson, None, epoch, None, 0L, 0L)
       case _ => // BEGIN/COMMIT/FIELD/VGTID/OTHER/COPY_COMPLETED carry no payload
     }
 
-    // COMMIT: all events produced — restart = current = this tx (O2). The
-    // END boundary record is emitted after the reset (reference
-    // VitessStreamingChangeEventSource.java:109-120), so its offset is
-    // this transaction's own position.
-    if (isDml) reset(tx.vgtid)
-
+    // COMMIT: all events produced. The END boundary record's offset is
+    // this transaction's own position (O2; reference
+    // VitessStreamingChangeEventSource.java:109-120).
     if (emitTransactionBoundaries && isDml)
       out += ChangeRecord(tx.shard, tx.keyspace, "", "end", None, None, None,
-        tsMs, vgtidJson, restartJson, tx.txId, epoch, rank, totalOrder, 0L)
+        tsMs, vgtidJson, positionJson, txId, epoch, rank, totalOrder, 0L)
 
     out.result()
   }

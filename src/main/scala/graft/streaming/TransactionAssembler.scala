@@ -2,8 +2,10 @@ package graft.streaming
 
 import graft.core.Vgtid
 
-/** One complete BEGIN…COMMIT unit (or an immediately-flushed DDL /
-  * HEARTBEAT / OTHER event) with the VGTID observed inside it. */
+/** One unit of a shard's feed: a complete BEGIN…COMMIT transaction with
+  * the VGTID observed inside it, a bare VGTID between transactions (a
+  * position-only unit), or an immediately-flushed DDL / HEARTBEAT / OTHER
+  * / FIELD event, which has no VGTID of its own. */
 final case class VTransaction(
     shard: String,
     keyspace: String,
@@ -25,7 +27,9 @@ final case class VTransaction(
   *    buffered event sequence is exactly one of the copy-phase restart
   *    patterns `BEGIN,FIELD[,VGTID]` / `COPY_COMPLETED,BEGIN,FIELD[,VGTID]`
   *    (`:171-189`) — then the whole buffer AND the pending vgtid are
-  *    dropped (the reference's `reset()`) and the transaction restarts;
+  *    dropped (the reference's `reset()`) and the transaction restarts.
+  *    A dropped VGTID still moved the shard's position: it rides at the
+  *    head of the next unit's events, so a [[RecordBuilder]] steps it;
   *  - COMMIT without an open transaction / duplicate COMMIT is an error
   *    (`:192-203`);
   *  - a DML transaction whose window contained no VGTID event is dropped
@@ -33,6 +37,8 @@ final case class VTransaction(
   *  - DDL / OTHER / HEARTBEAT outside a transaction flush immediately
   *    (`sendNow`, `:206-218`); a DDL inside an open transaction is kept in
   *    buffer order and emitted with the transaction;
+  *  - a bare VGTID between transactions is yielded alone, so every
+  *    position reaches the consumer in feed order;
   *  - a trailing unterminated buffer is dropped (never emitted).
   *
   * Pure: single-shard, deterministic, no Spark dependency — it runs
@@ -45,7 +51,8 @@ object TransactionAssembler {
       private var buffer = Vector.empty[VEvent]
       private var inTx = false
       private var txVgtid: Option[Vgtid] = None
-      private var lastVgtid: Option[Vgtid] = None
+      // VGTIDs of dropped copy-phase restart buffers, for the next unit
+      private var carried = Vector.empty[VEvent]
       private var pending: Option[VTransaction] = None
 
       /** The reference permits a duplicate BEGIN only when the buffer is
@@ -74,7 +81,10 @@ object TransactionAssembler {
       private def step(e: VEvent): Option[VTransaction] = e match {
         case b: BeginEvent =>
           if (inTx) {
-            if (isCopyPhaseRestartBuffer) resetTx() // drop partials + stale vgtid
+            if (isCopyPhaseRestartBuffer) { // drop partials + stale vgtid
+              carried ++= buffer.collect { case v: VgtidEvent => v }
+              resetTx()
+            }
             else throw new IllegalStateException(
               s"BEGIN while transaction open on shard ${b.shard} (not a copy-phase restart)")
           }
@@ -92,32 +102,29 @@ object TransactionAssembler {
               // the schema here would fail the NEXT transaction's rows
               // with "ROW for unknown table"): flush them alone, like a
               // standalone FIELD
-              val fields = buffer.collect { case f: FieldEvent => f }
-              if (fields.isEmpty) None
-              else Some(VTransaction(c.shard, c.keyspace, lastVgtid, fields, 0L))
-            } else {
-              lastVgtid = txVgtid
-              Some(VTransaction(c.shard, c.keyspace, txVgtid, buffer :+ c, c.timestampSec))
-            }
+              val kept = carried ++ buffer.collect { case f: FieldEvent => f }
+              Option.when(kept.nonEmpty)(VTransaction(c.shard, c.keyspace, None, kept, 0L))
+            } else
+              Some(VTransaction(c.shard, c.keyspace, txVgtid, carried ++ buffer :+ c, c.timestampSec))
+          carried = Vector.empty
           resetTx()
           result
         case v: VgtidEvent =>
-          lastVgtid = Some(v.vgtid)
           if (inTx) { txVgtid = Some(v.vgtid); buffer :+= v; None }
-          else None // bare VGTID between transactions just advances position
+          else Some(VTransaction(v.shard, "", Some(v.vgtid), Vector(v), 0L)) // position only
         case d: DdlEvent =>
           if (inTx) { buffer :+= d; None } // emitted in order with its tx
-          else Some(VTransaction(d.shard, d.keyspace, lastVgtid, Vector(d), d.timestampSec))
+          else Some(VTransaction(d.shard, d.keyspace, None, Vector(d), d.timestampSec))
         case h: HeartbeatEvent =>
           if (inTx) { buffer :+= h; None }
-          else Some(VTransaction(h.shard, "", lastVgtid, Vector(h), 0L))
+          else Some(VTransaction(h.shard, "", None, Vector(h), 0L))
         case o: OtherEvent =>
           if (inTx) { buffer :+= o; None }
-          else Some(VTransaction(o.shard, "", lastVgtid, Vector(o), 0L))
+          else Some(VTransaction(o.shard, "", None, Vector(o), 0L))
         case f: FieldEvent =>
           if (inTx) { buffer :+= f; None }
           // standalone FIELD still carries a schema update; flush it alone
-          else Some(VTransaction(f.shard, f.keyspace, lastVgtid, Vector(f), 0L))
+          else Some(VTransaction(f.shard, f.keyspace, None, Vector(f), 0L))
         case r: RowEvent =>
           if (!inTx)
             throw new IllegalStateException(s"ROW outside transaction on shard ${r.shard}")

@@ -3,7 +3,6 @@ package graft.sources
 import graft.core._
 import graft.streaming._
 import java.nio.file.Files
-import org.apache.spark.sql.catalyst.InternalRow
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,10 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * that drops a host yet lies inside the current one, bare VGTIDs, DDL
   * flushes, empty transactions, heartbeat events and a copy phase with
   * lastpk progress — every safe boundary the fold publishes must hold the
-  * state the reader reaches over the same prefix, and a window cut at
-  * that boundary must not change a record. No streaming query: the fold
-  * and the reader run directly over a feed file. Seeded, so a failure
-  * reproduces. */
+  * state the reader reaches over the same prefix, a window cut at that
+  * boundary must not change any column of any record, and a batch ending
+  * there must emit its per-batch heartbeat at that state. No streaming
+  * query: the fold and the reader run directly over a feed file. Seeded,
+  * so a failure reproduces. */
 class ShardTxStepPropertySpec extends AnyFunSuite {
 
   private val IntervalMs = 2000L
@@ -136,26 +136,30 @@ class ShardTxStepPropertySpec extends AnyFunSuite {
   }
 
   /** One reader segment from cursor `from` to cursor `to`, as the
-    * planner builds it: records (op, after, vgtid, epoch, rank, ts) and
-    * the reader's final step. */
-  private def read(file: String, from: ShardCursor, to: ShardCursor)
-      : (Seq[(String, String, String, Long, String, Long)], ShardTxStep) = {
+    * planner builds it: every column of every record, and the reader's
+    * final step. */
+  private def read(file: String, from: ShardCursor, to: ShardCursor, perBatch: Boolean = false)
+      : (Seq[Seq[Any]], ShardTxStep) = {
     val p = VitessCdcPartition(
-      "s0", "ks", file, from.step, to.step, emitBoundaries = false,
-      tableFilter = TableFilter.acceptAll, heartbeatIntervalMs = IntervalMs,
-      startByte = from.pos, endByte = to.pos,
+      "s0", "ks", file, from.step, emitBoundaries = false,
+      tableFilter = TableFilter.acceptAll, heartbeatPerBatch = perBatch,
+      heartbeatIntervalMs = IntervalMs, startByte = from.pos, endByte = to.pos,
       schemaLines = from.schemas.values.toSeq)
     val r = new VitessCdcPartitionReader(p, FileFeedTransport(new java.io.File(file).getParent, true))
-    val out = Vector.newBuilder[(String, String, String, Long, String, Long)]
-    try {
-      while (r.next()) {
-        val row: InternalRow = r.get()
-        def str(i: Int) = Option(row.getUTF8String(i)).map(_.toString).orNull
-        out += ((str(3), str(5), str(8), row.getLong(11), str(12), row.getLong(7)))
-      }
-    } finally r.close()
+    val out = Vector.newBuilder[Seq[Any]]
+    try while (r.next()) out += r.get().toSeq(VitessCdc.Schema)
+    finally r.close()
     (out.result(), r.step)
   }
+
+  /** The columns in which the first differing record of `a` and `b` differ. */
+  private def diff(a: Seq[Seq[Any]], b: Seq[Seq[Any]]): String =
+    a.zipAll(b, Nil, Nil).collectFirst { case (x, y) if x != y =>
+      if (x.isEmpty || y.isEmpty) "record count"
+      else VitessCdc.Schema.fieldNames.zip(x.zip(y)).collect {
+        case (name, (u, v)) if u != v => s"$name: $u vs $v"
+      }.mkString("; ")
+    }.getOrElse("")
 
   test("the fold's cursor equals the reader's state at every safe boundary; cuts change no record") {
     val dir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("shardtxstep"))
@@ -172,11 +176,22 @@ class ShardTxStepPropertySpec extends AnyFunSuite {
       val (whole, wholeStep) = read(f, start, last)
       assert(wholeStep == last.step, s"whole feed: $items")
       cursors.foreach { c =>
-        val (head, headStep) = read(f, start, c)
+        val (batch, headStep) = read(f, start, c, perBatch = true)
         assert(headStep == c.step, s"prefix to byte ${c.pos} of $copyTxs copy txs + $items")
+        // a batch ending at c: one heartbeat last, at c's position and epoch
+        val head =
+          if (c.step.sg.gtid == Vgtid.EmptyGtid) batch
+          else {
+            val hb = batch.last
+            assert(hb(3).toString == "heartbeat" && hb(7) == 0L, s"no batch heartbeat at ${c.pos}")
+            assert(hb(8).toString == Vgtid(Seq(c.step.sg)).json && hb(11) == c.step.epoch,
+              s"batch heartbeat at byte ${c.pos}: ${hb(8)} epoch ${hb(11)}, offset ${c.step}: $items")
+            batch.init
+          }
         val (tail, tailStep) = read(f, c, last)
         assert(tailStep == last.step, s"suffix from byte ${c.pos}: $items")
-        assert(head ++ tail == whole, s"cut at byte ${c.pos} changed records: $items")
+        assert(head ++ tail == whole,
+          s"cut at byte ${c.pos} changed records (${diff(head ++ tail, whole)}): $items")
         boundaries += 1
       }
       epochsSeen ++= cursors.map(_.step.epoch)

@@ -48,12 +48,10 @@ class TransportSpec extends AnyFunSuite {
     VgtidEvent(shard, Vgtid(Seq(ShardGtid("ks", shard, s"MySQL56/feed:1-$seq")))),
     CommitEvent(shard, "ks", 1700000000L + seq))
 
-  private def partition(startGtid: String, endGtid: String,
-      startPos: Long, endPos: Long): VitessCdcPartition =
+  private def partition(startGtid: String, startPos: Long, endPos: Long): VitessCdcPartition =
     VitessCdcPartition(
       "s0", "ks", "s0",
       ShardTxStep(ShardGtid("ks", "s0", startGtid), 0L),
-      ShardTxStep(ShardGtid("ks", "s0", endGtid), 0L),
       emitBoundaries = false,
       tableFilter = TableFilter.fromConfig(None, None),
       startByte = startPos, endByte = endPos)
@@ -78,7 +76,7 @@ class TransportSpec extends AnyFunSuite {
     Files.writeString(dir.resolve("s0.jsonl"), lines.mkString("", "\n", "\n"))
     val fileT = FileFeedTransport(dir.toString, excludeEmptyShards = true)
     assert(fileT.listShards().map(_._1) == Seq("s0"))
-    val p = partition(Vgtid.EmptyGtid, "MySQL56/feed:1-3", 0L, Long.MaxValue)
+    val p = partition(Vgtid.EmptyGtid, 0L, Long.MaxValue)
     val viaFile = drain(new VitessCdcPartitionReader(
       p.copy(file = dir.resolve("s0.jsonl").toString), fileT))
 
@@ -97,7 +95,7 @@ class TransportSpec extends AnyFunSuite {
     val memT = new InMemoryTransport(Map("s0" -> lines))
     // each tx is 5 wire lines; resume from position 5 = after tx 1, with
     // the matching start GTID the offset would carry
-    val p = partition("MySQL56/feed:1-1", "MySQL56/feed:1-3", 5L, Long.MaxValue)
+    val p = partition("MySQL56/feed:1-1", 5L, Long.MaxValue)
     val resumed = drain(new VitessCdcPartitionReader(p, memT))
     assert(resumed.map(_._1) == Seq("c", "c"), s"txs 2 and 3 only: $resumed")
     assert(resumed.flatMap(r => Option(r._3)).mkString.contains("a2"))

@@ -736,6 +736,39 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sql("SELECT count(*) FROM cdc_hb WHERE op = 'c'").first().getLong(0) == 2)
   }
 
+  test("a per-batch heartbeat carries its batch's end epoch across a failover inside it (H1)") {
+    // host a commits id 1, then host b (a failover: a new epoch) ids 2-3.
+    // Each batch's heartbeat is its shard's step at the batch end: the
+    // GTID and the epoch that batch's end offset records, whatever the cut
+    val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdchbfailover"))
+    writeFeed(feedDir, "s0",
+      dml("MySQL56/a:1-1", 1) ++ dml("MySQL56/b:1-1", 2) ++ dml("MySQL56/b:1-2", 3))
+    Seq(Map.empty[String, String], Map("max.txs.per.trigger" -> "1")).foreach { opts =>
+      val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdchbfailoverckpt"))
+      val beats = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long)]()
+      val b0 = spark.readStream.format("vitess-cdc")
+        .option("path", feedDir.toString).option("heartbeat.batch", "true")
+      val q = opts.foldLeft(b0) { case (b, (k, v)) => b.option(k, v) }.load()
+        .writeStream
+        .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], id: Long) =>
+          df.filter("op = 'heartbeat'").select("vgtid", "epoch").collect()
+            .foreach(r => beats.add((id, r.getString(0), r.getLong(1))))
+        }
+        .option("checkpointLocation", ckpt.toString).start()
+      try q.processAllAvailable() finally q.stop()
+      val byBatch = beats.asScala.toSeq
+      val batches = ckpt.resolve("offsets").toFile.list().count(_.forall(_.isDigit))
+      assert(byBatch.map(_._1).sorted == (0L until batches), s"$opts: one heartbeat per batch")
+      byBatch.foreach { case (id, vgtid, epoch) =>
+        val end = VgtidOffset.fromJson(
+          Files.readAllLines(ckpt.resolve(s"offsets/$id")).asScala.last)
+        assert(epoch == end.epochs.get("s0").get, s"$opts batch $id: $vgtid")
+        assert(vgtid == Vgtid(end.vgtid.shardGtid("s0").toSeq).json, s"$opts batch $id")
+      }
+      assert(byBatch.maxBy(_._1)._3 == 1L, s"$opts: the last batch ends on host b")
+    }
+  }
+
   test("interval heartbeats: NOOP at 0, one per elapsed interval with current offset") {
     val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcfeed22"))
     // commit timestamps 1 s apart (insertTx uses 1700000000 + seq)

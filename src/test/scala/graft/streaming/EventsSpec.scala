@@ -130,6 +130,9 @@ class TransactionAssemblerSpec extends AnyFunSuite {
     val txs = TransactionAssembler.assemble(copy.iterator).toVector
     assert(txs.size == 1)
     assert(txs.head.vgtid.contains(vgtid(2)))
+    // the dropped VGTID still moved the shard: it heads the restarted
+    // transaction's events, so a record builder steps it
+    assert(txs.head.events.take(2) == Seq(VgtidEvent("0", vgtid(1)), BeginEvent("0", "ks")))
   }
 
   test("DDL and heartbeat outside a transaction flush immediately with last vgtid") {
@@ -139,8 +142,15 @@ class TransactionAssemblerSpec extends AnyFunSuite {
     val txs = TransactionAssembler.assemble(events.iterator).toVector
     assert(txs.size == 3)
     assert(txs(1).events.head.isInstanceOf[DdlEvent])
-    assert(txs(1).vgtid.contains(vgtid(3))) // inherits position
     assert(txs(2).events.head.isInstanceOf[HeartbeatEvent])
+    // a flush has no VGTID of its own; its records stand at the shard's
+    // last position, the one the builder's step holds
+    assert(txs(1).vgtid.isEmpty && txs(2).vgtid.isEmpty)
+    val rb = new RecordBuilder(new SchemaRegistry, ShardTxStep.fresh("0"))
+    val flushed = txs.flatMap(rb.onTransaction).drop(1)
+    assert(flushed.map(_.op) == Seq("ddl", "heartbeat"))
+    assert(flushed.forall(r => r.vgtid == vgtid(3).json && r.restartVgtid == vgtid(3).json))
+    assert(flushed.head.txId.contains("MySQL56/feed:1-3"))
   }
 
   test("ROW outside a transaction is an error") {
@@ -237,6 +247,20 @@ class RecordBuilderSpec extends AnyFunSuite {
     assert(recs(4).restartVgtid == vgtid(5).json)
     assert(recs(4).vgtid == vgtid(6).json) // source.vgtid = current tx
     assert(recs(5).restartVgtid == vgtid(6).json)
+
+    // a bare VGTID (a filtered transaction's position) then a DDL flush
+    // between them: the shard's position at the boundary before tx 2 is
+    // the bare VGTID, for the DDL and for tx 2's records alike
+    val moved = build(insertTx(5, 1, Some(1)) ++
+      Seq(VgtidEvent("0", vgtid(6)), DdlEvent("0", "ks", "ALTER TABLE t1 ADD c INT")) ++
+      insertTx(7, 2, Some(2)), boundaries = true)
+    assert(moved.map(_.op) == Seq("begin", "c", "end", "ddl", "begin", "c", "end"))
+    val ddl = moved(3)
+    assert(ddl.vgtid == vgtid(6).json && ddl.restartVgtid == vgtid(6).json)
+    assert(ddl.txId.contains("MySQL56/feed:1-6"))
+    assert(moved(4).restartVgtid == vgtid(6).json && moved(5).restartVgtid == vgtid(6).json)
+    assert(moved(5).vgtid == vgtid(7).json)
+    assert(moved(6).restartVgtid == vgtid(7).json)
   }
 
   test("per-table collection order is independent; total order is global") {

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * NULL, a zero date on a NOT NULL column, a dropped unknown-type column,
   * an unknown-type primary key, mask / truncate / exclude rules (one on a
   * key column), and a FIELD change mid-stream. Rendered one record per
-  * line as `op|table|before|after|key`. */
+  * line as `op|table|before|after|key|vgtid|restart_vgtid|tx_id|epoch`. */
 object RecordBuilderOutputFixture {
   private def f(name: String, wire: String, colType: String, flags: Long = 0L,
       len: Int = 0, dec: Int = 0): FieldDef = FieldDef(name, wire, colType, len, dec, flags)
@@ -117,7 +117,8 @@ object RecordBuilderOutputFixture {
         RowChange(None, row(Seq(Some("2"), None, None)))))
 
   def render(r: ChangeRecord): String =
-    Seq(r.op, r.table, r.before.orNull, r.after.orNull, r.key.orNull).mkString("|")
+    Seq(r.op, r.table, r.before.orNull, r.after.orNull, r.key.orNull,
+      r.vgtid, r.restartVgtid, r.txId.orNull, r.epoch).mkString("|")
 
   def build(feed: Seq[VEvent], rules: ColumnRules, modes: ValueConversion.TypeModes): Seq[ChangeRecord] = {
     val rb = new RecordBuilder(new SchemaRegistry(modes), ShardTxStep.fresh("0"),
@@ -133,20 +134,28 @@ object RecordBuilderOutputFixture {
 class RecordBuilderOutputSpec extends AnyFunSuite {
   import RecordBuilderOutputFixture._
 
-  // the before / after / key JSON the envelope builder has always emitted
-  // for this fixture; any byte of drift changes every oracle hash
+  // single-shard positions: tx `seq`'s VGTID JSON, its restart offset
+  // (the previous transaction's, `[]` before the first), tx id and epoch
+  private def at(seq: Int) =
+    s"""[{"keyspace":"ks","shard":"0","gtid":"MySQL56/feed:1-$seq","table_p_ks":[]}]"""
+  private def pos(seq: Int): String =
+    s"|${at(seq)}|${if (seq == 1) "[]" else at(seq - 1)}|MySQL56/feed:1-$seq|0"
+
+  // the before / after / key JSON and positions the envelope builder has
+  // always emitted for this fixture; any byte of drift changes every
+  // oracle hash
   private val golden: Seq[String] = Seq(
-    """c|all_types|null|{"id":1,"i16":-7,"i32":2147483647,"f32":1.5,"f64":2.25,"u64":"18446744073709551615","dec":"12.34","txt":"say \"hi\"\ttab é 😀 </script> \\","js":"{\"a\":[1,2]}","blob":"AQJhYg==","bit1":true,"bits":"D8O/","en":"m","st":"a,c","d":"2024-02-29","d_nn":"2024-01-31","tm":45296500000,"dt":"2024-01-02T03:04:05.678","ts":1704164645123456,"yr":2024,"masked":"****","trunc":"abc"}|{"id":1}""",
-    """c|all_types|null|{"id":2,"i16":null,"i32":null,"f32":null,"f64":null,"u64":null,"dec":null,"txt":null,"js":null,"blob":null,"bit1":null,"bits":null,"en":null,"st":null,"d":null,"d_nn":"1970-01-01","tm":null,"dt":null,"ts":null,"yr":null,"masked":null,"trunc":null}|{"id":2}""",
-    """u|all_types|{"id":1,"i16":-7,"i32":2147483647,"f32":1.5,"f64":2.25,"u64":"18446744073709551615","dec":"12.34","txt":"say \"hi\"\ttab é 😀 </script> \\","js":"{\"a\":[1,2]}","blob":"AQJhYg==","bit1":true,"bits":"D8O/","en":"m","st":"a,c","d":"2024-02-29","d_nn":"2024-01-31","tm":45296500000,"dt":"2024-01-02T03:04:05.678","ts":1704164645123456,"yr":2024,"masked":"****","trunc":"abc"}|{"id":1,"i16":-7,"i32":-1,"f32":1.5,"f64":2.25,"u64":"18446744073709551615","dec":"12.34","txt":"second","js":"{\"a\":[1,2]}","blob":"AQJhYg==","bit1":true,"bits":"D8O/","en":"m","st":"a,c","d":"2024-02-29","d_nn":"2024-01-31","tm":45296500000,"dt":"2024-01-02T03:04:05.678","ts":1704164645123456,"yr":2024,"masked":"****","trunc":"ab"}|{"id":1}""",
-    """d|all_types|{"id":2,"i16":null,"i32":null,"f32":null,"f64":null,"u64":null,"dec":null,"txt":null,"js":null,"blob":null,"bit1":null,"bits":null,"en":null,"st":null,"d":null,"d_nn":"1970-01-01","tm":null,"dt":null,"ts":null,"yr":null,"masked":null,"trunc":null}|null|{"id":2}""",
-    """c|unknown_pk|null|{"id":"AQI=","name":"a"}|{"id":"AQI="}""",
-    """c|unknown_pk|null|{"id":"AQM=","name":null}|{"id":"AQM="}""",
-    """c|excl_pk|null|{"v":"v7"}|{"id":null}""",
-    """c|all_types|null|{"id":3,"i16":1,"i32":9223372036854775807,"f32":-0.0,"f64":1.0E-10,"u64":"0","dec":"-0.50","txt":"","js":"null","blob":"","bit1":false,"bits":"AAA=","en":"","st":"","d":"0001-01-01","d_nn":"1999-12-31","tm":-3020399000000,"dt":"2024-12-31T23:59:59.999","ts":0,"yr":1901,"masked":"****","trunc":"x","extra":"zz"}|{"id":3}""",
-    """d|all_types|{"id":3,"i16":1,"i32":9223372036854775807,"f32":-0.0,"f64":1.0E-10,"u64":"0","dec":"-0.50","txt":"","js":"null","blob":"","bit1":false,"bits":"AAA=","en":"","st":"","d":"0001-01-01","d_nn":"1999-12-31","tm":-3020399000000,"dt":"2024-12-31T23:59:59.999","ts":0,"yr":1901,"masked":"****","trunc":"x","extra":"zz"}|null|{"id":3}""",
-    """c|precise|null|{"id":1,"dec":123.450000,"geo":"w78A"}|{"id":1}""",
-    """c|precise|null|{"id":2,"dec":null,"geo":null}|{"id":2}""")
+    """c|all_types|null|{"id":1,"i16":-7,"i32":2147483647,"f32":1.5,"f64":2.25,"u64":"18446744073709551615","dec":"12.34","txt":"say \"hi\"\ttab é 😀 </script> \\","js":"{\"a\":[1,2]}","blob":"AQJhYg==","bit1":true,"bits":"D8O/","en":"m","st":"a,c","d":"2024-02-29","d_nn":"2024-01-31","tm":45296500000,"dt":"2024-01-02T03:04:05.678","ts":1704164645123456,"yr":2024,"masked":"****","trunc":"abc"}|{"id":1}""" + pos(1),
+    """c|all_types|null|{"id":2,"i16":null,"i32":null,"f32":null,"f64":null,"u64":null,"dec":null,"txt":null,"js":null,"blob":null,"bit1":null,"bits":null,"en":null,"st":null,"d":null,"d_nn":"1970-01-01","tm":null,"dt":null,"ts":null,"yr":null,"masked":null,"trunc":null}|{"id":2}""" + pos(1),
+    """u|all_types|{"id":1,"i16":-7,"i32":2147483647,"f32":1.5,"f64":2.25,"u64":"18446744073709551615","dec":"12.34","txt":"say \"hi\"\ttab é 😀 </script> \\","js":"{\"a\":[1,2]}","blob":"AQJhYg==","bit1":true,"bits":"D8O/","en":"m","st":"a,c","d":"2024-02-29","d_nn":"2024-01-31","tm":45296500000,"dt":"2024-01-02T03:04:05.678","ts":1704164645123456,"yr":2024,"masked":"****","trunc":"abc"}|{"id":1,"i16":-7,"i32":-1,"f32":1.5,"f64":2.25,"u64":"18446744073709551615","dec":"12.34","txt":"second","js":"{\"a\":[1,2]}","blob":"AQJhYg==","bit1":true,"bits":"D8O/","en":"m","st":"a,c","d":"2024-02-29","d_nn":"2024-01-31","tm":45296500000,"dt":"2024-01-02T03:04:05.678","ts":1704164645123456,"yr":2024,"masked":"****","trunc":"ab"}|{"id":1}""" + pos(2),
+    """d|all_types|{"id":2,"i16":null,"i32":null,"f32":null,"f64":null,"u64":null,"dec":null,"txt":null,"js":null,"blob":null,"bit1":null,"bits":null,"en":null,"st":null,"d":null,"d_nn":"1970-01-01","tm":null,"dt":null,"ts":null,"yr":null,"masked":null,"trunc":null}|null|{"id":2}""" + pos(2),
+    """c|unknown_pk|null|{"id":"AQI=","name":"a"}|{"id":"AQI="}""" + pos(2),
+    """c|unknown_pk|null|{"id":"AQM=","name":null}|{"id":"AQM="}""" + pos(2),
+    """c|excl_pk|null|{"v":"v7"}|{"id":null}""" + pos(2),
+    """c|all_types|null|{"id":3,"i16":1,"i32":9223372036854775807,"f32":-0.0,"f64":1.0E-10,"u64":"0","dec":"-0.50","txt":"","js":"null","blob":"","bit1":false,"bits":"AAA=","en":"","st":"","d":"0001-01-01","d_nn":"1999-12-31","tm":-3020399000000,"dt":"2024-12-31T23:59:59.999","ts":0,"yr":1901,"masked":"****","trunc":"x","extra":"zz"}|{"id":3}""" + pos(3),
+    """d|all_types|{"id":3,"i16":1,"i32":9223372036854775807,"f32":-0.0,"f64":1.0E-10,"u64":"0","dec":"-0.50","txt":"","js":"null","blob":"","bit1":false,"bits":"AAA=","en":"","st":"","d":"0001-01-01","d_nn":"1999-12-31","tm":-3020399000000,"dt":"2024-12-31T23:59:59.999","ts":0,"yr":1901,"masked":"****","trunc":"x","extra":"zz"}|null|{"id":3}""" + pos(4),
+    """c|precise|null|{"id":1,"dec":123.450000,"geo":"w78A"}|{"id":1}""" + pos(1),
+    """c|precise|null|{"id":2,"dec":null,"geo":null}|{"id":2}""" + pos(1))
 
   test("before, after and key JSON are byte-identical to the pinned envelope output") {
     val got = records().map(render)
