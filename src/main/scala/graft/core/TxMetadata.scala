@@ -160,9 +160,10 @@ object EpochProvider {
 }
 
 /** One shard's per-transaction state — its position, epoch and
-  * interval-heartbeat baseline — and the three rules that move it. The
-  * driver's offset fold, the partition reader and the batch pipeline all
-  * step this one value over the same feed, so a batch or split cut (which
+  * interval-heartbeat baseline — and the three rules that move it. Two
+  * callers step this one value over the same feed: the driver's offset
+  * fold (`TxBoundaryFold`) and `RecordBuilder`, which the partition
+  * reader and the batch pipeline both run. So a batch or split cut (which
   * carries exactly this state) cannot change rows or epochs (reference:
   * VitessOrderedTransactionContext.java).
   *
@@ -199,7 +200,8 @@ final case class ShardTxStep(sg: ShardGtid, epoch: Long, hbMs: Long = ShardTxSte
   def after(other: ShardTxStep): Boolean =
     epoch > other.epoch || (epoch == other.epoch && CopyProgress.compare(sg, other.sg) > 0)
 
-  /** Heartbeat rule: an admitted COMMIT at `tsMs`. */
+  /** Heartbeat rule: an admitted COMMIT at `tsMs`; called by the fold and
+    * by `RecordBuilder`, which emits the heartbeat record. */
   def onCommit(tsMs: Long, intervalMs: Long): ShardTxStep =
     if (intervalMs > 0 && (hbMs == ShardTxStep.NoBaseline || tsMs - hbMs >= intervalMs))
       copy(hbMs = tsMs)

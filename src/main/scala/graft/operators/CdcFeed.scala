@@ -113,8 +113,7 @@ object CdcFeed extends Serializable {
       multiShardVgtid: Boolean = false,
       decimalPrice: Boolean = false,
       hostFlip: Boolean = false,
-      shardNames: Seq[String] = Nil,
-      keepShards: Set[String] = Set.empty): Dataset[FeedLine] = {
+      shardNames: Seq[String] = Nil): Dataset[FeedLine] = {
     import s.implicits._
     // decimalPrice: o_totalprice streams as a DECIMAL(12,2) wire column
     // (2-dp text, the values are exact cents) instead of FLOAT64
@@ -130,17 +129,7 @@ object CdcFeed extends Serializable {
       else element_at(
         array(shardNames.map(lit): _*), (col("o_orderkey") % nShards).cast("int") + 1)
     val w = Window.partitionBy("shard").orderBy("o_orderkey")
-    // keepShards drops unwanted shards BEFORE the rank window and the
-    // render: per-shard ranks are computed within each shard alone, so
-    // filtering early is result-identical for the kept shards while a
-    // post-render filter would serialize every dropped shard's events
-    // first (the reshard gate keeps 1 of 4 shards)
-    val shardScoped = {
-      val withShard = Tables.orders(s, d).withColumn("shard", shardCol)
-      if (keepShards.isEmpty) withShard
-      else withShard.filter(col("shard").isin(keepShards.toSeq.sorted: _*))
-    }
-    val src = spreadForRender(shardScoped
+    val src = spreadForRender(Tables.orders(s, d).withColumn("shard", shardCol)
       .withColumn("tx", row_number().over(w).cast("long"))
       // hostFlip: the GTID source UUID changes after the first half of each
       // shard's transactions (a failover) — the epoch must bump exactly

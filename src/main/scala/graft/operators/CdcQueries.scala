@@ -621,8 +621,8 @@ object CdcQueries {
     val waves = stageWaves(s"rs:$d", s) {
       Seq(
         CdcFeed.orders(s, d, nShards = 2, hostFlip = true, shardNames = Seq("-80", "80-")),
-        CdcFeed.orders(s, d, nShards = 4, shardNames = Seq("p0", "p1", "p2", "40-c0"),
-          keepShards = Set("40-c0")))
+        CdcFeed.orders(s, d, nShards = 4, shardNames = Seq("p0", "p1", "p2", "40-c0"))
+          .filter(col("shard") === "40-c0"))
     }
     releasing(feedDir, ckpt) {
       copyWave(waves(0), feedDir)

@@ -12,18 +12,17 @@ import graft.streaming._
   *    lastpk), transaction epoch (A3/A4/A5) and interval-heartbeat
   *    baseline (commit-time ms)
   *  - `schemas` — latest FIELD wire line per table (schema checkpoint)
-  *  - `admitted` — position changes folded since the fold was seeded
   */
 private[sources] final case class ShardCursor(
     pos: Long,
     step: ShardTxStep,
-    schemas: Map[String, String],
-    admitted: Long)
+    schemas: Map[String, String])
 
 /** The transaction-boundary fold over one shard's wire lines: tracks
   * BEGIN/COMMIT nesting, steps the shard's [[ShardTxStep]] over every
   * VGTID line and every COMMIT of a transaction with a position (the
-  * rules the partition reader applies to the same lines), and
+  * rules `RecordBuilder` applies to the same lines in the partition
+  * reader), and
   * checkpoints FIELD (schema) lines —
   * publishing a [[ShardCursor]] only at out-of-transaction line
   * boundaries, so any published cursor is a safe batch cut.
@@ -44,13 +43,17 @@ private[sources] final class TxBoundaryFold(
   private var txHasPos = false
   private var step = seed.step
   private var tableSchemas = seed.schemas
-  private var admitted = seed.admitted
+  private var moves = 0L
+  private var admittedAtSafe = 0L
   private var safeCursor = seed
   private var lastSplitPos = seed.pos
   private var splitAcc = Vector.empty[ShardCursor]
 
   /** Last transaction-safe cursor (== seed until the first safe line). */
   def safe: ShardCursor = safeCursor
+
+  /** Position changes folded from the seed up to [[safe]]. */
+  def admitted: Long = admittedAtSafe
 
   /** Intra-shard split cursors: one full [[ShardCursor]] roughly every
     * `splitBytes` of folded bytes, always at a transaction-safe boundary
@@ -84,13 +87,14 @@ private[sources] final class TxBoundaryFold(
             val from = step.sg
             step = step.onPosition(sg.copy(keyspace = keyspace, shard = shard))
             if (inTx) txHasPos = true
-            if (step.sg != from) admitted += 1
+            if (step.sg != from) moves += 1
           }
         case _ =>
       }
     }
     if (!inTx) {
-      safeCursor = ShardCursor(posAfter, step, tableSchemas, admitted)
+      safeCursor = ShardCursor(posAfter, step, tableSchemas)
+      admittedAtSafe = moves
       if (safeCursor.pos - lastSplitPos >= splitBytes) {
         splitAcc :+= safeCursor
         lastSplitPos = safeCursor.pos

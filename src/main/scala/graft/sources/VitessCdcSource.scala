@@ -230,8 +230,7 @@ object VgtidOffset {
                 Option(c.get("hb")).map(_.asLong()).getOrElse(ShardTxStep.NoBaseline)),
               Option(c.get("schemas")).map(_.fields().asScala
                 .map(t => t.getKey -> t.getValue.asText()).toMap)
-                .getOrElse(Map.empty[String, String]),
-              admitted = 0L)
+                .getOrElse(Map.empty[String, String]))
           }.toSeq
         }.toMap
       }.getOrElse(Map.empty[String, Seq[ShardCursor]]))
@@ -614,7 +613,8 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     * `start`, and history ends at the last COMMIT or bare VGTID before it. */
   private def historyEnd(shard: String, file: String, start: ShardCursor): ShardCursor = {
     var end = start
-    foldShard(shard, file, start, sizeOf(file), heartbeatMs = 0L, Long.MaxValue) { (line, safe) =>
+    val fold = new TxBoundaryFold(shard, keyspace, start, heartbeatIntervalMs = 0L, Long.MaxValue)
+    foldShard(file, fold, sizeOf(file)) { (line, safe) =>
       safe.exists(_.step.after(start.step)) || {
         if (line.startsWith(FeedSlice.CommitPrefix) || line.startsWith(FeedSlice.VgtidPrefix))
           safe.foreach(c => end = c)
@@ -624,17 +624,14 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     end
   }
 
-  /** Feed `file`'s bytes from `seed.pos` up to `to` (nothing when the feed
-    * is gone) through a [[TxBoundaryFold]] seeded at `seed`, stopping after
-    * the first line for which `stop(line, safe)` holds; `safe` is the
-    * fold's cursor when that line ends outside a transaction. */
-  private def foldShard(
-      shard: String, file: String, seed: ShardCursor, to: Option[Long],
-      heartbeatMs: Long, splitBytes: Long)(
-      stop: (String, Option[ShardCursor]) => Boolean): TxBoundaryFold = {
-    val fold = new TxBoundaryFold(shard, keyspace, seed, heartbeatMs, splitBytes)
+  /** Feed `file`'s bytes from the fresh `fold`'s seed position up to `to`
+    * (nothing when the feed is gone) through `fold`, stopping after the
+    * first line for which `stop(line, safe)` holds; `safe` is the fold's
+    * cursor when that line ends outside a transaction. */
+  private def foldShard(file: String, fold: TxBoundaryFold, to: Option[Long])(
+      stop: (String, Option[ShardCursor]) => Boolean): Unit = {
     val slice = to.flatMap { to =>
-      try Some(transport.open(file, seed.pos, to))
+      try Some(transport.open(file, fold.safe.pos, to))
       catch { case _: NoSuchFileException => None }
     }
     slice.foreach { sl =>
@@ -648,7 +645,6 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
         }
       } finally sl.close()
     }
-    fold
   }
 
   /** `file`'s size; None for a feed deleted between listing and sizing
@@ -780,13 +776,12 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
         Future {
           // stop at the first transaction boundary past either cap (the
           // measured size when none is set)
-          val fold = foldShard(shard, file, seed, size, heartbeatIntervalMs, splitBytes) {
-            (_, safe) => safe.exists(c =>
-              c.admitted >= maxTxsPerTrigger || c.pos - seed.pos >= maxBytesPerTrigger)
+          val fold = new TxBoundaryFold(shard, keyspace, seed, heartbeatIntervalMs, splitBytes)
+          foldShard(file, fold, size) { (_, safe) =>
+            safe.exists(c =>
+              fold.admitted >= maxTxsPerTrigger || c.pos - seed.pos >= maxBytesPerTrigger)
           }
-          // admitted is fold-internal progress, meaningless to readers —
-          // zero it so offset JSON round-trips compare equal
-          (fold.safe, fold.splits.filter(_.pos < fold.safe.pos).map(_.copy(admitted = 0L)))
+          fold
         }
       }, Duration.Inf)
     }
@@ -795,7 +790,9 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     val schemasOut = Map.newBuilder[String, Map[String, String]]
     val hbMsOut = Map.newBuilder[String, Long]
     val splitsOut = Map.newBuilder[String, Seq[ShardCursor]]
-    val gtids = shards.zip(folded).map { case ((shard, _, _, _), (cursor, splits)) =>
+    val gtids = shards.zip(folded).map { case ((shard, _, _, _), fold) =>
+      val cursor = fold.safe
+      val splits = fold.splits.filter(_.pos < cursor.pos)
       epochs = epochs.put(shard, cursor.step.epoch)
       positionsOut += shard -> cursor.pos
       if (cursor.schemas.nonEmpty) schemasOut += shard -> cursor.schemas
@@ -821,7 +818,7 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     if (built.splits.isEmpty && from.splits.nonEmpty &&
       built.copy(splits = from.splits).json() == from.json()) from
     else {
-      admittedTotal += folded.map(_._1.admitted).sum
+      admittedTotal += folded.map(_.admitted).sum
       built
     }
   }
@@ -841,8 +838,7 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
         o.vgtid.shardGtid(shard).getOrElse(ShardGtid(keyspace, shard, Vgtid.EmptyGtid)),
         seedEpoch(shard, EpochProvider.applyGeneration(o.epochs, o.generation, generation)),
         o.hbMs.getOrElse(shard, ShardTxStep.NoBaseline)),
-      o.schemas.getOrElse(shard, Map.empty[String, String]),
-      admitted = 0L)
+      o.schemas.getOrElse(shard, Map.empty[String, String]))
 
   /** One partition per segment of each shard's byte window
     * [start position, end position); a shard with no new bytes plans none
@@ -852,49 +848,31 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     val s = start.asInstanceOf[VgtidOffset]
     val e = end.asInstanceOf[VgtidOffset]
     shardFiles.flatMap { case (shard, file) =>
-      val batchStart = cursorAt(s, shard)
-      val startByte = batchStart.pos
+      val from = cursorAt(s, shard)
       val endByte = e.positions.getOrElse(shard, 0L)
-      if (startByte >= endByte) Nil
+      if (from.pos >= endByte) Nil
       else {
         // Intra-shard fan-out: the end offset may carry split cursors —
         // transaction-safe mid-shard seeds recorded by the fold (see
-        // latestOffset's split size). Each segment's reader seeds exactly
-        // like a batch boundary (position, GTID, epoch, schema
-        // checkpoint, heartbeat baseline all from its cursor), so the
+        // latestOffset's split size). A segment starts at its cursor
+        // exactly like a batch starts at its offset's, so the
         // single-partition case is just the zero-splits instance.
         val cuts = e.splits.getOrElse(shard, Nil)
-          .filter(c => c.pos > startByte && c.pos < endByte)
+          .filter(c => c.pos > from.pos && c.pos < endByte)
           .sortBy(_.pos)
-        (batchStart +: cuts).zip(cuts.map(_.pos) :+ endByte).map { case (seed, segEndByte) =>
-          VitessCdcPartition(
-            shard, keyspace, file, seed.step, emitBoundaries, tableFilter,
-            // per-batch (not per-segment) liveness: only the last
-            // segment, which ends at the batch's end offset, emits the
-            // batch heartbeat for its shard
-            heartbeatPerBatch && segEndByte == endByte,
-            effectiveSnapshotTables,
-            typeModes, heartbeatIntervalMs,
-            includeSchemaChanges,
-            seed.pos, segEndByte,
-            // schema checkpoint as of the SEGMENT start (in-segment
-            // FIELD lines are read by the reader itself); sorted for
-            // determinism
-            seed.schemas.toSeq.sortBy(_._1).map(_._2)): InputPartition
+        // per-batch (not per-segment) liveness: only the last segment,
+        // which ends at the batch's end offset, emits the batch heartbeat
+        (from +: cuts).zip(cuts.map(_.pos) :+ endByte).map { case (seed, to) =>
+          VitessCdcPartition(shard, file, seed, to, heartbeatPerBatch && to == endByte)
         }
       }
-    }.toArray
+    }.toArray[InputPartition]
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // the factory ships to executors; capture the transport explicitly so
-    // the closure serializes it, not the whole stream object
-    val t = transport
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new VitessCdcPartitionReader(partition.asInstanceOf[VitessCdcPartition], t)
-    }
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    VitessCdcReaderFactory(
+      transport, keyspace, emitBoundaries, tableFilter, effectiveSnapshotTables, typeModes,
+      heartbeatIntervalMs, includeSchemaChanges)
 
   /** Streaming-source metrics surfaced into StreamingQueryProgress
     * (reference `metrics/VitessStreamingChangeEventSourceMetrics.java:22-30`
@@ -939,99 +917,79 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
   override def stop(): Unit = transport.close()
 }
 
+/** One segment of a shard's batch window: the fold's cursor at the
+  * segment start (byte position, step, schema checkpoint) and the end
+  * byte. `batchHeartbeat` marks the segment that ends at the batch's end
+  * offset. Everything stream-wide travels once, in the reader factory. */
 final case class VitessCdcPartition(
     shard: String,
-    keyspace: String,
     file: String, // transport locator (feed-file path for the file feed)
-    start: ShardTxStep, // position incl. copy lastpk, epoch, heartbeat baseline
-    emitBoundaries: Boolean,
-    tableFilter: TableFilter,
-    heartbeatPerBatch: Boolean = false,
+    seed: ShardCursor,
+    endByte: Long,
+    batchHeartbeat: Boolean)
+    extends InputPartition
+
+/** The stream-wide reader settings, shipped to executors once per batch. */
+final case class VitessCdcReaderFactory(
+    transport: VStreamTransport,
+    keyspace: String,
+    emitBoundaries: Boolean = false,
+    tableFilter: TableFilter = TableFilter.acceptAll,
     snapshotTables: Option[TableFilter] = None,
     typeModes: ValueConversion.TypeModes = ValueConversion.TypeModes.default,
     heartbeatIntervalMs: Long = 0L, // 0 = NOOP heartbeat
-    includeSchemaChanges: Boolean = true,
-    startByte: Long = 0L, // batch byte window [startByte, endByte)
-    endByte: Long = Long.MaxValue,
-    schemaLines: Seq[String] = Nil) // FIELD wire lines seen before startByte
-    extends InputPartition
+    includeSchemaChanges: Boolean = true)
+    extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new VitessCdcPartitionReader(partition.asInstanceOf[VitessCdcPartition], this)
+}
 
-/** Executor-side reader: seeks to the batch's byte window
-  * [startByte, endByte) of the shard feed and delivers every transaction
-  * in it — the byte window is the batch. It assembles transactions and
-  * steps the shard's [[ShardTxStep]] over every line exactly as the
-  * driver's fold did, so each transaction takes the epoch the offsets
-  * record and every position a record or heartbeat carries is the
-  * step's, and decodes them against the schema checkpoint carried by the
-  * partition (FIELD lines seen before the window). */
+/** Executor-side reader: seeks to the segment's byte window
+  * [seed.pos, endByte) of the shard feed and delivers every transaction
+  * in it — the byte window is the batch. It runs `CdcPipeline`'s loop:
+  * assembled transactions into one [[RecordBuilder]] seeded with the
+  * fold's step and schema checkpoint, which applies every per-transaction
+  * rule (the fold's, over the same lines), so each transaction takes the
+  * epoch the offsets record and every position a record or heartbeat
+  * carries is the step's. */
 class VitessCdcPartitionReader(
     p: VitessCdcPartition,
-    transport: VStreamTransport) extends PartitionReader[InternalRow] {
+    f: VitessCdcReaderFactory) extends PartitionReader[InternalRow] {
 
   // E1: transient I/O on stream open is retried with backoff; everything
   // else surfaces to Spark's task retry + restart-from-checkpoint
   private val slice =
-    Retry.withRetries(maxAttempts = 3)(transport.open(p.file, p.startByte, p.endByte))
+    Retry.withRetries(maxAttempts = 3)(f.transport.open(p.file, p.seed.pos, p.endByte))
 
   private val rb = {
-    val registry = new SchemaRegistry(p.typeModes)
-    // replay the checkpointed schema lines (a real VStream re-sends FIELD
-    // events on reconnect; the file feed can't, so the offset carries them)
-    p.schemaLines.foreach { line =>
-      VEventJson.read(line) match {
-        case f: FieldEvent => registry.update(p.shard, f)
-        case _ =>
-      }
-    }
+    val registry = new SchemaRegistry(f.typeModes)
+    // replay the checkpointed schema lines, sorted for determinism (a real
+    // VStream re-sends FIELD events on reconnect; the file feed can't, so
+    // the offset carries them)
+    p.seed.schemas.toSeq.sortBy(_._1).map(e => VEventJson.read(e._2))
+      .collect { case fe: FieldEvent => fe }.foreach(registry.update(p.shard, _))
     new RecordBuilder(
-      registry, p.start, p.emitBoundaries,
-      tableFilter = p.tableFilter,
-      snapshotTableFilter = p.snapshotTables, typeModes = p.typeModes)
+      registry, p.seed.step, f.emitBoundaries,
+      tableFilter = f.tableFilter, snapshotTableFilter = f.snapshotTables,
+      typeModes = f.typeModes, includeSchemaChanges = f.includeSchemaChanges,
+      heartbeatIntervalMs = f.heartbeatIntervalMs)
   }
 
   /** The shard's per-transaction state as of the last line read. */
   private[sources] def step: ShardTxStep = rb.step
 
   private val rows: Iterator[InternalRow] = {
-    val events = slice.lines.map(VEventJson.read)
-    val records = TransactionAssembler.assemble(events).flatMap { tx =>
-      val pos = tx.vgtid.flatMap(_.shardGtid(p.shard))
-      // include.schema.changes=false: DDL records stay off the stream
-      val recs = rb.onTransaction(tx).filter(rec => p.includeSchemaChanges || rec.op != "ddl")
-      // H1 interval heartbeats: one heartbeat record per committed
-      // transaction with a position whose commit time is at least
-      // `heartbeatIntervalMs` past the previous baseline (reference
-      // VitessHeartbeatImpl.java:47-77; 0 = NOOP). The baseline is seeded from the CHECKPOINT
-      // and the driver's offset fold applies the identical rule, so the
-      // cadence survives batch boundaries. Event-time driven:
-      // deterministic under replay. Emission is per-tx (not
-      // per-record), so fully-filtered stretches still heartbeat —
-      // exactly when consumers need liveness.
-      if (pos.isEmpty || !tx.events.lastOption.exists(_.isInstanceOf[CommitEvent])) recs
-      else {
-        val tsMs = tx.commitTsSec * 1000L
-        val baseline = rb.step.hbMs
-        rb.step = rb.step.onCommit(tsMs, p.heartbeatIntervalMs)
-        // the first commit only seeds the baseline
-        if (rb.step.hbMs == baseline || baseline == ShardTxStep.NoBaseline) recs
-        else {
-          // at the step after the commit, like a standalone flush
-          val at = rb.positionJson
-          recs :+ ChangeRecord(
-            p.shard, p.keyspace, "", "heartbeat", None, None, None,
-            tsMs, at, at, None, rb.step.epoch, None, 0L, 0L)
-        }
-      }
-    }
+    val records =
+      TransactionAssembler.assemble(slice.lines.map(VEventJson.read)).flatMap(rb.onTransaction)
     // H1: one liveness record per shard per batch carrying the end offset
     // — the step after the last segment, read once the records are drained
     // (reference VitessHeartbeatImpl.java:47-77 — emitted alongside data;
     // skipped while no offset exists yet, i.e. a fresh empty start)
     def heartbeat: Iterator[ChangeRecord] =
-      if (p.heartbeatPerBatch && rb.step.sg.gtid != Vgtid.EmptyGtid) {
+      if (p.batchHeartbeat && rb.step.sg.gtid != Vgtid.EmptyGtid) {
         val at = Vgtid(Seq(rb.step.sg)).json
         Iterator.single(ChangeRecord(
-          p.shard, p.keyspace, "", "heartbeat", None, None, None,
+          p.shard, f.keyspace, "", "heartbeat", None, None, None,
           0L, at, at, None, rb.step.epoch, None, 0L, 0L))
       } else Iterator.empty
     (records ++ heartbeat).map(VitessCdc.toInternalRow)

@@ -92,28 +92,45 @@ final case class ChangeRecord(
   * step's epoch and its GTID's rank, and emits optional BEGIN/END
   * boundary records (reference: VitessChangeRecordEmitter.java:56-132,
   * VitessOrderedTransactionStructMaker.java:39-50, SourceInfo.java:105-130).
-  * One instance per shard reader; `step` carries the shard's
-  * [[ShardTxStep]] across units and is the only position it tracks:
+  * One instance per shard reader; [[step]] carries the shard's
+  * [[ShardTxStep]] across units, is the only position it tracks, and
+  * moves only here, by the rules the driver's offset fold applies to the
+  * same lines:
   *
   *  - a transaction's records carry as `restartVgtid` the step's position
   *    before the transaction, and its own VGTID event's JSON as `vgtid`;
   *    the END record carries the transaction's own position (O1/O2);
   *  - a standalone DDL / heartbeat flush carries the step's position as
   *    `vgtid`, `restartVgtid` and `txId`;
-  *  - every VGTID the assembler yields, bare ones included, steps it.
+  *  - every VGTID the assembler yields, bare ones included, steps it;
+  *  - H1 interval heartbeat (`heartbeatIntervalMs` > 0; 0 = NOOP): the
+  *    COMMIT of a transaction with a position steps its heartbeat
+  *    baseline, and when that moves a baseline already set, a heartbeat
+  *    record at the step's position follows the transaction's records
+  *    (reference VitessHeartbeatImpl.java:47-77). Event-time driven, so
+  *    replay is deterministic, and per transaction, so fully filtered
+  *    stretches still heartbeat.
   *
+  * `includeSchemaChanges = false` keeps DDL records off the stream.
   * Positions are this shard's own entry, serialized once each. */
 final class RecordBuilder(
     registry: SchemaRegistry,
-    var step: ShardTxStep,
+    start: ShardTxStep,
     emitTransactionBoundaries: Boolean = false,
     tableFilter: TableFilter = TableFilter.acceptAll,
     columnRules: ColumnRules = ColumnRules.none,
     convertFailureMode: ConvertFailureMode = ConvertFailureMode.Fail,
     snapshotTableFilter: Option[TableFilter] = None,
-    typeModes: ValueConversion.TypeModes = ValueConversion.TypeModes.default) {
+    typeModes: ValueConversion.TypeModes = ValueConversion.TypeModes.default,
+    includeSchemaChanges: Boolean = true,
+    heartbeatIntervalMs: Long = 0L) {
 
   private val mapper = new ObjectMapper()
+
+  private var current = start
+
+  /** The shard's step as of the last transaction built. */
+  def step: ShardTxStep = current
 
   // the last position serialized: a transaction's restart offset is the
   // previous one's position, so each position is written at most once
@@ -122,8 +139,8 @@ final class RecordBuilder(
 
   /** [[step]]'s position as this shard's VGTID JSON; `[]` before it has one. */
   def positionJson: String = {
-    if (step.sg != jsonAt) {
-      jsonAt = step.sg
+    if (current.sg != jsonAt) {
+      jsonAt = current.sg
       jsonOfAt = if (jsonAt.hasPosition) Vgtid(Seq(jsonAt)).json else "[]"
     }
     jsonOfAt
@@ -139,21 +156,25 @@ final class RecordBuilder(
     // phase) need them — and every VGTID steps the shard, in feed order.
     tx.events.foreach {
       case f: FieldEvent => { registry.update(tx.shard, f); () }
-      case VgtidEvent(_, v) => v.shardGtid(tx.shard).foreach(sg => step = step.onPosition(sg))
+      case VgtidEvent(_, v) => v.shardGtid(tx.shard).foreach(sg => current = current.onPosition(sg))
       case _ =>
     }
 
     // a VGTID event that lists only this shard already holds the
     // position's JSON: the next restart offset reuses it
     tx.vgtid.foreach { v =>
-      if (step.sg.hasPosition && v.shardGtids == Seq(step.sg)) { jsonAt = step.sg; jsonOfAt = v.json }
+      if (current.sg.hasPosition && v.shardGtids == Seq(current.sg)) {
+        jsonAt = current.sg
+        jsonOfAt = v.json
+      }
     }
 
     val isDml = tx.events.exists(_.isInstanceOf[RowEvent])
     // a flush has no VGTID of its own: it stands at the step's position
     val vgtidJson = tx.vgtid.fold(positionJson)(_.json)
-    val txId = if (tx.vgtid.isDefined) tx.txId else Option.when(step.sg.hasPosition)(step.sg.gtid)
-    val epoch = step.epoch
+    val txId =
+      if (tx.vgtid.isDefined) tx.txId else Option.when(current.sg.hasPosition)(current.sg.gtid)
+    val epoch = current.epoch
     val rank = if (isDml) txId.map(Rank.of(_).toString) else None
 
     if (emitTransactionBoundaries && isDml)
@@ -207,7 +228,7 @@ final class RecordBuilder(
           }
         }
         }
-      case d: DdlEvent =>
+      case d: DdlEvent if includeSchemaChanges =>
         val ex = DdlMetadata.extract(d.statement)
         val payload = mapper.createObjectNode()
         payload.put("statement", d.statement)
@@ -228,6 +249,19 @@ final class RecordBuilder(
     if (emitTransactionBoundaries && isDml)
       out += ChangeRecord(tx.shard, tx.keyspace, "", "end", None, None, None,
         tsMs, vgtidJson, positionJson, txId, epoch, rank, totalOrder, 0L)
+
+    // H1: the first commit only seeds the baseline; the heartbeat stands
+    // at the step after the commit, like a standalone flush
+    if (heartbeatIntervalMs > 0 && tx.vgtid.exists(_.shardGtid(tx.shard).isDefined) &&
+      tx.events.lastOption.exists(_.isInstanceOf[CommitEvent])) {
+      val baseline = current.hbMs
+      current = current.onCommit(tsMs, heartbeatIntervalMs)
+      if (baseline != ShardTxStep.NoBaseline && current.hbMs != baseline) {
+        val at = positionJson
+        out += ChangeRecord(tx.shard, tx.keyspace, "", "heartbeat", None, None, None,
+          tsMs, at, at, None, current.epoch, None, 0L, 0L)
+      }
+    }
 
     out.result()
   }

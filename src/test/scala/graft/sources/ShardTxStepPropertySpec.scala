@@ -15,9 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * lastpk progress — every safe boundary the fold publishes must hold the
   * state the reader reaches over the same prefix, a window cut at that
   * boundary must not change any column of any record, and a batch ending
-  * there must emit its per-batch heartbeat at that state. No streaming
-  * query: the fold and the reader run directly over a feed file. Seeded,
-  * so a failure reproduces. */
+  * there must emit its per-batch heartbeat at that state. The batch
+  * pipeline (`CdcPipeline`) must give the uncut reader's records. No
+  * streaming query: the fold, the reader and the pipeline run directly
+  * over a feed file. Seeded, so a failure reproduces. */
 class ShardTxStepPropertySpec extends AnyFunSuite {
 
   private val IntervalMs = 2000L
@@ -120,7 +121,7 @@ class ShardTxStepPropertySpec extends AnyFunSuite {
 
   /** Every cursor the fold publishes over the whole feed, in order. */
   private def foldCursors(file: String): Seq[ShardCursor] = {
-    val seed = ShardCursor(0L, fresh, Map.empty, 0L)
+    val seed = ShardCursor(0L, fresh, Map.empty)
     val fold = new TxBoundaryFold("s0", "ks", seed, IntervalMs, Long.MaxValue)
     val slice = new FeedSlice(file, 0L)
     val out = Vector.newBuilder[ShardCursor]
@@ -140,12 +141,10 @@ class ShardTxStepPropertySpec extends AnyFunSuite {
     * final step. */
   private def read(file: String, from: ShardCursor, to: ShardCursor, perBatch: Boolean = false)
       : (Seq[Seq[Any]], ShardTxStep) = {
-    val p = VitessCdcPartition(
-      "s0", "ks", file, from.step, emitBoundaries = false,
-      tableFilter = TableFilter.acceptAll, heartbeatPerBatch = perBatch,
-      heartbeatIntervalMs = IntervalMs, startByte = from.pos, endByte = to.pos,
-      schemaLines = from.schemas.values.toSeq)
-    val r = new VitessCdcPartitionReader(p, FileFeedTransport(new java.io.File(file).getParent, true))
+    val p = VitessCdcPartition("s0", file, from, to.pos, batchHeartbeat = perBatch)
+    val t = FileFeedTransport(new java.io.File(file).getParent, true)
+    val r = new VitessCdcPartitionReader(
+      p, VitessCdcReaderFactory(t, "ks", heartbeatIntervalMs = IntervalMs))
     val out = Vector.newBuilder[Seq[Any]]
     try while (r.next()) out += r.get().toSeq(VitessCdc.Schema)
     finally r.close()
@@ -161,16 +160,21 @@ class ShardTxStepPropertySpec extends AnyFunSuite {
       }.mkString("; ")
     }.getOrElse("")
 
+  /** Write `events` as the feed file `s0.jsonl` in `dir`; its wire lines. */
+  private def writeFeed(dir: java.nio.file.Path, events: Seq[VEvent]): Seq[String] = {
+    val lines = events.map(VEventJson.write)
+    Files.writeString(dir.resolve("s0.jsonl"), lines.mkString("", "\n", "\n"))
+    lines
+  }
+
   test("the fold's cursor equals the reader's state at every safe boundary; cuts change no record") {
     val dir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("shardtxstep"))
     var epochsSeen = Set.empty[Long]
     var boundaries = 0
     forAll(200) { case (copyTxs, items) =>
-      val events = render(copyTxs, items)
-      val file = dir.resolve("s0.jsonl")
-      Files.writeString(file, events.map(VEventJson.write).mkString("", "\n", "\n"))
-      val f = file.toString
-      val start = ShardCursor(0L, fresh, Map.empty, 0L)
+      writeFeed(dir, render(copyTxs, items))
+      val f = dir.resolve("s0.jsonl").toString
+      val start = ShardCursor(0L, fresh, Map.empty)
       val cursors = foldCursors(f)
       val last = cursors.last
       val (whole, wholeStep) = read(f, start, last)
@@ -200,5 +204,26 @@ class ShardTxStepPropertySpec extends AnyFunSuite {
     assert(epochsSeen.max >= 3, s"epochs seen: $epochsSeen")
     assert(replicaTxs > 20, s"only $replicaTxs replica transactions")
     assert(boundaries > 1000, s"only $boundaries boundaries checked")
+  }
+
+  test("the batch pipeline gives the uncut reader's records, interval heartbeats aside") {
+    val dir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("shardtxpipeline"))
+    var records = 0
+    forAll(200) { case (copyTxs, items) =>
+      val lines = writeFeed(dir, render(copyTxs, items))
+      val f = dir.resolve("s0.jsonl").toString
+      val (whole, _) = read(f, ShardCursor(0L, fresh, Map.empty), foldCursors(f).last)
+      // an interval heartbeat carries its transaction's keyspace; a feed
+      // heartbeat event's record carries none
+      val streamed = whole.filterNot(r => r(3).toString == "heartbeat" && r(1).toString.nonEmpty)
+      val feed = lines.zipWithIndex.map { case (l, i) => FeedLine("s0", i.toLong, l) }
+      val batch = CdcPipeline.processPartition(
+        feed.iterator.buffered, emitBoundaries = false, TableFilter.acceptAll)
+        .map(r => VitessCdc.toInternalRow(r).toSeq(VitessCdc.Schema)).toVector
+      assert(batch == streamed,
+        s"pipeline differs from the reader (${diff(batch, streamed)}): $copyTxs copy txs + $items")
+      records += batch.size
+    }
+    assert(records > 1000, s"only $records records compared")
   }
 }

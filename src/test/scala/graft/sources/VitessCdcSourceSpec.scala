@@ -104,7 +104,7 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val end = stream.latestOffset(start, ReadLimit.allAvailable())
       val parts = stream.planInputPartitions(start, end).map(_.asInstanceOf[VitessCdcPartition])
       assert(parts.length > 1, "expected the derived split size to cut the window")
-      assert(parts.map(_.startByte).min == historyBytes, parts.map(_.startByte).toSeq)
+      assert(parts.map(_.seed.pos).min == historyBytes, parts.map(_.seed.pos).toSeq)
     } finally stream.stop()
   }
 
@@ -135,18 +135,18 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(VgtidOffset.fromJson(end.json()) == end)
       // planner: one partition per segment, tiling the window exactly
       val parts = stream.planInputPartitions(start, end)
-        .map(_.asInstanceOf[VitessCdcPartition]).sortBy(_.startByte)
+        .map(_.asInstanceOf[VitessCdcPartition]).sortBy(_.seed.pos)
       assert(parts.length == 2)
-      assert(parts.head.startByte == 0L)
+      assert(parts.head.seed.pos == 0L)
       parts.sliding(2).foreach {
-        case Array(a, b) => assert(a.endByte == b.startByte, "segments must tile")
+        case Array(a, b) => assert(a.endByte == b.seed.pos, "segments must tile")
         case _ =>
       }
       assert(parts.last.endByte == bytes.length.toLong)
       // each mid-shard segment seeds from its cursor: real GTID + schema
       parts.tail.foreach { p =>
-        assert(p.start.sg.gtid.contains("MySQL56/feed"))
-        assert(p.schemaLines.nonEmpty, "segment seed must carry the schema checkpoint")
+        assert(p.seed.step.sg.gtid.contains("MySQL56/feed"))
+        assert(p.seed.schemas.nonEmpty, "segment seed must carry the schema checkpoint")
       }
     } finally stream.stop()
 
