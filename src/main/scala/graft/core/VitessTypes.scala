@@ -167,9 +167,7 @@ final case class ColumnMeta(
     graftType: GraftType,
     optional: Boolean,
     primaryKey: Boolean,
-    uniqueKey: Boolean) {
-  def sparkField: StructField = StructField(name, graftType.sparkType, nullable = optional)
-}
+    uniqueKey: Boolean)
 
 object ColumnMeta {
   /** Column names must be real: Vitess's schema-reload bug surfaces as
@@ -200,7 +198,6 @@ final case class TableRef(shard: String, keyspace: String, table: String) {
   * first single-column unique key (reference:
   * VStreamOutputMessageDecoder.resolveTable, :402-449). */
 final case class TableMeta(ref: TableRef, columns: Seq[ColumnMeta]) {
-  def sparkSchema: StructType = StructType(columns.map(_.sparkField))
   def keyColumns: Seq[String] = {
     val pks = columns.filter(_.primaryKey).map(_.name)
     if (pks.nonEmpty) pks

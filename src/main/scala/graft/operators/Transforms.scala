@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.Vgtid
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -117,20 +117,4 @@ object Transforms {
       col("source.vgtid").as("iodebeziumvgtid"),
       col("source.keyspace").as("iodebeziumkeyspace"),
       to_json(struct(col("before"), col("after"), col("source"), col("op"), col("ts_ms"))).as("ce_data"))
-
-  /** F1 table include/exclude as a Column predicate over envelope rows
-    * (the post-hoc form; CdcPipeline applies the same filter pre-decode
-    * per F2). Patterns are full-match, case-insensitive, on
-    * `keyspace.table`. */
-  def tableFilterPredicate(includeList: Seq[String], excludeList: Seq[String]): Column = {
-    val fq = concat(col("keyspace"), lit("."), col("table"))
-    val system = lower(col("keyspace")).isin(graft.core.TableFilter.SystemSchemas.toSeq: _*)
-    def anyMatch(patterns: Seq[String]): Column =
-      patterns.map(p => fq.rlike(s"(?i)^(?:$p)$$")).reduce(_ || _)
-    val base =
-      if (includeList.nonEmpty) anyMatch(includeList)
-      else if (excludeList.nonEmpty) !anyMatch(excludeList)
-      else lit(true)
-    !system && base
-  }
 }

@@ -3,7 +3,6 @@ package graft.sources
 import graft.streaming.{FieldEvent, VEventJson}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
-import scala.jdk.CollectionConverters._
 
 /** S6 metadata scans against the simulated VStream environment — the
   * analogues of `SHOW VITESS_SHARDS`, `SHOW VITESS_TABLETS` (non-empty
@@ -13,12 +12,6 @@ import scala.jdk.CollectionConverters._
   * events distributively.
   */
 object Metadata {
-
-  private def listDir[T](dir: String)(f: Iterator[java.nio.file.Path] => T): T = {
-    val listing = Files.list(Paths.get(dir))
-    try f(listing.iterator().asScala)
-    finally listing.close()
-  }
 
   /** All shards of the feed (SHOW VITESS_SHARDS). Delegates to the
     * transport's listing so shard-discovery rules (the .jsonl layout,
@@ -56,10 +49,10 @@ object Metadata {
       .distinct().collect().toSeq.sorted
   }
 
-  /** SHOW TABLES served from a checkpointed offset: the offset's
-    * `schemas` map already holds the latest FIELD line per
-    * (shard, table), so the checkpointed prefix of the feed contributes
-    * its table list in O(#tables) with ZERO feed bytes read. Only bytes
+  /** SHOW TABLES served from a checkpointed offset: the offset's cursors
+    * already hold the latest FIELD line per (shard, table), so the
+    * checkpointed prefix of the feed contributes its table list in
+    * O(#tables) with ZERO feed bytes read. Only bytes
     * PAST the checkpointed safe positions can name a table the
     * checkpoint has not seen, so the tail — the same O(new bytes) a
     * single micro-batch admits — is the only part scanned; a current
@@ -67,12 +60,11 @@ object Metadata {
     * file-size metadata. Tail reads run on the driver like the capped
     * admission fold: bounded by bytes-since-checkpoint, not feed size. */
   def tables(feedDir: String, offset: VgtidOffset): Seq[String] = {
-    val fromCheckpoint: Set[String] =
-      offset.schemas.valuesIterator.flatMap(_.keysIterator).toSet
+    val fromCheckpoint: Set[String] = offset.cursors.flatMap(_.schemas.keys).toSet
     val tail = Set.newBuilder[String]
     shards(feedDir).foreach { sh =>
       val p = Paths.get(feedDir, s"$sh.jsonl")
-      val from = offset.positions.getOrElse(sh, 0L)
+      val from = offset.cursor(sh).fold(0L)(_.pos)
       if (Files.size(p) > from) {
         val slice = new FeedSlice(p.toString, from)
         try slice.lines.foreach { line =>

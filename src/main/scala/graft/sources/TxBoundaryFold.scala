@@ -20,12 +20,12 @@ private[sources] final case class ShardCursor(
 
 /** The transaction-boundary fold over one shard's wire lines: tracks
   * BEGIN/COMMIT nesting, steps the shard's [[ShardTxStep]] over every
-  * VGTID line and every COMMIT of a transaction with a position (the
+  * VGTID line (with the event's own entry for the shard, keyspace
+  * included) and every COMMIT of a transaction with a position (the
   * rules `RecordBuilder` applies to the same lines in the partition
-  * reader), and
-  * checkpoints FIELD (schema) lines —
-  * publishing a [[ShardCursor]] only at out-of-transaction line
-  * boundaries, so any published cursor is a safe batch cut.
+  * reader), and checkpoints FIELD (schema) lines — publishing a
+  * [[ShardCursor]] only at out-of-transaction line boundaries, so any
+  * published cursor is a safe batch cut.
   * Single-threaded use: `latestOffset` runs one fold per shard per
   * trigger.
   *
@@ -35,7 +35,6 @@ private[sources] final case class ShardCursor(
   */
 private[sources] final class TxBoundaryFold(
     shard: String,
-    keyspace: String,
     seed: ShardCursor,
     heartbeatIntervalMs: Long,
     splitBytes: Long) {
@@ -85,7 +84,7 @@ private[sources] final class TxBoundaryFold(
         case VgtidEvent(_, v) =>
           v.shardGtid(shard).foreach { sg =>
             val from = step.sg
-            step = step.onPosition(sg.copy(keyspace = keyspace, shard = shard))
+            step = step.onPosition(sg)
             if (inTx) txHasPos = true
             if (step.sg != from) moves += 1
           }

@@ -1,6 +1,7 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.core._
 import graft.streaming._
 import java.nio.charset.StandardCharsets
@@ -12,7 +13,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReportsSourceMetrics, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxBytes, ReadMaxRows, ReportsSourceMetrics, SupportsAdmissionControl}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -28,10 +29,12 @@ import scala.jdk.CollectionConverters._
   * in for the per-shard gRPC streams
   * (reference: connection/VitessReplicationConnection.java:107-343).
   *
-  * - Offset (S8): JSON `{"vgtid": [...], "transaction_epoch": {...},
-  *   "connector_generation": N}` — the reference's offset-map keys
-  *   (VitessOffsetContext.getOffset:92-100); vgtid JSON is the
-  *   checkpoint-interoperable wire format.
+  * - Offset (S8): each shard's fold cursor; its JSON is `{"vgtid": [...],
+  *   "transaction_epoch": {...}, "connector_generation": N, ...}` — the
+  *   reference's offset-map keys (VitessOffsetContext.getOffset:92-100)
+  *   plus byte positions, schema checkpoints and heartbeat baselines (see
+  *   [[VgtidOffset]]); vgtid JSON is the checkpoint-interoperable wire
+  *   format.
   * - Initial position (S4): the `vgtid` option, else empty GTIDs for all
   *   discovered shards (the copy-phase trigger position)
   *   (VitessReplicationConnection.defaultVgtid:437-480).
@@ -39,15 +42,19 @@ import scala.jdk.CollectionConverters._
   *   window (cut at the derived split size, see `latestOffset`) — the
   *   elastic equivalent of the reference's shard→task round-robin
   *   (VitessConnector.java:126-133).
-  * - Resume semantics (O1/O2): the byte window is the batch — a batch
-  *   delivers every transaction in each shard's [start, end) bytes. Only
-  *   an explicit start is resolved by position, once, on the driver: an
-  *   explicit `vgtid` starts right after the last transaction whose
-  *   position is not after it (see `resolveStarts`). A record's restart
-  *   offset is its shard's position at the last transaction-safe boundary
-  *   before its transaction — what the offset records if a batch is cut
-  *   there — so replay from it re-reads the whole transaction, no loss,
-  *   wherever batches and splits were cut.
+  * - Resume semantics (O1/O2): an offset is its shards' cursors, and the
+  *   byte window is the batch — a batch delivers every transaction in
+  *   each shard's [start, end) bytes. Only a shard with no byte position
+  *   is resolved by position, once, on the driver, while its offset is
+  *   built or parsed: an explicit `vgtid` (or a checkpoint written
+  *   without positions) starts right after the last transaction whose
+  *   position is not after it (see `startAt`). A generation change bumps
+  *   every epoch once, as a checkpointed offset enters the stream
+  *   (`deserializeOffset`). A position keeps its VGTID event's keyspace.
+  *   A record's restart offset is its shard's position at the last
+  *   transaction-safe boundary before its transaction — what the offset
+  *   records if a batch is cut there — so replay from it re-reads the
+  *   whole transaction, no loss, wherever batches and splits were cut.
   *
   * Options: `path` (feed dir), `vgtid` (initial VGTID JSON), `keyspace`,
   * `shard` (explicit comma-separated shard list; authoritative — not
@@ -56,7 +63,9 @@ import scala.jdk.CollectionConverters._
   * server-side filter analogue), `boundaries` (emit begin/end records),
   * `generation` (connector generation; a change bumps all epochs, A5),
   * `max.txs.per.trigger` / `max.bytes.per.trigger` (positive per-shard
-  * admission caps). The split size is derived, not an option.
+  * admission caps, as the default read limit; `Trigger.Once` and
+  * `Trigger.AvailableNow` read everything). The split size is derived,
+  * not an option.
   */
 class VitessCdcProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "vitess-cdc"
@@ -114,63 +123,71 @@ class VitessCdcTable(options: CaseInsensitiveStringMap) extends Table with Suppo
     }
 }
 
-/** Streaming offset: the reference's offset map as JSON, extended with
-  * two scale-critical fields the reference keeps server-side:
+/** Streaming offset: the fold's [[ShardCursor]] for each shard of its
+  * vgtid, in vgtid order (byte position, [[ShardTxStep]], schema
+  * checkpoint), the epochs of shards without a cursor (retired reshard
+  * parents, shards only `shard.epoch.map` names), the connector
+  * generation and this batch's split cursors.
   *
-  *  - `feed_positions` — per-shard safe byte position (always a line
-  *    boundary between transactions). The next trigger's scan and the
-  *    batch readers SEEK here instead of replaying the feed from byte 0,
-  *    making per-trigger work O(new bytes) instead of O(total feed).
-  *  - `schemas` — latest FIELD (schema) wire line per (shard, table). A
-  *    real VStream re-sends FIELD events on reconnect at a VGTID; a file
-  *    feed has no server to re-send them, so the offset checkpoints the
-  *    schema registry (the analogue of Debezium's schema history).
+  * Its JSON is the reference's offset map (`vgtid`, `transaction_epoch`,
+  * `connector_generation`; VitessOffsetContext.getOffset:92-100) plus what
+  * the reference keeps server-side, per shard:
   *
-  * Every offset the source hands the engine has a position for each
-  * shard of its vgtid: `initialOffset` and `deserializeOffset` resolve a
-  * shard that lacks one (an explicit `vgtid` start, or a checkpoint
-  * written without positions) once, by position, to the byte right after
-  * its history. From there the byte window is the batch. */
+  *  - `feed_positions` — safe byte position (always a line boundary
+  *    between transactions). The next trigger's fold and the batch
+  *    readers SEEK here, so per-trigger work is O(new bytes).
+  *  - `schemas` — latest FIELD (schema) wire line per table. A real
+  *    VStream re-sends FIELD events on reconnect; a file feed has no
+  *    server to re-send them, so the offset checkpoints the schema
+  *    registry (the analogue of Debezium's schema history).
+  *  - `heartbeat_ms` — interval-heartbeat baseline (commit-time ms), so
+  *    the cadence survives batch boundaries.
+  *  - `feed_splits` — split cursors: transaction-safe mid-shard seeds the
+  *    planner fans this batch's window out to, so a recovered batch
+  *    replans the identical segments.
+  *
+  * No offset value lacks a cursor for a shard of its vgtid: a shard with
+  * no byte position (an explicit `vgtid` start, or a checkpoint written
+  * without positions) is resolved by position, once, while the offset is
+  * built or parsed. From there the byte window is the batch. */
 final case class VgtidOffset(
-    vgtid: Vgtid,
-    epochs: ShardEpochMap,
+    cursors: Seq[ShardCursor],
+    otherEpochs: ShardEpochMap,
     generation: Long,
-    positions: Map[String, Long] = Map.empty,
-    schemas: Map[String, Map[String, String]] = Map.empty,
-    // per-shard interval-heartbeat baseline (commit-time ms): carried in
-    // the checkpoint so the cadence survives batch boundaries — a
-    // per-reader baseline would reset every micro-batch and never fire
-    // under bounded triggers
-    hbMs: Map[String, Long] = Map.empty,
-    // intra-shard split cursors for THIS batch's window (see
-    // latestOffset's split size): transaction-safe mid-shard seeds the
-    // planner fans one shard's byte range out to. Carried in the offset
-    // so a recovered batch replans the identical segments.
     splits: Map[String, Seq[ShardCursor]] = Map.empty)
     extends Offset {
+  def vgtid: Vgtid = Vgtid(cursors.map(_.step.sg))
+
+  /** Every shard's epoch: the cursors' and the other shards'. */
+  def epochs: ShardEpochMap =
+    cursors.foldLeft(otherEpochs)((m, c) => m.put(c.step.sg.shard, c.step.epoch))
+
+  def cursor(shard: String): Option[ShardCursor] = cursors.find(_.step.sg.shard == shard)
+
   override def json(): String = {
     val m = new ObjectMapper()
     val o = m.createObjectNode()
-    o.set[com.fasterxml.jackson.databind.JsonNode]("vgtid", m.readTree(vgtid.json))
-    o.set[com.fasterxml.jackson.databind.JsonNode]("transaction_epoch", m.readTree(epochs.json))
+    o.set[JsonNode]("vgtid", m.readTree(vgtid.json))
+    o.set[JsonNode]("transaction_epoch", m.readTree(epochs.json))
     o.put("connector_generation", generation)
     // sorted keys: Spark compares offset JSON strings to detect "no new
     // data" — serialization must be deterministic
-    if (positions.nonEmpty) {
-      val p = o.putObject("feed_positions")
-      positions.toSeq.sortBy(_._1).foreach { case (sh, b) => p.put(sh, b) }
-    }
-    if (schemas.nonEmpty) {
-      val s = o.putObject("schemas")
-      schemas.toSeq.sortBy(_._1).foreach { case (sh, tables) =>
-        val t = s.putObject(sh)
-        tables.toSeq.sortBy(_._1).foreach { case (tbl, line) => t.put(tbl, line) }
+    def putSchemas(parent: ObjectNode, key: String, schemas: Map[String, String]): Unit =
+      if (schemas.nonEmpty) {
+        val t = parent.putObject(key)
+        schemas.toSeq.sortBy(_._1).foreach { case (tbl, line) => t.put(tbl, line) }
       }
-    }
-    if (hbMs.nonEmpty) {
-      val h = o.putObject("heartbeat_ms")
-      hbMs.toSeq.sortBy(_._1).foreach { case (sh, t) => h.put(sh, t) }
-    }
+    def perShard(key: String, of: Seq[ShardCursor])(put: (ObjectNode, ShardCursor) => Unit): Unit =
+      if (of.nonEmpty) {
+        val node = o.putObject(key)
+        of.foreach(put(node, _))
+      }
+    val sorted = cursors.sortBy(_.step.sg.shard)
+    perShard("feed_positions", sorted)((n, c) => n.put(c.step.sg.shard, c.pos))
+    perShard("schemas", sorted.filter(_.schemas.nonEmpty))((n, c) =>
+      putSchemas(n, c.step.sg.shard, c.schemas))
+    perShard("heartbeat_ms", sorted.filter(_.step.hbMs != ShardTxStep.NoBaseline))((n, c) =>
+      n.put(c.step.sg.shard, c.step.hbMs))
     if (splits.exists(_._2.nonEmpty)) {
       val sp = o.putObject("feed_splits")
       splits.toSeq.sortBy(_._1).foreach { case (sh, cs) =>
@@ -179,14 +196,10 @@ final case class VgtidOffset(
           cs.sortBy(_.pos).foreach { c =>
             val n = arr.addObject()
             n.put("pos", c.pos)
-            n.set[com.fasterxml.jackson.databind.JsonNode](
-              "gtid", m.readTree(Vgtid(Seq(c.step.sg)).json))
+            n.set[JsonNode]("gtid", m.readTree(Vgtid(Seq(c.step.sg)).json))
             n.put("epoch", c.step.epoch)
             if (c.step.hbMs != ShardTxStep.NoBaseline) n.put("hb", c.step.hbMs)
-            if (c.schemas.nonEmpty) {
-              val t = n.putObject("schemas")
-              c.schemas.toSeq.sortBy(_._1).foreach { case (tbl, line) => t.put(tbl, line) }
-            }
+            putSchemas(n, "schemas", c.schemas)
           }
         }
       }
@@ -196,44 +209,59 @@ final case class VgtidOffset(
 }
 
 object VgtidOffset {
-  def fromJson(json: String): VgtidOffset = {
+  /** The offset over `cursors`; `epochs` may name cursor shards too,
+    * whose cursors' epochs win. */
+  def of(
+      cursors: Seq[ShardCursor],
+      epochs: ShardEpochMap,
+      generation: Long,
+      splits: Map[String, Seq[ShardCursor]] = Map.empty): VgtidOffset =
+    VgtidOffset(cursors, ShardEpochMap(epochs.map -- cursors.map(_.step.sg.shard)), generation, splits)
+
+  /** Parse an offset. One written at a generation other than `generation`
+    * has every epoch bumped once (A5) and takes `generation`. A shard of
+    * its vgtid with no byte position takes the cursor `start(gtid,
+    * epochs)` gives, over the bumped epochs. */
+  def fromJson(
+      json: String,
+      generation: Option[Long] = None,
+      start: (ShardGtid, ShardEpochMap) => ShardCursor = (sg, _) =>
+        throw new IllegalArgumentException(s"offset has no byte position for shard ${sg.shard}"))
+      : VgtidOffset = {
     val m = new ObjectMapper()
     val n = m.readTree(json)
-    val positions = Option(n.get("feed_positions")).map { p =>
-      p.fields().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-    }.getOrElse(Map.empty[String, Long])
-    val schemas = Option(n.get("schemas")).map { s =>
-      s.fields().asScala.map { e =>
-        e.getKey -> e.getValue.fields().asScala
-          .map(t => t.getKey -> t.getValue.asText()).toMap
-      }.toMap
-    }.getOrElse(Map.empty[String, Map[String, String]])
-    VgtidOffset(
-      Vgtid.of(m.writeValueAsString(n.get("vgtid"))),
+    def gtids(node: JsonNode): Seq[ShardGtid] = Vgtid.of(m.writeValueAsString(node)).shardGtids
+    def shardField(key: String, shard: String): Option[JsonNode] =
+      Option(n.get(key)).flatMap(f => Option(f.get(shard)))
+    val stored = Option(n.get("connector_generation")).map(_.asLong()).getOrElse(1L)
+    val gen = generation.getOrElse(stored)
+    val epochs = EpochProvider.applyGeneration(
       Option(n.get("transaction_epoch"))
         .map(e => ShardEpochMap.fromJson(m.writeValueAsString(e)))
         .getOrElse(ShardEpochMap.empty),
-      Option(n.get("connector_generation")).map(_.asLong()).getOrElse(1L),
-      positions,
-      schemas,
-      Option(n.get("heartbeat_ms")).map { h =>
-        h.fields().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-      }.getOrElse(Map.empty[String, Long]),
-      Option(n.get("feed_splits")).map { sp =>
-        sp.fields().asScala.map { e =>
-          e.getKey -> e.getValue.elements().asScala.map { c =>
-            ShardCursor(
-              c.get("pos").asLong(),
-              ShardTxStep(
-                Vgtid.of(m.writeValueAsString(c.get("gtid"))).shardGtids.head,
-                c.get("epoch").asLong(),
-                Option(c.get("hb")).map(_.asLong()).getOrElse(ShardTxStep.NoBaseline)),
-              Option(c.get("schemas")).map(_.fields().asScala
-                .map(t => t.getKey -> t.getValue.asText()).toMap)
-                .getOrElse(Map.empty[String, String]))
-          }.toSeq
-        }.toMap
-      }.getOrElse(Map.empty[String, Seq[ShardCursor]]))
+      stored, gen)
+    // the one cursor reader: a top-level shard's fields and a split entry
+    def cursor(pos: Long, sg: ShardGtid, epoch: Long, hb: Option[JsonNode],
+        schemas: Option[JsonNode]): ShardCursor =
+      ShardCursor(pos, ShardTxStep(sg, epoch, hb.fold(ShardTxStep.NoBaseline)(_.asLong())),
+        schemas.fold(Map.empty[String, String])(
+          _.properties().asScala.map(t => t.getKey -> t.getValue.asText()).toMap))
+    val cursors = gtids(n.get("vgtid")).map { sg =>
+      shardField("feed_positions", sg.shard).fold(start(sg, epochs)) { p =>
+        cursor(p.asLong(), sg, epochs.get(sg.shard).getOrElse(0L),
+          shardField("heartbeat_ms", sg.shard), shardField("schemas", sg.shard))
+      }
+    }
+    val bump = if (gen != stored) 1L else 0L
+    val splits = Option(n.get("feed_splits")).fold(Map.empty[String, Seq[ShardCursor]]) { sp =>
+      sp.properties().asScala.map { e =>
+        e.getKey -> e.getValue.elements().asScala.map { c =>
+          cursor(c.get("pos").asLong(), gtids(c.get("gtid")).head, c.get("epoch").asLong() + bump,
+            Option(c.get("hb")), Option(c.get("schemas")))
+        }.toSeq
+      }.toMap
+    }
+    of(cursors, epochs, gen, splits)
   }
 }
 
@@ -547,12 +575,10 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
   }
 
   /** S4: explicit `vgtid` option, else `startGtid` for every discovered
-    * shard (empty would trigger VStream copy on a real server), resolved
-    * to byte positions by [[resolveStarts]]. */
+    * shard (empty would trigger VStream copy on a real server), each
+    * shard at the cursor [[startAt]] gives. */
   override def initialOffset(): Offset = {
-    def seeded(shards: Seq[String]): ShardEpochMap =
-      seedEpochMap.getOrElse(ShardEpochMap.init(shards))
-    resolveStarts(explicitStart match {
+    val start = explicitStart match {
       case Some(v) =>
         // reference validateVgtids: an explicit vgtid must cover exactly
         // the configured shard list when both are set
@@ -562,58 +588,44 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
             s"vgtid shards [${vs.toSeq.sorted.mkString(", ")}] must match the " +
               s"configured shard list [${names.sorted.mkString(", ")}]")
         }
-        VgtidOffset(v, seeded(v.shardGtids.map(_.shard)), generation)
-      case None =>
-        val shards = shardFiles.map(_._1)
-        VgtidOffset(
-          Vgtid(shards.map(sh => ShardGtid(keyspace, sh, startGtid))),
-          seeded(shards),
-          generation)
-    })
+        v.shardGtids
+      case None => shardFiles.map { case (sh, _) => ShardGtid(keyspace, sh, startGtid) }
+    }
+    val epochs = seedEpochMap.getOrElse(ShardEpochMap.init(start.map(_.shard)))
+    VgtidOffset.of(start.map(startAt(_, epochs)), epochs, generation)
   }
 
-  // resolved offsets by unresolved offset JSON: one start per stream
-  private val resolved = scala.collection.concurrent.TrieMap.empty[String, VgtidOffset]
+  // resolved starts by seed cursor: one start per stream
+  private val starts = scala.collection.concurrent.TrieMap.empty[ShardCursor, ShardCursor]
 
-  /** Give every shard of `o`'s vgtid a byte position — the one position
-    * test that picks bytes. A shard at `''`/`current` starts at byte 0. A
-    * shard at a real GTID without a position (an explicit `vgtid` start,
-    * or a checkpoint written without positions) folds its feed from byte
-    * 0 with its [[ShardTxStep]] seeded at that GTID: history ends right
-    * after the last transaction (or bare VGTID) whose position is not
-    * after the start, before the first one that is, so a standalone DDL
-    * inside history stays history and one right after it is delivered.
-    * The offset records the byte position, step and schema checkpoint
-    * (history's FIELD lines included) there. A VStream started at a VGTID
-    * never sends earlier events; this is the same rule over a feed that
-    * holds them. A file feed that has not yet reached the start ends
-    * history at its last transaction, so transactions appended later at
-    * or before the start are delivered. Memoized per stream, so batch 0's
-    * start is one value. */
-  private def resolveStarts(o: VgtidOffset): VgtidOffset =
-    if (o.vgtid.shardGtids.forall(sg => o.positions.contains(sg.shard))) o
-    else resolved.getOrElseUpdate(o.json(), {
-      lazy val files = transport.listShards().toMap
-      val cursors = o.vgtid.shardGtids.filterNot(sg => o.positions.contains(sg.shard)).map { sg =>
-        val start = cursorAt(o, sg.shard)
-        sg.shard ->
-          (if (sg.hasPosition) files.get(sg.shard).fold(start)(historyEnd(sg.shard, _, start))
-          else start)
-      }.toMap
-      // history keeps the epoch (a set that moves it is after the start)
-      // and the heartbeat baseline, so only the GTID, bytes and schemas move
-      o.copy(
-        vgtid = Vgtid(o.vgtid.shardGtids.map(sg => cursors.get(sg.shard).fold(sg)(_.step.sg))),
-        positions = o.positions ++ cursors.map { case (sh, c) => sh -> c.pos },
-        schemas = o.schemas ++ cursors.collect { case (sh, c) if c.schemas.nonEmpty => sh -> c.schemas })
-    })
+  /** Shard `sg.shard`'s cursor at `sg` with no byte position known, its
+    * epoch seeded from `epochs` — the one position test that picks bytes.
+    * A shard at `''`/`current` starts at byte 0. A shard at a real GTID
+    * (an explicit `vgtid` start, or a checkpoint written without
+    * positions) folds its feed from byte 0 with its [[ShardTxStep]]
+    * seeded at that GTID: history ends right after the last transaction
+    * (or bare VGTID) whose position is not after the start, before the
+    * first one that is, so a standalone DDL inside history stays history
+    * and one right after it is delivered. The cursor there carries the
+    * byte position, step and schema checkpoint (history's FIELD lines
+    * included). A VStream started at a VGTID never sends earlier events;
+    * this is the same rule over a feed that holds them. A file feed that
+    * has not yet reached the start ends history at its last transaction,
+    * so transactions appended later at or before the start are delivered.
+    * Memoized per stream, so batch 0's start is one value. */
+  private def startAt(sg: ShardGtid, epochs: ShardEpochMap): ShardCursor = {
+    val seed = ShardCursor(0L, ShardTxStep(sg, seedEpoch(sg.shard, epochs)), Map.empty)
+    if (!sg.hasPosition) seed
+    else starts.getOrElseUpdate(seed,
+      transport.listShards().toMap.get(sg.shard).fold(seed)(historyEnd(sg.shard, _, seed)))
+  }
 
   /** The cursor right after `start`'s history in `file` (see
-    * [[resolveStarts]]): the fold stops on the first transaction after
+    * [[startAt]]): the fold stops on the first transaction after
     * `start`, and history ends at the last COMMIT or bare VGTID before it. */
   private def historyEnd(shard: String, file: String, start: ShardCursor): ShardCursor = {
     var end = start
-    val fold = new TxBoundaryFold(shard, keyspace, start, heartbeatIntervalMs = 0L, Long.MaxValue)
+    val fold = new TxBoundaryFold(shard, start, heartbeatIntervalMs = 0L, Long.MaxValue)
     foldShard(file, fold, sizeOf(file)) { (line, safe) =>
       safe.exists(_.step.after(start.step)) || {
         if (line.startsWith(FeedSlice.CommitPrefix) || line.startsWith(FeedSlice.VgtidPrefix))
@@ -654,7 +666,8 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
 
   // Backpressure analogue of the reference's bounded queue
   // (VitessConnectorTask.java:118-125): cap how many new transactions a
-  // micro-batch admits per shard.
+  // micro-batch admits per shard. The two options set only the default
+  // read limit; admission reads the limit Spark passes (see `caps`).
   private val maxTxsPerTrigger: Long =
     Option(options.get("max.txs.per.trigger")).map(_.toLong).getOrElse(Long.MaxValue)
   require(maxTxsPerTrigger > 0L, s"max.txs.per.trigger must be positive, got $maxTxsPerTrigger")
@@ -677,9 +690,9 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
   // only on the trigger thread
   @volatile private var admittedTotal = 0L
 
-  /** Surface the configured caps through the public admission-control
-    * API (the engine hands this back to `latestOffset`; the fold reads
-    * the same option-derived values, so the two always agree). */
+  /** The configured caps as a read limit. Spark hands it back to
+    * `latestOffset`, except under `Trigger.Once` and `Trigger.AvailableNow`,
+    * which pass `allAvailable`. */
   override def getDefaultReadLimit: ReadLimit = {
     val limits = Seq(
       Option.when(maxTxsPerTrigger != Long.MaxValue)(ReadLimit.maxRows(maxTxsPerTrigger)),
@@ -690,6 +703,18 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
       case Seq(l) => l
       case many   => ReadLimit.compositeLimit(many.toArray)
     }
+  }
+
+  /** The per-shard (transaction, byte) caps `limit` sets; `Long.MaxValue`
+    * for a cap it does not set. */
+  private def caps(limit: ReadLimit): (Long, Long) = limit match {
+    case r: ReadMaxRows => (r.maxRows, Long.MaxValue)
+    case b: ReadMaxBytes => (Long.MaxValue, b.maxBytes)
+    case c: CompositeReadLimit =>
+      c.getReadLimits.map(caps).foldLeft((Long.MaxValue, Long.MaxValue)) {
+        case ((t, b), (t2, b2)) => (math.min(t, t2), math.min(b, b2))
+      }
+    case _ => (Long.MaxValue, Long.MaxValue) // allAvailable
   }
 
   /** Epoch seed for a shard not yet in the map: with inherit.epoch a
@@ -707,15 +732,15 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     * the rules the readers apply to the same lines. Shards fold in parallel on the JVM's
     * global pool (the stream owns no threads); their cursors, split
     * cursors and epochs merge in shard order. A fold stops at the first
-    * transaction boundary past `max.txs.per.trigger` or
-    * `max.bytes.per.trigger`; with neither set it reads to the measured
-    * size, so `allAvailable` admits everything available. Per-trigger
+    * transaction boundary past the transaction or byte cap of `limit`
+    * (`maxRows`, `maxBytes`, or both in a composite limit); under
+    * `allAvailable` it reads to the measured size. Per-trigger
     * work is O(new bytes), or O(cap) with a cap, never O(feed). A torn
     * trailing transaction holds its shard's cursor back until the
     * trigger after its COMMIT lands.
     *
     * Split size (S9): ceil(new bytes / `defaultParallelism`), summing
-    * each shard's `size - position` capped at `max.bytes.per.trigger` —
+    * each shard's `size - position` capped at the byte cap —
     * Spark's `FilePartition.maxSplitBytes` rule without its floor or
     * ceiling. Kept split cursors lie within their shard's new bytes, a
     * split size apart, so a trigger records at most `defaultParallelism`.
@@ -724,17 +749,16 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     * live in the same atomic offset JSON — bytes before
     * `feed_positions[shard]` are already reflected in
     * `transaction_epoch`. Every shard of the start offset's vgtid has a
-    * position ([[resolveStarts]]); a shard new to it (a reshard child, or
-    * one added by widening the `shard` list) folds from byte 0 at an empty
-    * GTID. A generation change vs the offset's stored generation bumps
-    * every epoch once (A5). Seeds read only the START offset's epochs,
-    * never a sibling shard folded in the same trigger: the readers seed
-    * from the same map (planInputPartitions), so a reshard child whose
-    * parent changes epoch in this trigger carries one epoch in both. The
-    * cursor only advances at out-of-transaction line boundaries so a
-    * batch window never splits a transaction; FIELD (schema) lines are
-    * checkpointed per (shard, table) so seeked readers decode without
-    * history. */
+    * cursor; a shard new to it (a reshard child, or one added by widening
+    * the `shard` list) folds from byte 0 at an empty GTID. The offset
+    * records each fold's safe cursor as it is. Seeds read only the START
+    * offset's epochs, never a sibling shard folded in the same trigger:
+    * the readers seed from the same offset (planInputPartitions), so a
+    * reshard child whose parent changes epoch in this trigger carries one
+    * epoch in both. The cursor only advances at out-of-transaction line
+    * boundaries so a batch window never splits a transaction; FIELD
+    * (schema) lines are checkpointed per (shard, table) so seeked readers
+    * decode without history. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[VgtidOffset]
     // An explicit shard list narrowed against an existing checkpoint would
@@ -759,14 +783,14 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
             s"start topology [${startupShards.toSeq.sorted.mkString(", ")}]; restart " +
             "the query from this checkpoint to stream the resharded topology")
     }
-    val startEpochs = EpochProvider.applyGeneration(from.epochs, from.generation, generation)
+    val (maxTxs, maxBytes) = caps(limit)
     // a feed deleted between listing and sizing or reading (retired
     // reshard parent) admits nothing this trigger instead of failing it
     val shards = shardFiles.map { case (shard, file) =>
       (shard, file, cursorAt(from, shard), sizeOf(file))
     }
     val newBytes = shards.map { case (_, _, seed, size) =>
-      size.fold(0L)(to => math.min(math.max(0L, to - seed.pos), maxBytesPerTrigger))
+      size.fold(0L)(to => math.min(math.max(0L, to - seed.pos), maxBytes))
     }.sum
     val cores = SparkSession.active.sparkContext.defaultParallelism
     val splitBytes = if (newBytes == 0L) Long.MaxValue else (newBytes + cores - 1) / cores
@@ -776,45 +800,25 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
         Future {
           // stop at the first transaction boundary past either cap (the
           // measured size when none is set)
-          val fold = new TxBoundaryFold(shard, keyspace, seed, heartbeatIntervalMs, splitBytes)
+          val fold = new TxBoundaryFold(shard, seed, heartbeatIntervalMs, splitBytes)
           foldShard(file, fold, size) { (_, safe) =>
-            safe.exists(c =>
-              fold.admitted >= maxTxsPerTrigger || c.pos - seed.pos >= maxBytesPerTrigger)
+            safe.exists(c => fold.admitted >= maxTxs || c.pos - seed.pos >= maxBytes)
           }
           fold
         }
       }, Duration.Inf)
     }
-    var epochs = startEpochs
-    val positionsOut = Map.newBuilder[String, Long]
-    val schemasOut = Map.newBuilder[String, Map[String, String]]
-    val hbMsOut = Map.newBuilder[String, Long]
-    val splitsOut = Map.newBuilder[String, Seq[ShardCursor]]
-    val gtids = shards.zip(folded).map { case ((shard, _, _, _), fold) =>
-      val cursor = fold.safe
-      val splits = fold.splits.filter(_.pos < cursor.pos)
-      epochs = epochs.put(shard, cursor.step.epoch)
-      positionsOut += shard -> cursor.pos
-      if (cursor.schemas.nonEmpty) schemasOut += shard -> cursor.schemas
-      if (heartbeatIntervalMs > 0 && cursor.step.hbMs != ShardTxStep.NoBaseline)
-        hbMsOut += shard -> cursor.step.hbMs
-      if (splits.nonEmpty) splitsOut += shard -> splits
-      // the fold's own step, as its split cursors carry: a replica's
-      // contained GTID set is recorded as-is, so a cut there seeds the
-      // next batch exactly like a split cursor at the same byte
-      cursor.step.sg
-    }
-    assert(splitsOut.result().values.map(_.size).sum <= cores,
+    val splits = shards.zip(folded).flatMap { case ((shard, _, _, _), fold) =>
+      Some(fold.splits.filter(_.pos < fold.safe.pos)).filter(_.nonEmpty).map(shard -> _)
+    }.toMap
+    assert(splits.values.map(_.size).sum <= cores,
       s"split cursors must not outnumber the $cores cores")
-    val built = VgtidOffset(
-      Vgtid(gtids), epochs, generation,
-      positionsOut.result(), schemasOut.result(), hbMsOut.result(),
-      splitsOut.result())
+    val built = VgtidOffset.of(folded.map(_.safe), from.epochs, generation, splits)
     // Spark detects "no new data" by offset-JSON equality. `from` may
     // carry the previous batch's split cursors; a no-progress rebuild
-    // (same vgtid/positions, no new splits) must return `from` verbatim
-    // or the json difference schedules one spurious empty batch after
-    // every split-carrying batch.
+    // (same cursors, no new splits) must return `from` verbatim or the
+    // json difference schedules one spurious empty batch after every
+    // split-carrying batch.
     if (built.splits.isEmpty && from.splits.nonEmpty &&
       built.copy(splits = from.splits).json() == from.json()) from
     else {
@@ -826,19 +830,10 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
   override def latestOffset(): Offset =
     latestOffset(initialOffset(), ReadLimit.allAvailable())
 
-  /** Shard `shard`'s cursor at offset `o`: its byte position (0 for a
-    * shard new to `o`), step and schema checkpoint. A5: a generation
-    * change vs `o`'s stored generation bumps every epoch once, so the
-    * fold and the readers seed from the same bumped map (mid-run offsets
-    * carry the configured generation, so this is a no-op there). */
+  /** Shard `shard`'s cursor at offset `o`; a shard new to `o` starts at
+    * byte 0 at an empty GTID. */
   private def cursorAt(o: VgtidOffset, shard: String): ShardCursor =
-    ShardCursor(
-      o.positions.getOrElse(shard, 0L),
-      ShardTxStep(
-        o.vgtid.shardGtid(shard).getOrElse(ShardGtid(keyspace, shard, Vgtid.EmptyGtid)),
-        seedEpoch(shard, EpochProvider.applyGeneration(o.epochs, o.generation, generation)),
-        o.hbMs.getOrElse(shard, ShardTxStep.NoBaseline)),
-      o.schemas.getOrElse(shard, Map.empty[String, String]))
+    o.cursor(shard).getOrElse(startAt(ShardGtid(keyspace, shard, Vgtid.EmptyGtid), o.epochs))
 
   /** One partition per segment of each shard's byte window
     * [start position, end position); a shard with no new bytes plans none
@@ -849,7 +844,7 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     val e = end.asInstanceOf[VgtidOffset]
     shardFiles.flatMap { case (shard, file) =>
       val from = cursorAt(s, shard)
-      val endByte = e.positions.getOrElse(shard, 0L)
+      val endByte = e.cursor(shard).fold(0L)(_.pos)
       if (from.pos >= endByte) Nil
       else {
         // Intra-shard fan-out: the end offset may carry split cursors —
@@ -871,7 +866,7 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
 
   override def createReaderFactory(): PartitionReaderFactory =
     VitessCdcReaderFactory(
-      transport, keyspace, emitBoundaries, tableFilter, effectiveSnapshotTables, typeModes,
+      transport, emitBoundaries, tableFilter, effectiveSnapshotTables, typeModes,
       heartbeatIntervalMs, includeSchemaChanges)
 
   /** Streaming-source metrics surfaced into StreamingQueryProgress
@@ -892,11 +887,10 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     val m = new util.HashMap[String, String]()
     val files = try shardFiles catch { case _: Exception => Seq.empty[(String, String)] }
     m.put("shards", files.size.toString)
-    val positions: Map[String, Long] =
-      if (!latestConsumedOffset.isPresent) Map.empty
-      else latestConsumedOffset.get() match {
-        case v: VgtidOffset => v.positions
-        case o => VgtidOffset.fromJson(o.json()).positions // SerializedOffset post-restart
+    val consumed: Option[VgtidOffset] =
+      Option(latestConsumedOffset.orElse(null)).map {
+        case v: VgtidOffset => v
+        case o => deserializeOffset(o.json()).asInstanceOf[VgtidOffset] // SerializedOffset post-restart
       }
     var lag = 0L
     var sized = true
@@ -905,14 +899,18 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
       // parent) must not fail the query from an observability call
       val size = try transport.size(loc) catch { case _: Exception => -1L }
       if (size < 0) sized = false
-      else lag += math.max(0L, size - positions.getOrElse(sh, 0L))
+      else lag += math.max(0L, size - consumed.flatMap(_.cursor(sh)).fold(0L)(_.pos))
     }
     m.put("lagBytes", if (sized) lag.toString else "-1")
     m.put("admittedTransactions", admittedTotal.toString)
     m
   }
 
-  override def deserializeOffset(json: String): Offset = resolveStarts(VgtidOffset.fromJson(json))
+  /** An offset entering the stream from the checkpoint: bumped once on a
+    * generation change (A5), its unpositioned shards resolved by
+    * [[startAt]]. */
+  override def deserializeOffset(json: String): Offset =
+    VgtidOffset.fromJson(json, Some(generation), startAt)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = transport.close()
 }
@@ -932,7 +930,6 @@ final case class VitessCdcPartition(
 /** The stream-wide reader settings, shipped to executors once per batch. */
 final case class VitessCdcReaderFactory(
     transport: VStreamTransport,
-    keyspace: String,
     emitBoundaries: Boolean = false,
     tableFilter: TableFilter = TableFilter.acceptAll,
     snapshotTables: Option[TableFilter] = None,
@@ -982,14 +979,15 @@ class VitessCdcPartitionReader(
     val records =
       TransactionAssembler.assemble(slice.lines.map(VEventJson.read)).flatMap(rb.onTransaction)
     // H1: one liveness record per shard per batch carrying the end offset
-    // — the step after the last segment, read once the records are drained
+    // — the step after the last segment (its position and keyspace), read
+    // once the records are drained
     // (reference VitessHeartbeatImpl.java:47-77 — emitted alongside data;
     // skipped while no offset exists yet, i.e. a fresh empty start)
     def heartbeat: Iterator[ChangeRecord] =
       if (p.batchHeartbeat && rb.step.sg.gtid != Vgtid.EmptyGtid) {
         val at = Vgtid(Seq(rb.step.sg)).json
         Iterator.single(ChangeRecord(
-          p.shard, f.keyspace, "", "heartbeat", None, None, None,
+          p.shard, rb.step.sg.keyspace, "", "heartbeat", None, None, None,
           0L, at, at, None, rb.step.epoch, None, 0L, 0L))
       } else Iterator.empty
     (records ++ heartbeat).map(VitessCdc.toInternalRow)

@@ -119,10 +119,11 @@ class ShardTxStepPropertySpec extends AnyFunSuite {
 
   private val fresh = ShardTxStep(ShardGtid("ks", "s0", Vgtid.EmptyGtid), 0L)
 
-  /** Every cursor the fold publishes over the whole feed, in order. */
-  private def foldCursors(file: String): Seq[ShardCursor] = {
-    val seed = ShardCursor(0L, fresh, Map.empty)
-    val fold = new TxBoundaryFold("s0", "ks", seed, IntervalMs, Long.MaxValue)
+  /** Every cursor the fold publishes over the whole feed from `seed`, in
+    * order. */
+  private def foldCursors(file: String, seed: ShardCursor = ShardCursor(0L, fresh, Map.empty))
+      : Seq[ShardCursor] = {
+    val fold = new TxBoundaryFold("s0", seed, IntervalMs, Long.MaxValue)
     val slice = new FeedSlice(file, 0L)
     val out = Vector.newBuilder[ShardCursor]
     try {
@@ -144,7 +145,7 @@ class ShardTxStepPropertySpec extends AnyFunSuite {
     val p = VitessCdcPartition("s0", file, from, to.pos, batchHeartbeat = perBatch)
     val t = FileFeedTransport(new java.io.File(file).getParent, true)
     val r = new VitessCdcPartitionReader(
-      p, VitessCdcReaderFactory(t, "ks", heartbeatIntervalMs = IntervalMs))
+      p, VitessCdcReaderFactory(t, heartbeatIntervalMs = IntervalMs))
     val out = Vector.newBuilder[Seq[Any]]
     try while (r.next()) out += r.get().toSeq(VitessCdc.Schema)
     finally r.close()
@@ -167,43 +168,68 @@ class ShardTxStepPropertySpec extends AnyFunSuite {
     lines
   }
 
+  /** Fold feed `f` from `start` and read it whole and cut at every safe
+    * boundary: the fold's cursor must equal the reader's state there, a
+    * batch ending there must emit its heartbeat at that cursor, and the
+    * cut must change no record. The fold's cursors. */
+  private def checkCuts(f: String, start: ShardCursor, what: => String): Seq[ShardCursor] = {
+    val cursors = foldCursors(f, start)
+    val last = cursors.last
+    val (whole, wholeStep) = read(f, start, last)
+    assert(wholeStep == last.step, s"whole feed: $what")
+    cursors.foreach { c =>
+      val (batch, headStep) = read(f, start, c, perBatch = true)
+      assert(headStep == c.step, s"prefix to byte ${c.pos} of $what")
+      // a batch ending at c: one heartbeat last, at c's position and epoch
+      val head =
+        if (c.step.sg.gtid == Vgtid.EmptyGtid) batch
+        else {
+          val hb = batch.last
+          assert(hb(3).toString == "heartbeat" && hb(7) == 0L, s"no batch heartbeat at ${c.pos}")
+          assert(hb(1).toString == c.step.sg.keyspace && hb(8).toString == Vgtid(Seq(c.step.sg)).json &&
+            hb(11) == c.step.epoch,
+            s"batch heartbeat at byte ${c.pos}: ${hb(1)} ${hb(8)} epoch ${hb(11)}, offset ${c.step}: $what")
+          batch.init
+        }
+      val (tail, tailStep) = read(f, c, last)
+      assert(tailStep == last.step, s"suffix from byte ${c.pos}: $what")
+      assert(head ++ tail == whole,
+        s"cut at byte ${c.pos} changed records (${diff(head ++ tail, whole)}): $what")
+    }
+    cursors
+  }
+
   test("the fold's cursor equals the reader's state at every safe boundary; cuts change no record") {
     val dir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("shardtxstep"))
     var epochsSeen = Set.empty[Long]
     var boundaries = 0
     forAll(200) { case (copyTxs, items) =>
       writeFeed(dir, render(copyTxs, items))
-      val f = dir.resolve("s0.jsonl").toString
-      val start = ShardCursor(0L, fresh, Map.empty)
-      val cursors = foldCursors(f)
-      val last = cursors.last
-      val (whole, wholeStep) = read(f, start, last)
-      assert(wholeStep == last.step, s"whole feed: $items")
-      cursors.foreach { c =>
-        val (batch, headStep) = read(f, start, c, perBatch = true)
-        assert(headStep == c.step, s"prefix to byte ${c.pos} of $copyTxs copy txs + $items")
-        // a batch ending at c: one heartbeat last, at c's position and epoch
-        val head =
-          if (c.step.sg.gtid == Vgtid.EmptyGtid) batch
-          else {
-            val hb = batch.last
-            assert(hb(3).toString == "heartbeat" && hb(7) == 0L, s"no batch heartbeat at ${c.pos}")
-            assert(hb(8).toString == Vgtid(Seq(c.step.sg)).json && hb(11) == c.step.epoch,
-              s"batch heartbeat at byte ${c.pos}: ${hb(8)} epoch ${hb(11)}, offset ${c.step}: $items")
-            batch.init
-          }
-        val (tail, tailStep) = read(f, c, last)
-        assert(tailStep == last.step, s"suffix from byte ${c.pos}: $items")
-        assert(head ++ tail == whole,
-          s"cut at byte ${c.pos} changed records (${diff(head ++ tail, whole)}): $items")
-        boundaries += 1
-      }
+      val cursors = checkCuts(dir.resolve("s0.jsonl").toString, ShardCursor(0L, fresh, Map.empty),
+        s"$copyTxs copy txs + $items")
+      boundaries += cursors.size
       epochsSeen ++= cursors.map(_.step.epoch)
     }
     // the generator reaches the cases the rules exist for
     assert(epochsSeen.max >= 3, s"epochs seen: $epochsSeen")
     assert(replicaTxs > 20, s"only $replicaTxs replica transactions")
     assert(boundaries > 1000, s"only $boundaries boundaries checked")
+  }
+
+  test("a shard seeded at another keyspace than its feed's takes each VGTID event's own entry") {
+    // the source seeds a shard new to its offset at the `keyspace` option;
+    // from the first VGTID on, the fold and the reader both carry the
+    // event's entry, so every offset, split cursor and per-batch heartbeat
+    // names the feed's keyspace
+    val dir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("shardtxkeyspace"))
+    val start = ShardCursor(0L, ShardTxStep(ShardGtid("other", "s0", Vgtid.EmptyGtid), 0L), Map.empty)
+    forAll(40) { case (copyTxs, items) =>
+      writeFeed(dir, render(copyTxs, items))
+      val cursors = checkCuts(dir.resolve("s0.jsonl").toString, start, s"$copyTxs copy txs + $items")
+      cursors.filter(_.step.sg.gtid != Vgtid.EmptyGtid).foreach { c =>
+        assert(c.step.sg.keyspace == "ks", s"cursor at byte ${c.pos}: ${c.step}")
+      }
+    }
   }
 
   test("the batch pipeline gives the uncut reader's records, interval heartbeats aside") {

@@ -75,13 +75,13 @@ class TransportSpec extends AnyFunSuite {
     val fileT = FileFeedTransport(dir.toString, excludeEmptyShards = true)
     assert(fileT.listShards().map(_._1) == Seq("s0"))
     val p = partition(Vgtid.EmptyGtid, 0L, Long.MaxValue)
-    val viaFile = drain(VitessCdcReaderFactory(fileT, "ks").createReader(
+    val viaFile = drain(VitessCdcReaderFactory(fileT).createReader(
       p.copy(file = dir.resolve("s0.jsonl").toString)))
 
     // same events through the in-memory transport
     val memT = new InMemoryTransport(Map("s0" -> lines))
     assert(memT.listShards() == Seq("s0" -> "s0"))
-    val viaMem = drain(VitessCdcReaderFactory(memT, "ks").createReader(p))
+    val viaMem = drain(VitessCdcReaderFactory(memT).createReader(p))
 
     assert(viaFile.nonEmpty, "fixture must decode to records")
     assert(viaMem == viaFile, "transport choice must not change the record stream")
@@ -94,7 +94,7 @@ class TransportSpec extends AnyFunSuite {
     // each tx is 5 wire lines; resume from position 5 = after tx 1, with
     // the matching start GTID the offset would carry
     val p = partition("MySQL56/feed:1-1", 5L, Long.MaxValue)
-    val resumed = drain(VitessCdcReaderFactory(memT, "ks").createReader(p))
+    val resumed = drain(VitessCdcReaderFactory(memT).createReader(p))
     assert(resumed.map(_._1) == Seq("c", "c"), s"txs 2 and 3 only: $resumed")
     assert(resumed.flatMap(r => Option(r._3)).mkString.contains("a2"))
     assert(!resumed.flatMap(r => Option(r._3)).mkString.contains("\"a1\""))

@@ -100,7 +100,7 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = new VitessCdcStream(new CaseInsensitiveStringMap(opts.asJava))
     try {
       val start = stream.initialOffset().asInstanceOf[VgtidOffset]
-      assert(start.positions == Map("s0" -> historyBytes))
+      assert(start.cursors.map(c => c.step.sg.shard -> c.pos) == Seq("s0" -> historyBytes))
       val end = stream.latestOffset(start, ReadLimit.allAvailable())
       val parts = stream.planInputPartitions(start, end).map(_.asInstanceOf[VitessCdcPartition])
       assert(parts.length > 1, "expected the derived split size to cut the window")
@@ -178,6 +178,32 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(triggers > 1)
       } finally bounded.stop()
     }
+  }
+
+  test("a generation change bumps every segment's seed once, split cursors included (A5)") {
+    // a batch replayed after a restart at a new generation: its start and
+    // end offsets come back from the checkpoint, and every segment of the
+    // one-host window must seed at the same bumped epoch
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcgensplit"))
+    writeFeed(feedDir, "s0", (1L to 30L).flatMap(i => insertTx("s0", i, i, s"v$i")))
+    def stream(generation: String) = new VitessCdcStream(new CaseInsensitiveStringMap(
+      Map("path" -> feedDir.toString, "generation" -> generation).asJava))
+    val first = stream("1")
+    val (start, end) = try {
+      val s = first.initialOffset()
+      (s.json(), first.latestOffset(s, ReadLimit.allAvailable()).json())
+    } finally first.stop()
+    val restarted = stream("2")
+    try {
+      val parts = restarted.planInputPartitions(
+        restarted.deserializeOffset(start), restarted.deserializeOffset(end))
+        .map(_.asInstanceOf[VitessCdcPartition])
+      assert(parts.length > 1, "expected the derived split size to cut the window")
+      assert(parts.map(_.seed.step.epoch).toSeq.distinct == Seq(1L),
+        parts.map(p => p.seed.pos -> p.seed.step.epoch).toSeq)
+    } finally restarted.stop()
   }
 
   test("no spurious empty batch after a split-carrying batch") {
@@ -307,13 +333,15 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("offset json round-trips the reference offset-map shape") {
     val off = VgtidOffset(
-      Vgtid(Seq(ShardGtid("ks", "-80", "MySQL56/h:1-5"), ShardGtid("ks", "80-", "MySQL56/h:1-9"))),
-      ShardEpochMap.empty.put("-80", 1L).put("80-", 2L),
+      Seq(ShardCursor(0L, ShardTxStep(ShardGtid("ks", "-80", "MySQL56/h:1-5"), 1L), Map.empty),
+        ShardCursor(0L, ShardTxStep(ShardGtid("ks", "80-", "MySQL56/h:1-9"), 2L), Map.empty)),
+      ShardEpochMap.empty.put("-", 0L),
       3L)
     val back = VgtidOffset.fromJson(off.json())
     assert(back == off)
     assert(off.json().contains("\"transaction_epoch\""))
     assert(off.json().contains("\"connector_generation\":3"))
+    assert(back.epochs == ShardEpochMap.empty.put("-", 0L).put("-80", 1L).put("80-", 2L))
   }
 
   test("reads a two-shard feed end-to-end with per-shard metadata") {
@@ -675,6 +703,8 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("every offset the source hands out has a byte position for each shard of its vgtid") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    import com.fasterxml.jackson.databind.node.ObjectNode
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
     val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcoffsetpos"))
@@ -684,7 +714,7 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     def positioned(o: Offset, what: String): VgtidOffset = {
       val v = o.asInstanceOf[VgtidOffset]
       assert(v.vgtid.shardGtids.map(_.shard).toSet == Set("s0", "s1"), what)
-      assert(v.vgtid.shardGtids.forall(sg => v.positions.contains(sg.shard)), s"$what: ${v.json()}")
+      assert(v.cursors.map(_.step.sg.shard) == Seq("s0", "s1"), s"$what: ${v.json()}")
       v
     }
     val explicit = Vgtid(Seq(
@@ -699,10 +729,12 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
           stream.latestOffset(start, ReadLimit.allAvailable()), s"latestOffset $extra")
         positioned(stream.deserializeOffset(end.json()), s"deserializeOffset $extra")
         // a checkpoint written without positions resolves by its vgtid
+        val written = new ObjectMapper().readTree(start.json()).asInstanceOf[ObjectNode]
+        written.remove("feed_positions")
+        written.remove("schemas")
         val legacy = positioned(
-          stream.deserializeOffset(start.copy(positions = Map.empty, schemas = Map.empty).json()),
-          s"position-less deserializeOffset $extra")
-        assert(legacy.positions == start.positions)
+          stream.deserializeOffset(written.toString), s"position-less deserializeOffset $extra")
+        assert(legacy.json() == start.json())
       } finally stream.stop()
     }
   }
@@ -913,7 +945,7 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(p => p.getFileName.toString.forall(_.isDigit))
       .maxBy(_.getFileName.toString.toLong)
     val off = VgtidOffset.fromJson(Files.readAllLines(latest).asScala.last)
-    assert(off.positions.nonEmpty && off.schemas.nonEmpty)
+    assert(off.cursors.nonEmpty && off.cursors.forall(_.schemas.nonEmpty))
     // overwrite the feed with SAME-LENGTH garbage: if the checkpointed
     // path read any byte behind the offset it would now throw or return
     // junk — correct answers prove the call is pure checkpoint + size
@@ -1065,6 +1097,31 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ids == Seq("1", "2", "3", "4", "5"))
     val batches = spark.sql("SELECT count(DISTINCT vgtid) FROM cdc_bounded").first().getLong(0)
     assert(batches == 5) // one position per tx, regardless of batching
+  }
+
+  test("Trigger.Once and Trigger.AvailableNow drain every row under max.txs.per.trigger") {
+    // both triggers pass `allAvailable` to latestOffset, so admission
+    // must read the limit Spark passes, not the cap options
+    import org.apache.spark.sql.streaming.Trigger
+    val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdconce"))
+    Seq("s0", "s1").foreach { sh =>
+      writeFeed(feedDir, sh, (1L to 4L).flatMap(i => insertTx(sh, i, i, s"$sh-$i")))
+    }
+    Seq("once" -> Trigger.Once(), "available_now" -> Trigger.AvailableNow()).foreach {
+      case (name, trigger) =>
+        val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdconceckpt"))
+        val q = spark.readStream.format("vitess-cdc")
+          .option("path", feedDir.toString)
+          .option("max.txs.per.trigger", "1")
+          .load()
+          .writeStream.format("memory").queryName(s"cdc_drain_$name")
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(trigger).start()
+        try q.awaitTermination(120000L) finally q.stop()
+        val rows = spark.sql(s"SELECT shard, get_json_object(after, '$$.id') FROM cdc_drain_$name " +
+          "WHERE op = 'c' ORDER BY 1, 2").collect().map(r => (r.getString(0), r.getString(1))).toSeq
+        assert(rows == Seq("s0", "s1").flatMap(sh => (1 to 4).map(i => (sh, i.toString))), name)
+    }
   }
 
   test("max.bytes.per.trigger bounds batch bytes even with a fat transaction") {
@@ -1420,17 +1477,78 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("offset json round-trips feed positions and schema checkpoint") {
     val off = VgtidOffset(
-      Vgtid(Seq(ShardGtid("ks", "s0", "MySQL56/h:1-5"))),
-      ShardEpochMap.empty.put("s0", 1L),
-      1L,
-      positions = Map("s0" -> 12345L),
-      schemas = Map("s0" -> Map("ks.t1" -> VEventJson.write(
-        FieldEvent("s0", "ks", "ks.t1", t1Fields, enumSetStringValues = false)))))
+      Seq(ShardCursor(12345L, ShardTxStep(ShardGtid("ks", "s0", "MySQL56/h:1-5"), 1L),
+        Map("ks.t1" -> VEventJson.write(
+          FieldEvent("s0", "ks", "ks.t1", t1Fields, enumSetStringValues = false))))),
+      ShardEpochMap.empty,
+      1L)
     val back = VgtidOffset.fromJson(off.json())
     assert(back == off)
     assert(off.json().contains("\"feed_positions\""))
     // serialization is deterministic (Spark compares offset JSON strings)
     assert(off.json() == back.json())
+  }
+
+  test("latestOffset JSON is pinned byte for byte: cursors, splits, baselines, retired epochs (S8)") {
+    // checkpoints written by earlier builds must resume and the benchmark
+    // reads `feed_positions`, so the wire shape is pinned. Two shards
+    // under an interval heartbeat (baselines), enough bytes on "-80" for
+    // the derived split size to cut it on local[2] (split cursors with
+    // schema checkpoints), and a retired reshard parent "-": first named
+    // only by `shard.epoch.map`, then by a pre-reshard checkpoint
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcoffsetgolden"))
+    writeFeed(feedDir, "-80", (1L to 6L).flatMap(i => insertTx("-80", i, i, s"a$i")))
+    writeFeed(feedDir, "80-", (1L to 2L).flatMap(i => insertTx("80-", i, 100 + i, s"b$i", host = "h2")))
+    val stream = new VitessCdcStream(new CaseInsensitiveStringMap(Map(
+      "path" -> feedDir.toString, "heartbeat.interval.ms" -> "2000", "inherit.epoch" -> "true",
+      "shard.epoch.map" -> """{"-":2}""", "generation" -> "2").asJava))
+    val got = try {
+      val limit = stream.getDefaultReadLimit
+      val end1 = stream.latestOffset(stream.initialOffset(), limit)
+      // a failover on "-80" after a restart from end1
+      writeFeed(feedDir, "-80", (7L to 8L).flatMap(i => insertTx("-80", i, i, s"a$i", host = "fo")),
+        append = true)
+      val end2 = stream.latestOffset(stream.deserializeOffset(end1.json()), limit)
+      // a checkpoint of generation 1 taken before the reshard: its parent
+      // "-" has no feed any more, its children start fresh
+      val parent = Vgtid(Seq(ShardGtid("ks", "-", "MySQL56/p:1-9"))).json
+      val before = s"""{"vgtid":$parent,"transaction_epoch":{"-":2},""" +
+        """"connector_generation":1,"feed_positions":{"-":4096}}"""
+      val end3 = stream.latestOffset(stream.deserializeOffset(before), limit)
+      Seq(end1, end2, end3).map(_.json())
+    } finally stream.stop()
+    // each shard's FIELD line, JSON-escaped inside the offset, reads as
+    // `@F(shard)` below
+    val escaped = Seq("-80", "80-").map { sh =>
+      val line = VEventJson.write(FieldEvent(sh, "ks", "ks.t1", t1Fields, enumSetStringValues = false))
+      new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(line).drop(1).dropRight(1) ->
+        s"@F($sh)"
+    }
+    val shown = got.map(j => escaped.foldLeft(j) { case (a, (f, tag)) => a.replace(f, tag) })
+    val golden = Seq(
+      """{"vgtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/feed:1-6","table_p_ks":[]},{"keyspace":"ks","shard":"80-","gtid":"MySQL56/h2:1-2","table_p_ks":[]}],""" +
+        """"transaction_epoch":{"-":2,"-80":3,"80-":3},"connector_generation":2,""" +
+        """"feed_positions":{"-80":3714,"80-":1242},""" +
+        """"schemas":{"-80":{"ks.t1":"@F(-80)"},"80-":{"ks.t1":"@F(80-)"}},""" +
+        """"heartbeat_ms":{"-80":1700000005000,"80-":1700000001000},""" +
+        """"feed_splits":{"-80":[{"pos":3095,"gtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/feed:1-5","table_p_ks":[]}],"epoch":3,"hb":1700000005000,"schemas":{"ks.t1":"@F(-80)"}}]}}""",
+      """{"vgtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/fo:1-8","table_p_ks":[]},{"keyspace":"ks","shard":"80-","gtid":"MySQL56/h2:1-2","table_p_ks":[]}],""" +
+        """"transaction_epoch":{"-":2,"-80":4,"80-":3},"connector_generation":2,""" +
+        """"feed_positions":{"-80":4948,"80-":1242},""" +
+        """"schemas":{"-80":{"ks.t1":"@F(-80)"},"80-":{"ks.t1":"@F(80-)"}},""" +
+        """"heartbeat_ms":{"-80":1700000007000,"80-":1700000001000},""" +
+        """"feed_splits":{"-80":[{"pos":4331,"gtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/fo:1-7","table_p_ks":[]}],"epoch":4,"hb":1700000007000,"schemas":{"ks.t1":"@F(-80)"}}]}}""",
+      """{"vgtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/fo:1-8","table_p_ks":[]},{"keyspace":"ks","shard":"80-","gtid":"MySQL56/h2:1-2","table_p_ks":[]}],""" +
+        """"transaction_epoch":{"-":3,"-80":5,"80-":4},"connector_generation":2,""" +
+        """"feed_positions":{"-80":4948,"80-":1242},""" +
+        """"schemas":{"-80":{"ks.t1":"@F(-80)"},"80-":{"ks.t1":"@F(80-)"}},""" +
+        """"heartbeat_ms":{"-80":1700000007000,"80-":1700000001000},""" +
+        """"feed_splits":{"-80":[{"pos":3095,"gtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/feed:1-5","table_p_ks":[]}],"epoch":4,"hb":1700000005000,"schemas":{"ks.t1":"@F(-80)"}}]}}""")
+    assert(shown.size == golden.size)
+    shown.zip(golden).zipWithIndex.foreach { case ((g, want), i) =>
+      assert(g == want, s"offset $i:\n got  $g\n want $want")
+    }
   }
 
   test("trigger work is bounded by new bytes, not total feed size") {
