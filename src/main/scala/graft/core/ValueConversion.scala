@@ -242,7 +242,7 @@ object ValueConversion {
   }
 
   /** Decode one raw column value per its resolved type. Returns the
-    * engine-native Scala value aligned with `GraftType.sparkType`.
+    * engine-native Scala value for that type.
     * `None` means SQL NULL (zero-date sentinel collapse). */
   def decode(
       tpe: GraftType,

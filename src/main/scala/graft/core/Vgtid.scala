@@ -1,7 +1,6 @@
 package graft.core
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import scala.jdk.CollectionConverters._
 
 /** Multi-shard resumable stream position (the engine's streaming Offset).

@@ -1,9 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.types._
-
 /** The engine's column type system: VStream wire type (+ MySQL column
-  * type string) → logical type → Spark DataType.
+  * type string) → logical type.
   *
   * Behavior mirrors the reference's type resolution
   * (src/main/java/io/debezium/connector/vitess/VitessType.java:94-217):
@@ -11,51 +9,42 @@ import org.apache.spark.sql.types._
   * allowed values, UINT64/DECIMAL stay precise-by-string, unknown types
   * are opaque.
   */
-sealed trait GraftType {
-  /** Spark output type under default config. */
-  def sparkType: DataType
-}
+sealed trait GraftType
 
 object GraftType {
-  case object Int16Type extends GraftType { val sparkType: DataType = ShortType }
-  case object Int32Type extends GraftType { val sparkType: DataType = IntegerType }
-  case object Int64Type extends GraftType { val sparkType: DataType = LongType }
-  case object Float32 extends GraftType { val sparkType: DataType = FloatType }
-  case object Float64 extends GraftType { val sparkType: DataType = DoubleType }
+  case object Int16Type extends GraftType
+  case object Int32Type extends GraftType
+  case object Int64Type extends GraftType
+  case object Float32 extends GraftType
+  case object Float64 extends GraftType
   /** Unsigned 64-bit; default mode keeps the precise string. */
-  case object UInt64 extends GraftType { val sparkType: DataType = StringType }
+  case object UInt64 extends GraftType
   /** MySQL DECIMAL — precise-by-string (the reference default exposes
     * decimals as strings too unless decimal.handling.mode says otherwise). */
-  case object DecimalStr extends GraftType { val sparkType: DataType = StringType }
+  case object DecimalStr extends GraftType
   /** MySQL DECIMAL under decimal.handling.mode=precise: typed with the
     * precision/scale parsed from the column definition (the wire FieldDef
     * carries columnLength/decimals), so downstream extraction gets a real
     * DecimalType(p,s) without a hand-written from_json schema. */
-  final case class DecimalT(precision: Int, scale: Int) extends GraftType {
-    val sparkType: DataType = DecimalType(math.min(math.max(precision, 1), 38), scale)
-  }
-  case object Text extends GraftType { val sparkType: DataType = StringType }
-  case object Json extends GraftType { val sparkType: DataType = StringType }
-  case object Bytes extends GraftType { val sparkType: DataType = BinaryType }
-  final case class Bits(length: Int) extends GraftType {
-    val sparkType: DataType = if (length == 1) BooleanType else BinaryType
-  }
-  final case class Enum(values: Seq[String], stringValued: Boolean) extends GraftType {
-    val sparkType: DataType = StringType // decoded label
-  }
-  final case class SetT(values: Seq[String], stringValued: Boolean) extends GraftType {
-    val sparkType: DataType = StringType // comma-joined labels
-  }
-  case object DateT extends GraftType { val sparkType: DataType = DateType }
+  final case class DecimalT(precision: Int, scale: Int) extends GraftType
+  case object Text extends GraftType
+  case object Json extends GraftType
+  case object Bytes extends GraftType
+  final case class Bits(length: Int) extends GraftType
+  /** Decoded to its label. */
+  final case class Enum(values: Seq[String], stringValued: Boolean) extends GraftType
+  /** Decoded to its comma-joined labels. */
+  final case class SetT(values: Seq[String], stringValued: Boolean) extends GraftType
+  case object DateT extends GraftType
   /** TIME(p): Spark has no time-of-day type; emit micros since midnight. */
-  final case class TimeT(precision: Int) extends GraftType { val sparkType: DataType = LongType }
+  final case class TimeT(precision: Int) extends GraftType
   /** DATETIME(p): wall-clock, no zone. */
-  final case class DatetimeT(precision: Int) extends GraftType { val sparkType: DataType = TimestampNTZType }
+  final case class DatetimeT(precision: Int) extends GraftType
   /** TIMESTAMP(p): UTC instant. */
-  final case class TimestampT(precision: Int) extends GraftType { val sparkType: DataType = TimestampType }
-  case object YearT extends GraftType { val sparkType: DataType = IntegerType }
+  final case class TimestampT(precision: Int) extends GraftType
+  case object YearT extends GraftType
   /** Unknown wire type: opaque bytes, included only when configured. */
-  case object Unknown extends GraftType { val sparkType: DataType = BinaryType }
+  case object Unknown extends GraftType
 
   private def columnTypeMatches(columnType: String, prefix: String): Boolean = {
     val u = columnType.toUpperCase

@@ -517,7 +517,6 @@ object AnnIndex {
     val dir = s"$indexDir/tombstones"
     val (fs, root) = fsOf(spark, dir)
     if (!fs.exists(root)) return 0
-    def path(n: String) = new org.apache.hadoop.fs.Path(root, n)
     // crashed staging is garbage by construction; a committed fold's
     // half-done deletes finish here
     Dedup.sweepFoldLeftovers(fs, root, "tmp_compact_", "compact_")

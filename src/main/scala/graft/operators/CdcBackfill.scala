@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.core.Vgtid
-import graft.sources.VitessCdc
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -74,8 +73,4 @@ object CdcBackfill {
       lit(0L).as("total_order"),
       lit(0L).as("collection_order"))
   }
-
-  /** Column-order sanity: the envelope above IS the source schema. */
-  private[operators] val schemaFields: Seq[String] =
-    VitessCdc.Schema.fields.map(_.name).toSeq
 }

@@ -426,7 +426,6 @@ object CdcQueries {
       // shard) — the first invocation pays a single staging job instead
       // of one per wave
       import java.nio.file.Files
-      import scala.jdk.CollectionConverters._
       val (nWaves, tagged) = taggedFeed
       val tmp = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("graft_stage_tmp"))
       val made = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]

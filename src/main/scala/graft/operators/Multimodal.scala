@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,15 +17,6 @@ import org.apache.spark.sql.types._
   * partition-iterator boundary with a library decoder.
   */
 object Multimodal {
-
-  /** media table schema: opaque payload + typed metadata. */
-  val MediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("payload", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("format", StringType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType))))))
 
   /** Build a deterministic synthetic media table from the documents
     * table: payload = UTF-8 text bytes, metadata derived from doc_id.

@@ -130,11 +130,6 @@ object Sink {
     }
   }
 
-  /** CDC→table materialization: latest state per key. Version order is
-    * (epoch, rank, total_order) — the ordered-transaction metadata built
-    * exactly for this (A2/A3: rank is monotone per shard+epoch). Deletes
-    * drop the key. One shuffle on the key; at scale the window is the
-    * same cost as the groupBy a merge would need. */
   /** Incremental aggregate maintenance from a change log (the
     * materialized-view pattern): each change record contributes signed
     * deltas — the `before` side of updates/deletes subtracts from its
@@ -176,9 +171,11 @@ object Sink {
     side("after", 1).unionByName(side("before", -1))
   }
 
-  /** CDC→table upsert: the current image per key. Delegates to the one
-    * shared version-order definition (Temporal.latestImage) — snapshotAt
-    * is the same operator with a prefix cut. */
+  /** CDC→table upsert: the current image per key. Version order is
+    * (epoch, rank, total_order) — the ordered-transaction metadata built
+    * exactly for this (A2/A3: rank is monotone per shard+epoch). Delegates
+    * to the one shared version-order definition (Temporal.latestImage) —
+    * snapshotAt is the same operator with a prefix cut. */
   def materialize(records0: DataFrame, table: String, schema: StructType): DataFrame =
     Temporal.latestImage(records0, table, schema, cut = None)
 }

@@ -443,7 +443,6 @@ private[sources] final class GrpcFeeder(stagingDir: String, cfg: GrpcConfig)
   private val dir = Paths.get(stagingDir)
   @volatile private var channel: ManagedChannel = null
   @volatile private var failure: Throwable = null
-  private val completed = new CountDownLatch(1)
   @volatile private var started = false
   @volatile private var closed = false
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxBytes, ReadMaxRows, ReportsSourceMetrics, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxBytes, ReadMaxRows, ReportsSourceMetrics, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -41,7 +41,9 @@ import scala.jdk.CollectionConverters._
   * - Partitioning (S9): one InputPartition per segment of a shard's
   *   window (cut at the derived split size, see `latestOffset`) — the
   *   elastic equivalent of the reference's shard→task round-robin
-  *   (VitessConnector.java:126-133).
+  *   (VitessConnector.java:126-133). The cuts stay with the stream, not
+  *   the offset: a batch replayed from the checkpoint reads one segment
+  *   per shard.
   * - Resume semantics (O1/O2): an offset is its shards' cursors, and the
   *   byte window is the batch — a batch delivers every transaction in
   *   each shard's [start, end) bytes. Only a shard with no byte position
@@ -63,9 +65,10 @@ import scala.jdk.CollectionConverters._
   * server-side filter analogue), `boundaries` (emit begin/end records),
   * `generation` (connector generation; a change bumps all epochs, A5),
   * `max.txs.per.trigger` / `max.bytes.per.trigger` (positive per-shard
-  * admission caps, as the default read limit; `Trigger.Once` and
-  * `Trigger.AvailableNow` read everything). The split size is derived,
-  * not an option.
+  * admission caps, as the default read limit; `Trigger.AvailableNow`
+  * keeps them over the data present at query start, `Trigger.Once`
+  * reads everything in one batch). The split size is derived, not an
+  * option.
   */
 class VitessCdcProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "vitess-cdc"
@@ -126,8 +129,9 @@ class VitessCdcTable(options: CaseInsensitiveStringMap) extends Table with Suppo
 /** Streaming offset: the fold's [[ShardCursor]] for each shard of its
   * vgtid, in vgtid order (byte position, [[ShardTxStep]], schema
   * checkpoint), the epochs of shards without a cursor (retired reshard
-  * parents, shards only `shard.epoch.map` names), the connector
-  * generation and this batch's split cursors.
+  * parents, shards only `shard.epoch.map` names) and the connector
+  * generation. Positions only: how a batch is cut into partitions is the
+  * planner's business, not the checkpoint's.
   *
   * Its JSON is the reference's offset map (`vgtid`, `transaction_epoch`,
   * `connector_generation`; VitessOffsetContext.getOffset:92-100) plus what
@@ -142,9 +146,6 @@ class VitessCdcTable(options: CaseInsensitiveStringMap) extends Table with Suppo
   *    registry (the analogue of Debezium's schema history).
   *  - `heartbeat_ms` — interval-heartbeat baseline (commit-time ms), so
   *    the cadence survives batch boundaries.
-  *  - `feed_splits` — split cursors: transaction-safe mid-shard seeds the
-  *    planner fans this batch's window out to, so a recovered batch
-  *    replans the identical segments.
   *
   * No offset value lacks a cursor for a shard of its vgtid: a shard with
   * no byte position (an explicit `vgtid` start, or a checkpoint written
@@ -153,8 +154,7 @@ class VitessCdcTable(options: CaseInsensitiveStringMap) extends Table with Suppo
 final case class VgtidOffset(
     cursors: Seq[ShardCursor],
     otherEpochs: ShardEpochMap,
-    generation: Long,
-    splits: Map[String, Seq[ShardCursor]] = Map.empty)
+    generation: Long)
     extends Offset {
   def vgtid: Vgtid = Vgtid(cursors.map(_.step.sg))
 
@@ -172,11 +172,6 @@ final case class VgtidOffset(
     o.put("connector_generation", generation)
     // sorted keys: Spark compares offset JSON strings to detect "no new
     // data" — serialization must be deterministic
-    def putSchemas(parent: ObjectNode, key: String, schemas: Map[String, String]): Unit =
-      if (schemas.nonEmpty) {
-        val t = parent.putObject(key)
-        schemas.toSeq.sortBy(_._1).foreach { case (tbl, line) => t.put(tbl, line) }
-      }
     def perShard(key: String, of: Seq[ShardCursor])(put: (ObjectNode, ShardCursor) => Unit): Unit =
       if (of.nonEmpty) {
         val node = o.putObject(key)
@@ -184,26 +179,12 @@ final case class VgtidOffset(
       }
     val sorted = cursors.sortBy(_.step.sg.shard)
     perShard("feed_positions", sorted)((n, c) => n.put(c.step.sg.shard, c.pos))
-    perShard("schemas", sorted.filter(_.schemas.nonEmpty))((n, c) =>
-      putSchemas(n, c.step.sg.shard, c.schemas))
+    perShard("schemas", sorted.filter(_.schemas.nonEmpty)) { (n, c) =>
+      val t = n.putObject(c.step.sg.shard)
+      c.schemas.toSeq.sortBy(_._1).foreach { case (tbl, line) => t.put(tbl, line) }
+    }
     perShard("heartbeat_ms", sorted.filter(_.step.hbMs != ShardTxStep.NoBaseline))((n, c) =>
       n.put(c.step.sg.shard, c.step.hbMs))
-    if (splits.exists(_._2.nonEmpty)) {
-      val sp = o.putObject("feed_splits")
-      splits.toSeq.sortBy(_._1).foreach { case (sh, cs) =>
-        if (cs.nonEmpty) {
-          val arr = sp.putArray(sh)
-          cs.sortBy(_.pos).foreach { c =>
-            val n = arr.addObject()
-            n.put("pos", c.pos)
-            n.set[JsonNode]("gtid", m.readTree(Vgtid(Seq(c.step.sg)).json))
-            n.put("epoch", c.step.epoch)
-            if (c.step.hbMs != ShardTxStep.NoBaseline) n.put("hb", c.step.hbMs)
-            putSchemas(n, "schemas", c.schemas)
-          }
-        }
-      }
-    }
     m.writeValueAsString(o)
   }
 }
@@ -211,17 +192,14 @@ final case class VgtidOffset(
 object VgtidOffset {
   /** The offset over `cursors`; `epochs` may name cursor shards too,
     * whose cursors' epochs win. */
-  def of(
-      cursors: Seq[ShardCursor],
-      epochs: ShardEpochMap,
-      generation: Long,
-      splits: Map[String, Seq[ShardCursor]] = Map.empty): VgtidOffset =
-    VgtidOffset(cursors, ShardEpochMap(epochs.map -- cursors.map(_.step.sg.shard)), generation, splits)
+  def of(cursors: Seq[ShardCursor], epochs: ShardEpochMap, generation: Long): VgtidOffset =
+    VgtidOffset(cursors, ShardEpochMap(epochs.map -- cursors.map(_.step.sg.shard)), generation)
 
   /** Parse an offset. One written at a generation other than `generation`
     * has every epoch bumped once (A5) and takes `generation`. A shard of
     * its vgtid with no byte position takes the cursor `start(gtid,
-    * epochs)` gives, over the bumped epochs. */
+    * epochs)` gives, over the bumped epochs. Keys this shape does not
+    * name are skipped, such as the split cursors older builds wrote. */
   def fromJson(
       json: String,
       generation: Option[Long] = None,
@@ -240,28 +218,15 @@ object VgtidOffset {
         .map(e => ShardEpochMap.fromJson(m.writeValueAsString(e)))
         .getOrElse(ShardEpochMap.empty),
       stored, gen)
-    // the one cursor reader: a top-level shard's fields and a split entry
-    def cursor(pos: Long, sg: ShardGtid, epoch: Long, hb: Option[JsonNode],
-        schemas: Option[JsonNode]): ShardCursor =
-      ShardCursor(pos, ShardTxStep(sg, epoch, hb.fold(ShardTxStep.NoBaseline)(_.asLong())),
-        schemas.fold(Map.empty[String, String])(
-          _.properties().asScala.map(t => t.getKey -> t.getValue.asText()).toMap))
     val cursors = gtids(n.get("vgtid")).map { sg =>
       shardField("feed_positions", sg.shard).fold(start(sg, epochs)) { p =>
-        cursor(p.asLong(), sg, epochs.get(sg.shard).getOrElse(0L),
-          shardField("heartbeat_ms", sg.shard), shardField("schemas", sg.shard))
+        val hb = shardField("heartbeat_ms", sg.shard).fold(ShardTxStep.NoBaseline)(_.asLong())
+        ShardCursor(p.asLong(), ShardTxStep(sg, epochs.get(sg.shard).getOrElse(0L), hb),
+          shardField("schemas", sg.shard).fold(Map.empty[String, String])(
+            _.properties().asScala.map(t => t.getKey -> t.getValue.asText()).toMap))
       }
     }
-    val bump = if (gen != stored) 1L else 0L
-    val splits = Option(n.get("feed_splits")).fold(Map.empty[String, Seq[ShardCursor]]) { sp =>
-      sp.properties().asScala.map { e =>
-        e.getKey -> e.getValue.elements().asScala.map { c =>
-          cursor(c.get("pos").asLong(), gtids(c.get("gtid")).head, c.get("epoch").asLong() + bump,
-            Option(c.get("hb")), Option(c.get("schemas")))
-        }.toSeq
-      }.toMap
-    }
-    of(cursors, epochs, gen, splits)
+    of(cursors, epochs, gen)
   }
 }
 
@@ -349,7 +314,7 @@ private[sources] object FeedSlice {
 }
 
 class VitessCdcStream(options: CaseInsensitiveStringMap)
-    extends MicroBatchStream with SupportsAdmissionControl with ReportsSourceMetrics {
+    extends MicroBatchStream with SupportsTriggerAvailableNow with ReportsSourceMetrics {
   private val path = Option(options.get("path")).getOrElse(
     throw new IllegalArgumentException("vitess-cdc source requires a path"))
   // first present key wins: each option's own name first, then the
@@ -690,9 +655,23 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
   // only on the trigger thread
   @volatile private var admittedTotal = 0L
 
+  // The offset latestOffset last returned and its folds' split cursors,
+  // by shard. The cursors are a planning hint, not part of the offset:
+  // dropping one only makes a partition larger. Written only on the
+  // trigger thread.
+  @volatile private var lastSplits: Option[(VgtidOffset, Map[String, Seq[ShardCursor]])] = None
+
+  // Trigger.AvailableNow's target: each shard's size when the query
+  // started. Admission folds no further, so bytes appended later (and
+  // shards that appear later) wait for the next query.
+  @volatile private var availableNow: Option[Map[String, Long]] = None
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNow = Some(shardFiles.flatMap { case (shard, file) => sizeOf(file).map(shard -> _) }.toMap)
+
   /** The configured caps as a read limit. Spark hands it back to
-    * `latestOffset`, except under `Trigger.Once` and `Trigger.AvailableNow`,
-    * which pass `allAvailable`. */
+    * `latestOffset`, except under `Trigger.Once`, which passes
+    * `allAvailable`. */
   override def getDefaultReadLimit: ReadLimit = {
     val limits = Seq(
       Option.when(maxTxsPerTrigger != Long.MaxValue)(ReadLimit.maxRows(maxTxsPerTrigger)),
@@ -728,8 +707,10 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     *
     * Every shard's [[TxBoundaryFold]] is seeded from the trigger's start
     * offset and reads that shard's new bytes, up to the size measured at
-    * the start of the trigger, stepping the shard's [[ShardTxStep]] by
-    * the rules the readers apply to the same lines. Shards fold in parallel on the JVM's
+    * the start of the trigger (under `Trigger.AvailableNow`, no further
+    * than the size measured when the query started), stepping the
+    * shard's [[ShardTxStep]] by the rules the readers apply to the same
+    * lines. Shards fold in parallel on the JVM's
     * global pool (the stream owns no threads); their cursors, split
     * cursors and epochs merge in shard order. A fold stops at the first
     * transaction boundary past the transaction or byte cap of `limit`
@@ -743,7 +724,9 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     * each shard's `size - position` capped at the byte cap —
     * Spark's `FilePartition.maxSplitBytes` rule without its floor or
     * ceiling. Kept split cursors lie within their shard's new bytes, a
-    * split size apart, so a trigger records at most `defaultParallelism`.
+    * split size apart, so a trigger keeps at most `defaultParallelism`.
+    * They stay with the stream, next to the returned offset, for
+    * `planInputPartitions`; the offset holds positions only.
     *
     * Exactly-once holds because the byte position and the folded epochs
     * live in the same atomic offset JSON — bytes before
@@ -787,7 +770,8 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     // a feed deleted between listing and sizing or reading (retired
     // reshard parent) admits nothing this trigger instead of failing it
     val shards = shardFiles.map { case (shard, file) =>
-      (shard, file, cursorAt(from, shard), sizeOf(file))
+      val size = sizeOf(file).map(s => availableNow.fold(s)(t => math.min(s, t.getOrElse(shard, 0L))))
+      (shard, file, cursorAt(from, shard), size)
     }
     val newBytes = shards.map { case (_, _, seed, size) =>
       size.fold(0L)(to => math.min(math.max(0L, to - seed.pos), maxBytes))
@@ -813,22 +797,16 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
     }.toMap
     assert(splits.values.map(_.size).sum <= cores,
       s"split cursors must not outnumber the $cores cores")
-    val built = VgtidOffset.of(folded.map(_.safe), from.epochs, generation, splits)
-    // Spark detects "no new data" by offset-JSON equality. `from` may
-    // carry the previous batch's split cursors; a no-progress rebuild
-    // (same cursors, no new splits) must return `from` verbatim or the
-    // json difference schedules one spurious empty batch after every
-    // split-carrying batch.
-    if (built.splits.isEmpty && from.splits.nonEmpty &&
-      built.copy(splits = from.splits).json() == from.json()) from
-    else {
-      admittedTotal += folded.map(_.admitted).sum
-      built
-    }
+    val end = VgtidOffset.of(folded.map(_.safe), from.epochs, generation)
+    lastSplits = Some(end -> splits)
+    admittedTotal += folded.map(_.admitted).sum
+    end
   }
 
-  override def latestOffset(): Offset =
-    latestOffset(initialOffset(), ReadLimit.allAvailable())
+  /** Spark calls `latestOffset(start, limit)` on a source with admission
+    * control; a fold from [[initialOffset]] would be O(feed). */
+  override def latestOffset(): Offset = throw new UnsupportedOperationException(
+    "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
   /** Shard `shard`'s cursor at offset `o`; a shard new to `o` starts at
     * byte 0 at an empty GTID. */
@@ -838,21 +816,25 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
   /** One partition per segment of each shard's byte window
     * [start position, end position); a shard with no new bytes plans none
     * (standalone DDL/schema lines advance bytes without the VGTID, so
-    * bytes, not positions, say what is new). */
+    * bytes, not positions, say what is new).
+    *
+    * Intra-shard fan-out: when `end` is the offset `latestOffset` last
+    * returned (Spark's `Offset.equals` compares JSON), each shard's window
+    * is cut at that fold's split cursors — transaction-safe mid-shard
+    * seeds (see latestOffset's split size). A segment starts at its cursor
+    * exactly like a batch starts at its offset's. Any other `end` (a
+    * batch replayed from the checkpoint after a restart) plans one
+    * segment per shard: the same transactions, in fewer partitions. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[VgtidOffset]
     val e = end.asInstanceOf[VgtidOffset]
+    val splits = lastSplits.collect { case (o, sp) if o == e => sp }.getOrElse(Map.empty)
     shardFiles.flatMap { case (shard, file) =>
       val from = cursorAt(s, shard)
       val endByte = e.cursor(shard).fold(0L)(_.pos)
       if (from.pos >= endByte) Nil
       else {
-        // Intra-shard fan-out: the end offset may carry split cursors —
-        // transaction-safe mid-shard seeds recorded by the fold (see
-        // latestOffset's split size). A segment starts at its cursor
-        // exactly like a batch starts at its offset's, so the
-        // single-partition case is just the zero-splits instance.
-        val cuts = e.splits.getOrElse(shard, Nil)
+        val cuts = splits.getOrElse(shard, Nil)
           .filter(c => c.pos > from.pos && c.pos < endByte)
           .sortBy(_.pos)
         // per-batch (not per-segment) liveness: only the last segment,

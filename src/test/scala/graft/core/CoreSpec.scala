@@ -271,13 +271,11 @@ class VitessTypesSpec extends AnyFunSuite {
   }
 
   test("decimal.handling.mode=precise resolves a typed DECIMAL(p,s)") {
-    import org.apache.spark.sql.types.DecimalType
     // default: precise-by-string
     assert(GraftType.resolve("DECIMAL", "decimal(13,4)", 13, 4) == GraftType.DecimalStr)
     // precise: typed with precision/scale parsed from the definition
     val t = GraftType.resolve("DECIMAL", "decimal(13,4)", 13, 4, decimalPrecise = true)
     assert(t == GraftType.DecimalT(13, 4))
-    assert(t.sparkType == DecimalType(13, 4))
     // bare definition falls back to wire columnLength/decimals
     assert(GraftType.resolve("DECIMAL", "", 11, 2, decimalPrecise = true) ==
       GraftType.DecimalT(11, 2))

@@ -119,10 +119,13 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       val start = stream.initialOffset()
       val end = stream.latestOffset(start, ReadLimit.allAvailable()).asInstanceOf[VgtidOffset]
-      val cuts = end.splits.getOrElse("s0", Nil)
+      // planner: one partition per segment, tiling the window exactly
+      val parts = stream.planInputPartitions(start, end)
+        .map(_.asInstanceOf[VitessCdcPartition]).sortBy(_.seed.pos)
+      val cuts = parts.tail.map(_.seed)
       // no option set: one shard holds all new bytes, so on local[2] the
       // bytes-per-core split size cuts its window once
-      assert(cuts.size == 1, s"expected one split cursor on 2 cores, got ${cuts.size}")
+      assert(cuts.length == 1, s"expected one split cursor on 2 cores, got ${cuts.length}")
       // every cut is a transaction-safe boundary: the line AT the cut
       // position begins a BEGIN (or is feed end)
       val bytes = Files.readAllBytes(feedDir.resolve("s0.jsonl"))
@@ -130,13 +133,9 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         val next = new String(bytes, c.pos.toInt, math.min(20L, bytes.length - c.pos).toInt, "UTF-8")
         assert(next.startsWith("{\"type\":\"BEGIN\""), s"cut at ${c.pos} lands mid-transaction: $next")
       }
-      // offset JSON round-trips the split cursors (recovery replans the
-      // identical segments)
+      // the offset JSON round-trips and holds positions only
       assert(VgtidOffset.fromJson(end.json()) == end)
-      // planner: one partition per segment, tiling the window exactly
-      val parts = stream.planInputPartitions(start, end)
-        .map(_.asInstanceOf[VitessCdcPartition]).sortBy(_.seed.pos)
-      assert(parts.length == 2)
+      assert(!end.json().contains("feed_splits"))
       assert(parts.head.seed.pos == 0L)
       parts.sliding(2).foreach {
         case Array(a, b) => assert(a.endByte == b.seed.pos, "segments must tile")
@@ -148,6 +147,15 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(p.seed.step.sg.gtid.contains("MySQL56/feed"))
         assert(p.seed.schemas.nonEmpty, "segment seed must carry the schema checkpoint")
       }
+      // a stream that did not fold this offset (a restart replaying the
+      // batch from the checkpoint) plans the window as one segment
+      val replay = new VitessCdcStream(new CaseInsensitiveStringMap(opts))
+      try {
+        val again = replay.planInputPartitions(
+          replay.deserializeOffset(start.json()), replay.deserializeOffset(end.json()))
+          .map(_.asInstanceOf[VitessCdcPartition])
+        assert(again.map(p => (p.seed.pos, p.endByte)).toSeq == Seq((0L, bytes.length.toLong)))
+      } finally replay.stop()
     } finally stream.stop()
 
     // a trigger's split cursors never outnumber the cores, however the
@@ -168,9 +176,9 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         var done = false
         while (!done) {
           val next = bounded.latestOffset(off, bounded.getDefaultReadLimit)
-            .asInstanceOf[VgtidOffset]
-          val cuts = next.splits.values.map(_.size).sum
-          assert(cuts <= cores, s"$extra trigger $triggers recorded $cuts split cursors")
+          val parts = bounded.planInputPartitions(off, next).map(_.asInstanceOf[VitessCdcPartition])
+          val cuts = parts.length - parts.map(_.shard).distinct.length
+          assert(cuts <= cores, s"$extra trigger $triggers planned $cuts split cursors")
           done = next.json() == off.json()
           off = next
           triggers += 1
@@ -180,36 +188,40 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("a generation change bumps every segment's seed once, split cursors included (A5)") {
+  test("a generation change bumps every replayed segment's seed once (A5)") {
     // a batch replayed after a restart at a new generation: its start and
-    // end offsets come back from the checkpoint, and every segment of the
-    // one-host window must seed at the same bumped epoch
+    // end offsets come back from the checkpoint, so the restarted stream
+    // plans one segment per shard, and every segment of the one-host
+    // windows must seed at the bumped epoch
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcgensplit"))
     writeFeed(feedDir, "s0", (1L to 30L).flatMap(i => insertTx("s0", i, i, s"v$i")))
+    writeFeed(feedDir, "s1", (1L to 5L).flatMap(i => insertTx("s1", i, 100 + i, s"w$i")))
     def stream(generation: String) = new VitessCdcStream(new CaseInsensitiveStringMap(
       Map("path" -> feedDir.toString, "generation" -> generation).asJava))
     val first = stream("1")
     val (start, end) = try {
       val s = first.initialOffset()
-      (s.json(), first.latestOffset(s, ReadLimit.allAvailable()).json())
+      val e = first.latestOffset(s, ReadLimit.allAvailable())
+      assert(first.planInputPartitions(s, e).length > 2, "expected the running batch to split")
+      (s.json(), e.json())
     } finally first.stop()
     val restarted = stream("2")
     try {
       val parts = restarted.planInputPartitions(
         restarted.deserializeOffset(start), restarted.deserializeOffset(end))
         .map(_.asInstanceOf[VitessCdcPartition])
-      assert(parts.length > 1, "expected the derived split size to cut the window")
+      assert(parts.map(_.shard).toSeq == Seq("s0", "s1"), "a replay plans one segment per shard")
       assert(parts.map(_.seed.step.epoch).toSeq.distinct == Seq(1L),
         parts.map(p => p.seed.pos -> p.seed.step.epoch).toSeq)
     } finally restarted.stop()
   }
 
   test("no spurious empty batch after a split-carrying batch") {
-    // Spark detects progress by offset-JSON equality; a rebuild that
-    // loses feed_splits while nothing else changed must return the start
-    // offset verbatim, or every split batch is followed by an empty one
+    // Spark detects progress by offset-JSON equality: a no-progress
+    // trigger after a batch that split must return that batch's offset
+    // JSON, or every split batch is followed by an empty one
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcsplitnospur"))
@@ -219,8 +231,8 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = new VitessCdcStream(new CaseInsensitiveStringMap(opts))
     try {
       val start = stream.initialOffset()
-      val batch1 = stream.latestOffset(start, ReadLimit.allAvailable()).asInstanceOf[VgtidOffset]
-      assert(batch1.splits.getOrElse("s0", Nil).nonEmpty)
+      val batch1 = stream.latestOffset(start, ReadLimit.allAvailable())
+      assert(stream.planInputPartitions(start, batch1).length > 1)
       val batch2 = stream.latestOffset(batch1, ReadLimit.allAvailable())
       assert(batch2.json() == batch1.json(),
         "a no-progress trigger must be offset-identical to the split batch")
@@ -250,7 +262,16 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       (11L to 20L).flatMap(i => tx3("s0", i, i, s"b$i", s"x$i"))
         .map(VEventJson.write).mkString("", "\n", "\n"),
       StandardOpenOption.APPEND)
-    def run(sink: String, opts: Map[String, String]): (Seq[Row], Path) = {
+    // the most tasks one job of each streaming query ran, by query id
+    val tasksByQuery = scala.collection.concurrent.TrieMap.empty[String, Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("sql.streaming.queryId"))).foreach { id =>
+          val tasks = j.stageInfos.map(_.numTasks).maxOption.getOrElse(0)
+          tasksByQuery.updateWith(id)(prev => Some(math.max(tasks, prev.getOrElse(0))))
+        }
+    }
+    def run(sink: String, opts: Map[String, String]): (Seq[Row], String) = {
       val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcsplitckpt"))
       val b0 = spark.readStream.format("vitess-cdc").option("path", feedDir.toString)
       val q = opts.foldLeft(b0) { case (b, (k, v)) => b.option(k, v) }.load()
@@ -261,18 +282,25 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"SELECT CAST(get_json_object(after, '$$.id') AS LONG) AS id, after, epoch, " +
           s"vgtid, restart_vgtid, rank, total_order FROM $sink WHERE op = 'c' ORDER BY id")
         .collect().toSeq
-      (rows, ckpt)
+      (rows, q.id.toString)
     }
-    val (plain, _) = run("cdc_split_off", Map("max.txs.per.trigger" -> "1"))
-    val (split, splitCkpt) = run("cdc_split_on", Map.empty)
+    spark.sparkContext.addSparkListener(listener)
+    val (plain, split, splitTasks) = try {
+      val (plain, _) = run("cdc_split_off", Map("max.txs.per.trigger" -> "1"))
+      val (split, splitId) = run("cdc_split_on", Map.empty)
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (tasksByQuery.getOrElse(splitId, 0) < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+      (plain, split, tasksByQuery.getOrElse(splitId, 0))
+    } finally spark.sparkContext.removeSparkListener(listener)
     assert(split == plain, "split run must be row-identical to the unsplit run")
     assert(plain.size == 20)
     assert(plain.take(10).forall(_.getLong(2) == 0L)) // host A epoch
     assert(plain.drop(10).forall(_.getLong(2) == 1L)) // flip folded into seeds
     assert(plain.last.getString(1).contains("x20")) // evolved column decoded
-    // and the split run REALLY split: its committed offset carries cuts
-    val offsetJson = Files.readString(splitCkpt.resolve("offsets").resolve("0"))
-    assert(offsetJson.contains("\"feed_splits\""), "expected feed_splits in the offset log")
+    // and the split run REALLY split: the one shard's batch ran at least
+    // two read tasks
+    assert(splitTasks >= 2, s"expected a split batch, got $splitTasks task(s) per job")
   }
 
   test("a hot shard splits by the derived rule and a cold one does not, rows unchanged") {
@@ -1100,8 +1128,9 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Trigger.Once and Trigger.AvailableNow drain every row under max.txs.per.trigger") {
-    // both triggers pass `allAvailable` to latestOffset, so admission
-    // must read the limit Spark passes, not the cap options
+    // Trigger.Once passes `allAvailable` to latestOffset, so admission
+    // must read the limit Spark passes, not the cap options;
+    // Trigger.AvailableNow runs capped batches until the data is drained
     import org.apache.spark.sql.streaming.Trigger
     val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdconce"))
     Seq("s0", "s1").foreach { sh =>
@@ -1122,6 +1151,57 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
           "WHERE op = 'c' ORDER BY 1, 2").collect().map(r => (r.getString(0), r.getString(1))).toSeq
         assert(rows == Seq("s0", "s1").flatMap(sh => (1 to 4).map(i => (sh, i.toString))), name)
     }
+  }
+
+  test("Trigger.AvailableNow keeps max.txs.per.trigger: 2 shards x 4 txs drain in 4 batches") {
+    import org.apache.spark.sql.streaming.Trigger
+    val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcavailnow"))
+    Seq("s0", "s1").foreach { sh =>
+      writeFeed(feedDir, sh, (1L to 4L).flatMap(i => insertTx(sh, i, i, s"$sh-$i")))
+    }
+    val q = spark.readStream.format("vitess-cdc")
+      .option("path", feedDir.toString)
+      .option("max.txs.per.trigger", "1")
+      .load()
+      .writeStream.format("memory").queryName("cdc_available_now_capped")
+      .option("checkpointLocation",
+        graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcavailnowckpt")).toString)
+      .trigger(Trigger.AvailableNow()).start()
+    try assert(q.awaitTermination(120000L), "AvailableNow must stop once drained") finally q.stop()
+    // one transaction (one row) per shard in each batch with rows
+    val withRows = q.recentProgress.filter(_.numInputRows > 0).map(_.numInputRows).toSeq
+    assert(withRows == Seq(2L, 2L, 2L, 2L), withRows)
+    val rows = spark.sql("SELECT shard, get_json_object(after, '$.id') FROM cdc_available_now_capped " +
+      "WHERE op = 'c' ORDER BY 1, 2").collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(rows == Seq("s0", "s1").flatMap(sh => (1 to 4).map(i => (sh, i.toString))))
+  }
+
+  test("Trigger.AvailableNow leaves a transaction appended after the start to the next query") {
+    import org.apache.spark.sql.streaming.Trigger
+    val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcavailnowlate"))
+    val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcavailnowlateckpt"))
+    writeFeed(feedDir, "s0", (1L to 2L).flatMap(i => insertTx("s0", i, i, s"v$i")))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def run(): Unit = {
+      val q = spark.readStream.format("vitess-cdc")
+        .option("path", feedDir.toString)
+        .option("max.txs.per.trigger", "1")
+        .load()
+        .writeStream
+        .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], id: Long) =>
+          df.where("op = 'c'").selectExpr("get_json_object(after, '$.id')").collect()
+            .foreach(r => seen.add(r.getString(0)))
+          // the first batch runs after the query started: tx 3 lands late
+          if (id == 0L) writeFeed(feedDir, "s0", insertTx("s0", 3L, 3L, "late"), append = true)
+        }
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow()).start()
+      try assert(q.awaitTermination(120000L), "AvailableNow must stop once drained") finally q.stop()
+    }
+    run()
+    assert(seen.asScala.toSeq == Seq("1", "2"))
+    run()
+    assert(seen.asScala.toSeq == Seq("1", "2", "3"))
   }
 
   test("max.bytes.per.trigger bounds batch bytes even with a fat transaction") {
@@ -1489,12 +1569,36 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(off.json() == back.json())
   }
 
+  // The offsets of the pinned-JSON spec (S8), each shard's FIELD line
+  // shown as `@F(shard)`, and the `feed_splits` member older builds wrote
+  // last in each.
+  private val pinnedOffsets = Seq(
+    """{"vgtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/feed:1-6","table_p_ks":[]},{"keyspace":"ks","shard":"80-","gtid":"MySQL56/h2:1-2","table_p_ks":[]}],""" +
+      """"transaction_epoch":{"-":2,"-80":3,"80-":3},"connector_generation":2,""" +
+      """"feed_positions":{"-80":3714,"80-":1242},""" +
+      """"schemas":{"-80":{"ks.t1":"@F(-80)"},"80-":{"ks.t1":"@F(80-)"}},""" +
+      """"heartbeat_ms":{"-80":1700000005000,"80-":1700000001000}}""",
+    """{"vgtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/fo:1-8","table_p_ks":[]},{"keyspace":"ks","shard":"80-","gtid":"MySQL56/h2:1-2","table_p_ks":[]}],""" +
+      """"transaction_epoch":{"-":2,"-80":4,"80-":3},"connector_generation":2,""" +
+      """"feed_positions":{"-80":4948,"80-":1242},""" +
+      """"schemas":{"-80":{"ks.t1":"@F(-80)"},"80-":{"ks.t1":"@F(80-)"}},""" +
+      """"heartbeat_ms":{"-80":1700000007000,"80-":1700000001000}}""",
+    """{"vgtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/fo:1-8","table_p_ks":[]},{"keyspace":"ks","shard":"80-","gtid":"MySQL56/h2:1-2","table_p_ks":[]}],""" +
+      """"transaction_epoch":{"-":3,"-80":5,"80-":4},"connector_generation":2,""" +
+      """"feed_positions":{"-80":4948,"80-":1242},""" +
+      """"schemas":{"-80":{"ks.t1":"@F(-80)"},"80-":{"ks.t1":"@F(80-)"}},""" +
+      """"heartbeat_ms":{"-80":1700000007000,"80-":1700000001000}}""")
+  private val olderFeedSplits = Seq(
+    """"feed_splits":{"-80":[{"pos":3095,"gtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/feed:1-5","table_p_ks":[]}],"epoch":3,"hb":1700000005000,"schemas":{"ks.t1":"@F(-80)"}}]}""",
+    """"feed_splits":{"-80":[{"pos":4331,"gtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/fo:1-7","table_p_ks":[]}],"epoch":4,"hb":1700000007000,"schemas":{"ks.t1":"@F(-80)"}}]}""",
+    """"feed_splits":{"-80":[{"pos":3095,"gtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/feed:1-5","table_p_ks":[]}],"epoch":4,"hb":1700000005000,"schemas":{"ks.t1":"@F(-80)"}}]}""")
+
   test("latestOffset JSON is pinned byte for byte: cursors, splits, baselines, retired epochs (S8)") {
     // checkpoints written by earlier builds must resume and the benchmark
     // reads `feed_positions`, so the wire shape is pinned. Two shards
     // under an interval heartbeat (baselines), enough bytes on "-80" for
-    // the derived split size to cut it on local[2] (split cursors with
-    // schema checkpoints), and a retired reshard parent "-": first named
+    // the derived split size to cut it on local[2] (its split cursors stay
+    // out of the offset), and a retired reshard parent "-": first named
     // only by `shard.epoch.map`, then by a pre-reshard checkpoint
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcoffsetgolden"))
@@ -1526,29 +1630,101 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"@F($sh)"
     }
     val shown = got.map(j => escaped.foldLeft(j) { case (a, (f, tag)) => a.replace(f, tag) })
-    val golden = Seq(
-      """{"vgtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/feed:1-6","table_p_ks":[]},{"keyspace":"ks","shard":"80-","gtid":"MySQL56/h2:1-2","table_p_ks":[]}],""" +
-        """"transaction_epoch":{"-":2,"-80":3,"80-":3},"connector_generation":2,""" +
-        """"feed_positions":{"-80":3714,"80-":1242},""" +
-        """"schemas":{"-80":{"ks.t1":"@F(-80)"},"80-":{"ks.t1":"@F(80-)"}},""" +
-        """"heartbeat_ms":{"-80":1700000005000,"80-":1700000001000},""" +
-        """"feed_splits":{"-80":[{"pos":3095,"gtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/feed:1-5","table_p_ks":[]}],"epoch":3,"hb":1700000005000,"schemas":{"ks.t1":"@F(-80)"}}]}}""",
-      """{"vgtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/fo:1-8","table_p_ks":[]},{"keyspace":"ks","shard":"80-","gtid":"MySQL56/h2:1-2","table_p_ks":[]}],""" +
-        """"transaction_epoch":{"-":2,"-80":4,"80-":3},"connector_generation":2,""" +
-        """"feed_positions":{"-80":4948,"80-":1242},""" +
-        """"schemas":{"-80":{"ks.t1":"@F(-80)"},"80-":{"ks.t1":"@F(80-)"}},""" +
-        """"heartbeat_ms":{"-80":1700000007000,"80-":1700000001000},""" +
-        """"feed_splits":{"-80":[{"pos":4331,"gtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/fo:1-7","table_p_ks":[]}],"epoch":4,"hb":1700000007000,"schemas":{"ks.t1":"@F(-80)"}}]}}""",
-      """{"vgtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/fo:1-8","table_p_ks":[]},{"keyspace":"ks","shard":"80-","gtid":"MySQL56/h2:1-2","table_p_ks":[]}],""" +
-        """"transaction_epoch":{"-":3,"-80":5,"80-":4},"connector_generation":2,""" +
-        """"feed_positions":{"-80":4948,"80-":1242},""" +
-        """"schemas":{"-80":{"ks.t1":"@F(-80)"},"80-":{"ks.t1":"@F(80-)"}},""" +
-        """"heartbeat_ms":{"-80":1700000007000,"80-":1700000001000},""" +
-        """"feed_splits":{"-80":[{"pos":3095,"gtid":[{"keyspace":"ks","shard":"-80","gtid":"MySQL56/feed:1-5","table_p_ks":[]}],"epoch":4,"hb":1700000005000,"schemas":{"ks.t1":"@F(-80)"}}]}}""")
+    val golden = pinnedOffsets
     assert(shown.size == golden.size)
     shown.zip(golden).zipWithIndex.foreach { case ((g, want), i) =>
       assert(g == want, s"offset $i:\n got  $g\n want $want")
     }
+  }
+
+  test("an offset with the feed_splits older builds wrote parses to the same positions (S8)") {
+    pinnedOffsets.zip(olderFeedSplits).foreach { case (pinned, splits) =>
+      val older = pinned.dropRight(1) + "," + splits + "}"
+      assert(VgtidOffset.fromJson(older) == VgtidOffset.fromJson(pinned))
+      assert(VgtidOffset.fromJson(older).json() == pinned)
+      // a generation change bumps the positions' epochs once, as before
+      assert(VgtidOffset.fromJson(older, Some(3L)) == VgtidOffset.fromJson(pinned, Some(3L)))
+    }
+  }
+
+  test("a restart replays an uncommitted split batch that an older build logged with feed_splits") {
+    import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcolderckptfeed"))
+    val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcolderckpt"))
+    val out = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcolderckptout"))
+    def append(from: Long, to: Long): Unit = {
+      writeFeed(feedDir, "s0", (from to to).flatMap(i => insertTx("s0", i, i, s"h$i")), append = true)
+      writeFeed(feedDir, "s1", (from to to).filter(_ % 6 == 0)
+        .flatMap(i => insertTx("s1", i / 6, 100 + i, s"c$i")), append = true)
+    }
+    def run(): Unit = {
+      val q = spark.readStream.format("vitess-cdc").option("path", feedDir.toString).load()
+        .writeStream.format("parquet").option("path", out.toString)
+        .option("checkpointLocation", ckpt.toString).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    append(1L, 12L)
+    run() // batch 0
+    append(13L, 36L)
+    run() // batch 1: the hot shard s0 splits
+    // batch 1 as an older build logged it: its split cursors, in that
+    // build's `feed_splits` shape, last in the offset JSON
+    val offsets = ckpt.resolve("offsets")
+    def logged(batch: String): Seq[String] = Files.readAllLines(offsets.resolve(batch)).asScala.toSeq
+    val stream = new VitessCdcStream(new CaseInsensitiveStringMap(Map("path" -> feedDir.toString).asJava))
+    val cuts = try {
+      val start = stream.deserializeOffset(logged("0").last)
+      val end = stream.latestOffset(start, ReadLimit.allAvailable())
+      assert(end.json() == logged("1").last)
+      stream.planInputPartitions(start, end).map(_.asInstanceOf[VitessCdcPartition]).toSeq
+        .groupBy(_.shard).map { case (sh, ps) => sh -> ps.map(_.seed).sortBy(_.pos).tail }
+        .filter(_._2.nonEmpty)
+    } finally stream.stop()
+    assert(cuts.keySet == Set("s0"), s"expected only s0 to split: $cuts")
+    val m = new ObjectMapper()
+    val older = m.readTree(logged("1").last).asInstanceOf[ObjectNode]
+    val sp = older.putObject("feed_splits")
+    cuts.toSeq.sortBy(_._1).foreach { case (sh, cs) =>
+      val arr = sp.putArray(sh)
+      cs.foreach { c =>
+        val n = arr.addObject()
+        n.put("pos", c.pos)
+        n.set[JsonNode]("gtid", m.readTree(Vgtid(Seq(c.step.sg)).json))
+        n.put("epoch", c.step.epoch)
+        if (c.step.hbMs != ShardTxStep.NoBaseline) n.put("hb", c.step.hbMs)
+        val t = n.putObject("schemas")
+        c.schemas.toSeq.sortBy(_._1).foreach { case (tbl, line) => t.put(tbl, line) }
+      }
+    }
+    Files.writeString(offsets.resolve("1"), (logged("1").init :+ m.writeValueAsString(older)).mkString("\n"))
+    // ... and crashed before the sink and the commit log saw it
+    Seq(offsets.resolve(".1.crc"), ckpt.resolve("commits").resolve("1"),
+      ckpt.resolve("commits").resolve(".1.crc"), out.resolve("_spark_metadata").resolve("1"),
+      out.resolve("_spark_metadata").resolve(".1.crc")).foreach(Files.deleteIfExists)
+    run() // replays batch 1 from the log
+    assert(Files.exists(ckpt.resolve("commits").resolve("1")), "batch 1 must be replayed")
+    // Spark compares the next offset's JSON with the logged one, which
+    // differs by `feed_splits`: one empty batch follows the replay
+    assert(!Files.exists(offsets.resolve("3")), "the replay must settle after one empty batch")
+    val cols = "CAST(get_json_object(after, '$.id') AS LONG) AS id, after, epoch, vgtid, " +
+      "restart_vgtid, rank, total_order"
+    spark.read.parquet(out.toString).createOrReplaceTempView("cdc_older_ckpt_replayed")
+    val replayed = spark.sql(s"SELECT $cols FROM cdc_older_ckpt_replayed WHERE op = 'c' ORDER BY id")
+      .collect().toSeq
+    val q = spark.readStream.format("vitess-cdc").option("path", feedDir.toString)
+      .option("max.txs.per.trigger", "1").load()
+      .writeStream.format("memory").queryName("cdc_older_ckpt_uncut")
+      .option("checkpointLocation",
+        graft.TempDirs.reclaimOnExit(Files.createTempDirectory("cdcolderckptuncut")).toString)
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val uncut = spark.sql(s"SELECT $cols FROM cdc_older_ckpt_uncut WHERE op = 'c' ORDER BY id")
+      .collect().toSeq
+    assert(uncut.size == 42)
+    assert(replayed == uncut, "the replayed split batch must deliver the uncut run's rows")
   }
 
   test("trigger work is bounded by new bytes, not total feed size") {
