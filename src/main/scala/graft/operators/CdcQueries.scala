@@ -22,7 +22,7 @@ object CdcQueries {
     * deployment materializes one change log for many consumers. */
   private def ordersChangeLog(s: SparkSession, d: String): DataFrame =
     Materialize.shared(s, s"cdc.changeLog:$d")(
-      CdcPipeline.changeRecords(s, ordersFeed(s, d)).toDF())
+      CdcPipeline.changeRecords(s, ordersFeed(s, d)))
 
   /** The default orders FEED (the raw wire lines), memoized like the
     * change log above: generation is a corpus-wide JSON-serialization
@@ -65,7 +65,7 @@ object CdcQueries {
     * delete. */
   val qCdcOpsMix: Q = (s, d) => {
     val recs = CdcPipeline.changeRecords(s, CdcFeed.orders(s, d, opsMix = true))
-    recs.toDF()
+    recs
       .groupBy(col("op"))
       .agg(
         count(lit(1)).as("n"),
@@ -91,11 +91,11 @@ object CdcQueries {
       .groupBy(col("shard"))
       .agg(
         count(lit(1)).as("n_records"),
-        countDistinct(col("txId")).as("n_tx"),
+        countDistinct(col("tx_id")).as("n_tx"),
         max(col("rank").cast(LongType)).as("max_rank"),
         max(col("epoch")).as("max_epoch"),
         sum(when(
-          get_json_object(col("restartVgtid"), "$[0].gtid") ===
+          get_json_object(col("restart_vgtid"), "$[0].gtid") ===
             concat(lit("MySQL56/feed:1-"), (col("rank").cast(LongType) - 1).cast(StringType)),
           1L).otherwise(0L)).as("n_rotated"))
       .orderBy(col("shard"))
@@ -112,7 +112,7 @@ object CdcQueries {
     * oracle pins the expected decodings as literals. */
   val qCdcTypeMatrix: Q = (s, _) => {
     val recs = CdcPipeline.changeRecords(s, CdcFeed.typeMatrix(s))
-    recs.toDF()
+    recs
       .filter(col("op") === "c")
       .select(
         afterStr("c_i16").as("c_i16"),
@@ -158,7 +158,7 @@ object CdcQueries {
       binary = ValueConversion.BinaryMode.Hex,
       temporal = ValueConversion.TemporalMode.IsoString)
     val recs = CdcPipeline.changeRecords(s, CdcFeed.typeModesMatrix(s), typeModes = modes)
-    recs.toDF()
+    recs
       .filter(col("op") === "c")
       .select(
         afterStr("c_u64_neg").as("u64_wrapped"),
@@ -180,13 +180,13 @@ object CdcQueries {
     * event's own timestamp. */
   val qCdcDdl: Q = (s, _) => {
     val recs = CdcPipeline.changeRecords(s, CdcFeed.typeMatrix(s))
-    recs.toDF()
+    recs
       .filter(col("op") === "ddl")
+      .orderBy(col("ts_ms"))
       .select(
         col("table"),
         get_json_object(col("after"), "$.operation").as("operation"),
-        col("tsMs"))
-      .orderBy(col("tsMs"))
+        col("ts_ms").as("tsMs"))
   }
 
   val qCdcDdlSql: String =
@@ -201,7 +201,7 @@ object CdcQueries {
   val qCdcFilterTables: Q = (s, d) => {
     val filter = graft.core.TableFilter(Seq("ks\\.orders"), Nil)
     val recs = CdcPipeline.changeRecords(s, CdcFeed.twoTables(s, d), tableFilter = filter)
-    recs.toDF()
+    recs
       .filter(col("op") === "c")
       .groupBy(col("keyspace"), col("table"))
       .agg(count(lit(1)).as("n"))
@@ -222,7 +222,7 @@ object CdcQueries {
       StructField("c_nationkey", IntegerType),
       StructField("c_acctbal", DoubleType),
       StructField("c_mktsegment", StringType)))
-    Transforms.extractNewRecordState(Envelope.toEnvelope(recs.toDF()), schema)
+    Transforms.extractNewRecordState(Envelope.toEnvelope(recs), schema)
   }
 
   val qCdcExtractStateSql: String =
@@ -233,7 +233,7 @@ object CdcQueries {
     * own shard's entry (feed emits full 4-shard vgtids). */
   val qCdcLocalVgtid: Q = (s, d) => {
     val recs = CdcPipeline.changeRecords(s, CdcFeed.orders(s, d, multiShardVgtid = true))
-    val env = Transforms.useLocalVgtid(Envelope.toEnvelope(recs.toDF()))
+    val env = Transforms.useLocalVgtid(Envelope.toEnvelope(recs))
     env.filter(col("op") === "c")
       .select(
         col("source.shard").as("shard"),
@@ -290,7 +290,7 @@ object CdcQueries {
     val recs = CdcPipeline.changeRecords(s, ordersFeed(s, d), emitBoundaries = true)
     // eager localCheckpoint: one materialization pass shared by the two
     // union branches (persist + count would pay an extra full action)
-    val df = recs.toDF().localCheckpoint(true)
+    val df = recs.localCheckpoint(true)
     val kept = Transforms.filterTransactionTopicRecords(df)
     val out = df.groupBy(col("op")).agg(count(lit(1)).as("n"))
       .unionByName(
@@ -321,7 +321,6 @@ object CdcQueries {
     * and let partitionBy fan one ordered file out per shard directory.
     * Later feed waves append via [[copyWave]] over staged dirs. */
   private def writeFeedFiles(
-      s: SparkSession,
       feed: org.apache.spark.sql.Dataset[graft.streaming.FeedLine],
       feedDir: java.nio.file.Path): Unit = {
     val tmp = feedDir.resolve("_tmp")
@@ -385,7 +384,7 @@ object CdcQueries {
   private def ordersFeedDir(s: SparkSession, d: String): java.nio.file.Path =
     Materialize.once(s"cdc.ordersFeedDir:$d") {
       val dir = graft.TempDirs.reclaimOnExit(java.nio.file.Files.createTempDirectory("graft_feed_orders"))
-      writeFeedFiles(s, ordersFeed(s, d), dir)
+      writeFeedFiles(ordersFeed(s, d), dir)
       dir
     }
 
@@ -396,7 +395,7 @@ object CdcQueries {
     * and byte-copy it into the caller's fresh feed dir after that.
     * Restart semantics are untouched — every invocation still gets its
     * own feedDir/checkpoint/sink and two real checkpointed runs. */
-  private def stageWaves(key: String, s: SparkSession)(
+  private def stageWaves(key: String)(
       waves: => Seq[org.apache.spark.sql.Dataset[graft.streaming.FeedLine]]): Seq[java.nio.file.Path] =
     // a staged key must not force `waves`: building the wave plans is
     // the work the memo exists to skip
@@ -548,7 +547,7 @@ object CdcQueries {
     // 1, the rest arrive after the restart; a tx-aligned boundary by
     // construction, whatever the stride
     val cut = 100 * CdcFeed.EventsPerTx
-    val waves = stageWaves(s"rr:$d", s) {
+    val waves = stageWaves(s"rr:$d") {
       val feed = ordersFeed(s, d)
       Seq(feed.filter(col("seq") < cut), feed.filter(col("seq") >= cut))
     }
@@ -617,7 +616,7 @@ object CdcQueries {
     val outDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("graft_rs_out"))
     val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("graft_rs_ckpt"))
     val opts = Map("inherit.epoch" -> "true")
-    val waves = stageWaves(s"rs:$d", s) {
+    val waves = stageWaves(s"rs:$d") {
       Seq(
         CdcFeed.orders(s, d, nShards = 2, hostFlip = true, shardNames = Seq("-80", "80-")),
         CdcFeed.orders(s, d, nShards = 4, shardNames = Seq("p0", "p1", "p2", "40-c0"))
@@ -710,7 +709,7 @@ object CdcQueries {
     val outDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("graft_cp_out"))
     val ckpt = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("graft_cp_ckpt"))
     releasing(feedDir, ckpt) {
-      copyWave(stageWaves(s"cp:$d", s)(Seq(CdcFeed.copyPhase(s, d))).head, feedDir)
+      copyWave(stageWaves(s"cp:$d")(Seq(CdcFeed.copyPhase(s, d))).head, feedDir)
       runStreamOnce(s, feedDir, outDir, ckpt, Map("snapshot.tables" -> "ks\\.orders"))
     }
     s.read.parquet(outDir.toString)
@@ -756,7 +755,7 @@ object CdcQueries {
     // call; the staged bytes are memoized like the restart-gate waves
     val (feed, handover) = CdcFeed.backfillWaves(s, d)
     releasing(feedDir, ckpt) {
-      copyWave(stageWaves(s"bf:$d", s)(Seq(feed)).head, feedDir)
+      copyWave(stageWaves(s"bf:$d")(Seq(feed)).head, feedDir)
       runStreamOnce(s, feedDir, outDir, ckpt, Map("vgtid" -> handover.json))
     }
     val snapshot = CdcBackfill.snapshotRecords(
@@ -830,7 +829,6 @@ object CdcQueries {
         CdcPipeline.changeRecords(
             s, feed,
             tableFilter = TableFilter.acceptAll.copy(excludeHeartbeatTables = !streamHeartbeats))
-          .toDF()
           .filter(col("op") === "c")
           .groupBy(col("table").as("tbl"))
           .agg(count(lit(1)).as("n"))
@@ -863,7 +861,7 @@ object CdcQueries {
     import java.nio.file.Files
     import graft.sources.Metadata
     val feedDir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("graft_feed_meta"))
-    copyWave(stageWaves(s"meta:$d", s)(Seq(CdcFeed.twoTables(s, d))).head, feedDir)
+    copyWave(stageWaves(s"meta:$d")(Seq(CdcFeed.twoTables(s, d))).head, feedDir)
     Files.writeString(feedDir.resolve("9.jsonl"), "") // empty shard
     val sp = s; import sp.implicits._
     val dir = feedDir.toString
@@ -903,7 +901,7 @@ object CdcQueries {
     * log, like three readers of one landed CDC table. */
   private def ordersVersionedLog(s: SparkSession, d: String): DataFrame =
     Materialize.shared(s, s"cdc.versionedLog:$d")(
-      CdcPipeline.changeRecords(s, CdcFeed.ordersVersioned(s, d)).toDF())
+      CdcPipeline.changeRecords(s, CdcFeed.ordersVersioned(s, d)))
 
   /** S7 + SURVEY §2.9: CDC→table upsert — latest state per key ordered by
     * (epoch, rank, total_order); deletes drop the key. The multi-version
@@ -1015,7 +1013,7 @@ object CdcQueries {
       StructField("text", StringType),
       StructField("lang", StringType),
       StructField("source", StringType)))
-    val corpus = Sink.materialize(recs.toDF(), "documents", schema)
+    val corpus = Sink.materialize(recs, "documents", schema)
     corpus.groupBy(col("lang")).agg(
       count(lit(1)).as("n_docs"),
       sum(col("doc_id")).as("sum_id"),
@@ -1047,7 +1045,7 @@ object CdcQueries {
       prefix = "graft",
       overridePrefix = Some("cdc2"),
       overrideExcludeList = Seq("ks\\.customer"))
-    recs.toDF()
+    recs
       .filter(col("op") === "c")
       .withColumn("topic", Sink.topicColumn(cfg))
       .groupBy(col("topic"))
@@ -1074,7 +1072,7 @@ object CdcQueries {
       StructField("c_name", StringType),
       StructField("c_nationkey", IntegerType),
       StructField("c_mktsegment", StringType)))
-    recs.toDF().filter(col("op") === "c")
+    recs.filter(col("op") === "c")
       .select(
         from_json(col("after"), schema).as("r"),
         (get_json_object(col("after"), "$.c_acctbal").isNull).as("acctbal_gone"))
@@ -1108,13 +1106,13 @@ object CdcQueries {
       events.zipWithIndex.map { case (e, i) => FeedLine("0", i.toLong, VEventJson.write(e)) })
     val warn = CdcPipeline.changeRecords(s, feed,
       convertFailureMode = graft.core.ConvertFailureMode.Warn)
-      .toDF().filter(col("op") === "c")
+      .filter(col("op") === "c")
       .select(lit("warn").as("mode"),
         get_json_object(col("after"), "$.id").as("id"),
         get_json_object(col("after"), "$.n").as("n"))
     val skip = CdcPipeline.changeRecords(s, feed,
       convertFailureMode = graft.core.ConvertFailureMode.Skip)
-      .toDF().filter(col("op") === "c")
+      .filter(col("op") === "c")
       .select(lit("skip").as("mode"),
         get_json_object(col("after"), "$.id").as("id"),
         get_json_object(col("after"), "$.n").as("n"))
@@ -1150,7 +1148,7 @@ object CdcQueries {
     * per shard, independent of batch or scan order. The oracle recomputes
     * the flip point with the identical rank arithmetic. */
   val qCdcEpochBump: Q = (s, d) => {
-    val recs = CdcPipeline.changeRecords(s, CdcFeed.orders(s, d, hostFlip = true)).toDF()
+    val recs = CdcPipeline.changeRecords(s, CdcFeed.orders(s, d, hostFlip = true))
     recs
       .filter(col("op") === "c")
       .groupBy(col("shard"), col("epoch"))
@@ -1180,7 +1178,7 @@ object CdcQueries {
     * The oracle recomputes the per-shard flip point with the identical
     * rank arithmetic. */
   val qCdcSchemaEvolve: Q = (s, d) => {
-    val recs = CdcPipeline.changeRecords(s, CdcFeed.ordersEvolving(s, d)).toDF()
+    val recs = CdcPipeline.changeRecords(s, CdcFeed.ordersEvolving(s, d))
     recs
       .filter(col("op") === "c")
       .select(
@@ -1262,7 +1260,7 @@ object CdcQueries {
     val modes = ValueConversion.TypeModes(decimal = ValueConversion.DecimalMode.Precise)
     val recs = CdcPipeline.changeRecords(
       s, CdcFeed.orders(s, d, decimalPrice = true), typeModes = modes)
-    recs.toDF()
+    recs
       .filter(col("op") === "c")
       .select(afterStr("o_totalprice").cast(DecimalType(12, 2)).as("p"))
       .agg(

@@ -117,19 +117,6 @@ object Sink {
     }.start()
   }
 
-  /** The streaming source emits snake_case column names (ts_ms, tx_id,
-    * total_order…); the batch pipeline's Dataset[ChangeRecord] uses the
-    * case-class names. Normalize either shape to the pipeline names so
-    * every operator below accepts both. */
-  def normalize(records: DataFrame): DataFrame = {
-    val renames = Seq(
-      "ts_ms" -> "tsMs", "restart_vgtid" -> "restartVgtid", "tx_id" -> "txId",
-      "total_order" -> "totalOrder", "collection_order" -> "collectionOrder")
-    renames.foldLeft(records) { case (df, (from, to)) =>
-      if (df.columns.contains(from)) df.withColumnRenamed(from, to) else df
-    }
-  }
-
   /** Incremental aggregate maintenance from a change log (the
     * materialized-view pattern): each change record contributes signed
     * deltas — the `before` side of updates/deletes subtracts from its
@@ -142,9 +129,9 @@ object Sink {
     * drop out, as they would in the recomputed result). Money deltas
     * are exact DECIMAL, so +x and −x cancel exactly. */
   def incrementalAgg(
-      records0: DataFrame, table: String,
+      records: DataFrame, table: String,
       groupField: String, valueField: String): DataFrame =
-    aggDeltas(records0, table, groupField, valueField)
+    aggDeltas(records, table, groupField, valueField)
       .groupBy(col("grp"))
       .agg(sum(col("dn")).as("n_live"), sum(col("dv")).cast(DecimalType(38, 4)).as("total"))
       .filter(col("n_live") > 0)
@@ -154,14 +141,12 @@ object Sink {
     * consumer each batch contributes only its own deltas (which may be
     * net-negative for a group) and the running aggregate is their sum. */
   def aggDeltas(
-      records0: DataFrame, table: String,
+      records: DataFrame, table: String,
       groupField: String, valueField: String): DataFrame = {
-    val records = normalize(records0)
-      .filter(col("table") === table && col("op").isin("c", "u", "d"))
     def side(json: String, sign: Int) = {
       val ops = if (sign > 0) Seq("c", "u") else Seq("u", "d")
       records
-        .filter(col("op").isin(ops: _*))
+        .filter(col("table") === table && col("op").isin(ops: _*))
         .select(
           get_json_object(col(json), s"$$.$groupField").as("grp"),
           lit(sign.toLong).as("dn"),
@@ -176,8 +161,8 @@ object Sink {
     * exactly for this (A2/A3: rank is monotone per shard+epoch). Delegates
     * to the one shared version-order definition (Temporal.latestImage) —
     * snapshotAt is the same operator with a prefix cut. */
-  def materialize(records0: DataFrame, table: String, schema: StructType): DataFrame =
-    Temporal.latestImage(records0, table, schema, cut = None)
+  def materialize(records: DataFrame, table: String, schema: StructType): DataFrame =
+    Temporal.latestImage(records, table, schema, cut = None)
 }
 
 /** Parquet for the change-record envelope: dictionary encoding is off for
@@ -207,7 +192,8 @@ class EnvelopeParquetFormat extends ParquetFileFormat {
 }
 
 object EnvelopeParquetFormat {
-  /** The unique envelope columns, as the `vitess-cdc` source names them. */
+  /** The unique envelope columns, as every change-record frame names
+    * them ([[graft.sources.VitessCdc.Schema]]). */
   val PlainColumns: Seq[String] =
     Seq("before", "after", "key", "vgtid", "restart_vgtid", "tx_id", "rank")
 }

@@ -29,10 +29,9 @@ object Temporal {
 
   private val rankDec: Column = col("rank").cast(DecimalType(38, 0))
 
-  private def changeRows(records0: DataFrame, table: String): DataFrame =
-    Sink.normalize(records0)
-      .filter(col("table") === table && col("op").isin("c", "u", "d") &&
-        col("key").isNotNull)
+  private def changeRows(records: DataFrame, table: String): DataFrame =
+    records.filter(col("table") === table && col("op").isin("c", "u", "d") &&
+      col("key").isNotNull)
 
   /** Time-travel snapshot: the state of `table` as of change-log position
     * (`epoch`, `rank`) inclusive — `Sink.materialize` restricted to the
@@ -43,7 +42,7 @@ object Temporal {
     * predicate pushed to the log scan, so a snapshot at an early T reads
     * and ranks only the log prefix.
     */
-  def snapshotAt(records0: DataFrame, table: String, schema: StructType,
+  def snapshotAt(records: DataFrame, table: String, schema: StructType,
       epoch: Long, rank: Long): DataFrame = {
     // null-rank records (batch-backfill snapshot rows, copy-phase
     // records) are the OLDEST versions within their epoch — the window
@@ -53,18 +52,18 @@ object Temporal {
     // any same-epoch time travel
     val cut = col("epoch") < epoch ||
       (col("epoch") === epoch && (rankDec.isNull || rankDec <= lit(rank)))
-    latestImage(records0, table, schema, Some(cut))
+    latestImage(records, table, schema, Some(cut))
   }
 
   /** The ONE definition of "current image per key" over a change log —
     * snapshotAt is this plus a prefix cut, Sink.materialize is this with
     * none; a shared helper so the version order (epoch, rank-decimal,
-    * totalOrder, desc nulls-last) can never drift between them. */
-  private[operators] def latestImage(records0: DataFrame, table: String,
+    * total_order, desc nulls-last) can never drift between them. */
+  private[operators] def latestImage(records: DataFrame, table: String,
       schema: StructType, cut: Option[Column]): DataFrame = {
     val w = Window.partitionBy(col("key"))
-      .orderBy(col("epoch").desc, rankDec.desc, col("totalOrder").desc)
-    val base = changeRows(records0, table)
+      .orderBy(col("epoch").desc, rankDec.desc, col("total_order").desc)
+    val base = changeRows(records, table)
     cut.fold(base)(base.filter)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1 && col("op") =!= "d")
@@ -100,14 +99,14 @@ object Temporal {
     * partitioning and sort, so Catalyst plans one Sort + two Window ops
     * back to back.
     */
-  def scd2(records0: DataFrame, table: String, schema: StructType): DataFrame = {
+  def scd2(records: DataFrame, table: String, schema: StructType): DataFrame = {
     val byKey = Window.partitionBy(col("key"))
-      .orderBy(col("epoch"), rankDec, col("totalOrder"))
+      .orderBy(col("epoch"), rankDec, col("total_order"))
     // −1 = "before every real rank of the epoch"; lead over the COALESCED
     // value is null only at end-of-key (live), never because the next
     // version happens to be a null-rank backfill row
     val pos = coalesce(rankDec, lit(-1)).cast(LongType)
-    val versions = changeRows(records0, table)
+    val versions = changeRows(records, table)
       .withColumn("valid_to", lead(pos, 1).over(byKey))
       .withColumn("valid_to_epoch", lead(col("epoch"), 1).over(byKey))
       .filter(col("op") =!= "d")

@@ -20,7 +20,8 @@ object Envelope {
   val Version = "0.2.0-graft"
   val Connector = "vitess"
 
-  /** Change-record DataFrame (CdcPipeline output) → nested envelope. */
+  /** Change-record DataFrame ([[graft.sources.VitessCdc.Schema]]: the
+    * `vitess-cdc` source's or CdcPipeline's output) → nested envelope. */
   def toEnvelope(records: DataFrame, serverName: String = "graft"): DataFrame =
     records.select(
       col("key"),
@@ -30,7 +31,7 @@ object Envelope {
         lit(Version).as("version"),
         lit(Connector).as("connector"),
         lit(serverName).as("name"),
-        col("tsMs").as("ts_ms"),
+        col("ts_ms"),
         lit("false").as("snapshot"),
         col("keyspace").as("db"),
         col("keyspace"),
@@ -38,14 +39,14 @@ object Envelope {
         col("shard"),
         col("vgtid")).as("source"),
       col("op"),
-      col("tsMs").as("ts_ms"),
-      when(col("txId").isNotNull, struct(
-        col("txId").as("id"),
-        col("totalOrder").as("total_order"),
-        col("collectionOrder").as("data_collection_order"),
+      col("ts_ms"),
+      when(col("tx_id").isNotNull, struct(
+        col("tx_id").as("id"),
+        col("total_order"),
+        col("collection_order").as("data_collection_order"),
         col("epoch").as("transaction_epoch"),
         col("rank").as("transaction_rank"))).as("transaction"),
-      col("restartVgtid").as("restart_vgtid"))
+      col("restart_vgtid"))
 }
 
 /** The reference's four SMTs + ExtractNewRecordState, as DataFrame ops.

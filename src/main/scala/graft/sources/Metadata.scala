@@ -32,10 +32,13 @@ object Metadata {
     * bytes. */
   def tables(spark: SparkSession, feedDir: String): Seq[String] = {
     import spark.implicits._
-    // a fresh staging dir with no feeds yet answers like shards(): empty
-    // (the bare glob would throw AnalysisException 'Path does not exist')
-    if (shards(feedDir).isEmpty) return Nil
-    spark.read.textFile(s"$feedDir/*.jsonl")
+    // the listed files, not a glob: Spark stats a single path argument
+    // for a sink metadata log, and a literal glob fails that stat with a
+    // logged FileNotFoundException. A fresh staging dir with no feeds
+    // yet answers like shards(): empty
+    val files = shards(feedDir).map(sh => Paths.get(feedDir, s"$sh.jsonl").toString)
+    if (files.isEmpty) return Nil
+    spark.read.textFile(files: _*)
       .filter(_.contains("\"FIELD\""))
       .flatMap { line =>
         // a LIVE feed's final line can be torn mid-append (this scan

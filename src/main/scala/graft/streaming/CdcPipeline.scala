@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.core._
-import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.sources.VitessCdc
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** One line of the simulated VStream feed: a per-shard totally-ordered
   * event in the VEventJson wire format. `seq` orders events within a
@@ -23,6 +24,10 @@ final case class FeedLine(shard: String, seq: Long, line: String)
   * but elastic.
   * Nothing is collected to the driver; decode happens inside
   * mapPartitions on executors.
+  *
+  * The output is a change-record DataFrame named and typed by
+  * [[VitessCdc.Schema]], exactly as the `vitess-cdc` source delivers it,
+  * so every operator over one runs unchanged on the other.
   */
 object CdcPipeline {
 
@@ -33,7 +38,7 @@ object CdcPipeline {
       tableFilter: TableFilter = TableFilter.acceptAll,
       columnRules: ColumnRules = ColumnRules.none,
       convertFailureMode: ConvertFailureMode = ConvertFailureMode.Fail,
-      typeModes: ValueConversion.TypeModes = ValueConversion.TypeModes.default): Dataset[ChangeRecord] = {
+      typeModes: ValueConversion.TypeModes = ValueConversion.TypeModes.default): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     feed
@@ -43,6 +48,7 @@ object CdcPipeline {
         processPartition(
           it.buffered, emitBoundaries, tableFilter, columnRules, convertFailureMode, typeModes)
       }
+      .toDF(VitessCdc.Schema.fieldNames.toIndexedSeq: _*)
   }
 
   /** A partition holds one or more complete shards (hash partitioning),

@@ -56,7 +56,10 @@ final class SchemaRegistry(
 /** One change record in the engine's stable envelope schema. The payload
   * rides as JSON keyed by column name (design (b) of SURVEY §1.3: one
   * stream, dynamic tables) and is re-typed per table with `from_json`
-  * against the registry schema.
+  * against the registry schema. This is the in-memory row;
+  * [[graft.sources.VitessCdc.Schema]] names its DataFrame form
+  * (`tsMs` is `ts_ms`, `txId` is `tx_id`, and so on), which both the
+  * `vitess-cdc` source and [[CdcPipeline.changeRecords]] emit.
   *
   * `vgtid` is the record's transaction position (the reference's
   * `source.vgtid`, VitessSourceInfoStructMaker.java:36-44);

@@ -118,7 +118,7 @@ class SlicePackedRowSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("cosine_sim matches the HOF formulation and generates real code") {
-    import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback}
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
     val sp = spark; import sp.implicits._
     val df = Seq((Seq(1.0f, 0.0f, 2.0f), Seq(0.5f, 1.0f, 2.0f))).toDF("a", "b")
     val viaExpr = df.select(CosineSim(col("a"), col("b"))).first().getDouble(0)

@@ -302,7 +302,6 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("REAL streaming probe loop: checkpointed restart + retry never duplicates results") {
-    val sp = spark; import sp.implicits._
     val emb = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     val base = graft.TempDirs.reclaimOnExit(java.nio.file.Files.createTempDirectory("graft_ann_probe_stream"))
@@ -341,7 +340,6 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("in-flight/crashed ingest staging dirs are invisible to probe, ingest and compact") {
-    val sp = spark; import sp.implicits._
     val emb = graft.Tables.embeddings(spark, sfDir)
     val dir = tmp("graft_ann_staging")
     AnnIndex.build(emb.filter(col("vec_id") < 25), dir, nCentroids = 8)
@@ -443,7 +441,6 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("compactProbeResults: fold keeps the reader union, TTL drop expires, newest protected") {
-    val sp = spark; import sp.implicits._
     val emb = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     val base = graft.TempDirs.reclaimOnExit(java.nio.file.Files.createTempDirectory("graft_ann_probe_retention"))
@@ -506,7 +503,6 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("promote/resolveCurrent: atomic cutover, crash at every point resolves one index") {
-    val sp = spark; import sp.implicits._
     val emb = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     val base = graft.TempDirs.reclaimOnExit(java.nio.file.Files.createTempDirectory("graft_ann_promote"))
@@ -544,7 +540,6 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("checkpointed probe stream spanning a promote: each batch exactly-old or exactly-new") {
-    val sp = spark; import sp.implicits._
     val emb = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     val base = graft.TempDirs.reclaimOnExit(java.nio.file.Files.createTempDirectory("graft_ann_cutover_stream"))
@@ -588,7 +583,6 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("compactProbeResultsByAge: stamped dirs expire by wall clock, unstamped never") {
-    val sp = spark; import sp.implicits._
     val emb = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     val base = graft.TempDirs.reclaimOnExit(java.nio.file.Files.createTempDirectory("graft_ann_probe_age"))
@@ -629,7 +623,6 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("compactProbeResultsByAge: a zero-row dir expires only via the direct emptiness probe") {
-    val sp = spark; import sp.implicits._
     val emb = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     val base = graft.TempDirs.reclaimOnExit(
@@ -654,7 +647,6 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("maintain: each threshold crossing triggers exactly its op; below-threshold untouched") {
-    val sp = spark; import sp.implicits._
     val emb = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     val base = graft.TempDirs.reclaimOnExit(java.nio.file.Files.createTempDirectory("graft_ann_maintain"))

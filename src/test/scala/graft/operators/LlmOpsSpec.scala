@@ -294,7 +294,6 @@ class LlmOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("quantizeInt8: reconstruction error bounded by scale/2 on real data") {
-    val sp = spark; import sp.implicits._
     val emb = graft.Tables.embeddings(spark, sfDir)
     val bad = Similarity.quantizeInt8(emb)
       .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
@@ -357,7 +356,6 @@ class LlmOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("cms: estimate >= exact for every term; equality when no collision") {
-    val sp = spark; import sp.implicits._
     val docs = graft.Tables.documents(spark, sfDir)
     val sketch = TextOps.cmsBuild(docs, "text")
     val exact = TextOps.termCounts(docs, "text")

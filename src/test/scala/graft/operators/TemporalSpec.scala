@@ -74,7 +74,7 @@ class TemporalSpec extends AnyFunSuite with BeforeAndAfterAll {
         concat(lit("""{"id":""""), col("key0"), lit(""""}""")).as("key"),
         col("op"), lit("t").as("table"),
         col("rank0").cast("string").as("rank"),
-        lit(0L).as("epoch"), lit(1L).as("totalOrder"), col("after"))
+        lit(0L).as("epoch"), lit(1L).as("total_order"), col("after"))
   }
 
   private val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -114,11 +114,11 @@ class TemporalSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("A", "c", null: String, 0L, """{"id":"A","x":"snap_a"}"""),
       ("B", "c", null: String, 0L, """{"id":"B","x":"snap_b"}"""),
       ("A", "u", "3", 1L, """{"id":"A","x":"a2"}"""))
-      .toDF("key0", "op", "rank", "totalOrder", "after")
+      .toDF("key0", "op", "rank", "total_order", "after")
       .select(
         concat(lit("""{"id":""""), col("key0"), lit(""""}""")).as("key"),
         col("op"), lit("t").as("table"), col("rank"),
-        lit(0L).as("epoch"), col("totalOrder"), col("after"))
+        lit(0L).as("epoch"), col("total_order"), col("after"))
     def snap(r: Long): Map[String, String] =
       Temporal.snapshotAt(base, "t", schema, epoch = 0L, rank = r)
         .collect().map(x => x.getString(0) -> x.getString(1)).toMap
@@ -151,11 +151,11 @@ class TemporalSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("A", "u", "900", 0L, 2L, """{"id":"A","x":"v900"}"""),
       ("A", "u", null: String, 1L, 3L, """{"id":"A","x":"copy1"}"""),
       ("A", "u", "5", 1L, 4L, """{"id":"A","x":"v5"}"""))
-      .toDF("key0", "op", "rank", "epoch", "totalOrder", "after")
+      .toDF("key0", "op", "rank", "epoch", "total_order", "after")
       .select(
         concat(lit("""{"id":""""), col("key0"), lit(""""}""")).as("key"),
         col("op"), lit("t").as("table"), col("rank"), col("epoch"),
-        col("totalOrder"), col("after"))
+        col("total_order"), col("after"))
     val hist = Temporal.scd2(base, "t", schema)
       .orderBy("version")
       .select("x", "valid_from_epoch", "valid_from", "valid_to_epoch",

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import graft.operators.{CdcFeed, Sink}
-import org.apache.spark.sql.SparkSession
+import graft.operators.{CdcFeed, Envelope, Sink, Transforms}
+import graft.sources.VitessCdc
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
@@ -31,7 +32,7 @@ class CdcPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("decoded content is invariant to the shard count") {
     def digest(nShards: Int): (Long, Long) = {
       val recs = CdcPipeline.changeRecords(spark, CdcFeed.orders(spark, sfDir, nShards = nShards))
-      val row = recs.toDF().filter(col("op") === "c")
+      val row = recs.filter(col("op") === "c")
         .agg(count(lit(1)),
           sum(get_json_object(col("after"), "$.o_orderkey").cast("long")))
         .first()
@@ -203,14 +204,29 @@ class CdcPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val schema = StructType(Seq(
       StructField("o_orderkey", LongType),
       StructField("o_totalprice", DoubleType)))
-    // snake_case source output goes through the same materializer
-    val fromSource = Sink.materialize(spark.read.parquet(out.toString), "orders", schema)
-    val fromPipeline = Sink.materialize(
-      CdcPipeline.changeRecords(spark, CdcFeed.orders(spark, sfDir, nShards = 2)).toDF(),
-      "orders", schema)
-    val a = fromSource.agg(count(lit(1)), sum(col("o_orderkey"))).first()
-    val b = fromPipeline.agg(count(lit(1)), sum(col("o_orderkey"))).first()
+    val sourceLog = spark.read.parquet(out.toString)
+    val pipelineLog = CdcPipeline.changeRecords(spark, CdcFeed.orders(spark, sfDir, nShards = 2))
+    // source output goes through the same materializer
+    val a = Sink.materialize(sourceLog, "orders", schema)
+      .agg(count(lit(1)), sum(col("o_orderkey"))).first()
+    val b = Sink.materialize(pipelineLog, "orders", schema)
+      .agg(count(lit(1)), sum(col("o_orderkey"))).first()
     assert(a == b)
     assert(a.getLong(0) > 0)
+
+    // the envelope and the SMTs on it run on both outputs unchanged,
+    // and give the same rows
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    val sourceEnvelopes = rows(Envelope.toEnvelope(sourceLog))
+    assert(sourceEnvelopes.nonEmpty)
+    assert(sourceEnvelopes == rows(Envelope.toEnvelope(pipelineLog)))
+    def extracted(log: DataFrame) =
+      rows(Transforms.extractNewRecordState(Envelope.toEnvelope(log), schema))
+    assert(extracted(sourceLog) == extracted(pipelineLog))
+  }
+
+  test("changeRecords is named and typed by the vitess-cdc source schema") {
+    val got = CdcPipeline.changeRecords(spark, CdcFeed.orders(spark, sfDir, nShards = 2)).schema
+    assert(got.map(f => f.name -> f.dataType) == VitessCdc.Schema.map(f => f.name -> f.dataType))
   }
 }
