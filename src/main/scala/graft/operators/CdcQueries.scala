@@ -312,33 +312,9 @@ object CdcQueries {
       |) ORDER BY op""".stripMargin
 
   // -------------------------------------------------- streaming source
-  /** S1/S4/S8/S9 end-to-end: materialize the orders feed as per-shard
-    * JSON-lines files, run the `vitess-cdc` MicroBatchStream to a parquet
-    * sink (checkpointed), and verify the delivered stream against the
-    * source table. */
-  /** Materialize a FeedLine dataset into one ordered `.jsonl` per shard:
-    * one job — hash shards into tasks, sort (shard, seq) within tasks,
-    * and let partitionBy fan one ordered file out per shard directory.
-    * Later feed waves append via [[copyWave]] over staged dirs. */
-  private def writeFeedFiles(
-      feed: org.apache.spark.sql.Dataset[graft.streaming.FeedLine],
-      feedDir: java.nio.file.Path): Unit = {
-    val tmp = feedDir.resolve("_tmp")
-    feed
-      .repartition(CdcFeed.DefaultShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("seq"))
-      .select(col("line"), col("shard")) // narrow projection keeps sort order
-      .write.partitionBy("shard").mode("overwrite").text(tmp.toString)
-    collectShardFiles(tmp, feedDir)
-    // the staging skeleton (_SUCCESS, .crc litter) must not live inside
-    // a feed dir a streaming source will list for the process lifetime
-    graft.TempDirs.deleteRecursively(tmp)
-  }
-
   /** Move each `shard=<name>` directory's single ordered part file from
-    * a dynamic-partition text write into `<name>.jsonl` under `target` —
-    * the ONE implementation behind writeFeedFiles and stageWaves, so the
-    * one-part requirement and deterministic part ordering cannot drift. */
+    * a dynamic-partition text write into `<name>.jsonl` under `target`
+    * (one wave of [[stageTagged]]'s write). */
   private def collectShardFiles(
       container: java.nio.file.Path, target: java.nio.file.Path): Unit = {
     import java.nio.file.Files
@@ -379,14 +355,10 @@ object CdcQueries {
   }
 
   /** The plain orders feed is consumed read-only by several gates (each
-    * keeps its own checkpoint + sink); materialize it once per scale dir
-    * like ordersChangeLog — the write job is pure harness cost. */
+    * keeps its own checkpoint + sink); staged once per scale dir as a
+    * one-wave feed — the write job is pure harness cost. */
   private def ordersFeedDir(s: SparkSession, d: String): java.nio.file.Path =
-    Materialize.once(s"cdc.ordersFeedDir:$d") {
-      val dir = graft.TempDirs.reclaimOnExit(java.nio.file.Files.createTempDirectory("graft_feed_orders"))
-      writeFeedFiles(ordersFeed(s, d), dir)
-      dir
-    }
+    stageWaves(s"orders:$d")(Seq(ordersFeed(s, d))).head
 
   /** Staged-wave cache for the 2-run restart gates: each invocation
     * streams the SAME deterministic feed waves, so the Spark
@@ -428,19 +400,23 @@ object CdcQueries {
       val (nWaves, tagged) = taggedFeed
       val tmp = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("graft_stage_tmp"))
       val made = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+      // a lone wave's tag is a literal the optimizer folds out of the
+      // sort, and the writer then re-sorts by shard alone, dropping the
+      // seq order: one wave is written by shard only
+      val parts = if (nWaves == 1) Seq("shard") else Seq("wave", "shard")
       try {
         tagged
           .repartition(CdcFeed.DefaultShards, col("shard"))
-          // leading (wave, shard) satisfies the dynamic-partition writer's
-          // required ordering exactly, so no extra (order-destroying) sort
-          // is injected and each (wave, shard) file stays seq-ordered
-          .sortWithinPartitions(col("wave"), col("shard"), col("seq"))
-          .select(col("line"), col("wave"), col("shard"))
-          .write.partitionBy("wave", "shard").mode("overwrite").text(tmp.toString)
+          // the leading partition columns satisfy the dynamic-partition
+          // writer's required ordering exactly, so no extra (order-
+          // destroying) sort is injected and each file stays seq-ordered
+          .sortWithinPartitions((parts :+ "seq").map(col): _*)
+          .select((col("line") +: parts.map(col)): _*)
+          .write.partitionBy(parts: _*).mode("overwrite").text(tmp.toString)
         val staged = (0 until nWaves).map { i =>
           val dir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory(s"graft_stage_$i"))
           made += dir
-          val waveDir = tmp.resolve(s"wave=$i")
+          val waveDir = if (nWaves == 1) tmp else tmp.resolve(s"wave=$i")
           if (Files.exists(waveDir)) collectShardFiles(waveDir, dir)
           dir
         }
@@ -463,8 +439,8 @@ object CdcQueries {
   private def releasing[A](dirs: java.nio.file.Path*)(body: => A): A =
     try body finally dirs.foreach(graft.TempDirs.release)
 
-  /** Append (or create) every staged `<shard>.jsonl` into `feedDir` —
-    * the byte-level replay of what writeFeedFiles(append=...) produced. */
+  /** Append (or create) every staged `<shard>.jsonl` of one wave into
+    * `feedDir`, so each gate streams its own copy of the staged bytes. */
   private def copyWave(src: java.nio.file.Path, feedDir: java.nio.file.Path): Unit = {
     import java.nio.file.{Files, StandardOpenOption}
     import scala.jdk.CollectionConverters._
@@ -485,6 +461,10 @@ object CdcQueries {
     finally ls.close()
   }
 
+  /** S1/S4/S8/S9 end-to-end: materialize the orders feed as per-shard
+    * JSON-lines files, run the `vitess-cdc` MicroBatchStream to a parquet
+    * sink (checkpointed), and verify the delivered stream against the
+    * source table. */
   val qCdcStreamSource: Q = (s, d) => {
     import java.nio.file.Files
     val feedDir = ordersFeedDir(s, d)

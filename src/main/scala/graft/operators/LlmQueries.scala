@@ -1982,12 +1982,6 @@ object LlmQueries {
        |) GROUP BY split ORDER BY split""".stripMargin
   }
 
-  // ------------------------------------------------------ mixture weights
-  /** Static-weights data mixing end to end: target weight per source
-    * (w = source index + 1), max-data-use sampling rates from
-    * `Sampling.mixtureWeights`, then the actual deterministic sample at
-    * those rates — tokens, rate, the binding stratum, and what survived,
-    * all hash-checked against the oracle replaying the same arithmetic. */
   /** Deterministic epoch-shuffle order: the first 20 documents of the
     * md5-ranked training order, rank included — the oracle recomputes
     * the identical order, pinning cross-engine reproducibility of the
@@ -2011,6 +2005,12 @@ object LlmQueries {
       |  FROM documents
       |) WHERE rank <= 20 ORDER BY rank""".stripMargin
 
+  // ------------------------------------------------------ mixture weights
+  /** Static-weights data mixing end to end: target weight per source
+    * (w = source index + 1), max-data-use sampling rates from
+    * `Sampling.mixtureWeights`, then the actual deterministic sample at
+    * those rates — tokens, rate, the binding stratum, and what survived,
+    * all hash-checked against the oracle replaying the same arithmetic. */
   val qSampleMixture: Q = (s, d) => {
     val docs = Tables.documents(s, d)
     val weights = docs.select(col("source")).distinct()

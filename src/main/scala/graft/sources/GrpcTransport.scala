@@ -452,18 +452,23 @@ private[sources] final class GrpcFeeder(stagingDir: String, cfg: GrpcConfig)
 
   /** Staging writers, created on demand so a shard ADOPTED mid-stream
     * (live reshard: a child shard the startup topology never saw) gets
-    * a feed file exactly like a startup shard — existing files are
-    * truncated back to their last transaction-safe boundary first.
-    * Guarded by the feeder lock; each shard still has exactly one
-    * writing worker (the adopting stream), so the hot path stays
-    * synchronization-free. */
+    * a feed file exactly like a startup shard — an existing file is
+    * recovered first (see [[recover]]). Guarded by the feeder lock; each
+    * shard still has exactly one writing worker (the adopting stream), so
+    * the hot path stays synchronization-free. */
   private val writers = scala.collection.mutable.Map[String, java.io.OutputStream]()
+
+  /** Resume position per shard: the last VGTID entry durably staged for
+    * it. The open pass of [[writerFor]] seeds it from an existing file
+    * and every flush moves it, so it only ever reflects FLUSHED bytes;
+    * reconnects read it without touching the file. */
+  private[sources] val staged = scala.collection.concurrent.TrieMap.empty[String, ShardGtid]
 
   private def writerFor(sh: String): java.io.OutputStream = synchronized {
     writers.getOrElseUpdate(sh, {
       val p = dir.resolve(s"$sh.jsonl")
       if (!Files.exists(p)) Files.createFile(p)
-      else truncateToTxBoundary(p)
+      else recover(sh, p)
       // a stray spill file is a crash leftover; its transaction was
       // never committed to the feed, so the resumed stream replays it
       Files.deleteIfExists(dir.resolve(s"$sh.spill"))
@@ -494,38 +499,29 @@ private[sources] final class GrpcFeeder(stagingDir: String, cfg: GrpcConfig)
 
   { Files.createDirectories(dir); shards.foreach(writerFor) }
 
-  /** Startup recovery: truncate the staging file back to the last
-    * TRANSACTION-SAFE boundary. A crash can persist (a) a torn final
-    * line and (b) a complete-line prefix of an unfinished transaction
-    * (BEGIN/ROW with no COMMIT — the in-memory tx buffer below prevents
-    * this in normal operation, but an OS-level crash can persist a
-    * prefix of a single multi-line append). Appending a server replay
-    * after either would corrupt the feed (the replayed transaction's
-    * BEGIN arrives while one is open, which TransactionAssembler
-    * rejects). Engine offsets only ever point at transaction-safe
-    * boundaries (TxBoundaryFold publishes nothing inside a tx), so
-    * truncating to the last one never discards admitted bytes.
-    * FeedSlice never surfaces a torn tail line, so one boundary fold
-    * handles both cases. */
-  private def truncateToTxBoundary(p: java.nio.file.Path): Unit = {
-    val total = Files.size(p)
-    if (total == 0) return
-    var safeEnd = 0L
-    var inTx = false
-    val slice = new FeedSlice(p.toString, 0L)
-    try {
-      var line = slice.readLine()
-      while (line != null) {
-        if (line.startsWith(FeedSlice.BeginPrefix)) inTx = true
-        else if (line.startsWith(FeedSlice.CommitPrefix)) inTx = false
-        if (!inTx) safeEnd = slice.position
-        line = slice.readLine()
-      }
-    } finally slice.close()
-    if (safeEnd < total) {
+  /** Staging-file recovery: one [[TxBoundaryFold]] pass from byte 0,
+    * the rule that cuts engine offsets. A crash can persist (a) a torn
+    * final line and (b) a complete-line prefix of an unfinished
+    * transaction (BEGIN/ROW with no COMMIT — the in-memory tx buffer
+    * below prevents this in normal operation, but an OS-level crash can
+    * persist a prefix of a single multi-line append). Appending a server
+    * replay after either would corrupt the feed (the replayed
+    * transaction's BEGIN arrives while one is open, which
+    * TransactionAssembler rejects), so the file is truncated to the
+    * fold's last safe cursor; engine offsets only ever point at such
+    * cursors, so no admitted byte is discarded. The cursor's position is
+    * the shard's last staged VGTID entry, its resume position. */
+  private def recover(sh: String, p: java.nio.file.Path): Unit = {
+    val fold = new TxBoundaryFold(sh, ShardCursor(0L, ShardTxStep.fresh(sh), Map.empty),
+      heartbeatIntervalMs = 0L, Long.MaxValue)
+    val size = Files.size(p)
+    fold.foldFeed(FileFeedTransport(stagingDir, excludeEmptyShards = false), p.toString,
+      Some(size))((_, _) => false)
+    if (fold.safe.pos < size) {
       val ch = java.nio.channels.FileChannel.open(p, StandardOpenOption.WRITE)
-      try { ch.truncate(safeEnd); () } finally ch.close()
+      try { ch.truncate(fold.safe.pos); () } finally ch.close()
     }
+    if (fold.admitted > 0) staged(sh) = fold.safe.step.sg
   }
 
   /** Round-robin shard groups (see [[GrpcTopology.shardGroups]]). Each
@@ -613,27 +609,22 @@ private[sources] final class GrpcFeeder(stagingDir: String, cfg: GrpcConfig)
     private[GrpcFeeder] val completed = new CountDownLatch(1)
 
     /** Resume position: last VGTID staged per group shard (the stream's
-      * own progress marker), else the configured initial position.
-      * Reconnects read the in-memory flush marker (O(1) — a reconnect
-      * after hours of staging must not re-scan the file); only the
-      * startup call, before anything was flushed, falls back to the
-      * bounded BACKWARD tail scan of the staging file. */
+      * own progress marker, see [[staged]]), else the configured initial
+      * position. */
     private def resumeVgtid(): Vgtid = synchronized {
       Vgtid(group.map { sh =>
-        lastStaged.get(sh)
-          .orElse(GrpcFeeder.lastStagedVgtid(dir.resolve(s"$sh.jsonl"), sh))
-          .getOrElse {
-            if (Files.exists(adoptedMarker(sh)))
-              throw new IllegalStateException(
-                s"shard $sh was adopted from a live reshard but no VGTID " +
-                  "was staged for it before the disconnect — its resume " +
-                  "position is unknown ('' would re-copy the child's whole " +
-                  "history over the parents' feeds; 'current' would skip " +
-                  "the unstaged window). Restart the stream from the " +
-                  "checkpoint so reading-side offsets re-plan the reshard.")
-            cfg.initialVgtid.shardGtid(sh).getOrElse(ShardGtid(cfg.keyspace, sh,
-              cfg.initialVgtid.shardGtid("").fold(Vgtid.EmptyGtid)(_.gtid)))
-          }
+        staged.get(sh).getOrElse {
+          if (Files.exists(adoptedMarker(sh)))
+            throw new IllegalStateException(
+              s"shard $sh was adopted from a live reshard but no VGTID " +
+                "was staged for it before the disconnect — its resume " +
+                "position is unknown ('' would re-copy the child's whole " +
+                "history over the parents' feeds; 'current' would skip " +
+                "the unstaged window). Restart the stream from the " +
+                "checkpoint so reading-side offsets re-plan the reshard.")
+          cfg.initialVgtid.shardGtid(sh).getOrElse(ShardGtid(cfg.keyspace, sh,
+            cfg.initialVgtid.shardGtid("").fold(Vgtid.EmptyGtid)(_.gtid)))
+        }
       })
     }
 
@@ -778,10 +769,8 @@ private[sources] final class GrpcFeeder(stagingDir: String, cfg: GrpcConfig)
       pending.getOrElseUpdate(sh,
         new GrpcFeeder.TxBuffer(dir.resolve(s"$sh.spill"), cfg.maxBufferedTxBytes))
     private val inTx = scala.collection.mutable.Set[String]()
-    // resume markers: `lastStaged` only ever reflects FLUSHED bytes (the
-    // durable resume floor); `pendingVgtid` rides the tx buffer and is
-    // promoted on flush, dropped with the buffer on reconnect
-    private val lastStaged = scala.collection.mutable.Map[String, ShardGtid]()
+    // the buffered VGTID rides the tx buffer: promoted to `staged` on
+    // flush, dropped with the buffer on reconnect
     private val pendingVgtid = scala.collection.mutable.Map[String, ShardGtid]()
 
     private[GrpcFeeder] def discardPending(): Unit = resetPending()
@@ -851,7 +840,7 @@ private[sources] final class GrpcFeeder(stagingDir: String, cfg: GrpcConfig)
         w.flush()
         // the buffered VGTID is durable now — it becomes the resume floor
         pendingVgtid.remove(sh).foreach { sg =>
-          lastStaged(sh) = sg
+          staged(sh) = sg
           // an adopted child now has a durable position: clear the
           // unknown-resume marker (crash after this point resumes
           // normally from the staged VGTID)
@@ -929,70 +918,5 @@ private[sources] object GrpcFeeder {
       w.write(line.getBytes(StandardCharsets.UTF_8))
       w.write('\n')
     }
-  }
-
-  /** Last staged VGTID for `shard`, via a bounded BACKWARD window scan
-    * (64 KiB, quadrupling until a hit or file start) instead of a
-    * forward full scan — staging files grow without bound at scale, but
-    * a VGTID line lands every transaction, so the first window nearly
-    * always suffices. Only complete lines count: a window not starting
-    * at 0 skips its first (partial) line, and bytes after the last
-    * newline (a crash-torn tail) are ignored. */
-  private[sources] val TailScanMaxWindow: Long = 16L * 1024 * 1024
-
-  private[sources] def lastStagedVgtid(
-      p: java.nio.file.Path, shard: String): Option[ShardGtid] = {
-    val total = if (Files.exists(p)) Files.size(p) else 0L
-    if (total == 0) return None
-    val ch = java.nio.channels.FileChannel.open(p, StandardOpenOption.READ)
-    try {
-      var window = 64L * 1024
-      var done = false
-      while (!done && window <= TailScanMaxWindow) {
-        val start = math.max(0L, total - window)
-        val len = (total - start).toInt // window cap keeps this in Int range
-        val buf = java.nio.ByteBuffer.allocate(len)
-        ch.position(start)
-        while (buf.hasRemaining && ch.read(buf) >= 0) {}
-        require(!buf.hasRemaining, s"short read of $p")
-        val text = new String(buf.array(), StandardCharsets.UTF_8)
-        val from = if (start == 0) 0 else text.indexOf('\n') + 1 // 0 if none: scan nothing below
-        val lastNl = text.lastIndexOf('\n')
-        if (lastNl >= from && (start == 0 || from > 0)) {
-          val lines = text.substring(from, lastNl).split("\n", -1)
-          var i = lines.length - 1
-          while (i >= 0) {
-            val line = lines(i)
-            if (line.startsWith(FeedSlice.VgtidPrefix)) VEventJson.read(line) match {
-              case VgtidEvent(_, v) =>
-                v.shardGtid(shard) match {
-                  case found @ Some(_) => return found
-                  case None =>
-                }
-              case _ =>
-            }
-            i -= 1
-          }
-        }
-        done = start == 0
-        window *= 4
-      }
-      if (done) None
-      else {
-        // pathological tail (no vgtid in the last TailScanMaxWindow
-        // bytes): fall back to the O(1)-memory forward streaming scan —
-        // bounded heap beats bounded time here, a giant window buffer
-        // must never OOM the driver
-        var last: Option[ShardGtid] = None
-        val slice = new FeedSlice(p.toString, 0L)
-        try slice.lines.foreach { line =>
-          if (line.startsWith(FeedSlice.VgtidPrefix)) VEventJson.read(line) match {
-            case VgtidEvent(_, v) => v.shardGtid(shard).foreach(sg => last = Some(sg))
-            case _ =>
-          }
-        } finally slice.close()
-        last
-      }
-    } finally ch.close()
   }
 }

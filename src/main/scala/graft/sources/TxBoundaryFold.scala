@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.core._
 import graft.streaming._
+import java.nio.file.NoSuchFileException
 
 /** Per-shard transaction-safe cursor: everything the streaming offset
   * carries for one shard, as of a byte position that is NEVER inside a
@@ -26,8 +27,8 @@ private[sources] final case class ShardCursor(
   * reader), and checkpoints FIELD (schema) lines — publishing a
   * [[ShardCursor]] only at out-of-transaction line boundaries, so any
   * published cursor is a safe batch cut.
-  * Single-threaded use: `latestOffset` runs one fold per shard per
-  * trigger.
+  * Single-threaded use: admission runs one fold per shard per trigger,
+  * and the gRPC feeder one per staging file it opens.
   *
   * Prefix dispatch (only VGTID/FIELD/COMMIT lines are JSON-parsed)
   * keeps the fold cheap — most lines in a row-heavy stream are ROW
@@ -62,6 +63,30 @@ private[sources] final class TxBoundaryFold(
     * always safe (fewer, larger partitions), so consumers may filter
     * freely. */
   def splits: Vector[ShardCursor] = splitAcc
+
+  /** Fold `file`'s lines from this fresh fold's seed position up to `to`
+    * (nothing when the feed is gone), stopping after the first line for
+    * which `stop(line, safe)` holds; `safe` is the fold's cursor when that
+    * line ends outside a transaction. The one read loop of every fold:
+    * admission, history resolution and staging-file recovery. */
+  def foldFeed(transport: VStreamTransport, file: String, to: Option[Long])(
+      stop: (String, Option[ShardCursor]) => Boolean): Unit = {
+    val slice = to.flatMap { to =>
+      try Some(transport.open(file, safeCursor.pos, to))
+      catch { case _: NoSuchFileException => None }
+    }
+    slice.foreach { sl =>
+      try {
+        var line = sl.readLine()
+        while (line != null) {
+          onLine(line, sl.position)
+          // a cursor AT the slice position: this line ends outside a tx
+          val safe = Option.when(safeCursor.pos == sl.position)(safeCursor)
+          line = if (stop(line, safe)) null else sl.readLine()
+        }
+      } finally sl.close()
+    }
+  }
 
   /** Fold one wire line; `posAfter` is the byte position just after it. */
   def onLine(line: String, posAfter: Long): Unit = {

@@ -591,7 +591,7 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
   private def historyEnd(shard: String, file: String, start: ShardCursor): ShardCursor = {
     var end = start
     val fold = new TxBoundaryFold(shard, start, heartbeatIntervalMs = 0L, Long.MaxValue)
-    foldShard(file, fold, sizeOf(file)) { (line, safe) =>
+    fold.foldFeed(transport, file, sizeOf(file)) { (line, safe) =>
       safe.exists(_.step.after(start.step)) || {
         if (line.startsWith(FeedSlice.CommitPrefix) || line.startsWith(FeedSlice.VgtidPrefix))
           safe.foreach(c => end = c)
@@ -599,29 +599,6 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
       }
     }
     end
-  }
-
-  /** Feed `file`'s bytes from the fresh `fold`'s seed position up to `to`
-    * (nothing when the feed is gone) through `fold`, stopping after the
-    * first line for which `stop(line, safe)` holds; `safe` is the fold's
-    * cursor when that line ends outside a transaction. */
-  private def foldShard(file: String, fold: TxBoundaryFold, to: Option[Long])(
-      stop: (String, Option[ShardCursor]) => Boolean): Unit = {
-    val slice = to.flatMap { to =>
-      try Some(transport.open(file, fold.safe.pos, to))
-      catch { case _: NoSuchFileException => None }
-    }
-    slice.foreach { sl =>
-      try {
-        var line = sl.readLine()
-        while (line != null) {
-          fold.onLine(line, sl.position)
-          // a cursor AT the slice position: this line ends outside a tx
-          val safe = Option.when(fold.safe.pos == sl.position)(fold.safe)
-          line = if (stop(line, safe)) null else sl.readLine()
-        }
-      } finally sl.close()
-    }
   }
 
   /** `file`'s size; None for a feed deleted between listing and sizing
@@ -785,7 +762,7 @@ class VitessCdcStream(options: CaseInsensitiveStringMap)
           // stop at the first transaction boundary past either cap (the
           // measured size when none is set)
           val fold = new TxBoundaryFold(shard, seed, heartbeatIntervalMs, splitBytes)
-          foldShard(file, fold, size) { (_, safe) =>
+          fold.foldFeed(transport, file, size) { (_, safe) =>
             safe.exists(c => fold.admitted >= maxTxs || c.pos - seed.pos >= maxBytes)
           }
           fold

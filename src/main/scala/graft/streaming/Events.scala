@@ -170,7 +170,7 @@ object VEventJson {
         }
       case VgtidEvent(s, v) =>
         o.put("type", "VGTID"); o.put("shard", s)
-        o.set[com.fasterxml.jackson.databind.JsonNode]("vgtid", mapper.readTree(v.json))
+        o.set[JsonNode]("vgtid", mapper.readTree(v.json))
         ()
       case DdlEvent(s, ks, stmt, ts) =>
         o.put("type", "DDL"); o.put("shard", s); o.put("keyspace", ks); o.put("statement", stmt)
@@ -210,11 +210,7 @@ object VEventJson {
               Option(f.get("flags")).map(_.asLong()).getOrElse(0L))
           }.toVector,
           Option(n.get("enumSetStringValues")).exists(_.asBoolean()))
-      case "ROW" =>
-        RowEvent(s("shard"), s("keyspace"), s("table"),
-          n.get("changes").elements().asScala.map { c =>
-            RowChange(readPacked(c.get("before")), readPacked(c.get("after")))
-          }.toVector)
+      case "ROW" => readRow(line)
       case "VGTID" =>
         VgtidEvent(s("shard"), VgtidJson.readNode(n.get("vgtid")))
       case "DDL" =>
@@ -227,16 +223,9 @@ object VEventJson {
     }
   }
 
-  private def readPacked(n: JsonNode): Option[PackedRow] =
-    Option(n).map { p =>
-      PackedRow(
-        p.get("lengths").elements().asScala.map(_.asLong()).toVector,
-        Base64.getDecoder.decode(Option(p.get("values")).map(_.asText()).getOrElse("")))
-    }
-
-  /** Token-streaming parse of a ROW wire line — identical result to the
-    * tree path (the codec round-trip property spec covers ROW events
-    * through write→read, which exercises THIS path). */
+  /** Token-streaming parse of a ROW wire line, the one ROW parser. Keys
+    * match by name, so a line whose keys are out of writer order (which
+    * `read` routes through its tree branch) parses the same. */
   private def readRow(line: String): RowEvent = {
     import com.fasterxml.jackson.core.JsonToken
     val p = mapper.getFactory.createParser(line)

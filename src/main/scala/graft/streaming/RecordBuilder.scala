@@ -212,7 +212,7 @@ final class RecordBuilder(
               val afterVals = change.after.map(decodeValues(plan, _))
               Some((beforeVals, afterVals))
             } catch {
-              case e: ConversionFailure if convertFailureMode == ConvertFailureMode.Skip =>
+              case _: ConversionFailure if convertFailureMode == ConvertFailureMode.Skip =>
                 None
             }
           decoded.foreach { case (beforeVals, afterVals) =>
@@ -240,7 +240,7 @@ final class RecordBuilder(
         out += ChangeRecord(tx.shard, d.keyspace, ex.table, "ddl",
           None, Some(mapper.writeValueAsString(payload)), None,
           tsMs, vgtidJson, restartJson, txId, epoch, None, 0L, 0L)
-      case h: HeartbeatEvent =>
+      case _: HeartbeatEvent =>
         out += ChangeRecord(tx.shard, "", "", "heartbeat", None, None, None,
           tsMs, vgtidJson, restartJson, None, epoch, None, 0L, 0L)
       case _ => // BEGIN/COMMIT/FIELD/VGTID/OTHER/COPY_COMPLETED carry no payload

@@ -568,15 +568,15 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     def oneShot(idx: String, lo: Long, hi: Long) =
       AnnIndex.probe(qb(lo, hi), idx, k = 3)
         .orderBy("query_id", "rk").collect().map(_.toSeq).toSeq
-    def streamed(b: Long, lo: Long, hi: Long) =
+    def streamed(b: Long) =
       spark.read.parquet(s"$outDir/batch_$b")
         .select("query_id", "rk", "neighbor_id", "sim")
         .orderBy("query_id", "rk").collect().map(_.toSeq).toSeq
     // pre-promote batches answered by v1, post-promote by v2 — never a mix
-    assert(streamed(0, 100, 103) == oneShot(s"$root/v1", 100, 103))
-    assert(streamed(1, 103, 106) == oneShot(s"$root/v1", 103, 106))
-    assert(streamed(2, 106, 109) == oneShot(s"$root/v2", 106, 109))
-    assert(streamed(3, 109, 112) == oneShot(s"$root/v2", 109, 112))
+    assert(streamed(0) == oneShot(s"$root/v1", 100, 103))
+    assert(streamed(1) == oneShot(s"$root/v1", 103, 106))
+    assert(streamed(2) == oneShot(s"$root/v2", 106, 109))
+    assert(streamed(3) == oneShot(s"$root/v2", 109, 112))
     // and the two indexes genuinely answer differently (the assertion
     // above would be vacuous otherwise)
     assert(oneShot(s"$root/v1", 106, 109) != oneShot(s"$root/v2", 106, 109))

@@ -368,68 +368,69 @@ class GrpcTransportSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("restart over a crash-torn staging file truncates back to the last tx boundary") {
     // simulate an OS-level crash that persisted tx1 complete plus a
-    // complete-LINE prefix of tx2 (BEGIN/FIELD/ROW, no COMMIT): the new
-    // feeder must truncate the partial tx and resume from tx1's vgtid
-    val staging = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("grpcstage7"))
-    val torn = (insertTx("s0", 1, 1, "v1") ++ insertTx("s0", 2, 2, "v2").take(3))
-      .map(VEventJson.write).mkString("", "\n", "\n")
-    Files.write(staging.resolve("s0.jsonl"), torn.getBytes("UTF-8"))
-    @volatile var requests = Vector.empty[VtWire.VStreamRequestModel]
-    val srv = new MockVtgate("vt-torn", req => {
-      requests = requests :+ req
-      val sg = req.vgtid.shardGtid("s0").get
-      assert(sg.gtid == "MySQL56/feed:1-1",
-        s"resume must ignore the truncated partial transaction, got ${sg.gtid}")
-      Seq(insertTx("s0", 2, 2, "v2"), insertTx("s0", 3, 3, "v3"))
-    })
-    val transport = VStreamGrpcTransport(staging.toString, GrpcConfig("inprocess:vt-torn", "ks", Seq("s0")))
-    try {
-      transport.listShards()
-      transport.awaitStreamCompleted(10000)
-      assert(requests.size == 1)
-      val slice = new FeedSlice(staging.resolve("s0.jsonl").toString, 0L)
-      val lines = try Iterator.continually(slice.readLine()).takeWhile(_ != null).toVector finally slice.close()
-      assert(lines.size == 15)
-      assertWellFormedFeed(lines, Seq("1", "2", "3"))
-    } finally { transport.close(); srv.close() }
+    // complete-LINE prefix of tx2 with no COMMIT — BEGIN/FIELD/ROW, or
+    // BEGIN/FIELD/ROW/VGTID, which carries tx2's position: the new feeder
+    // must truncate the partial tx and resume from tx1's vgtid
+    Seq(3, 4).foreach { keep =>
+      val staging = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("grpcstage7"))
+      val torn = (insertTx("s0", 1, 1, "v1") ++ insertTx("s0", 2, 2, "v2").take(keep))
+        .map(VEventJson.write).mkString("", "\n", "\n")
+      Files.write(staging.resolve("s0.jsonl"), torn.getBytes("UTF-8"))
+      @volatile var requests = Vector.empty[VtWire.VStreamRequestModel]
+      val srv = new MockVtgate(s"vt-torn-$keep", req => {
+        requests = requests :+ req
+        val sg = req.vgtid.shardGtid("s0").get
+        assert(sg.gtid == "MySQL56/feed:1-1",
+          s"resume must ignore the truncated partial transaction, got ${sg.gtid}")
+        Seq(insertTx("s0", 2, 2, "v2"), insertTx("s0", 3, 3, "v3"))
+      })
+      val transport =
+        VStreamGrpcTransport(staging.toString, GrpcConfig(s"inprocess:vt-torn-$keep", "ks", Seq("s0")))
+      try {
+        transport.listShards()
+        transport.awaitStreamCompleted(10000)
+        assert(requests.size == 1, s"prefix of $keep lines")
+        val slice = new FeedSlice(staging.resolve("s0.jsonl").toString, 0L)
+        val lines = try Iterator.continually(slice.readLine()).takeWhile(_ != null).toVector finally slice.close()
+        assert(lines.size == 15, s"prefix of $keep lines")
+        assertWellFormedFeed(lines, Seq("1", "2", "3"))
+      } finally { transport.close(); srv.close() }
+    }
   }
 
-  test("bounded backward tail scan finds the last staged vgtid without a full read") {
-    val dir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("tailscan"))
+  test("opening a staging writer truncates the file to its last safe cut and resumes there") {
+    val dir = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("recover"))
     def vl(shard: String, seq: Long): String =
       VEventJson.write(VgtidEvent(shard, Vgtid(Seq(ShardGtid("ks", shard, s"MySQL56/feed:1-$seq")))))
-    def rl(shard: String, i: Long): String =
-      VEventJson.write(HeartbeatEvent(shard))
+    def hb(shard: String): String = VEventJson.write(HeartbeatEvent(shard))
+    def stage(shard: String, text: String): Long =
+      Files.size(Files.writeString(dir.resolve(s"$shard.jsonl"), text))
 
-    // dense vgtids: the answer sits in the first 64 KiB window
-    val dense = dir.resolve("dense.jsonl")
-    Files.writeString(dense,
-      (1L to 500L).flatMap(i => Seq(vl("s0", i), rl("s0", i))).mkString("", "\n", "\n"))
-    assert(GrpcFeeder.lastStagedVgtid(dense, "s0")
-      .contains(ShardGtid("ks", "s0", "MySQL56/feed:1-500")))
+    // dense vgtids: the last one wins
+    val dense = stage("dense",
+      (1L to 500L).flatMap(i => Seq(vl("dense", i), hb("dense"))).mkString("", "\n", "\n"))
+    // sparse: ONE vgtid at the head, then >256 KiB of other lines
+    val sparse = stage("sparse",
+      (vl("sparse", 7) +: Seq.fill(4000)(hb("sparse") + "x" * 80)).mkString("", "\n", "\n"))
+    assert(sparse > 256L * 1024)
+    // torn tail: the bytes after the last newline are cut off
+    val tornHead = vl("torn", 3) + "\n"
+    stage("torn", tornHead + vl("torn", 9).dropRight(5))
+    // a vgtid for ANOTHER shard only, and an empty file: no position
+    val other = stage("other", vl("s1", 4) + "\n")
+    stage("empty", "")
 
-    // sparse: ONE vgtid at the head, then >256 KiB of other lines — the
-    // scan must widen past several windows and still find it
-    val sparse = dir.resolve("sparse.jsonl")
-    val filler = (1L to 4000L).map(i => rl("s0", i) + "x" * 80)
-    Files.writeString(sparse, (vl("s0", 7) +: filler).mkString("", "\n", "\n"))
-    assert(Files.size(sparse) > 256L * 1024)
-    assert(GrpcFeeder.lastStagedVgtid(sparse, "s0")
-      .contains(ShardGtid("ks", "s0", "MySQL56/feed:1-7")))
-
-    // torn tail: bytes after the last newline must be ignored
-    val torn = dir.resolve("torn.jsonl")
-    Files.writeString(torn, vl("s0", 3) + "\n" + vl("s0", 9).dropRight(5))
-    assert(GrpcFeeder.lastStagedVgtid(torn, "s0")
-      .contains(ShardGtid("ks", "s0", "MySQL56/feed:1-3")))
-
-    // a vgtid for ANOTHER shard only → None for s0; empty file → None
-    val other = dir.resolve("other.jsonl")
-    Files.writeString(other, vl("s1", 4) + "\n")
-    assert(GrpcFeeder.lastStagedVgtid(other, "s0").isEmpty)
-    val empty = dir.resolve("empty.jsonl")
-    Files.createFile(empty)
-    assert(GrpcFeeder.lastStagedVgtid(empty, "s0").isEmpty)
+    val feeder = new GrpcFeeder(dir.toString,
+      GrpcConfig("inprocess:vt-nobody", "ks", Seq("dense", "sparse", "torn", "other", "empty")))
+    try {
+      def at(shard: String, seq: Long) = Some(ShardGtid("ks", shard, s"MySQL56/feed:1-$seq"))
+      def size(shard: String) = Files.size(dir.resolve(s"$shard.jsonl"))
+      assert(feeder.staged.get("dense") == at("dense", 500) && size("dense") == dense)
+      assert(feeder.staged.get("sparse") == at("sparse", 7) && size("sparse") == sparse)
+      assert(feeder.staged.get("torn") == at("torn", 3) && size("torn") == tornHead.length)
+      assert(feeder.staged.get("other").isEmpty && size("other") == other)
+      assert(feeder.staged.get("empty").isEmpty && size("empty") == 0L)
+    } finally feeder.close()
   }
 
   test("close before listShards never starts the feeder") {
@@ -487,7 +488,7 @@ class GrpcTransportSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("exclude.empty.shards: discovery via SHOW VITESS_TABLETS serving rows") {
     val srv = new MockVtgate(
       "vt-tablets",
-      req => Seq(insertTx("-80", 1, 1, "v1")),
+      _ => Seq(insertTx("-80", 1, 1, "v1")),
       {
         case "SHOW VITESS_TABLETS" => gridResult(Seq(
           Seq("cell1", "ks", "-80", "PRIMARY", "SERVING", "alias1", "host1", "[]"),
@@ -507,7 +508,7 @@ class GrpcTransportSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("regex include rules expand to concrete tables via SHOW TABLES") {
     val srv = new MockVtgate(
       "vt-regex",
-      req => Seq(insertTx("s0", 1, 1, "v1")),
+      _ => Seq(insertTx("s0", 1, 1, "v1")),
       { case "SHOW TABLES FROM `ks`" => showResult("orders", "orderlines", "t1", "customers") })
     val staging = graft.TempDirs.reclaimOnExit(Files.createTempDirectory("grpcstage11"))
     val transport = VStreamGrpcTransport(staging.toString, GrpcConfig(
@@ -528,7 +529,7 @@ class GrpcTransportSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("shard-targeted SHOW TABLES rides a session target with autocommit") {
     val srv = new MockVtgate(
       "vt-target",
-      req => Seq(insertTx("-80", 1, 1, "v1")),
+      _ => Seq(insertTx("-80", 1, 1, "v1")),
       {
         case "SHOW VITESS_TABLETS" => gridResult(Seq(
           Seq("cell1", "ks", "-80", "PRIMARY", "SERVING", "a", "h", "[]")))

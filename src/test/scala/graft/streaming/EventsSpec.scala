@@ -71,6 +71,12 @@ class EventsSpec extends AnyFunSuite {
     events.foreach { e =>
       assert(VEventJson.read(VEventJson.write(e)) == e, s"round-trip failed for $e")
     }
+    // keys out of writer order ("changes" first, "type" last) still read
+    // as the same ROW event
+    val reordered = """{"changes":[{"before":{"lengths":[1,-1],"values":"MQ=="},""" +
+      """"after":{"lengths":[1,1],"values":"MjM="}}],"table":"ks.t1","keyspace":"ks",""" +
+      """"shard":"0","type":"ROW"}"""
+    assert(VEventJson.read(reordered) == events(2))
   }
 
   test("ddl metadata extraction with comments, rename→alter, unknown") {
