@@ -337,7 +337,7 @@ private[sources] trait FeederHandle {
   * read-side planning can size them immediately, and signals shutdown
   * through a `_STOP` marker file in the staging dir (shared storage —
   * the same channel the workers' staged bytes ride). Each task runs
-  * the SAME worker code as driver mode, so per-worker resume from the
+  * the SAME worker code as driver mode, so resume from each shard's
   * last staged VGTID, tx-boundary staging, and reshard adoption hold
   * unchanged; a task that dies is re-run by Spark's task retry and
   * resumes exactly-once from its group's staged positions. */
