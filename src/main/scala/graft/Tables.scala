@@ -42,9 +42,10 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  /** Local session with the settings every entry point shares. */
+  /** Local session with the settings every entry point shares, its
+    * `file:` paths on [[LocalFiles]]. */
   def session(appName: String, cpus: String): SparkSession =
-    SparkSession.builder()
+    LocalFiles.on(SparkSession.builder())
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)

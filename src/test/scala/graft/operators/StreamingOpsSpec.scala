@@ -14,13 +14,7 @@ class StreamingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("streaming-ops-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Tables.session("streaming-ops-spec", "2")
     spark.sparkContext.setLogLevel("WARN")
   }
 

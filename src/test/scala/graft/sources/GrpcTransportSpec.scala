@@ -27,13 +27,7 @@ class GrpcTransportSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("grpc-transport-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Tables.session("grpc-transport-spec", "2")
     spark.sparkContext.setLogLevel("WARN")
   }
 

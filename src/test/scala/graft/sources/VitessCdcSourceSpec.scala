@@ -16,13 +16,7 @@ class VitessCdcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("vitess-cdc-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = graft.Tables.session("vitess-cdc-spec", "2")
     spark.sparkContext.setLogLevel("WARN")
   }
 
